@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** Driver bench: per-query wall times over SPARK_GRAFT_SF_DIR, plus the
@@ -12,13 +11,8 @@ import org.apache.spark.storage.StorageLevel
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Tables.localSession("graft-bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen/parquet-footer warmup so the first measured query isn't
     // charged ~3s of session startup.

@@ -40,10 +40,13 @@ object ProfileJobs {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         starts.put(e.jobId, e.time)
         if (detail) {
-          // attribute the job to the innermost graft frame of its first
+          // attribute the job to the innermost graft frame of its result
           // stage's call site (the job properties carry no callSite in
-          // local mode; StageInfo.details is the submission stack trace)
-          val graftFrame = e.stageInfos.headOption
+          // local mode; StageInfo.details is the submission stack trace).
+          // The result stage has the highest id; lower ids are upstream
+          // shuffle-map stages whose stacks name where their exchange's
+          // RDD was built, not the action that submitted the job.
+          val graftFrame = e.stageInfos.maxByOption(_.stageId)
             .map(_.details).getOrElse("")
             .split('\n')
             .find(l => l.contains("graft.") && !l.contains("graft.tools."))
