@@ -139,12 +139,13 @@ object Tables {
     */
   val RetainedUiHistory: Int = 100
 
-  /** The shared session builder: specs, perfbench, the demos and the
-    * suite entry points (Bench, Verify) all start here. It carries the
-    * STATIC settings — those Spark reads once, when the context or the
-    * codegen cache is created — which `configure` cannot set on a running
-    * session; a session built elsewhere and passed only to `configure` gets
-    * the runtime settings but not these.
+  /** The shared session builder: specs, perfbench, the demos, Explain,
+    * the suite entry points (Bench, Verify) and every `graft.tools` main
+    * all start here. It carries the STATIC settings — those Spark reads
+    * once, when the context or the codegen cache is created — which
+    * `configure` cannot set on a running session; a session built
+    * elsewhere and passed only to `configure` gets the runtime settings
+    * but not these.
     *
     * Effect of the two static settings above, perfbench, 10 alternating
     * pairs per workload on a 4-CPU VM, medians before → after:

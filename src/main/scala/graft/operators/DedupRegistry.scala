@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   * seen before it costs downstream storage or compute. This composes the
   * library's two proven disciplines: [[Dedup.dedupAgainstCorpus]]'s
   * batch-vs-history membership (map-side Bloom, exact digest verify) and
-  * the recoverable-apply idempotence protocol of
-  * [[graft.operators.Retrieval.bm25IngestBatch]] (tagged part files +
-  * backup-swapped stats + commit marker), so a foreachBatch re-delivery
-  * after ANY crash window converges to exactly one application.
+  * the recoverable ingest protocol of [[EstateIngest]] (tagged part
+  * files + backup-swapped stats + commit marker), so a foreachBatch
+  * re-delivery after ANY crash window converges to exactly one
+  * application.
   * First-arrival semantics: across batches the earlier batch wins;
   * within a batch the smallest id wins — a deterministic, SQL-expressible
   * total order (the q167 oracle ranks by (phase, id) over the same
@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   *     `stats_b<id>_new` / `_bak` renames so a complete pre- or
   *     post-batch generation exists at every instant.
   *   - `ingestlog/b<id>` — empty commit markers, one per applied batch
-  *     (see [[Retrieval.bm25StreamSink]] for the retention note: prune
-  *     entries older than the checkpoint's retained batch range).
+  *     (see [[EstateIngest]] for the retention note: prune entries
+  *     older than the checkpoint's retained batch range).
   *
   * Scale shape: the membership pass reads ONLY the digest column
   * (columnar pruning — text bytes never load) of ONLY the batch's hash
@@ -71,10 +71,6 @@ import org.apache.spark.sql.functions._
   * database's durability to the parquet + rename protocol.
   */
 object DedupRegistry {
-
-  private def observedOrEmpty(
-      obs: org.apache.spark.sql.Observation): Map[String, Any] =
-    scala.util.Try(obs.get).getOrElse(Map.empty)
 
   /** Create an empty registry: zeroed stats + the corpus root. Refuses a
     * pre-existing registry (an accidental re-init would orphan corpus
@@ -187,7 +183,7 @@ object DedupRegistry {
 
   /** Wire into `stream.writeStream.foreachBatch(streamSink(path, id,
     * text))` — each micro-batch applies [[ingestBatch]] under the
-    * recoverable-apply protocol (object scaladoc). The q167 gate replays
+    * recoverable ingest protocol ([[EstateIngest]]). The q167 gate replays
     * a duplicate-bearing phased corpus with a manufactured mid-apply
     * crash, a kill-restart across a batch boundary, and a post-commit
     * re-delivery, and pins the final corpus + stats against a
@@ -200,7 +196,13 @@ object DedupRegistry {
     (batch: DataFrame, batchId: Long) =>
       ingestBatch(path, batch, idCol, textCol, batchId)
 
-  /** One recoverable, idempotent micro-batch apply — see [[streamSink]].
+  /** The registry's ingest tables: accepted rows land as tagged corpus
+    * parts, stats swaps.
+    */
+  private val RegistryIngest = EstateIngest.Layout("DedupRegistry.ingestBatch",
+    tagged = Seq("corpus" -> "bucket="), swapped = Seq("stats"))
+
+  /** One recoverable, idempotent micro-batch apply ([[EstateIngest]]).
     * Public so recovery drills and manual backfill replays can drive a
     * single batch id directly.
     */
@@ -209,166 +211,56 @@ object DedupRegistry {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      batchId: Long): Unit = {
-    require(batchId >= 0, s"DedupRegistry.ingestBatch: negative batch id $batchId")
-    // reader isolation (the bm25IngestBatch marker note): corpus parts
-    // and the stats swap cross quiet inter-job gaps a StableRead probe
-    // could otherwise validate inside
-    // writer locks on the landed/swapped tables: a concurrent
-    // compaction must not interleave (IngestConflictSpec)
-    val fsc = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(docs.sparkSession.sessionState.newHadoopConf())
-    StableRead.withTableLocks(docs.sparkSession, path,
-      Seq("corpus", "stats")) {
-      // compensation must run UNDER the table locks: a maintenance op
-      // slipping between lock release and the restore would see a
-      // committed-looking bak (the marker still stands) and retire it,
-      // re-opening the double-apply this fixes
-      try {
-        StableRead.withMaintenanceMarker(docs.sparkSession, path) {
-          ingestApply(path, docs, idCol, textCol, batchId)
-        }
-        // the estate commit LANDED: only now may the pre-batch stats
-        // retire — until here they stay restorable verbatim for the
-        // conflict compensation (pinned readers resolve the bak through
-        // readTable's sibling scan meanwhile)
-        StableRead.retireIngestBak(fsc, path, "stats", s"b$batchId")
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          // commit lost a multi-writer race AFTER the apply: restore
-          // the pre-batch stats from the still-standing bak (round 18
-          // retired it pre-commit, so the mandated re-run re-applied
-          // against post-swap stats and double-counted n_docs/n_dropped),
-          // un-commit the exactly-once marker so the re-run re-applies,
-          // and re-create the staging dir as the recovery breadcrumb
-          StableRead.restoreIngestBak(fsc, path, "stats", s"b$batchId")
-          fsc.delete(new org.apache.hadoop.fs.Path(
-            s"$path/ingestlog/b$batchId"), false)
-          fsc.mkdirs(new org.apache.hadoop.fs.Path(
-            s"$path/_ingest_b${batchId}_tmp"))
-          throw e
+      batchId: Long): Unit =
+    RegistryIngest.ingest(docs.sparkSession, path, batchId) { b =>
+      val spark = docs.sparkSession
+      val st = spark.read.parquet(s"$path/stats")
+        .select(col("n_docs"), col("n_dropped"), col("buckets"))
+        .collect()(0)
+      val (oldDocs, oldDropped, buckets) =
+        (st.getLong(0), st.getLong(1), st.getLong(2))
+      val obs = org.apache.spark.sql.Observation()
+      // within-batch first arrival: the smallest id per digest wins
+      val w = Window.partitionBy(col("digest")).orderBy(col("id"))
+      val firsts = docs
+        .observe(obs, count(lit(1)).as("n"))
+        .select(
+          col(idCol).as("id"),
+          when(col(textCol).isNull,
+            raise_error(lit(s"DedupRegistry.ingestBatch: null $textCol row")))
+            .otherwise(col(textCol)).as("text"))
+        .withColumn("digest", md5(col("text")))
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+        .withColumn("bucket", pmod(xxhash64(col("digest")), lit(buckets)))
+        .transform(graft.CacheScope.persisted)
+      firsts.count() // materialize: fires the raw-row observation
+      val batchN = EstateIngest.observedOrEmpty(obs).get("n")
+        .map(_.asInstanceOf[Long]).getOrElse(0L)
+      if (batchN == 0L) false // an empty trigger: committed as a no-op
+      else {
+        val survivors = firsts.join(
+          existingDigests(spark, path, firsts, batchN), Seq("digest"), "left_anti")
+        // stage the accepted rows bucket-clustered; the accepted count
+        // rides the write that runs anyway
+        val accObs = org.apache.spark.sql.Observation()
+        survivors
+          .observe(accObs, count(lit(1)).as("n"))
+          .repartition(col("bucket"))
+          .write.mode("overwrite").partitionBy("bucket")
+          .parquet(b.staged("corpus"))
+        val accepted = EstateIngest.observedOrEmpty(accObs).get("n")
+          .map(_.asInstanceOf[Long]).getOrElse(0L)
+        // stage the new stats (scalars are in hand — nothing reads its input)
+        spark.range(1)
+          .select(
+            lit(oldDocs + accepted).as("n_docs"),
+            lit(oldDropped + (batchN - accepted)).as("n_dropped"),
+            lit(buckets).as("buckets"))
+          .coalesce(1).write.parquet(b.next("stats"))
+        true
       }
     }
-  }
-
-  private def ingestApply(
-      path: String,
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      batchId: Long): Unit = graft.CacheScope.scoped {
-    val spark = docs.sparkSession
-    val hconf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-    val tag = s"b$batchId"
-    def sub(rel: String) = new org.apache.hadoop.fs.Path(s"$path/$rel")
-    val marker = sub(s"ingestlog/$tag")
-    if (fs.exists(marker)) {
-      // post-commit re-delivery: the apply completed; only the deferred
-      // backup retirement may have been interrupted — finish it and
-      // skip whole (retireIngestBak reads the swap-time sidecar and
-      // re-notes the swap iff the batch's estate commit never landed)
-      StableRead.retireIngestBak(fs, path, "stats", tag)
-      return
-    }
-    // ---- recovery: erase whatever a crashed attempt of THIS id left ----
-    locally {
-      StableRead.restoreIngestBak(fs, path, "stats", tag)
-      val nw = sub(s"stats_${tag}_new")
-      if (fs.exists(nw))
-        require(fs.delete(nw, true),
-          s"DedupRegistry.ingestBatch: cannot drop $nw")
-    }
-    val tmpRoot = sub(s"_ingest_${tag}_tmp")
-    // tagged-debris sweep GATED on staging debris (the ivfIngestBatch
-    // rationale): no O(corpus files) scan on the steady-state apply
-    if (fs.exists(tmpRoot)) {
-      val d = sub("corpus")
-      if (fs.exists(d)) fs.listStatus(d).foreach { st =>
-        if (st.isDirectory && st.getPath.getName.startsWith("bucket="))
-          fs.listStatus(st.getPath)
-            .filter(_.getPath.getName.startsWith(tag + "_"))
-            .foreach(f => require(fs.delete(f.getPath, false),
-              s"DedupRegistry.ingestBatch: cannot drop ${f.getPath}"))
-        else if (st.getPath.getName.startsWith(tag + "_"))
-          require(fs.delete(st.getPath, false),
-            s"DedupRegistry.ingestBatch: cannot drop ${st.getPath}")
-      }
-    }
-    if (fs.exists(tmpRoot))
-      require(fs.delete(tmpRoot, true),
-        s"DedupRegistry.ingestBatch: cannot drop $tmpRoot")
-    // ---- the apply ----
-    val st = spark.read.parquet(s"$path/stats")
-      .select(col("n_docs"), col("n_dropped"), col("buckets"))
-      .collect()(0)
-    val (oldDocs, oldDropped, buckets) =
-      (st.getLong(0), st.getLong(1), st.getLong(2))
-    val obs = org.apache.spark.sql.Observation()
-    // within-batch first arrival: the smallest id per digest wins
-    val w = Window.partitionBy(col("digest")).orderBy(col("id"))
-    val firsts = docs
-      .observe(obs, count(lit(1)).as("n"))
-      .select(
-        col(idCol).as("id"),
-        when(col(textCol).isNull,
-          raise_error(lit(s"DedupRegistry.ingestBatch: null $textCol row")))
-          .otherwise(col(textCol)).as("text"))
-      .withColumn("digest", md5(col("text")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-      .withColumn("bucket", pmod(xxhash64(col("digest")), lit(buckets)))
-      .transform(graft.CacheScope.persisted)
-    firsts.count() // materialize: fires the raw-row observation
-    val batchN = observedOrEmpty(obs).get("n")
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    def commitMarker(): Unit = {
-      fs.mkdirs(marker.getParent)
-      require(fs.createNewFile(marker),
-        s"DedupRegistry.ingestBatch: cannot create marker $marker")
-    }
-    if (batchN == 0L) {
-      // an empty trigger is legal on a stream — commit the no-op so the
-      // id is never re-applied against future registry states
-      commitMarker()
-      return
-    }
-    val survivors = firsts.join(
-      existingDigests(spark, path, firsts, batchN), Seq("digest"), "left_anti")
-    // stage the accepted rows bucket-clustered; the accepted count rides
-    // the write that runs anyway
-    val accObs = org.apache.spark.sql.Observation()
-    survivors
-      .observe(accObs, count(lit(1)).as("n"))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$tmpRoot/corpus")
-    val accepted = observedOrEmpty(accObs).get("n")
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    // stage the new stats (scalars are in hand — nothing reads its input)
-    spark.range(1)
-      .select(
-        lit(oldDocs + accepted).as("n_docs"),
-        lit(oldDropped + (batchN - accepted)).as("n_dropped"),
-        lit(buckets).as("buckets"))
-      .coalesce(1).write.parquet(sub(s"stats_${tag}_new").toString)
-    // ---- commit: parts in, stats swap, marker ----
-    graft.sinks.Sinks.copyParquetParts(
-      fs, hconf, s"$tmpRoot/corpus", s"$path/corpus", "bucket=", tag,
-      move = true)
-    require(fs.rename(sub("stats"), sub(s"stats_${tag}_bak")),
-      s"DedupRegistry.ingestBatch: stats backup rename failed")
-    // retire destination stamped now (pre-swap version still committed);
-    // the physical retirement is DEFERRED until the estate commit lands
-    // ([[ingestBatch]]'s tail) so the conflict compensation can restore
-    // the pre-batch stats verbatim
-    StableRead.stampRetireTo(fs, path, "stats", tag)
-    require(fs.rename(sub(s"stats_${tag}_new"), sub("stats")),
-      s"DedupRegistry.ingestBatch: stats swap rename failed")
-    StableRead.noteSwapped(path, "stats")
-    commitMarker()
-    fs.delete(tmpRoot, true)
-  }
 
   /** The rows batch `batchId` COMMITTED into the registry — read back
     * from its `b<id>_`-tagged corpus part files. The recoverable-apply
@@ -500,7 +392,7 @@ object DedupRegistry {
       s"DedupRegistry.merge: $dest carries a commit manifest — merging " +
         "in place into a committed estate would delete snapshot-pinned " +
         "files; merge into a fresh dest")
-    paths.foreach(requireCommitted(spark, _, "DedupRegistry.merge"))
+    paths.foreach(RegistryIngest.requireCommitted(spark, _, "DedupRegistry.merge"))
     paths.foreach(requirePristine(spark, _, "DedupRegistry.merge"))
     // reader-isolation bracket + manifest commit ([[StableRead]]) on
     // the destination (sources are read-only here)
@@ -545,7 +437,7 @@ object DedupRegistry {
       .observe(obs, count(lit(1)).as("n"))
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$dest/corpus")
-    val nDocs = observedOrEmpty(obs).get("n")
+    val nDocs = EstateIngest.observedOrEmpty(obs).get("n")
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     // overlays travel with the merge (a merge that dropped them would
     // resurrect tombstoned witnesses — the bm25Merge contract) and land
@@ -577,27 +469,6 @@ object DedupRegistry {
     gcKeepGenerations.foreach(k => StableRead.gc(spark, path, k))
     n
   }
-
-  /** Collapse the per-batch file generations — a long-fed registry
-    * accumulates one `b<id>_` file set per applied batch and membership
-    * reads decay into many small openings. Bucket-clustered rewrite into
-    * a temp generation, swapped in by
-    * [[graft.sinks.Sinks.swapByRename]] (backup-first — a crash leaves a
-    * complete old or new generation, never none). Content-blind: the
-    * membership pass and [[probe]] read the same rows either way.
-    */
-  /** Maintenance-safety guard: mutating maintenance ops refuse a
-    * registry with an UNCOMMITTED [[ingestBatch]] pending recovery — a
-    * rewrite would erase the `b<id>_` tags and strand the stats swap
-    * debris the batch's re-delivery needs to converge. See
-    * [[graft.sinks.Sinks.requireNoPendingIngest]].
-    */
-  private def requireCommitted(
-      spark: SparkSession, path: String, opName: String): Unit =
-    graft.sinks.Sinks.requireNoPendingIngest(
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf()),
-      path, Seq(("corpus", "bucket=")), Seq("stats"), opName)
 
   /** Permanent maintenance-history flag shared by both registry
     * families: [[delete]]/[[NearDupRegistry.delete]] stamp it on the
@@ -657,13 +528,21 @@ object DedupRegistry {
           .as("affected_fraction"))
   }
 
+  /** Collapse the per-batch file generations — a long-fed registry
+    * accumulates one `b<id>_` file set per applied batch and membership
+    * reads decay into many small openings. Bucket-clustered rewrite into
+    * a temp generation, swapped in by
+    * [[graft.sinks.Sinks.swapByRename]] (backup-first — a crash leaves a
+    * complete old or new generation, never none). Content-blind: the
+    * membership pass and [[probe]] read the same rows either way.
+    */
   def compact(spark: SparkSession, path: String,
       gcKeepGenerations: Option[Int] = None): Unit = {
     // corpus writer lock (data-level exclusion vs a racing ingest) +
     // reader-isolation bracket + manifest commit ([[StableRead]]).
     // Pending-ingest guard inside the lock (wait-not-refuse)
     StableRead.withTableLocks(spark, path, Seq("corpus")) {
-      requireCommitted(spark, path, "DedupRegistry.compact")
+      RegistryIngest.requireCommitted(spark, path, "DedupRegistry.compact")
       StableRead.withMaintenanceMarker(spark, path) {
         graft.sinks.Sinks.compactTable(
           spark, path, "corpus", Some("bucket"))
@@ -701,7 +580,7 @@ object DedupRegistry {
     // stats heal are steps a concurrent stable probe must not straddle.
     // Pending-ingest guard inside the lock (wait-not-refuse)
     StableRead.withTableLocks(spark, path, Seq("corpus", "stats")) {
-    requireCommitted(spark, path, "DedupRegistry.delete")
+    RegistryIngest.requireCommitted(spark, path, "DedupRegistry.delete")
     StableRead.withMaintenanceMarker(spark, path) {
     // permanent maintenance-history flag: a physical removal breaks the
     // merge stats' raw-stream conservation (n_docs drops, n_dropped

@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
   * IDENTICAL shingle sets every band agrees, so exact near-copies are
   * dropped with certainty (the q170 gate's planted-copy check).
   *
-  * Layout at `path/` (the [[DedupRegistry]] recoverable-apply protocol
-  * with TWO partitioned tables):
+  * Layout at `path/` (the [[EstateIngest]] ingest protocol with TWO
+  * tagged tables):
   *   - `corpus/bucket=<b>/` — (id, text, hs), b = pmod(xxhash64(id),
   *     buckets): the verification fetch prunes to the candidate ids'
   *     buckets and reads (id, hs) only.
@@ -66,10 +66,6 @@ import org.apache.spark.sql.functions._
   * as in Mining of Massive Datasets.
   */
 object NearDupRegistry {
-
-  private def observedOrEmpty(
-      obs: org.apache.spark.sql.Observation): Map[String, Any] =
-    scala.util.Try(obs.get).getOrElse(Map.empty)
 
   private val corpusSchema = "id LONG, text STRING, hs ARRAY<LONG>, bucket LONG"
   private val bandsSchema = "band INT, bkey INT, id LONG, pk LONG"
@@ -254,207 +250,103 @@ object NearDupRegistry {
     (batch: DataFrame, batchId: Long) =>
       ingestBatch(path, batch, idCol, textCol, batchId)
 
-  /** One recoverable, idempotent micro-batch apply — the
-    * [[DedupRegistry.ingestBatch]] protocol over corpus + bands + stats
-    * (every table either tagged-enumerable or backup-swapped; the
-    * marker commits; re-delivery skips or restores-and-reapplies).
+  /** The registry's ingest tables: accepted rows land as tagged corpus
+    * and bands parts, stats swaps.
     */
+  private val RegistryIngest = EstateIngest.Layout("NearDupRegistry.ingestBatch",
+    tagged = Seq("corpus" -> "bucket=", "bands" -> "pk="), swapped = Seq("stats"))
+
+  /** One recoverable, idempotent micro-batch apply ([[EstateIngest]]). */
   def ingestBatch(
       path: String,
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      batchId: Long): Unit = {
-    require(batchId >= 0,
-      s"NearDupRegistry.ingestBatch: negative batch id $batchId")
-    // reader isolation (the bm25IngestBatch marker note): corpus parts,
-    // bands parts, and the stats swap cross quiet inter-job gaps a
-    // StableRead probe could otherwise validate inside
-    // writer locks on the landed/swapped tables: a concurrent
-    // compaction must not interleave (IngestConflictSpec)
-    val fsc = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(docs.sparkSession.sessionState.newHadoopConf())
-    StableRead.withTableLocks(docs.sparkSession, path,
-      Seq("bands", "corpus", "stats")) {
-      // compensation must run UNDER the table locks (the
-      // bm25IngestBatch rationale: a maintenance op slipping in between
-      // lock release and the restore would retire the bak this restore
-      // needs)
-      try {
-        StableRead.withMaintenanceMarker(docs.sparkSession, path) {
-          ingestApply(path, docs, idCol, textCol, batchId)
-        }
-        // estate commit LANDED: only now may the pre-batch stats retire
-        StableRead.retireIngestBak(fsc, path, "stats", s"b$batchId")
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          // commit lost a multi-writer race AFTER the apply: restore
-          // the pre-batch stats verbatim (round 18 retired the bak
-          // pre-commit — the re-run then double-counted stats), un-commit
-          // the exactly-once marker so the re-run re-applies, re-create
-          // the staging breadcrumb
-          StableRead.restoreIngestBak(fsc, path, "stats", s"b$batchId")
-          fsc.delete(new org.apache.hadoop.fs.Path(
-            s"$path/ingestlog/b$batchId"), false)
-          fsc.mkdirs(new org.apache.hadoop.fs.Path(
-            s"$path/_ingest_b${batchId}_tmp"))
-          throw e
-      }
-    }
-  }
-
-  private def ingestApply(
-      path: String,
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      batchId: Long): Unit = graft.CacheScope.scoped {
-    val spark = docs.sparkSession
-    val hconf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-    val tag = s"b$batchId"
-    def sub(rel: String) = new org.apache.hadoop.fs.Path(s"$path/$rel")
-    val marker = sub(s"ingestlog/$tag")
-    if (fs.exists(marker)) {
-      // post-commit re-delivery: finish the deferred backup retirement
-      // (sidecar-addressed; re-notes the swap iff the batch's estate
-      // commit never landed) and skip whole
-      StableRead.retireIngestBak(fs, path, "stats", tag)
-      return
-    }
-    // ---- recovery ----
-    locally {
-      StableRead.restoreIngestBak(fs, path, "stats", tag)
-      val nw = sub(s"stats_${tag}_new")
-      if (fs.exists(nw))
-        require(fs.delete(nw, true),
-          s"NearDupRegistry.ingestBatch: cannot drop $nw")
-    }
-    def dropTagged(name: String, prefix: String): Unit = {
-      val d = sub(name)
-      if (!fs.exists(d)) return
-      fs.listStatus(d).foreach { st =>
-        if (st.isDirectory && st.getPath.getName.startsWith(prefix))
-          fs.listStatus(st.getPath)
-            .filter(_.getPath.getName.startsWith(tag + "_"))
-            .foreach(f => require(fs.delete(f.getPath, false),
-              s"NearDupRegistry.ingestBatch: cannot drop ${f.getPath}"))
-        else if (st.getPath.getName.startsWith(tag + "_"))
-          require(fs.delete(st.getPath, false),
-            s"NearDupRegistry.ingestBatch: cannot drop ${st.getPath}")
-      }
-    }
-    val tmpRoot = sub(s"_ingest_${tag}_tmp")
-    // tagged-debris sweep GATED on staging debris (the ivfIngestBatch
-    // rationale): no O(table files) scan on the steady-state apply
-    if (fs.exists(tmpRoot)) {
-      dropTagged("corpus", "bucket=")
-      dropTagged("bands", "pk=")
-      require(fs.delete(tmpRoot, true),
-        s"NearDupRegistry.ingestBatch: cannot drop $tmpRoot")
-    }
-    // ---- the apply ----
-    val p = readParams(spark, path)
-    val obs = org.apache.spark.sql.Observation()
-    val prepped = docs
-      .observe(obs, count(lit(1)).as("n"))
-      .select(
-        col(idCol).as("id"),
-        when(col(textCol).isNull,
-          raise_error(lit(s"NearDupRegistry.ingestBatch: null $textCol row")))
-          .otherwise(col(textCol)).as("text"))
-      .withColumn("sh", Dedup.shingles(col("text"), p.shingleSize))
-      .withColumn("hs", graft.functions.HashExprs.hashedSortedSet(col("sh")))
-      .transform(graft.CacheScope.persisted)
-    prepped.count() // materialize: fires the raw-row observation
-    val batchN = observedOrEmpty(obs).get("n")
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    def commitMarker(): Unit = {
-      fs.mkdirs(marker.getParent)
-      require(fs.createNewFile(marker),
-        s"NearDupRegistry.ingestBatch: cannot create marker $marker")
-    }
-    if (batchN == 0L) { commitMarker(); return }
-    val keys = Dedup.bandedKeys(
-        prepped.filter(size(col("sh")) > 0).select(col("id"), col("sh")),
-        p.numHashes, p.bands)
-      .withColumnRenamed("bucket", "bkey")
-      .transform(graft.CacheScope.persisted)
-    val nKeys = keys.count()
-    val batchHs = prepped.select(col("id"), col("hs"))
-    // within-batch: a row drops against ANY smaller-id candidate
-    val selfCands = keys.as("a")
-      .join(keys.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val selfDrops = verified(
-        selfCands, "id_a", "id_b", batchHs, batchHs, p.threshold)
-      .select(col("id_b").as("id")).distinct()
-    // vs the registered corpus
-    val regCands = keys
-      .join(registryCandidateKeys(spark, path, keys, nKeys, p.buckets),
-        Seq("band", "bkey"))
-      .select(col("id").as("new_id"), col("reg_id"))
-      .distinct()
-      .transform(graft.CacheScope.persisted)
-    val regDrops = verified(regCands, "new_id", "reg_id",
-        batchHs, registryHs(spark, path, regCands, p.buckets), p.threshold)
-      .select(col("new_id").as("id")).distinct()
-    val accepted = prepped
-      .join(selfDrops.unionByName(regDrops).distinct(), Seq("id"), "left_anti")
-      .transform(graft.CacheScope.persisted)
-    // ---- stage ----
-    val accObs = org.apache.spark.sql.Observation()
-    accepted
-      .observe(accObs, count(lit(1)).as("n"))
-      .select(col("id"), col("text"), col("hs"),
-        pmod(xxhash64(col("id")), lit(p.buckets)).as("bucket"))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$tmpRoot/corpus")
-    val nAccepted = observedOrEmpty(accObs).get("n")
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    // bands + stats stage concurrently: both read only the now-cached
-    // accepted/keys frames and in-hand scalars (the corpus write ran
-    // first ALONE — it materializes the persist; concurrent first
-    // actions would race to compute the dedup twice)
-    graft.operators.Retrieval.concurrently(
-      () => keys.join(accepted.select(col("id")), Seq("id"))
-        .select(col("band"), col("bkey"), col("id"),
-          pmod(col("bkey"), lit(p.buckets)).as("pk"))
-        .repartition(col("pk"))
-        .write.mode("overwrite").partitionBy("pk")
-        .parquet(s"$tmpRoot/bands"),
-      () => spark.range(1)
+      batchId: Long): Unit =
+    RegistryIngest.ingest(docs.sparkSession, path, batchId) { b =>
+      val spark = docs.sparkSession
+      val p = readParams(spark, path)
+      val obs = org.apache.spark.sql.Observation()
+      val prepped = docs
+        .observe(obs, count(lit(1)).as("n"))
         .select(
-          lit(p.nDocs + nAccepted).as("n_docs"),
-          lit(p.nDropped + (batchN - nAccepted)).as("n_dropped"),
-          lit(p.buckets).as("buckets"),
-          lit(p.shingleSize.toLong).as("shingle_size"),
-          lit(p.numHashes.toLong).as("num_hashes"),
-          lit(p.bands.toLong).as("bands"),
-          lit(p.threshold).as("threshold"))
-        .coalesce(1).write.parquet(sub(s"stats_${tag}_new").toString))
-    // ---- commit ----
-    graft.sinks.Sinks.copyParquetParts(
-      fs, hconf, s"$tmpRoot/corpus", s"$path/corpus", "bucket=", tag,
-      move = true)
-    graft.sinks.Sinks.copyParquetParts(
-      fs, hconf, s"$tmpRoot/bands", s"$path/bands", "pk=", tag,
-      move = true)
-    require(fs.rename(sub("stats"), sub(s"stats_${tag}_bak")),
-      s"NearDupRegistry.ingestBatch: stats backup rename failed")
-    // retire destination stamped now; physical retirement DEFERRED to
-    // after the estate commit (the convergent-compensation contract)
-    StableRead.stampRetireTo(fs, path, "stats", tag)
-    require(fs.rename(sub(s"stats_${tag}_new"), sub("stats")),
-      s"NearDupRegistry.ingestBatch: stats swap rename failed")
-    StableRead.noteSwapped(path, "stats")
-    commitMarker()
-    fs.delete(tmpRoot, true)
-  }
+          col(idCol).as("id"),
+          when(col(textCol).isNull,
+            raise_error(lit(s"NearDupRegistry.ingestBatch: null $textCol row")))
+            .otherwise(col(textCol)).as("text"))
+        .withColumn("sh", Dedup.shingles(col("text"), p.shingleSize))
+        .withColumn("hs", graft.functions.HashExprs.hashedSortedSet(col("sh")))
+        .transform(graft.CacheScope.persisted)
+      prepped.count() // materialize: fires the raw-row observation
+      val batchN = EstateIngest.observedOrEmpty(obs).get("n")
+        .map(_.asInstanceOf[Long]).getOrElse(0L)
+      if (batchN == 0L) false // an empty trigger: committed as a no-op
+      else {
+        val keys = Dedup.bandedKeys(
+            prepped.filter(size(col("sh")) > 0).select(col("id"), col("sh")),
+            p.numHashes, p.bands)
+          .withColumnRenamed("bucket", "bkey")
+          .transform(graft.CacheScope.persisted)
+        val nKeys = keys.count()
+        val batchHs = prepped.select(col("id"), col("hs"))
+        // within-batch: a row drops against ANY smaller-id candidate
+        val selfCands = keys.as("a")
+          .join(keys.as("b"),
+            col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
+              col("a.id") < col("b.id"))
+          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+          .distinct()
+        val selfDrops = verified(
+            selfCands, "id_a", "id_b", batchHs, batchHs, p.threshold)
+          .select(col("id_b").as("id")).distinct()
+        // vs the registered corpus
+        val regCands = keys
+          .join(registryCandidateKeys(spark, path, keys, nKeys, p.buckets),
+            Seq("band", "bkey"))
+          .select(col("id").as("new_id"), col("reg_id"))
+          .distinct()
+          .transform(graft.CacheScope.persisted)
+        val regDrops = verified(regCands, "new_id", "reg_id",
+            batchHs, registryHs(spark, path, regCands, p.buckets), p.threshold)
+          .select(col("new_id").as("id")).distinct()
+        val accepted = prepped
+          .join(selfDrops.unionByName(regDrops).distinct(), Seq("id"), "left_anti")
+          .transform(graft.CacheScope.persisted)
+        // ---- stage ----
+        val accObs = org.apache.spark.sql.Observation()
+        accepted
+          .observe(accObs, count(lit(1)).as("n"))
+          .select(col("id"), col("text"), col("hs"),
+            pmod(xxhash64(col("id")), lit(p.buckets)).as("bucket"))
+          .repartition(col("bucket"))
+          .write.mode("overwrite").partitionBy("bucket")
+          .parquet(b.staged("corpus"))
+        val nAccepted = EstateIngest.observedOrEmpty(accObs).get("n")
+          .map(_.asInstanceOf[Long]).getOrElse(0L)
+        // bands + stats stage concurrently: both read only the now-cached
+        // accepted/keys frames and in-hand scalars (the corpus write ran
+        // first ALONE — it materializes the persist; concurrent first
+        // actions would race to compute the dedup twice)
+        graft.operators.Retrieval.concurrently(
+          () => keys.join(accepted.select(col("id")), Seq("id"))
+            .select(col("band"), col("bkey"), col("id"),
+              pmod(col("bkey"), lit(p.buckets)).as("pk"))
+            .repartition(col("pk"))
+            .write.mode("overwrite").partitionBy("pk")
+            .parquet(b.staged("bands")),
+          () => spark.range(1)
+            .select(
+              lit(p.nDocs + nAccepted).as("n_docs"),
+              lit(p.nDropped + (batchN - nAccepted)).as("n_dropped"),
+              lit(p.buckets).as("buckets"),
+              lit(p.shingleSize.toLong).as("shingle_size"),
+              lit(p.numHashes.toLong).as("num_hashes"),
+              lit(p.bands.toLong).as("bands"),
+              lit(p.threshold).as("threshold"))
+            .coalesce(1).write.parquet(b.next("stats")))
+        true
+      }
+    }
 
   /** The rows batch `batchId` COMMITTED into the registry — read back
     * from its `b<id>_`-tagged corpus part files, the
@@ -628,7 +520,7 @@ object NearDupRegistry {
       .withColumn("bucket", pmod(xxhash64(col("id")), lit(first.buckets)))
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$dest/corpus")
-    val nDocs = observedOrEmpty(obs).get("n")
+    val nDocs = EstateIngest.observedOrEmpty(obs).get("n")
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     bands.join(survivors.select(col("id")), Seq("id"))
       .select(col("band"), col("bkey"), col("id"),
@@ -668,22 +560,6 @@ object NearDupRegistry {
     gcKeepGenerations.foreach(k => StableRead.gc(spark, path, k))
     n
   }
-
-  /** Collapse per-batch file generations in BOTH tables —
-    * [[DedupRegistry.compact]] over corpus and bands.
-    */
-  /** Maintenance-safety guard: mutating maintenance ops refuse a
-    * registry with an UNCOMMITTED [[ingestBatch]] pending recovery — a
-    * rewrite would erase the `b<id>_` tags and strand the stats swap
-    * debris the batch's re-delivery needs to converge. See
-    * [[graft.sinks.Sinks.requireNoPendingIngest]].
-    */
-  private def requireCommitted(
-      spark: SparkSession, path: String, opName: String): Unit =
-    graft.sinks.Sinks.requireNoPendingIngest(
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf()),
-      path, Seq(("corpus", "bucket="), ("bands", "pk=")), Seq("stats"), opName)
 
   /** Predict a takedown batch's [[delete]] footprint BEFORE executing
     * it — [[DedupRegistry.deleteBatchPlan]] extended to this family's
@@ -726,6 +602,9 @@ object NearDupRegistry {
           .as("affected_fraction"))
   }
 
+  /** Collapse per-batch file generations in BOTH tables —
+    * [[DedupRegistry.compact]] over corpus and bands.
+    */
   def compact(spark: SparkSession, path: String,
       gcKeepGenerations: Option[Int] = None): Unit = {
     // writer locks on the rewritten tables (data-level exclusion vs a
@@ -734,7 +613,7 @@ object NearDupRegistry {
     // not straddle. Pending-ingest guard inside the lock
     // (wait-not-refuse)
     StableRead.withTableLocks(spark, path, Seq("bands", "corpus")) {
-      requireCommitted(spark, path, "NearDupRegistry.compact")
+      RegistryIngest.requireCommitted(spark, path, "NearDupRegistry.compact")
       StableRead.withMaintenanceMarker(spark, path) {
         graft.sinks.Sinks.compactTable(
           spark, path, "corpus", Some("bucket"), Some(corpusSchema))
@@ -781,7 +660,7 @@ object NearDupRegistry {
     // (wait-not-refuse)
     StableRead.withTableLocks(spark, path,
       Seq("bands", "corpus", "stats")) {
-    requireCommitted(spark, path, "NearDupRegistry.delete")
+    RegistryIngest.requireCommitted(spark, path, "NearDupRegistry.delete")
     StableRead.withMaintenanceMarker(spark, path) {
     val k = keys.select(col(keyCol).as("id"))
     // maintenance-history flag: merge refuses this shard from now on

@@ -43,15 +43,6 @@ object Retrieval {
       .foreach(_.get)
   }
 
-  /** An Observation's metrics after its action completed — EMPTY when
-    * the action ran zero tasks (an all-empty frame plans away to zero
-    * partitions and the CollectMetrics operator never executes), so
-    * callers can distinguish "no rows observed" from "metric is 0".
-    */
-  private def observedOrEmpty(
-      obs: org.apache.spark.sql.Observation): Map[String, Any] =
-    scala.util.Try(obs.get).getOrElse(Map.empty)
-
   /** BM25 top-k document retrieval for a (small) query table.
     *
     * score(q, d) = Σ_{t ∈ distinct terms of q}
@@ -231,7 +222,7 @@ object Retrieval {
     // observation — in that degenerate case (a fully tokenless corpus)
     // the token total is 0 by construction and n_docs falls back to one
     // explicit count of the input
-    val m = observedOrEmpty(statsObs)
+    val m = EstateIngest.observedOrEmpty(statsObs)
     graft.sinks.Sinks.landTable(
       Seq((
           m.get("n_docs").map(_.asInstanceOf[Long]).getOrElse(docs.count()),
@@ -371,7 +362,7 @@ object Retrieval {
     // same AQE empty-relation caveat as the build: an all-tokenless
     // batch loses the observation, its token total is 0 by construction,
     // and n falls back to one explicit count of the batch
-    val batchMetrics = observedOrEmpty(statsObs)
+    val batchMetrics = EstateIngest.observedOrEmpty(statsObs)
     val batchDocs = batchMetrics.get("n").map(_.asInstanceOf[Long])
       .getOrElse(docs.count())
     require(batchDocs > 0,
@@ -418,53 +409,17 @@ object Retrieval {
   }
 
   /** Exactly-once STREAMING ingest into a persisted [[buildBm25Index]]
-    * index — the composition of the engine's two proven disciplines
-    * that makes the index a live artifact: [[bm25Append]]'s
-    * batch-proportional increment, applied per micro-batch under the
-    * replay-idempotence contract of
-    * [[graft.sinks.Sinks.jdbcBatchWriter]] (foreachBatch re-delivers a
-    * crashed batch with identical data and id; the sink must converge
-    * every crash window to exactly one application). A 100 TB corpus is
-    * never static — without this path every day of new documents costs
-    * either a full rebuild or an at-least-once append that double-counts
-    * df/N on the first crash.
-    *
-    * Unlike the JDBC sink there is no transactional DELETE to wipe a
-    * partial batch, so idempotence comes from a RECOVERABLE APPLY built
-    * on the filesystem primitives the index already uses:
-    *
-    *   1. the batch's postings/doclen increments stage into a private
-    *      temp dir, then RENAME into the live partitions as files
-    *      prefixed `b<batchId>_` — so a partial apply is enumerable by
-    *      prefix and removable without touching any other generation;
-    *   2. the merged vocabulary table and stats stage as
-    *      `terms_b<id>_new` / `stats_b<id>_new`, then swap in via
-    *      backup renames (cur -> `_bak`, new -> cur) — at every instant
-    *      a complete pre- or post-batch generation exists;
-    *   3. a marker file `ingestlog/b<id>` commits the batch — created
-    *      only after every rename landed;
-    *   4. on re-delivery: marker present -> the whole batch is skipped
-    *      (only stray backups are cleaned); marker absent -> the
-    *      recovery pass restores `_bak` tables, deletes `_new` tables
-    *      and every `b<id>_`-prefixed part file, leaving EXACTLY the
-    *      pre-batch index, and the apply re-runs from scratch.
-    *
-    * Every crash window converges: before staging (clean re-run), mid
-    * move-in (tagged parts wiped), mid-swap (backup restored), after
-    * the marker (skip). Work per batch is batch-proportional plus the
-    * vocabulary-sized df merge — identical to [[bm25Append]]. Contract:
-    * ONE writer query per index with ONE checkpoint lineage (batch ids
-    * must identify payloads — the foreachBatch guarantee; a fresh
-    * checkpoint over an already-fed index would reuse ids and silently
-    * skip). Operational notes: markers are empty files, one per batch
-    * ever applied — prune `ingestlog/` entries older than the
-    * checkpoint's retained batch range if the accumulation ever
-    * matters (a marker's absence only re-exposes a batch that can no
-    * longer be re-delivered); probes BETWEEN applies see a consistent
-    * index, but the terms/stats swap has a sub-second mid-rename
-    * window — serve live probes from a snapshot or replica, the same
-    * maintenance-window discipline every mutating index operator
-    * documents. Wire with
+    * index — [[bm25Append]]'s batch-proportional increment applied per
+    * micro-batch under the recoverable ingest protocol of
+    * [[EstateIngest]] (the protocol, its crash windows and its contract
+    * are documented there once). A 100 TB corpus is never static —
+    * without this path every day of new documents costs either a full
+    * rebuild or an at-least-once append that double-counts df/N on the
+    * first crash. Postings, doclen and the terms append-delta land as
+    * tagged parts; stats is the one swapped table. Work per batch is
+    * batch-proportional, identical to [[bm25Append]]. Probes BETWEEN
+    * applies see a consistent index; stable probes wait out an apply.
+    * Wire with
     * `stream.writeStream.foreachBatch(bm25StreamSink(path, id, text))`;
     * the q162 gate replays a phased corpus with a kill-restart, a
     * manufactured mid-apply crash state, and a post-commit re-delivery,
@@ -477,212 +432,84 @@ object Retrieval {
     (batch: DataFrame, batchId: Long) =>
       bm25IngestBatch(path, batch, idCol, textCol, batchId)
 
-  /** One recoverable, idempotent micro-batch apply — see
-    * [[bm25StreamSink]] for the protocol and contract. Public so a
-    * recovery drill (or a manual backfill replay) can drive a single
-    * batch id directly, the way the q123 gate drives its JDBC twin.
+  /** The BM25 index's ingest tables. Terms moved from the swapped to
+    * the tagged (append-delta) tables in round 19; the guard still
+    * treats it as swapped so pre-round-19 crash debris
+    * (`terms_b<id>_new` / `_bak`) still refuses or retires.
+    */
+  private val Bm25Ingest = EstateIngest.Layout("bm25IngestBatch",
+    tagged = Seq("postings" -> "bucket=", "doclen" -> "", "terms" -> "bucket="),
+    swapped = Seq("stats"),
+    legacySwapped = Seq("terms"))
+
+  /** One recoverable, idempotent micro-batch apply ([[EstateIngest]]).
+    * Public so a recovery drill (or a manual backfill replay) can drive a
+    * single batch id directly, the way the q123 gate drives its JDBC twin.
     */
   def bm25IngestBatch(
       path: String,
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      batchId: Long): Unit = {
-    require(batchId >= 0, s"bm25IngestBatch: negative batch id $batchId")
-    // reader isolation (the bm25Delete marker note): the apply's part
-    // renames and terms/stats swaps cross several QUIET inter-job gaps
-    // a StableRead probe could otherwise validate inside — new postings
-    // against old stats is a state that never existed. The marker keeps
-    // stable probes out for the batch's applying window; a crashed
-    // apply leaves it standing exactly until the stream's re-delivery
-    // converges (which re-brackets and clears it).
-    // writer locks on every table the apply lands into or swaps: a
-    // concurrent compaction must not interleave (IngestConflictSpec)
-    val fsc = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(docs.sparkSession.sessionState.newHadoopConf())
-    StableRead.withTableLocks(docs.sparkSession, path,
-      Seq("doclen", "postings", "stats", "terms")) {
-      // the compensation below must run UNDER the table locks: after a
-      // conflict abort, a maintenance op slipping in between lock
-      // release and the compensation would see a committed-looking bak
-      // (the marker still stands) and retire it — re-opening exactly
-      // the double-apply this fixes
-      try {
-        StableRead.withMaintenanceMarker(docs.sparkSession, path) {
-          bm25IngestApply(path, docs, idCol, textCol, batchId)
-        }
-        // the estate commit LANDED (the marker bracket's outermost
-        // exit): only now may the pre-batch stats version retire —
-        // until here it stays restorable verbatim for the conflict
-        // compensation below (pinned readers resolve it through the
-        // _bak sibling scan in the meantime, so the deferral never
-        // blocks serving)
-        StableRead.retireIngestBak(fsc, path, "stats", s"b$batchId")
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          // commit lost a multi-writer race AFTER the apply: restore
-          // the pre-batch stats from its still-standing bak (round 18
-          // retired it before the commit, so the mandated re-run
-          // re-applied the batch against the already-swapped stats and
-          // double-counted n_docs/total_tokens — the advisor's
-          // non-convergence finding), un-commit the exactly-once marker
-          // so the re-run re-applies instead of skipping, and re-create
-          // the staging dir as the recovery breadcrumb (the
-          // ivfIngestBatch compensation). The batch's tagged
-          // postings/doclen/terms parts are wiped by the re-run's
-          // staging-gated recovery sweep.
-          StableRead.restoreIngestBak(fsc, path, "stats", s"b$batchId")
-          fsc.delete(new org.apache.hadoop.fs.Path(
-            s"$path/ingestlog/b$batchId"), false)
-          fsc.mkdirs(new org.apache.hadoop.fs.Path(
-            s"$path/_ingest_b${batchId}_tmp"))
-          throw e
-      }
-    }
-  }
-
-  private def bm25IngestApply(
-      path: String,
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      batchId: Long): Unit = graft.CacheScope.scoped {
-    val spark = docs.sparkSession
-    val hconf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-    val tag = s"b$batchId"
-    def sub(rel: String) = new org.apache.hadoop.fs.Path(s"$path/$rel")
-    val marker = sub(s"ingestlog/$tag")
-    if (fs.exists(marker)) {
-      // post-commit re-delivery: the apply completed; only the deferred
-      // backup retirement may have been interrupted — finish it
-      // ([[StableRead.retireIngestBak]] reads the retire destination
-      // from the swap-time sidecar and re-notes the swap iff the
-      // batch's estate commit never landed) and skip whole
-      StableRead.retireIngestBak(fs, path, "stats", tag)
-      return
-    }
-    // ---- recovery: erase whatever a crashed attempt of THIS id left ----
-    def restore(name: String): Unit = {
-      StableRead.restoreIngestBak(fs, path, name, tag)
-      val nw = sub(s"${name}_${tag}_new")
-      if (fs.exists(nw))
-        require(fs.delete(nw, true), s"bm25IngestBatch: cannot drop $nw")
-    }
-    def dropTagged(name: String): Unit = {
-      val d = sub(name)
-      if (!fs.exists(d)) return
-      fs.listStatus(d).foreach { st =>
-        if (st.isDirectory && st.getPath.getName.startsWith("bucket="))
-          fs.listStatus(st.getPath)
-            .filter(_.getPath.getName.startsWith(tag + "_"))
-            .foreach(f => require(fs.delete(f.getPath, false),
-              s"bm25IngestBatch: cannot drop ${f.getPath}"))
-        else if (st.getPath.getName.startsWith(tag + "_"))
-          require(fs.delete(st.getPath, false),
-            s"bm25IngestBatch: cannot drop ${st.getPath}")
-      }
-    }
-    restore("stats")
-    val tmpRoot = sub(s"_ingest_${tag}_tmp")
-    // tagged-debris sweep GATED on staging debris (the ivfIngestBatch
-    // rationale): the staging dir outlives every pre-marker crash point
-    // and the commit-conflict compensation re-creates it, so the
-    // steady-state apply never pays an O(table files) scan
-    if (fs.exists(tmpRoot)) {
-      dropTagged("postings"); dropTagged("doclen"); dropTagged("terms")
-      require(fs.delete(tmpRoot, true), s"bm25IngestBatch: cannot drop $tmpRoot")
-    }
-    // ---- stage the batch increment (bm25Append's derivations) ----
-    val st = spark.read.parquet(s"$path/stats")
-      .select(col("n_docs"), col("total_tokens"), col("buckets"))
-      .collect()(0)
-    val (oldDocs, oldTok, buckets) =
-      (st.getLong(0), st.getLong(1), st.getLong(2))
-    val statsObs = org.apache.spark.sql.Observation()
-    val tf = docs
-      .observe(statsObs,
-        count(lit(1)).as("n"),
-        coalesce(sum(size(TextAnalysis.tokens(col(textCol))).cast("long")),
-          lit(0L)).as("t"))
-      .select(
-        col(idCol).as("id"),
-        explode(TextAnalysis.tokens(col(textCol))).as("term"))
-      .groupBy(col("id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .transform(graft.CacheScope.persisted)
-    val bucket = pmod(xxhash64(col("term")), lit(buckets))
-    tf.withColumn("bucket", bucket)
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$tmpRoot/postings")
-    val m = observedOrEmpty(statsObs)
-    val batchDocs = m.get("n").map(_.asInstanceOf[Long])
-      .getOrElse(docs.count())
-    def commitMarker(): Unit = {
-      fs.mkdirs(marker.getParent)
-      require(fs.createNewFile(marker),
-        s"bm25IngestBatch: cannot create marker $marker")
-    }
-    if (batchDocs == 0L) {
-      // an empty trigger is legal on a stream — commit the no-op so the
-      // id is never re-applied against future index states
-      fs.delete(tmpRoot, true)
-      commitMarker()
-      return
-    }
-    import spark.implicits._
-    // all three staged writes are independent once tf is materialized
-    // and the batch scalars are in hand — overlap their fixed
-    // per-action scheduler overhead (the build/append discipline).
-    // EVERY per-batch cost here is O(batch): the terms increment is the
-    // batch's own per-term df rows (the round-19 append-delta — rounds
-    // <= 18 staged the FULL merged vocabulary per micro-batch, the last
-    // estate-proportional term on the streaming write path)
-    concurrently(
-      () => docs.select(
+      batchId: Long): Unit =
+    Bm25Ingest.ingest(docs.sparkSession, path, batchId) { b =>
+      // bm25Append's derivations, staged
+      val spark = docs.sparkSession
+      val st = spark.read.parquet(s"$path/stats")
+        .select(col("n_docs"), col("total_tokens"), col("buckets"))
+        .collect()(0)
+      val (oldDocs, oldTok, buckets) =
+        (st.getLong(0), st.getLong(1), st.getLong(2))
+      val statsObs = org.apache.spark.sql.Observation()
+      val tf = docs
+        .observe(statsObs,
+          count(lit(1)).as("n"),
+          coalesce(sum(size(TextAnalysis.tokens(col(textCol))).cast("long")),
+            lit(0L)).as("t"))
+        .select(
           col(idCol).as("id"),
-          size(TextAnalysis.tokens(col(textCol))).cast("long").as("dl"))
-        .write.mode("overwrite").parquet(s"$tmpRoot/doclen"),
-      () => tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .withColumn("bucket", bucket)
+          explode(TextAnalysis.tokens(col(textCol))).as("term"))
+        .groupBy(col("id"), col("term"))
+        .agg(count(lit(1)).as("tf"))
+        .transform(graft.CacheScope.persisted)
+      val bucket = pmod(xxhash64(col("term")), lit(buckets))
+      tf.withColumn("bucket", bucket)
         .repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$tmpRoot/terms"),
-      () => Seq((oldDocs + batchDocs,
-          oldTok + m.getOrElse("t", 0L).asInstanceOf[Long],
-          buckets))
-        .toDF("n_docs", "total_tokens", "buckets")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/stats_${tag}_new"))
-    // ---- commit: rename increments in, swap stats, marker ----
-    graft.sinks.Sinks.copyParquetParts(
-      fs, hconf, s"$tmpRoot/postings", s"$path/postings", "bucket=", tag,
-      move = true)
-    graft.sinks.Sinks.copyParquetParts(
-      fs, hconf, s"$tmpRoot/doclen", s"$path/doclen", "bucket=", tag,
-      move = true)
-    graft.sinks.Sinks.copyParquetParts(
-      fs, hconf, s"$tmpRoot/terms", s"$path/terms", "bucket=", tag,
-      move = true)
-    locally {
-      // stats: the one remaining swap table. The swap is noted HERE
-      // (it must ride THIS batch's commit); the bak's physical
-      // retirement is DEFERRED until that commit lands
-      // ([[bm25IngestBatch]]'s tail), with its destination — the
-      // pre-swap version's retired dir — stamped now, while that
-      // version is still the committed one
-      val cur = sub("stats")
-      val bak = sub(s"stats_${tag}_bak")
-      val nw = sub(s"stats_${tag}_new")
-      require(fs.rename(cur, bak), s"bm25IngestBatch: rename $cur -> $bak failed")
-      StableRead.stampRetireTo(fs, path, "stats", tag)
-      require(fs.rename(nw, cur), s"bm25IngestBatch: rename $nw -> $cur failed")
-      StableRead.noteSwapped(path, "stats")
+        .parquet(b.staged("postings"))
+      val m = EstateIngest.observedOrEmpty(statsObs)
+      val batchDocs = m.get("n").map(_.asInstanceOf[Long])
+        .getOrElse(docs.count())
+      if (batchDocs == 0L) false // an empty trigger: committed as a no-op
+      else {
+        import spark.implicits._
+        // all three staged writes are independent once tf is
+        // materialized and the batch scalars are in hand — overlap their
+        // fixed per-action scheduler overhead (the build/append
+        // discipline). EVERY per-batch cost here is O(batch): the terms
+        // increment is the batch's own per-term df rows (the round-19
+        // append-delta — rounds <= 18 staged the FULL merged vocabulary
+        // per micro-batch, the last estate-proportional term on the
+        // streaming write path)
+        concurrently(
+          () => docs.select(
+              col(idCol).as("id"),
+              size(TextAnalysis.tokens(col(textCol))).cast("long").as("dl"))
+            .write.mode("overwrite").parquet(b.staged("doclen")),
+          () => tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+            .withColumn("bucket", bucket)
+            .repartition(col("bucket"))
+            .write.mode("overwrite").partitionBy("bucket")
+            .parquet(b.staged("terms")),
+          () => Seq((oldDocs + batchDocs,
+              oldTok + m.getOrElse("t", 0L).asInstanceOf[Long],
+              buckets))
+            .toDF("n_docs", "total_tokens", "buckets")
+            .coalesce(1)
+            .write.mode("overwrite").parquet(b.next("stats")))
+        true
+      }
     }
-    commitMarker()
-    fs.delete(tmpRoot, true)
-  }
 
   /** Compact a [[buildBm25Index]] index in place: every [[bm25Append]]
     * lands its batch as NEW files inside the existing bucket partitions
@@ -702,29 +529,6 @@ object Retrieval {
     * a probe after compact equals the probe before bit-for-bit (spec +
     * the q145 gate pin it against q127's verbatim oracle).
     */
-  /** Maintenance-safety guard for the recoverable-apply protocol: every
-    * mutating maintenance op (compact/delete/merge/vacuum) refuses an
-    * index with an UNCOMMITTED [[bm25IngestBatch]] pending recovery —
-    * rewriting the live tables would erase the `b<id>_` tags and strand
-    * the swap debris the batch's re-delivery needs to converge, baking
-    * junk rows in and then re-applying the batch on top. See
-    * [[graft.sinks.Sinks.requireNoPendingIngest]].
-    */
-  private def requireCommitted(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      opName: String): Unit =
-    graft.sinks.Sinks.requireNoPendingIngest(
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf()),
-      path,
-      // terms moved from the swap set to the tagged-append set in
-      // round 19 (the append-delta protocol); "terms" stays in the
-      // swap list so PRE-round-19 crash debris (terms_b<id>_new/_bak)
-      // still refuses/retires correctly
-      Seq(("postings", "bucket="), ("doclen", ""), ("terms", "bucket=")),
-      Seq("terms", "stats"), opName)
-
   def bm25Compact(spark: org.apache.spark.sql.SparkSession, path: String,
       gcKeepGenerations: Option[Int] = None): Unit = {
     // writer locks on the rewritten tables (data-level exclusion vs a
@@ -734,7 +538,7 @@ object Retrieval {
     // ivfCompact wait-not-refuse note)
     StableRead.withTableLocks(spark, path,
       Seq("doclen", "postings", "terms")) {
-      requireCommitted(spark, path, "bm25Compact")
+      Bm25Ingest.requireCommitted(spark, path, "bm25Compact")
       StableRead.withMaintenanceMarker(spark, path) {
         val buckets = spark.read.parquet(s"$path/stats")
           .select(col("buckets")).collect()(0).getLong(0)
@@ -821,7 +625,7 @@ object Retrieval {
     val destP = new org.apache.hadoop.fs.Path(dest)
     val fs = destP.getFileSystem(hconf)
     require(!fs.exists(destP), s"bm25Merge: $dest already exists")
-    paths.foreach(requireCommitted(spark, _, "bm25Merge"))
+    paths.foreach(Bm25Ingest.requireCommitted(spark, _, "bm25Merge"))
     // reader-isolation brackets + manifest commits ([[StableRead]]):
     // dest always — and with move=true the source shards too, since the
     // part-file renames CONSUME them under any reader still probing
@@ -969,7 +773,7 @@ object Retrieval {
     // Pending-ingest guard inside the lock (wait-not-refuse)
     StableRead.withTableLocks(spark, path,
       Seq("doclen", "postings", "stats", "terms")) {
-    requireCommitted(spark, path, "bm25Delete")
+    Bm25Ingest.requireCommitted(spark, path, "bm25Delete")
     StableRead.withMaintenanceMarker(spark, path) {
     // roll forward a crash-interrupted prior postings delete BEFORE any
     // derivation reads the table: a standing intent marker means the

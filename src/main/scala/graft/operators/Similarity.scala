@@ -736,7 +736,7 @@ object Similarity {
     val destP = new org.apache.hadoop.fs.Path(dest)
     val fs = destP.getFileSystem(hconf)
     require(!fs.exists(destP), s"ivfMerge: $dest already exists")
-    paths.foreach(requireCommitted(spark, _, "ivfMerge"))
+    paths.foreach(IvfIngest.requireCommitted(spark, _, "ivfMerge"))
     // reader-isolation brackets + manifest commits ([[StableRead]]):
     // dest always — and with move=true the source shards too, since the
     // part-file renames CONSUME them under any reader still probing
@@ -862,23 +862,11 @@ object Similarity {
   /** Exactly-once STREAMING ingest into a persisted IVF index — the
     * dense twin of [[graft.operators.Retrieval.bm25StreamSink]]: each
     * micro-batch applies [[ivfAppend]] (or [[ivfQAppend]] when
-    * `quantized`) under the same recoverable-apply idempotence
-    * protocol, so a foreachBatch re-delivery after any crash converges
-    * to exactly one application. The IVF apply is strictly simpler
-    * than the lexical one — centroids are append-invariant and there
-    * is no vocabulary table, so the whole increment is tagged corpus
-    * part files plus the commit marker:
-    *
-    *   1. the batch assigns to the index's own centroids and stages
-    *      cell-clustered into a private temp dir;
-    *   2. parts RENAME into the live cell partitions prefixed
-    *      `b<batchId>_`;
-    *   3. marker `ingestlog/b<id>` commits; re-delivery with the
-    *      marker skips, without it deletes every `b<id>_` part and
-    *      re-applies.
-    *
-    * Same contract as the lexical sink: ONE writer query, ONE
-    * checkpoint lineage, batch-disjoint ids. Wire with
+    * `quantized`, [[ivfPqAppend]] on a PQ index) under the recoverable
+    * ingest protocol of [[EstateIngest]], so a foreachBatch re-delivery
+    * after any crash converges to exactly one application. Centroids
+    * are append-invariant, so the whole increment is tagged corpus part
+    * files plus the commit marker — no swapped table. Wire with
     * `stream.writeStream.foreachBatch(ivfStreamSink(path, id, vec))`;
     * the q163 gate replays a phased corpus with a kill-restart, a
     * manufactured crash state, and a post-commit re-delivery, and pins
@@ -892,8 +880,14 @@ object Similarity {
     (batch: DataFrame, batchId: Long) =>
       ivfIngestBatch(indexPath, batch, idCol, vecCol, batchId, quantized)
 
-  /** One recoverable, idempotent micro-batch apply — see
-    * [[ivfStreamSink]]. Public for recovery drills and manual replays.
+  /** The IVF index's ingest tables: batches land as tagged corpus parts
+    * in the cell partitions.
+    */
+  private val IvfIngest = EstateIngest.Layout("ivfIngestBatch",
+    tagged = Seq("corpus" -> "cell="))
+
+  /** One recoverable, idempotent micro-batch apply ([[EstateIngest]]).
+    * Public for recovery drills and manual replays.
     */
   def ivfIngestBatch(
       indexPath: String,
@@ -901,143 +895,45 @@ object Similarity {
       idCol: String,
       vecCol: String,
       batchId: Long,
-      quantized: Boolean = false): Unit = {
-    require(batchId >= 0, s"ivfIngestBatch: negative batch id $batchId")
-    // corpus writer lock: a concurrent compaction must not interleave
-    // its rewrite with this batch's landing (IngestConflictSpec).
-    // Reader isolation (the bm25IngestBatch marker note): the per-file
-    // rename loop is a half-applied-batch window no committed state
-    // ever equals — stable probes wait the batch out
-    try StableRead.withTableLocks(
-      batch.sparkSession, indexPath, Seq("corpus")) {
-      StableRead.withMaintenanceMarker(batch.sparkSession, indexPath) {
-        ivfIngestApply(indexPath, batch, idCol, vecCol, batchId, quantized)
-      }
-    } catch {
-      case e: java.util.ConcurrentModificationException =>
-        // the apply landed but the estate COMMIT lost a multi-writer
-        // race: un-commit the exactly-once marker, or the mandated
-        // re-run would skip the batch whole while its rows may have
-        // been retired by the winning writer's rewrite (the
-        // IngestConflictSpec drill). Re-create the staging dir as the
-        // recovery breadcrumb — the re-delivery's debris sweep is
-        // gated on it (the apply deleted it post-marker)
-        val fsc = new org.apache.hadoop.fs.Path(indexPath)
-          .getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-        fsc.delete(new org.apache.hadoop.fs.Path(
-          s"$indexPath/ingestlog/b$batchId"), false)
-        fsc.mkdirs(new org.apache.hadoop.fs.Path(
-          s"$indexPath/_ingest_b${batchId}_tmp"))
-        throw e
+      quantized: Boolean = false): Unit =
+    IvfIngest.ingest(batch.sparkSession, indexPath, batchId) { b =>
+      // stage the assignment (the ivfAppend / ivfQAppend / ivfPqAppend
+      // body). The PQ layout is AUTO-detected from the index's own
+      // codebooks table — the unambiguous persisted signal (the int8
+      // layout has no side table, hence its explicit flag) — so one sink
+      // serves all three layouts and a PQ index can never be fed
+      // un-encoded rows by a mis-flagged caller.
+      val spark = batch.sparkSession
+      val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
+      val pqBooks =
+        if (b.fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/codebooks")))
+          Some(loadPqCodebooks(spark, indexPath)._3)
+        else None
+      require(!(quantized && pqBooks.isDefined),
+        s"ivfIngestBatch: $indexPath is a PQ index (codebooks present) — " +
+          "the quantized=true int8 flag does not apply")
+      val prepped = batch.select(
+        col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
+      val assigned =
+        (pqBooks match {
+          case Some(books) =>
+            prepped.withColumn("pqcode", graft.functions.PqExprs.pqEncode(
+              col("vec"), books.map(_.map(_.toSeq).toSeq).toSeq))
+          case None if quantized =>
+            quantizeEmbeddings(prepped, "vec")
+              .select(col("id"), col("vec"), col("qvec"),
+                intDot(col("qvec"), col("qvec")).as("qn2"))
+          case None => prepped
+        })
+          .withColumn("cell", posToCell(element_at(
+            graft.functions.VecExprs.nearestCentroids(col("vec"), centroids, 1), 1),
+            cellIds))
+      assigned
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(b.staged("corpus"))
+      true
     }
-  }
-
-  private def ivfIngestApply(
-      indexPath: String,
-      batch: DataFrame,
-      idCol: String,
-      vecCol: String,
-      batchId: Long,
-      quantized: Boolean): Unit = {
-    val spark = batch.sparkSession
-    val hconf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(indexPath).getFileSystem(hconf)
-    val tag = s"b$batchId"
-    val marker = new org.apache.hadoop.fs.Path(s"$indexPath/ingestlog/$tag")
-    if (fs.exists(marker)) return // post-commit re-delivery: skip whole
-    val tmpRoot = new org.apache.hadoop.fs.Path(s"$indexPath/_ingest_${tag}_tmp")
-    // recovery GATED on staging debris: the staging dir outlives every
-    // pre-marker crash point (it is deleted strictly AFTER the marker
-    // lands) and the commit-conflict compensation re-creates it as its
-    // breadcrumb — so live-table debris of this id cannot exist without
-    // it, and the steady-state apply never pays an O(corpus files)
-    // sweep (MediaScaleBench's mmapply flatness; the sweep was the
-    // estate-proportional term after the append-delta commit fix)
-    if (fs.exists(tmpRoot)) {
-      val corpusDir = new org.apache.hadoop.fs.Path(s"$indexPath/corpus")
-      if (fs.exists(corpusDir))
-        fs.listStatus(corpusDir).foreach { st =>
-          if (st.isDirectory && st.getPath.getName.startsWith("cell="))
-            fs.listStatus(st.getPath)
-              .filter(_.getPath.getName.startsWith(tag + "_"))
-              .foreach(f => require(fs.delete(f.getPath, false),
-                s"ivfIngestBatch: cannot drop ${f.getPath}"))
-        }
-      require(fs.delete(tmpRoot, true), s"ivfIngestBatch: cannot drop $tmpRoot")
-    }
-    // stage the assignment (the ivfAppend / ivfQAppend / ivfPqAppend
-    // body, into tmp). The PQ layout is AUTO-detected from the index's
-    // own codebooks table — the unambiguous persisted signal (the int8
-    // layout has no side table, hence its explicit flag) — so one sink
-    // serves all three layouts and a PQ index can never be fed
-    // un-encoded rows by a mis-flagged caller.
-    val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
-    val pqBooks =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/codebooks")))
-        Some(loadPqCodebooks(spark, indexPath)._3)
-      else None
-    require(!(quantized && pqBooks.isDefined),
-      s"ivfIngestBatch: $indexPath is a PQ index (codebooks present) — " +
-        "the quantized=true int8 flag does not apply")
-    val prepped = batch.select(
-      col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
-    val assigned =
-      (pqBooks match {
-        case Some(books) =>
-          prepped.withColumn("pqcode", graft.functions.PqExprs.pqEncode(
-            col("vec"), books.map(_.map(_.toSeq).toSeq).toSeq))
-        case None if quantized =>
-          quantizeEmbeddings(prepped, "vec")
-            .select(col("id"), col("vec"), col("qvec"),
-              intDot(col("qvec"), col("qvec")).as("qn2"))
-        case None => prepped
-      })
-        .withColumn("cell", posToCell(element_at(
-          graft.functions.VecExprs.nearestCentroids(col("vec"), centroids, 1), 1),
-          cellIds))
-    assigned
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$tmpRoot/corpus")
-    // commit: rename parts in, marker
-    graft.sinks.Sinks.copyParquetParts(
-      fs, hconf, s"$tmpRoot/corpus", s"$indexPath/corpus", "cell=", tag,
-      move = true)
-    fs.mkdirs(marker.getParent)
-    require(fs.createNewFile(marker),
-      s"ivfIngestBatch: cannot create marker $marker")
-    fs.delete(tmpRoot, true)
-  }
-
-  /** Compact a [[buildIvfIndex]] index in place — the dense-side twin of
-    * [[graft.operators.Retrieval.bm25Compact]]: every [[ivfAppend]]
-    * lands its batch as new files inside the existing cell partitions,
-    * so a long-lived index accumulates one file set per append and the
-    * probe's cell reads decay into many small openings. The corpus
-    * table rewrites CELL-CLUSTERED into a temp generation and swaps in
-    * via [[graft.sinks.Sinks.swapByRename]] (backup rename first — a
-    * crash leaves a complete old or new generation, never none; see
-    * that scaladoc for the object-store caveat). Never
-    * read-and-overwrite in one job. Centroids are append-invariant and
-    * untouched. Assignment and scoring are file-layout-blind: a probe
-    * after compact equals the probe before bit-for-bit (the q149 gate
-    * pins it).
-    */
-  /** Maintenance-safety guard: mutating maintenance ops (compact/delete/
-    * merge/split/vacuum) refuse an index with an UNCOMMITTED
-    * [[ivfIngestBatch]] pending recovery — a rewrite would erase the
-    * `b<id>_` tags the batch's re-delivery needs to converge, baking
-    * junk rows in and re-applying on top. See
-    * [[graft.sinks.Sinks.requireNoPendingIngest]].
-    */
-  private def requireCommitted(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
-      opName: String): Unit =
-    graft.sinks.Sinks.requireNoPendingIngest(
-      new org.apache.hadoop.fs.Path(indexPath)
-        .getFileSystem(spark.sessionState.newHadoopConf()),
-      indexPath, Seq(("corpus", "cell=")), Seq.empty, opName)
 
   /** Retrain the coarse quantizer IN PLACE — the drift repair
     * [[ivfAppend]]'s scaladoc promises: appends assign to the index's
@@ -1077,7 +973,7 @@ object Similarity {
       nlist: Int,
       sampleN: Int = 4096,
       iters: Int = 8): Unit = {
-    requireCommitted(spark, indexPath, "ivfRequantize")
+    IvfIngest.requireCommitted(spark, indexPath, "ivfRequantize")
     require(nlist > 0, s"ivfRequantize: nlist must be positive, got $nlist")
     StableRead.withMaintenanceMarker(spark, indexPath) {
       import spark.implicits._
@@ -1106,6 +1002,20 @@ object Similarity {
     }
   }
 
+  /** Compact a [[buildIvfIndex]] index in place — the dense-side twin of
+    * [[graft.operators.Retrieval.bm25Compact]]: every [[ivfAppend]]
+    * lands its batch as new files inside the existing cell partitions,
+    * so a long-lived index accumulates one file set per append and the
+    * probe's cell reads decay into many small openings. The corpus
+    * table rewrites CELL-CLUSTERED into a temp generation and swaps in
+    * via [[graft.sinks.Sinks.swapByRename]] (backup rename first — a
+    * crash leaves a complete old or new generation, never none; see
+    * that scaladoc for the object-store caveat). Never
+    * read-and-overwrite in one job. Centroids are append-invariant and
+    * untouched. Assignment and scoring are file-layout-blind: a probe
+    * after compact equals the probe before bit-for-bit (the q149 gate
+    * pins it).
+    */
   def ivfCompact(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
       gcKeepGenerations: Option[Int] = None): Unit = {
@@ -1115,7 +1025,7 @@ object Similarity {
     // a wait, not a refusal — only a crashed batch's debris (which the
     // stream's mandated re-delivery converges) refuses maintenance
     StableRead.withTableLocks(spark, indexPath, Seq("corpus")) {
-      requireCommitted(spark, indexPath, "ivfCompact")
+      IvfIngest.requireCommitted(spark, indexPath, "ivfCompact")
       StableRead.withMaintenanceMarker(spark, indexPath) {
         graft.sinks.Sinks.compactTable(
           spark, indexPath, "corpus", Some("cell"))
@@ -1674,7 +1584,7 @@ object Similarity {
     // (bm25Delete's marker note). Pending-ingest guard inside the lock
     // (the ivfCompact wait-not-refuse note)
     StableRead.withTableLocks(spark, indexPath, Seq("corpus")) {
-    requireCommitted(spark, indexPath, "ivfDelete")
+    IvfIngest.requireCommitted(spark, indexPath, "ivfDelete")
     StableRead.withMaintenanceMarker(spark, indexPath) {
       val n = graft.sinks.Sinks.deleteRows(
         spark, s"$indexPath/corpus", "cell", "id",
@@ -1771,7 +1681,7 @@ object Similarity {
       maxCellRows: Long,
       sampleN: Int = 4096): Seq[(Int, Int, Int)] = {
     require(maxCellRows >= 1, s"ivfSplitCells: maxCellRows must be >= 1")
-    requireCommitted(spark, indexPath, "ivfSplitCells")
+    IvfIngest.requireCommitted(spark, indexPath, "ivfSplitCells")
     val hconf = spark.sessionState.newHadoopConf()
     val corpusPath = new org.apache.hadoop.fs.Path(s"$indexPath/corpus")
     val fs = corpusPath.getFileSystem(hconf)

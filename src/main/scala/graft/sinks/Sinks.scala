@@ -189,12 +189,11 @@ object Sinks {
       .localCheckpoint(true)
     // an all-doomed partition set checkpoints ZERO tasks and the
     // observations never fill — absent metrics mean empty survivors
-    def metrics(o: org.apache.spark.sql.Observation): Map[String, Any] =
-      scala.util.Try(o.get).getOrElse(Map.empty)
-    val mOut = metrics(obsOut)
+    import graft.operators.EstateIngest.observedOrEmpty
+    val mOut = observedOrEmpty(obsOut)
     val deleted =
       if (countDeleted)
-        metrics(obsIn).get("n").map(_.asInstanceOf[Long]).getOrElse(0L) -
+        observedOrEmpty(obsIn).get("n").map(_.asInstanceOf[Long]).getOrElse(0L) -
           mOut.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
       else -1L
     val keptParts: Set[Any] =
@@ -420,7 +419,7 @@ object Sinks {
 
   /** Refuse to run a maintenance rewrite over an artifact with an
     * UNCOMMITTED streaming-ingest batch pending recovery. The
-    * recoverable-apply protocol (bm25IngestBatch and its twins) relies
+    * recoverable ingest protocol ([[graft.operators.EstateIngest]]) relies
     * on three enumerable kinds of debris to converge a crash window on
     * re-delivery: `_ingest_<tag>_tmp` staging dirs, `<table>_b<id>_new`
     * / `_bak` swap dirs, and `b<id>_`-prefixed part files inside the

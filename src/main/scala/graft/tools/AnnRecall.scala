@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures LSH and IVF ANN recall against brute-force cosine top-k on the
@@ -13,11 +12,7 @@ import org.apache.spark.sql.functions._
 object AnnRecall {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = graft.Tables.configure(SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val spark = graft.Tables.localSession("graft-annrecall", 8)
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = graft.Tables.load(spark, dir, "embeddings").persist()

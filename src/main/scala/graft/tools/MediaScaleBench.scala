@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.functions.ImageExprs
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Decade-scale evidence for the MULTIMODAL family (SURVEY §8, the
@@ -40,12 +40,8 @@ import org.apache.spark.sql.functions._
 object MediaScaleBench {
   def main(args: Array[String]): Unit = {
     val tiers = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(10, 100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Tables.localSession("graft-mediascalebench", cpus)
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.operators.{Indicators, IndicatorAggregator, TradeRules, Validation}
 import graft.sources.{TradeCsv, TradeGenerator}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
 /** Stage-bench profiler: separates fixed per-query overhead (analysis +
@@ -17,12 +16,8 @@ import org.apache.spark.storage.StorageLevel
 object ProfileStages {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 1000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Tables.localSession("graft-profilestages", cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query runner: executes named SparkEntry queries against a
   * testdata dir and prints row count plus the first rows — the quickest way
   * to eyeball a gate query's result (e.g. "is q40 still the empty set?")
@@ -13,13 +11,9 @@ import org.apache.spark.sql.SparkSession
 object RunQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val showRows = sys.env.getOrElse("SHOW_ROWS", "5").toInt
-    val spark = graft.Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val spark = graft.Tables.localSession("graft-runquery", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>

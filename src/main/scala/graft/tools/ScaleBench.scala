@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-evidence harness for the heavy curation operators (SURVEY §8):
@@ -34,12 +34,8 @@ object ScaleBench {
     // (e.g. after a contended window) without paying the full sweep
     val onlyQ = if (args.length > 1) args(1).split(",").toSet else Set.empty[String]
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Tables.localSession("graft-scalebench", cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()
 
@@ -58,7 +54,7 @@ object ScaleBench {
             w => concat(w, lit(s"_$r")))))
       }
       replicas.reduce(_.union(_))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$scaledDir/documents.parquet")
       val nScaled = graft.Tables.load(spark, scaledDir, "documents").count()
       println(s"[scale] corpus: base=$baseDir scaled=$scaledDir rows=$nScaled (${n}x)")
@@ -200,7 +196,7 @@ object ScaleBench {
           (col("id_a") + lit(r * 1000000000L)).as("id_a"),
           (col("id_b") + lit(r * 1000000000L)).as("id_b"))
       }.reduce(_.union(_))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(pairDir)
       val scaledPairs = spark.read.parquet(pairDir)
       val nEdges = scaledPairs.count()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Planted-hot-key skew evidence (SURVEY §8): one join key owns 80% of a
@@ -36,12 +35,8 @@ import org.apache.spark.sql.functions._
 object SkewBench {
   def main(args: Array[String]): Unit = {
     val factRows = if (args.nonEmpty) args(0).toLong else 20000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Tables.localSession("graft-skewbench", cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Similarity, StableRead}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Ingest-vs-maintenance concurrency (round 18) — the three layers that
@@ -124,89 +125,153 @@ class IngestConflictSpec extends SparkSpec {
     assert(graft.operators.Fsck.ivfFsck(spark, dir).count() === 0L)
   }
 
-  test("bm25 conflict compensation restores pre-batch stats; re-delivery never double-counts") {
+  /** A family whose ingest swaps stats: how to build its base estate,
+    * ingest a batch, read the stats the swap protects, build a reference
+    * estate over base + batch without any conflict, and read what its
+    * readers are served.
+    */
+  private case class StatsFamily(
+      name: String,
+      statCols: Seq[String],
+      batchText: Int => String,
+      build: (DataFrame, String) => Unit,
+      ingest: (String, DataFrame, Long) => Unit,
+      reference: (DataFrame, DataFrame) => String,
+      served: String => Seq[String],
+      fsck: String => DataFrame)
+
+  private val bm25Family = {
     import graft.operators.Retrieval
-    val dir =
-      s"${java.nio.file.Files.createTempDirectory("conflict-bm25")}/bm25"
-    val docs = (0 until 40).map(i =>
-      (i.toLong, s"alpha w$i beta w${i % 7}")).toDF("doc_id", "text")
-    // a sizeable batch so the apply's Spark jobs outlast the conflicting
-    // note-commit below
-    val batch = (1000 until 4000).map(i =>
-      (i.toLong, s"gamma w$i delta w${i % 11} epsilon")).toDF("doc_id", "text")
-      .localCheckpoint(true)
-    Retrieval.buildBm25Index(docs, "doc_id", "text", dir, buckets = 7)
-    val statsOf = () => {
-      val r = spark.read.parquet(s"$dir/stats").collect()(0)
-      (r.getAs[Long]("n_docs"), r.getAs[Long]("total_tokens"))
-    }
-    val preStats = statsOf()
-    val fs = fsOf(dir)
-    val markerFile = new org.apache.hadoop.fs.Path(
-      s"$dir/${StableRead.MarkerName}")
-    var outcome: scala.util.Try[Unit] = null
-    val t = new Thread(() => {
-      outcome = scala.util.Try {
-        Retrieval.bm25IngestBatch(dir, batch, "doc_id", "text", 5L)
-      }
-    })
-    t.start()
-    // the estate marker appears the instant the ingest's bracket opens —
-    // commit a conflicting generation (noting stats, which the ingest
-    // always swaps) strictly inside its bracket window
-    val deadline = System.currentTimeMillis() + 30000
-    while (!fs.exists(markerFile) && t.isAlive &&
-      System.currentTimeMillis() < deadline) Thread.sleep(5)
-    val noteOutcome = scala.util.Try {
-      StableRead.withMaintenanceMarker(spark, dir) {
-        StableRead.noteTouched(dir, "stats")
-      }
-    }
-    t.join(120000)
-    assert(!t.isAlive, "ingest thread wedged")
-    val batchMarker = new org.apache.hadoop.fs.Path(s"$dir/ingestlog/b5")
-    (outcome, noteOutcome) match {
-      case (scala.util.Failure(e), scala.util.Success(_))
-          if e.isInstanceOf[java.util.ConcurrentModificationException] =>
-        // the drilled interleaving: the ingest lost the race AFTER its
-        // apply — the compensation must leave EXACTLY the pre-batch
-        // index: marker un-committed, stats restored verbatim (round 18
-        // retired the bak pre-commit, so stats stayed post-batch here
-        // and the re-delivery double-counted), staging breadcrumb up
-        assert(!fs.exists(batchMarker),
-          "conflicted ingest left its exactly-once marker standing")
-        assert(statsOf() === preStats,
-          "compensation did not restore the pre-batch stats")
-        assert(fs.exists(new org.apache.hadoop.fs.Path(
-          s"$dir/_ingest_b5_tmp")), "recovery breadcrumb missing")
-      case (scala.util.Success(_), _) =>
-        // timing fallback: the ingest committed before (or without)
-        // overlap — the batch stands committed exactly once
-        assert(fs.exists(batchMarker))
-      case (i, nb) => fail(s"unexpected outcomes: ingest=$i note=$nb")
-    }
-    // mandated re-delivery: converges to exactly one application
-    Retrieval.bm25IngestBatch(dir, batch, "doc_id", "text", 5L)
-    val want = {
-      val p = java.nio.file.Files
-        .createTempDirectory("conflict-bm25-rb").toString
-      Retrieval.buildBm25Index(
-        docs.unionByName(batch), "doc_id", "text", p, buckets = 7)
-      (statsOfAt(p), Retrieval.bm25TopKIndexed(
+    val probe = (p: String) => Retrieval.bm25TopKIndexed(
         p, Seq((1L, "alpha gamma epsilon")).toDF("query_id", "query_text"),
-        10).collect().map(_.toString).sorted.toSeq)
-    }
-    assert(statsOf() === want._1, "stats double-counted after re-delivery")
-    assert(Retrieval.bm25TopKIndexed(
-        dir, Seq((1L, "alpha gamma epsilon")).toDF("query_id", "query_text"),
-        10).collect().map(_.toString).sorted.toSeq === want._2,
-      "probe diverged from the rebuild after the conflict re-delivery")
-    assert(graft.operators.Fsck.bm25Fsck(spark, dir).count() === 0L)
+        10).collect().map(_.toString).sorted.toSeq
+    StatsFamily("bm25", Seq("n_docs", "total_tokens"),
+      i => s"gamma w$i delta w${i % 11} epsilon",
+      (docs, dir) =>
+        Retrieval.buildBm25Index(docs, "doc_id", "text", dir, buckets = 7),
+      Retrieval.bm25IngestBatch(_, _, "doc_id", "text", _),
+      (docs, batch) => {
+        val p = java.nio.file.Files
+          .createTempDirectory("conflict-bm25-rb").toString
+        Retrieval.buildBm25Index(
+          docs.unionByName(batch), "doc_id", "text", p, buckets = 7)
+        p
+      },
+      probe,
+      graft.operators.Fsck.bm25Fsck(spark, _))
   }
 
-  private def statsOfAt(path: String): (Long, Long) = {
+  /** A registry family: base = one committed batch; the batch repeats
+    * texts (within itself and of the base) so the apply drops rows and
+    * n_dropped moves.
+    */
+  private def registryFamily(
+      name: String,
+      init: String => Unit,
+      ingest: (String, DataFrame, Long) => Unit,
+      fsck: String => DataFrame): StatsFamily = {
+    val build = (docs: DataFrame, dir: String) => {
+      init(dir); ingest(dir, docs, 0L)
+    }
+    StatsFamily(name, Seq("n_docs", "n_dropped"),
+      i => if (i % 10 == 0) s"alpha w${i % 40} beta w${i % 40 % 7}"
+        else s"gamma w${i % 1500} delta w${i % 11} epsilon",
+      build, ingest,
+      (docs, batch) => {
+        val p = s"${java.nio.file.Files.createTempDirectory(s"conflict-$name-rb")}/reg"
+        build(docs, p); ingest(p, batch, 5L)
+        p
+      },
+      dir => spark.read.parquet(s"$dir/corpus").select(col("id"))
+        .collect().map(_.getLong(0).toString).sorted.toSeq,
+      fsck)
+  }
+
+  private val conflictFamilies = Seq(
+    bm25Family,
+    registryFamily("DedupRegistry",
+      graft.operators.DedupRegistry.init(spark, _, buckets = 7),
+      graft.operators.DedupRegistry.ingestBatch(_, _, "doc_id", "text", _),
+      graft.operators.Fsck.registryFsck(spark, _)),
+    registryFamily("NearDupRegistry",
+      graft.operators.NearDupRegistry.init(spark, _, buckets = 7),
+      graft.operators.NearDupRegistry.ingestBatch(_, _, "doc_id", "text", _),
+      graft.operators.Fsck.nearDupRegistryFsck(spark, _)))
+
+  conflictFamilies.foreach { f =>
+    test(s"${f.name} conflict compensation restores pre-batch stats; re-delivery never double-counts") {
+      val dir =
+        s"${java.nio.file.Files.createTempDirectory(s"conflict-${f.name}")}/${f.name}"
+      val docs = (0 until 40).map(i =>
+        (i.toLong, s"alpha w$i beta w${i % 7}")).toDF("doc_id", "text")
+      // a sizeable batch so the apply's Spark jobs outlast the conflicting
+      // note-commit below
+      val batch = (1000 until 4000).map(i =>
+        (i.toLong, f.batchText(i))).toDF("doc_id", "text")
+        .localCheckpoint(true)
+      f.build(docs, dir)
+      val statsOf = () => statsOfAt(dir, f.statCols)
+      val preStats = statsOf()
+      val fs = fsOf(dir)
+      val markerFile = new org.apache.hadoop.fs.Path(
+        s"$dir/${StableRead.MarkerName}")
+      var outcome: scala.util.Try[Unit] = null
+      val t = new Thread(() => {
+        outcome = scala.util.Try {
+          f.ingest(dir, batch, 5L)
+        }
+      })
+      t.start()
+      // the estate marker appears the instant the ingest's bracket opens —
+      // commit a conflicting generation (noting stats, which the ingest
+      // always swaps) strictly inside its bracket window
+      val deadline = System.currentTimeMillis() + 30000
+      while (!fs.exists(markerFile) && t.isAlive &&
+        System.currentTimeMillis() < deadline) Thread.sleep(5)
+      val noteOutcome = scala.util.Try {
+        StableRead.withMaintenanceMarker(spark, dir) {
+          StableRead.noteTouched(dir, "stats")
+        }
+      }
+      t.join(120000)
+      assert(!t.isAlive, "ingest thread wedged")
+      val batchMarker = new org.apache.hadoop.fs.Path(s"$dir/ingestlog/b5")
+      (outcome, noteOutcome) match {
+        case (scala.util.Failure(e), scala.util.Success(_))
+            if e.isInstanceOf[java.util.ConcurrentModificationException] =>
+          // the drilled interleaving: the ingest lost the race AFTER its
+          // apply — the compensation must leave EXACTLY the pre-batch
+          // estate: marker un-committed, stats restored verbatim (round 18
+          // retired the bak pre-commit, so stats stayed post-batch here
+          // and the re-delivery double-counted), staging breadcrumb up
+          assert(!fs.exists(batchMarker),
+            "conflicted ingest left its exactly-once marker standing")
+          assert(statsOf() === preStats,
+            "compensation did not restore the pre-batch stats")
+          assert(fs.exists(new org.apache.hadoop.fs.Path(
+            s"$dir/_ingest_b5_tmp")), "recovery breadcrumb missing")
+        case (scala.util.Success(_), _) =>
+          // timing fallback: the ingest committed before (or without)
+          // overlap — the batch stands committed exactly once
+          assert(fs.exists(batchMarker))
+        case (i, nb) => fail(s"unexpected outcomes: ingest=$i note=$nb")
+      }
+      // mandated re-delivery: converges to exactly one application
+      f.ingest(dir, batch, 5L)
+      val want = {
+        val p = f.reference(docs, batch)
+        (statsOfAt(p, f.statCols), f.served(p))
+      }
+      assert(statsOf() === want._1, "stats double-counted after re-delivery")
+      assert(f.served(dir) === want._2,
+        "served rows diverged from the rebuild after the conflict re-delivery")
+      assert(f.fsck(dir).count() === 0L)
+    }
+  }
+
+  private def statsOfAt(path: String, cols: Seq[String]): Seq[Long] = {
     val r = spark.read.parquet(s"$path/stats").collect()(0)
-    (r.getAs[Long]("n_docs"), r.getAs[Long]("total_tokens"))
+    cols.map(r.getAs[Long])
   }
 
   test("streaming ingest racing compaction: locks serialize, end state exact") {

@@ -117,6 +117,14 @@ class MaintenanceGuardSpec extends SparkSpec {
       graft.operators.DedupRegistry.delete(
         spark, dir, Seq(1L).toDF("doc_id"), "doc_id") }
     rm(dir, "stats_b2_new")
+    touchFile(dir, "corpus/bucket=0/b4_junk.parquet")
+    intercept[IllegalStateException] {
+      graft.operators.DedupRegistry.compact(spark, dir) }
+    rm(dir, "corpus/bucket=0/b4_junk.parquet")
+    touchDir(dir, "_ingest_b4_tmp")
+    intercept[IllegalStateException] {
+      graft.operators.DedupRegistry.compact(spark, dir) }
+    rm(dir, "_ingest_b4_tmp")
     graft.operators.DedupRegistry.compact(spark, dir)
 
     val nd = java.nio.file.Files.createTempDirectory("guard-ndreg").toString
@@ -128,6 +136,19 @@ class MaintenanceGuardSpec extends SparkSpec {
     intercept[IllegalStateException] {
       graft.operators.NearDupRegistry.compact(spark, nd) }
     rm(nd, "bands/pk=0/b3_junk.parquet")
+    touchFile(nd, "corpus/bucket=0/b3_junk.parquet")
+    intercept[IllegalStateException] {
+      graft.operators.NearDupRegistry.compact(spark, nd) }
+    rm(nd, "corpus/bucket=0/b3_junk.parquet")
+    touchDir(nd, "_ingest_b3_tmp")
+    intercept[IllegalStateException] {
+      graft.operators.NearDupRegistry.compact(spark, nd) }
+    rm(nd, "_ingest_b3_tmp")
+    touchDir(nd, "stats_b3_bak")
+    intercept[IllegalStateException] {
+      graft.operators.NearDupRegistry.delete(
+        spark, nd, Seq(1L).toDF("doc_id"), "doc_id") }
+    rm(nd, "stats_b3_bak")
     graft.operators.NearDupRegistry.compact(spark, nd)
   }
 
