@@ -379,7 +379,7 @@ object DedupRegistry {
       spark: SparkSession,
       paths: Seq[String],
       dest: String): Unit = {
-    require(paths.size >= 2, s"DedupRegistry.merge: need >= 2 shards, got ${paths.size}")
+    RegistryIngest.requireMergeable(spark, paths, "DedupRegistry.merge")
     val fs = new org.apache.hadoop.fs.Path(dest)
       .getFileSystem(spark.sessionState.newHadoopConf())
     require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dest/stats")),
@@ -392,7 +392,6 @@ object DedupRegistry {
       s"DedupRegistry.merge: $dest carries a commit manifest — merging " +
         "in place into a committed estate would delete snapshot-pinned " +
         "files; merge into a fresh dest")
-    paths.foreach(RegistryIngest.requireCommitted(spark, _, "DedupRegistry.merge"))
     paths.foreach(requirePristine(spark, _, "DedupRegistry.merge"))
     // reader-isolation bracket + manifest commit ([[StableRead]]) on
     // the destination (sources are read-only here)
@@ -457,18 +456,13 @@ object DedupRegistry {
   }
 
   /** Physically apply the registry's entire soft-delete overlay in one
-    * [[delete]] (which also clears it) — the registry twin of
+    * [[delete]] ([[EstateIngest.vacuum]]) — the registry twin of
     * [[Retrieval.bm25Vacuum]]. Returns rows removed (0 = no overlay).
     */
   def vacuum(spark: SparkSession, path: String,
-      gcKeepGenerations: Option[Int] = None): Long = {
-    val n = Tombstones.read(spark, path)
-      .map(t => delete(spark, path, t, "id"))
-      .getOrElse(0L)
-    // retention cadence: the vacuum window doubles as the GC window
-    gcKeepGenerations.foreach(k => StableRead.gc(spark, path, k))
-    n
-  }
+      gcKeepGenerations: Option[Int] = None): Long =
+    EstateIngest.vacuum(spark, path, gcKeepGenerations)(
+      delete(spark, path, _, _))
 
   /** Permanent maintenance-history flag shared by both registry
     * families: [[delete]]/[[NearDupRegistry.delete]] stamp it on the
@@ -537,20 +531,11 @@ object DedupRegistry {
     * membership pass and [[probe]] read the same rows either way.
     */
   def compact(spark: SparkSession, path: String,
-      gcKeepGenerations: Option[Int] = None): Unit = {
-    // corpus writer lock (data-level exclusion vs a racing ingest) +
-    // reader-isolation bracket + manifest commit ([[StableRead]]).
-    // Pending-ingest guard inside the lock (wait-not-refuse)
-    StableRead.withTableLocks(spark, path, Seq("corpus")) {
-      RegistryIngest.requireCommitted(spark, path, "DedupRegistry.compact")
-      StableRead.withMaintenanceMarker(spark, path) {
-        graft.sinks.Sinks.compactTable(
-          spark, path, "corpus", Some("bucket"))
-      }
-      // retention cadence: compaction is the natural GC window
-      gcKeepGenerations.foreach(k => StableRead.gc(spark, path, k))
+      gcKeepGenerations: Option[Int] = None): Unit =
+    RegistryIngest.maintain(spark, path, "DedupRegistry.compact",
+        gcKeepGenerations) {
+      graft.sinks.Sinks.compactTable(spark, path, "corpus", Some("bucket"))
     }
-  }
 
   /** Targeted takedown by document id — [[graft.sinks.Sinks.deleteRows]]
     * on the bucket partitions (affected buckets only, untouched buckets
@@ -573,15 +558,8 @@ object DedupRegistry {
       spark: SparkSession,
       path: String,
       keys: DataFrame,
-      keyCol: String): Long = {
-    // writer locks on the rewritten tables (a racing ingest must not
-    // land mid-rewrite) + reader-isolation marker
-    // ([[graft.operators.StableRead]]): the rewrite + overlay clear +
-    // stats heal are steps a concurrent stable probe must not straddle.
-    // Pending-ingest guard inside the lock (wait-not-refuse)
-    StableRead.withTableLocks(spark, path, Seq("corpus", "stats")) {
-    RegistryIngest.requireCommitted(spark, path, "DedupRegistry.delete")
-    StableRead.withMaintenanceMarker(spark, path) {
+      keyCol: String): Long =
+    RegistryIngest.maintain(spark, path, "DedupRegistry.delete") {
     // permanent maintenance-history flag: a physical removal breaks the
     // merge stats' raw-stream conservation (n_docs drops, n_dropped
     // doesn't — the doc was taken down, not dropped as a duplicate), so
@@ -604,27 +582,9 @@ object DedupRegistry {
     // a physical delete compacts any soft-delete overlay covering these
     // ids (the Tombstones contract, same as the index deletes)
     Tombstones.clear(spark, path, keys, keyCol)
-    val st = spark.read.parquet(s"$path/stats")
-      .select(col("n_docs"), col("n_dropped"), col("buckets"))
-      .collect()(0)
-    val live = spark.read
+    EstateIngest.healStats(spark, path, Map("n_docs" -> spark.read
       .schema("id LONG, text STRING, digest STRING, bucket LONG")
-      .parquet(s"$path/corpus").count()
-    if (live != st.getLong(0)) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/stats_delete_tmp")
-      spark.range(1)
-        .select(
-          lit(live).as("n_docs"),
-          lit(st.getLong(1)).as("n_dropped"),
-          lit(st.getLong(2)).as("buckets"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      graft.sinks.Sinks.swapByRename(
-        fs, tmp, new org.apache.hadoop.fs.Path(s"$path/stats"))
-    }
+      .parquet(s"$path/corpus").count()))
     n
     }
-    }
-  }
 }

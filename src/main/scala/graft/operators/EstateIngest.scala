@@ -64,12 +64,40 @@ import org.apache.spark.sql.SparkSession
   * matters (a missing marker only re-exposes a batch that can no longer
   * be re-delivered). Maintenance refuses an estate with a batch pending
   * recovery ([[Layout.requireCommitted]]).
+  *
+  * The maintenance bracket ([[Layout.maintain]]) is the same contract
+  * seen from the other side, and every mutating maintenance op of the
+  * four families runs inside it (compact, delete — and through it
+  * vacuum — IVF's requantize and split):
+  *
+  *   1. writer locks on EVERY layout table, tagged and swapped — the
+  *      ingest's own lock set, so a live ingest and a rewrite never
+  *      interleave (a batch landing its `b<id>_` parts between a
+  *      rewrite's read and its rename would be silently dropped).
+  *      [[StableRead.withTableLocks]] acquires in sorted table order,
+  *      so two brackets and an ingest can never deadlock;
+  *   2. the pending-ingest guard INSIDE those locks: a live ingest is a
+  *      wait, not a refusal — only a crashed batch's debris (which the
+  *      stream's mandated re-delivery converges) refuses maintenance;
+  *   3. the op's body inside [[StableRead.withMaintenanceMarker]]: its
+  *      table rewrites and swaps are steps a concurrent stable probe
+  *      must not straddle, and a crashed op leaves the marker standing
+  *      until its re-run converges (the body must not `return`);
+  *   4. the optional retention GC ([[StableRead.gc]]) after the body's
+  *      commit, still under the locks — compaction is the natural GC
+  *      window. [[vacuum]] runs its GC after its delete's bracket
+  *      released the locks.
+  *
+  * The merges only READ their sources: [[Layout.requireMergeable]]
+  * applies the guard to each of them; their `dest` checks are per
+  * family (the registry merges are re-runnable by design).
   */
 object EstateIngest {
 
   /** A family's ingest tables, declared once; the protocol, its
-    * recovery sweep and the maintenance guard all read them. The ingest
-    * locks every tagged and swapped table.
+    * recovery sweep, the maintenance guard and the maintenance bracket
+    * all read them. The ingest and the bracket lock every tagged and
+    * swapped table.
     *
     * @param op            the family's ingest entry point, for messages
     * @param tagged        tables a batch lands in as `b<id>_` part files,
@@ -87,6 +115,9 @@ object EstateIngest {
       swapped: Seq[String] = Nil,
       legacySwapped: Seq[String] = Nil) {
 
+    /** Every table the ingest and the maintenance bracket lock. */
+    private def tables: Seq[String] = tagged.map(_._1) ++ swapped
+
     /** Run one recoverable, idempotent apply of batch `batchId` into
       * the estate at `path` (object scaladoc). `stage` writes the
       * batch's increment through the [[Batch]] paths and returns false
@@ -100,7 +131,7 @@ object EstateIngest {
       val hconf = spark.sessionState.newHadoopConf()
       val fs = new Path(path).getFileSystem(hconf)
       val tag = s"b$batchId"
-      StableRead.withTableLocks(spark, path, tagged.map(_._1) ++ swapped) {
+      StableRead.withTableLocks(spark, path, tables) {
         try {
           StableRead.withMaintenanceMarker(spark, path) {
             recoverAndApply(fs, hconf, path, tag, stage)
@@ -177,6 +208,29 @@ object EstateIngest {
           require(fs.delete(st.getPath, false), s"$op: cannot drop ${st.getPath}")
       }
 
+    /** Run one mutating maintenance op's `body` on the estate at
+      * `path` inside the maintenance bracket (object scaladoc): locks
+      * on every layout table, [[requireCommitted]] inside them, `body`
+      * inside the maintenance marker, then the retention GC at
+      * `gcKeepGenerations` (if given) still under the locks.
+      */
+    def maintain[T](spark: SparkSession, path: String, opName: String,
+        gcKeepGenerations: Option[Int] = None)(body: => T): T =
+      StableRead.withTableLocks(spark, path, tables) {
+        requireCommitted(spark, path, opName)
+        val out = StableRead.withMaintenanceMarker(spark, path)(body)
+        gcKeepGenerations.foreach(k => StableRead.gc(spark, path, k))
+        out
+      }
+
+    /** The merge preamble: at least two shards, none of them with a
+      * batch pending recovery (a merge would copy its junk parts in). */
+    def requireMergeable(spark: SparkSession, paths: Seq[String],
+        opName: String): Unit = {
+      require(paths.size >= 2, s"$opName: need >= 2 shards, got ${paths.size}")
+      paths.foreach(requireCommitted(spark, _, opName))
+    }
+
     /** Maintenance-safety guard: a mutating maintenance op (compact,
       * merge, delete, split, vacuum) refuses an estate with an
       * uncommitted batch pending recovery — rewriting the live tables
@@ -205,6 +259,46 @@ object EstateIngest {
 
     /** Where the body writes a swapped table's next version. */
     def next(table: String): String = s"$path/${table}_${tag}_new"
+  }
+
+  /** Physically apply the estate's ENTIRE soft-delete overlay in one
+    * call of the family's `delete` (keys frame, key column), which also
+    * clears it and so returns probes to the zero-overhead path
+    * ([[Tombstones]] scaladoc); then the retention GC at
+    * `gcKeepGenerations`, if given — the vacuum window doubles as the
+    * GC window. Returns rows removed (0 when there is no overlay).
+    */
+  private[graft] def vacuum(spark: SparkSession, path: String,
+      gcKeepGenerations: Option[Int])(
+      delete: (org.apache.spark.sql.DataFrame, String) => Long): Long = {
+    val n = Tombstones.read(spark, path).map(delete(_, "id")).getOrElse(0L)
+    gcKeepGenerations.foreach(k => StableRead.gc(spark, path, k))
+    n
+  }
+
+  /** Self-healing stats write of the deletes: `recounted` holds the
+    * stats columns recounted from the surviving tables; when any
+    * disagrees with the stored value, the one-row `stats` table is
+    * rewritten with those columns replaced and every other column
+    * copied unchanged, through a [[graft.sinks.Sinks.swapByRename]]
+    * swap. A delete runs it last, on every call: a key-miss delete
+    * still heals the stale stats a crash between a prior delete's
+    * rewrites and its stats swap left behind.
+    */
+  private[graft] def healStats(spark: SparkSession, path: String,
+      recounted: Map[String, Long]): Unit = {
+    import org.apache.spark.sql.functions.lit
+    val st = spark.read.parquet(s"$path/stats").collect()(0)
+    if (recounted.exists { case (c, v) => st.getAs[Long](c) != v }) {
+      val tmp = new Path(s"$path/stats_delete_tmp")
+      spark.range(1)
+        .select(st.schema.fieldNames.toSeq.map(c =>
+          lit(recounted.getOrElse(c, st.getAs[Any](c))).as(c)): _*)
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      graft.sinks.Sinks.swapByRename(
+        tmp.getFileSystem(spark.sessionState.newHadoopConf()),
+        tmp, new Path(s"$path/stats"))
+    }
   }
 
   /** An Observation's metrics after its action completed — EMPTY when

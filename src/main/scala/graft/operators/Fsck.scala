@@ -396,11 +396,31 @@ object Fsck {
       spark: SparkSession,
       path: String,
       strictAssignment: Boolean = true): DataFrame = graft.CacheScope.scoped {
-    val (cellIds, centroids) = Similarity.loadCentroidTable(spark, path)
     val corpus = spark.read.parquet(s"$path/corpus")
       .transform(graft.CacheScope.persisted)
     val dupId = cnt(corpus.groupBy(col("id")).agg(count(lit(1)).as("c"))
       .filter(col("c") > 1), "ivf_dup_id")
+    val tomb = tombstoneChecks(spark,
+      Tombstones.read(spark, path), corpus.select(col("id")), "ivf")
+    dupId.unionByName(ivfRowChecks(spark, path, corpus, strictAssignment))
+      .unionByName(tomb)
+      .unionByName(markerViol(spark, path, "ivf"))
+      .localCheckpoint(true) // materialize inside the scope (bm25Fsck note)
+  }
+
+  /** The per-row IVF invariants both [[ivfFsck]] and
+    * [[ivfFsckIncremental]] check over their `corpus` rows: the row's
+    * cell exists in the centroid table; with `strictAssignment`, it is
+    * the cell of the row's nearest centroid; on the int8 layout, qvec
+    * and qn2 re-derive from the row's vec; on the PQ layout, pqcode
+    * re-derives under the persisted codebooks — the writers' own
+    * expressions, the bm25Fsck recompute discipline (a drifted/corrupt
+    * code silently mis-scores stage 1 forever: rerank can only choose
+    * among stage-1 survivors).
+    */
+  private def ivfRowChecks(spark: SparkSession, path: String,
+      corpus: DataFrame, strictAssignment: Boolean): DataFrame = {
+    val (cellIds, centroids) = Similarity.loadCentroidTable(spark, path)
     val alien = cnt(corpus.filter(!col("cell").isin(cellIds: _*)),
       "ivf_alien_cell")
     val assigned = cnt(
@@ -420,10 +440,6 @@ object Fsck {
           .filter(col("qvec") =!= col("stored_q") ||
             Similarity.intDot(col("qvec"), col("qvec")) =!= col("stored_n2")),
         "ivf_quantization_mismatch")
-    // PQ layout (round 19): re-derive every row's code under the
-    // persisted codebooks — the writers' own expression, the bm25Fsck
-    // recompute discipline. A drifted/corrupt code silently mis-scores
-    // stage 1 forever (rerank can only choose among stage-1 survivors).
     val pq =
       if (!corpus.columns.contains("pqcode"))
         spark.range(0).select(lit("ivf_pqcode_mismatch").as("kind"),
@@ -436,12 +452,7 @@ object Fsck {
             books.map(_.map(_.toSeq).toSeq).toSeq) =!= col("pqcode")),
           "ivf_pqcode_mismatch")
       }
-    val tomb = tombstoneChecks(spark,
-      Tombstones.read(spark, path), corpus.select(col("id")), "ivf")
-    dupId.unionByName(alien).unionByName(assigned).unionByName(quant)
-      .unionByName(pq).unionByName(tomb)
-      .unionByName(markerViol(spark, path, "ivf"))
-      .localCheckpoint(true) // materialize inside the scope (bm25Fsck note)
+    alien.unionByName(assigned).unionByName(quant).unionByName(pq)
   }
 
   /** Partition-directory values under `table` holding any of `tags`'
@@ -466,8 +477,7 @@ object Fsck {
   /** INCREMENTAL audit of an IVF index — [[ivfFsck]] scoped to the
     * cells the ingest stream touched since the cursor (the
     * [[bm25FsckIncremental]] discipline and tag-lifetime boundary). The
-    * per-row checks (centroid membership, strict assignment,
-    * quantization re-derivation) run over exactly the touched cells'
+    * per-row checks ([[ivfRowChecks]]) run over exactly the touched cells'
     * partition-pruned reads; id uniqueness of the new rows is checked
     * against the full corpus's narrow id column. Cell pruning is
     * GENUINELY effective here, unlike the lexical index's bucket
@@ -488,7 +498,6 @@ object Fsck {
       empty.unionByName(markerViol(spark, path, "ivf"))
         .localCheckpoint(true)
     else {
-      val (cellIds, centroids) = Similarity.loadCentroidTable(spark, path)
       val touched = touchedPartitions(spark, path, "corpus", "cell=", tags)
       val corpus = spark.read.parquet(s"$path/corpus")
         .filter(col("cell").isin(touched: _*))
@@ -499,26 +508,7 @@ object Fsck {
         .join(corpus.select(col("id")), Seq("id"), "left_semi")
         .groupBy(col("id")).agg(count(lit(1)).as("c"))
         .filter(col("c") > 1), "ivf_dup_id")
-      val alien = cnt(corpus.filter(!col("cell").isin(cellIds: _*)),
-        "ivf_alien_cell")
-      val assigned = cnt(
-        if (!strictAssignment) spark.range(0).select(col("id"))
-        else corpus.filter(col("cell") =!= Similarity.posToCell(element_at(
-          graft.functions.VecExprs.nearestCentroids(
-            col("vec").cast("array<double>"), centroids, 1), 1), cellIds)),
-        "ivf_not_nearest_cell")
-      val quant =
-        if (!corpus.columns.contains("qvec"))
-          spark.range(0).select(lit("ivf_quantization_mismatch").as("kind"),
-            col("id").as("n"))
-        else cnt(
-          Similarity.quantizeEmbeddings(
-              corpus.select(col("id"), col("qvec").as("stored_q"),
-                col("qn2").as("stored_n2"), col("vec")), "vec")
-            .filter(col("qvec") =!= col("stored_q") ||
-              Similarity.intDot(col("qvec"), col("qvec")) =!= col("stored_n2")),
-          "ivf_quantization_mismatch")
-      dupId.unionByName(alien).unionByName(assigned).unionByName(quant)
+      dupId.unionByName(ivfRowChecks(spark, path, corpus, strictAssignment))
         .unionByName(markerViol(spark, path, "ivf"))
         .localCheckpoint(true)
     }

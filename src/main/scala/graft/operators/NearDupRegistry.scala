@@ -454,8 +454,7 @@ object NearDupRegistry {
       spark: SparkSession,
       paths: Seq[String],
       dest: String): Unit = graft.CacheScope.scoped {
-    require(paths.size >= 2,
-      s"NearDupRegistry.merge: need >= 2 shards, got ${paths.size}")
+    RegistryIngest.requireMergeable(spark, paths, "NearDupRegistry.merge")
     val fs = new org.apache.hadoop.fs.Path(dest)
       .getFileSystem(spark.sessionState.newHadoopConf())
     require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dest/stats")),
@@ -548,18 +547,13 @@ object NearDupRegistry {
   }
 
   /** Physically apply the registry's entire soft-delete overlay in one
-    * [[delete]] (which also clears it) — the registry twin of
+    * [[delete]] ([[EstateIngest.vacuum]]) — the registry twin of
     * [[Retrieval.bm25Vacuum]]. Returns rows removed (0 = no overlay).
     */
   def vacuum(spark: SparkSession, path: String,
-      gcKeepGenerations: Option[Int] = None): Long = {
-    val n = Tombstones.read(spark, path)
-      .map(t => delete(spark, path, t, "id"))
-      .getOrElse(0L)
-    // retention cadence: the vacuum window doubles as the GC window
-    gcKeepGenerations.foreach(k => StableRead.gc(spark, path, k))
-    n
-  }
+      gcKeepGenerations: Option[Int] = None): Long =
+    EstateIngest.vacuum(spark, path, gcKeepGenerations)(
+      delete(spark, path, _, _))
 
   /** Predict a takedown batch's [[delete]] footprint BEFORE executing
     * it — [[DedupRegistry.deleteBatchPlan]] extended to this family's
@@ -606,24 +600,14 @@ object NearDupRegistry {
     * [[DedupRegistry.compact]] over corpus and bands.
     */
   def compact(spark: SparkSession, path: String,
-      gcKeepGenerations: Option[Int] = None): Unit = {
-    // writer locks on the rewritten tables (data-level exclusion vs a
-    // racing ingest) + reader-isolation bracket + manifest commit
-    // ([[StableRead]]): two table swaps a concurrent stable probe must
-    // not straddle. Pending-ingest guard inside the lock
-    // (wait-not-refuse)
-    StableRead.withTableLocks(spark, path, Seq("bands", "corpus")) {
-      RegistryIngest.requireCommitted(spark, path, "NearDupRegistry.compact")
-      StableRead.withMaintenanceMarker(spark, path) {
-        graft.sinks.Sinks.compactTable(
-          spark, path, "corpus", Some("bucket"), Some(corpusSchema))
-        graft.sinks.Sinks.compactTable(
-          spark, path, "bands", Some("pk"), Some(bandsSchema))
-      }
-      // retention cadence: compaction is the natural GC window
-      gcKeepGenerations.foreach(k => StableRead.gc(spark, path, k))
+      gcKeepGenerations: Option[Int] = None): Unit =
+    RegistryIngest.maintain(spark, path, "NearDupRegistry.compact",
+        gcKeepGenerations) {
+      graft.sinks.Sinks.compactTable(
+        spark, path, "corpus", Some("bucket"), Some(corpusSchema))
+      graft.sinks.Sinks.compactTable(
+        spark, path, "bands", Some("pk"), Some(bandsSchema))
     }
-  }
 
   /** Targeted takedown by id: [[graft.sinks.Sinks.deleteRows]] on the
     * corpus buckets AND the bands partitions (a retired doc must stop
@@ -651,17 +635,8 @@ object NearDupRegistry {
       spark: SparkSession,
       path: String,
       keys: DataFrame,
-      keyCol: String): Long = {
-    // writer locks on the rewritten tables (a racing ingest must not
-    // land mid-rewrite) + reader-isolation marker
-    // ([[graft.operators.StableRead]]): the corpus/bands rewrites +
-    // overlay clear + stats heal are steps a concurrent stable probe
-    // must not straddle. Pending-ingest guard inside the lock
-    // (wait-not-refuse)
-    StableRead.withTableLocks(spark, path,
-      Seq("bands", "corpus", "stats")) {
-    RegistryIngest.requireCommitted(spark, path, "NearDupRegistry.delete")
-    StableRead.withMaintenanceMarker(spark, path) {
+      keyCol: String): Long =
+    RegistryIngest.maintain(spark, path, "NearDupRegistry.delete") {
     val k = keys.select(col(keyCol).as("id"))
     // maintenance-history flag: merge refuses this shard from now on
     // ([[DedupRegistry.requirePristine]]'s conservation rationale).
@@ -686,27 +661,8 @@ object NearDupRegistry {
     // stored scalar disagrees. A normal delete lands the exact
     // decrement (live == n_docs − n); a crash-interrupted prior delete
     // heals here even when THIS call's keys match nothing (n == 0).
-    val p = readParams(spark, path)
-    val live = spark.read.schema(corpusSchema).parquet(s"$path/corpus").count()
-    if (live != p.nDocs) {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/stats_delete_tmp")
-      spark.range(1)
-        .select(
-          lit(live).as("n_docs"),
-          lit(p.nDropped).as("n_dropped"),
-          lit(p.buckets).as("buckets"),
-          lit(p.shingleSize.toLong).as("shingle_size"),
-          lit(p.numHashes.toLong).as("num_hashes"),
-          lit(p.bands.toLong).as("bands"),
-          lit(p.threshold).as("threshold"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      graft.sinks.Sinks.swapByRename(
-        fs, tmp, new org.apache.hadoop.fs.Path(s"$path/stats"))
-    }
+    EstateIngest.healStats(spark, path, Map("n_docs" ->
+      spark.read.schema(corpusSchema).parquet(s"$path/corpus").count()))
     n
     }
-    }
-  }
 }

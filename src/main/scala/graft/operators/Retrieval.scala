@@ -530,39 +530,27 @@ object Retrieval {
     * the q145 gate pin it against q127's verbatim oracle).
     */
   def bm25Compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      gcKeepGenerations: Option[Int] = None): Unit = {
-    // writer locks on the rewritten tables (data-level exclusion vs a
-    // racing ingest) + reader-isolation bracket + manifest commit
-    // ([[StableRead]]): two table swaps a concurrent stable probe must
-    // not straddle. Pending-ingest guard inside the lock (the
-    // ivfCompact wait-not-refuse note)
-    StableRead.withTableLocks(spark, path,
-      Seq("doclen", "postings", "terms")) {
-      Bm25Ingest.requireCommitted(spark, path, "bm25Compact")
-      StableRead.withMaintenanceMarker(spark, path) {
-        val buckets = spark.read.parquet(s"$path/stats")
-          .select(col("buckets")).collect()(0).getLong(0)
-        require(buckets > 0, s"bm25Compact: corrupt stats at $path")
-        graft.sinks.Sinks.compactTable(
-          spark, path, "postings", Some("bucket"))
-        graft.sinks.Sinks.compactTable(spark, path, "doclen", None)
-        // terms: CONSOLIDATE the append-delta rows (one df row per
-        // append batch and term — the round-19 merge-on-read contract)
-        // back to one row per term, clustered like the build's layout.
-        // landTable = tmp + retire-aware swap, so the read never races
-        // its own rewrite and pinned readers keep the old chain
-        graft.sinks.Sinks.landTable(
-          spark.read.schema(termsSchema).parquet(s"$path/terms")
-            .groupBy(col("term"), col("bucket"))
-            .agg(sum(col("df")).as("df"))
-            .select(col("term"), col("df"), col("bucket"))
-            .repartition(col("bucket")),
-          path, "terms", Seq("bucket"))
-      }
-      // retention cadence: compaction is the natural GC window
-      gcKeepGenerations.foreach(k => StableRead.gc(spark, path, k))
+      gcKeepGenerations: Option[Int] = None): Unit =
+    Bm25Ingest.maintain(spark, path, "bm25Compact", gcKeepGenerations) {
+      val buckets = spark.read.parquet(s"$path/stats")
+        .select(col("buckets")).collect()(0).getLong(0)
+      require(buckets > 0, s"bm25Compact: corrupt stats at $path")
+      graft.sinks.Sinks.compactTable(
+        spark, path, "postings", Some("bucket"))
+      graft.sinks.Sinks.compactTable(spark, path, "doclen", None)
+      // terms: CONSOLIDATE the append-delta rows (one df row per
+      // append batch and term — the round-19 merge-on-read contract)
+      // back to one row per term, clustered like the build's layout.
+      // landTable = tmp + retire-aware swap, so the read never races
+      // its own rewrite and pinned readers keep the old chain
+      graft.sinks.Sinks.landTable(
+        spark.read.schema(termsSchema).parquet(s"$path/terms")
+          .groupBy(col("term"), col("bucket"))
+          .agg(sum(col("df")).as("df"))
+          .select(col("term"), col("df"), col("bucket"))
+          .repartition(col("bucket")),
+        path, "terms", Seq("bucket"))
     }
-  }
 
   /** Merge two [[buildBm25Index]] indexes — the pairwise convenience
     * form of the variadic N-way merge below (one code path; see that
@@ -620,12 +608,11 @@ object Retrieval {
       paths: Seq[String],
       dest: String,
       move: Boolean = false): Unit = {
-    require(paths.size >= 2, s"bm25Merge: need >= 2 shards, got ${paths.size}")
+    Bm25Ingest.requireMergeable(spark, paths, "bm25Merge")
     val hconf = spark.sessionState.newHadoopConf()
     val destP = new org.apache.hadoop.fs.Path(dest)
     val fs = destP.getFileSystem(hconf)
     require(!fs.exists(destP), s"bm25Merge: $dest already exists")
-    paths.foreach(Bm25Ingest.requireCommitted(spark, _, "bm25Merge"))
     // reader-isolation brackets + manifest commits ([[StableRead]]):
     // dest always — and with move=true the source shards too, since the
     // part-file renames CONSUME them under any reader still probing
@@ -763,18 +750,8 @@ object Retrieval {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       keys: DataFrame,
-      keyCol: String): Long = {
-    // writer locks on every rewritten table (a racing ingest must not
-    // land mid-rewrite) + reader isolation: the rewrites below open
-    // cross-table windows a concurrent probe could read as a blend
-    // even between jobs — the marker keeps StableRead probes out until
-    // the op completes (and stays behind on a crash, exactly as long
-    // as the re-run the crash-window contract already requires).
-    // Pending-ingest guard inside the lock (wait-not-refuse)
-    StableRead.withTableLocks(spark, path,
-      Seq("doclen", "postings", "stats", "terms")) {
-    Bm25Ingest.requireCommitted(spark, path, "bm25Delete")
-    StableRead.withMaintenanceMarker(spark, path) {
+      keyCol: String): Long =
+    Bm25Ingest.maintain(spark, path, "bm25Delete") {
     // roll forward a crash-interrupted prior postings delete BEFORE any
     // derivation reads the table: a standing intent marker means the
     // affected buckets' originals are retired and their survivors are
@@ -871,70 +848,36 @@ object Retrieval {
           .write.mode("overwrite").parquet(dlTmp.toString)
         graft.sinks.Sinks.swapByRename(dlCur.getFileSystem(hconf), dlTmp, dlCur)
       })
-    // stats heal LAST, never concurrent with the rewrites it observes —
-    // runs on every call (a key-miss delete still heals a prior
-    // crash-stranded window, the registry-delete contract)
-    bm25HealStats(spark, path)
+    // stats heal LAST, never concurrent with the rewrites it observes:
+    // n_docs and total_tokens recounted from the surviving doclen — the
+    // registry of record (dl covers tokenless docs; sum(dl) ==
+    // total_tokens is the build/append/merge invariant)
+    val live = spark.read.schema(doclenSchema).parquet(s"$path/doclen")
+      .agg(count(lit(1)).as("n"),
+        coalesce(sum(col("dl")), lit(0L)).as("t"))
+      .collect()(0)
+    EstateIngest.healStats(spark, path,
+      Map("n_docs" -> live.getLong(0), "total_tokens" -> live.getLong(1)))
     // a physical delete IS the compaction of any soft-delete overlay
     // covering these ids — clear them so probes return to the
     // zero-overhead path (Tombstones scaladoc)
     Tombstones.clear(spark, path, keys, keyCol)
     nDel
     }
-    }
-  }
-
-  /** Self-healing stats write shared by [[bm25Delete]]'s tail and its
-    * crash-window re-runs: n_docs and total_tokens are recounted from
-    * the surviving doclen — the registry of record (dl covers tokenless
-    * docs; sum(dl) == total_tokens is the build/append/merge invariant)
-    * — and the stats table swap-rewritten only when the stored scalars
-    * disagree. One narrow-column scan of doclen; the modulus is
-    * preserved verbatim.
-    */
-  private def bm25HealStats(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    import spark.implicits._
-    val st = spark.read.parquet(s"$path/stats")
-      .select(col("n_docs"), col("total_tokens"), col("buckets"))
-      .collect()(0)
-    val live = spark.read.schema(doclenSchema).parquet(s"$path/doclen")
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("dl")), lit(0L)).as("t"))
-      .collect()(0)
-    if (live.getLong(0) != st.getLong(0) || live.getLong(1) != st.getLong(1)) {
-      val hconf = spark.sessionState.newHadoopConf()
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/stats_delete_tmp")
-      Seq((live.getLong(0), live.getLong(1), st.getLong(2)))
-        .toDF("n_docs", "total_tokens", "buckets")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      graft.sinks.Sinks.swapByRename(
-        tmp.getFileSystem(hconf), tmp,
-        new org.apache.hadoop.fs.Path(s"$path/stats"))
-    }
-  }
 
   /** Physically apply the index's ENTIRE soft-delete overlay — the
     * vacuum step a takedown queue schedules when the overlay approaches
     * its broadcast budget ([[Tombstones]] scaladoc): one [[bm25Delete]]
-    * over the overlay's ids, which also clears it, returning probes to
-    * the zero-overhead path. Returns docs physically removed (0 when
-    * no overlay). Size the batch with [[bm25DeleteBatchPlan]] first if
-    * the rewrite window matters.
+    * over the overlay's ids ([[EstateIngest.vacuum]]). Returns docs
+    * physically removed (0 when no overlay). Size the batch with
+    * [[bm25DeleteBatchPlan]] first if the rewrite window matters.
     */
   def bm25Vacuum(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      gcKeepGenerations: Option[Int] = None): Long = {
-    val n = Tombstones.read(spark, path)
-      .map(t => bm25Delete(spark, path, t, "id"))
-      .getOrElse(0L)
-    // retention cadence: the vacuum window doubles as the GC window
-    gcKeepGenerations.foreach(k => StableRead.gc(spark, path, k))
-    n
-  }
+      gcKeepGenerations: Option[Int] = None): Long =
+    EstateIngest.vacuum(spark, path, gcKeepGenerations)(
+      bm25Delete(spark, path, _, _))
 
   /** Predict a takedown batch's [[bm25Delete]] footprint BEFORE
     * executing it — the costing operator a production takedown queue

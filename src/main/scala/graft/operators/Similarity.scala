@@ -731,12 +731,11 @@ object Similarity {
       paths: Seq[String],
       dest: String,
       move: Boolean = false): Unit = {
-    require(paths.size >= 2, s"ivfMerge: need >= 2 shards, got ${paths.size}")
+    IvfIngest.requireMergeable(spark, paths, "ivfMerge")
     val hconf = spark.sessionState.newHadoopConf()
     val destP = new org.apache.hadoop.fs.Path(dest)
     val fs = destP.getFileSystem(hconf)
     require(!fs.exists(destP), s"ivfMerge: $dest already exists")
-    paths.foreach(IvfIngest.requireCommitted(spark, _, "ivfMerge"))
     // reader-isolation brackets + manifest commits ([[StableRead]]):
     // dest always — and with move=true the source shards too, since the
     // part-file renames CONSUME them under any reader still probing
@@ -953,11 +952,11 @@ object Similarity {
     * independent of cells); cell ids come out contiguous 0..nlist-1,
     * collapsing any [[ivfSplitCells]] gaps.
     *
-    * Guards: [[graft.sinks.Sinks.requireNoPendingIngest]] (a rewrite
-    * would erase pending batch tags) and the [[StableRead]] maintenance
-    * marker (the corpus and centroid swaps are two steps a concurrent
-    * probe must not straddle — rows placed by the new quantizer probed
-    * through the old centroids silently lose recall). A crash leaves
+    * Runs in the maintenance bracket ([[EstateIngest]]): the corpus and
+    * centroid swaps are two steps a concurrent probe must not straddle
+    * (rows placed by the new quantizer probed through the old centroids
+    * silently lose recall), and the whole-corpus swap must not drop a
+    * live ingest's parts landed after the corpus read. A crash leaves
     * the marker standing; the re-run retrains from the same rows (the
     * corpus CONTENT never changes here), reproduces the same centroids
     * deterministically, and converges both swaps.
@@ -973,9 +972,8 @@ object Similarity {
       nlist: Int,
       sampleN: Int = 4096,
       iters: Int = 8): Unit = {
-    IvfIngest.requireCommitted(spark, indexPath, "ivfRequantize")
     require(nlist > 0, s"ivfRequantize: nlist must be positive, got $nlist")
-    StableRead.withMaintenanceMarker(spark, indexPath) {
+    IvfIngest.maintain(spark, indexPath, "ivfRequantize") {
       import spark.implicits._
       val hconf = spark.sessionState.newHadoopConf()
       val corpusCur = new org.apache.hadoop.fs.Path(s"$indexPath/corpus")
@@ -1018,23 +1016,10 @@ object Similarity {
     */
   def ivfCompact(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      gcKeepGenerations: Option[Int] = None): Unit = {
-    // corpus writer lock (data-level exclusion vs a racing ingest) +
-    // reader-isolation bracket + manifest commit ([[StableRead]]).
-    // The pending-ingest guard runs INSIDE the lock: a live ingest is
-    // a wait, not a refusal — only a crashed batch's debris (which the
-    // stream's mandated re-delivery converges) refuses maintenance
-    StableRead.withTableLocks(spark, indexPath, Seq("corpus")) {
-      IvfIngest.requireCommitted(spark, indexPath, "ivfCompact")
-      StableRead.withMaintenanceMarker(spark, indexPath) {
-        graft.sinks.Sinks.compactTable(
-          spark, indexPath, "corpus", Some("cell"))
-      }
-      // retention cadence: compaction is the natural GC window
-      // ([[StableRead.gc]]); still under the table lock
-      gcKeepGenerations.foreach(k => StableRead.gc(spark, indexPath, k))
+      gcKeepGenerations: Option[Int] = None): Unit =
+    IvfIngest.maintain(spark, indexPath, "ivfCompact", gcKeepGenerations) {
+      graft.sinks.Sinks.compactTable(spark, indexPath, "corpus", Some("cell"))
     }
-  }
 
   /** Build the QUANTIZED IVF index — [[buildIvfIndex]]'s cell layout
     * with the corpus stored int8 ([[quantizeEmbeddings]]'s codec)
@@ -1577,15 +1562,8 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String,
       keys: DataFrame,
-      keyCol: String): Long = {
-    // corpus writer lock (a racing ingest must not land mid-rewrite) +
-    // reader-isolation marker: the corpus rewrite + overlay clear are
-    // two steps a concurrent StableRead probe must not straddle
-    // (bm25Delete's marker note). Pending-ingest guard inside the lock
-    // (the ivfCompact wait-not-refuse note)
-    StableRead.withTableLocks(spark, indexPath, Seq("corpus")) {
-    IvfIngest.requireCommitted(spark, indexPath, "ivfDelete")
-    StableRead.withMaintenanceMarker(spark, indexPath) {
+      keyCol: String): Long =
+    IvfIngest.maintain(spark, indexPath, "ivfDelete") {
       val n = graft.sinks.Sinks.deleteRows(
         spark, s"$indexPath/corpus", "cell", "id",
         keys.select(col(keyCol).as("id")))
@@ -1594,25 +1572,18 @@ object Similarity {
       Tombstones.clear(spark, indexPath, keys, keyCol)
       n
     }
-    }
-  }
 
   /** Physically apply the index's entire soft-delete overlay — the
     * dense twin of [[graft.operators.Retrieval.bm25Vacuum]]: one
-    * [[ivfDelete]] over the overlay's ids, which also clears it.
+    * [[ivfDelete]] over the overlay's ids ([[EstateIngest.vacuum]]).
     * Returns vectors removed (0 when no overlay).
     */
   def ivfVacuum(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String,
-      gcKeepGenerations: Option[Int] = None): Long = {
-    val n = graft.operators.Tombstones.read(spark, indexPath)
-      .map(t => ivfDelete(spark, indexPath, t, "id"))
-      .getOrElse(0L)
-    // retention cadence: the vacuum window doubles as the GC window
-    gcKeepGenerations.foreach(k => StableRead.gc(spark, indexPath, k))
-    n
-  }
+      gcKeepGenerations: Option[Int] = None): Long =
+    EstateIngest.vacuum(spark, indexPath, gcKeepGenerations)(
+      ivfDelete(spark, indexPath, _, _))
 
   /** Read-only costing twin of [[ivfSplitCells]] (the
     * [[graft.operators.Retrieval.bm25DeleteBatchPlan]] pattern): the
@@ -1681,15 +1652,11 @@ object Similarity {
       maxCellRows: Long,
       sampleN: Int = 4096): Seq[(Int, Int, Int)] = {
     require(maxCellRows >= 1, s"ivfSplitCells: maxCellRows must be >= 1")
-    IvfIngest.requireCommitted(spark, indexPath, "ivfSplitCells")
     val hconf = spark.sessionState.newHadoopConf()
     val corpusPath = new org.apache.hadoop.fs.Path(s"$indexPath/corpus")
     val fs = corpusPath.getFileSystem(hconf)
-    if (!fs.exists(corpusPath)) return Seq.empty
-    // reader-isolation bracket + manifest commit ([[StableRead]]) —
-    // from the orphan cleanup on, the op mutates live tables (no
-    // non-local returns inside: the empty cases fall through as values)
-    StableRead.withMaintenanceMarker(spark, indexPath) {
+    if (!fs.exists(corpusPath)) Seq.empty
+    else IvfIngest.maintain(spark, indexPath, "ivfSplitCells") {
     // centroid table: bounded driver collect (nlist rows)
     val current = spark.read.parquet(s"$indexPath/centroids")
       .orderBy(col("cell")).collect()

@@ -159,6 +159,42 @@ class IncrementalFsckSpec extends SparkSpec {
     assert(kinds(Fsck.ivfFsck(spark, dir)).contains("ivf_not_nearest_cell"))
   }
 
+  test("ivf incremental on a PQ index: a wrong pqcode in a touched cell is caught") {
+    val dir = java.nio.file.Files.createTempDirectory("fsck-pq-incr").toString
+    val rnd = new scala.util.Random(5)
+    def cluster(n: Int, base: Long, shift: Double) =
+      (0 until n).map(i =>
+        (base + i, Seq.fill(4)(rnd.nextGaussian() * 0.1 + shift)))
+    val b0 = (cluster(20, 0L, 0.0) ++ cluster(20, 100L, 8.0)).toDF("id", "vec")
+    graft.operators.Similarity.ivfPqInit(spark,
+      graft.operators.Similarity.trainIvfCentroids(b0, "id", "vec", 2),
+      graft.operators.Similarity.trainPqCodebooks(
+        b0, "id", "vec", m = 2, ksub = 4, sampleN = 128),
+      dir)
+    graft.operators.Similarity.ivfIngestBatch(dir, b0, "id", "vec", 0L)
+    graft.operators.Similarity.ivfIngestBatch(
+      dir, cluster(10, 200L, 8.0).toDF("id", "vec"), "id", "vec", 1L)
+    assert(Fsck.ivfFsckIncremental(spark, dir, 0L).count() === 0L)
+    val touched = new java.io.File(s"$dir/corpus").listFiles()
+      .filter(_.getName.startsWith("cell="))
+      .find(_.listFiles().exists(_.getName.startsWith("b1_"))).get
+    // copy a touched-cell row under a fresh id with every code byte
+    // moved to the next codeword: right cell, right vec, wrong code
+    val r = spark.read.parquet(touched.getPath)
+      .select(col("vec"), col("pqcode")).head()
+    val wrong = r.getAs[Array[Byte]](1).map(b => ((b + 1) % 4).toByte)
+    val tmp = java.nio.file.Files.createTempDirectory("pq-plant").toString
+    Seq((990L, r.getSeq[Double](0), wrong)).toDF("id", "vec", "pqcode")
+      .coalesce(1).write.mode("overwrite").parquet(tmp)
+    java.nio.file.Files.copy(
+      new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toPath,
+      new java.io.File(touched, "zz_junk.parquet").toPath)
+    val got = kinds(Fsck.ivfFsckIncremental(spark, dir, 0L))
+    assert(got === Set("ivf_pqcode_mismatch"), s"got $got")
+    assert(kinds(Fsck.ivfFsck(spark, dir)) === Set("ivf_pqcode_mismatch"))
+  }
+
   test("registry incrementals: delta-vs-standing checks fire, cursor respected") {
     // exact registry: a b1-tagged plant duplicating a batch-0 digest is
     // a delta-vs-standing violation the incremental audit must see

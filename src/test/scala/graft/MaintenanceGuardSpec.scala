@@ -71,17 +71,59 @@ class MaintenanceGuardSpec extends SparkSpec {
     graft.operators.Retrieval.bm25Compact(spark, dir)
     assert(!fsOf(dir).exists(
       new org.apache.hadoop.fs.Path(s"$dir/stats_b7_bak")))
+  }
 
-    // merge guards its SOURCES
-    val dir2 = java.nio.file.Files.createTempDirectory("guard-bm25b").toString
-    graft.operators.Retrieval.bm25Init(spark, dir2, buckets = 4)
-    graft.operators.Retrieval.bm25IngestBatch(dir2,
-      Seq((9L, "eta theta iota")).toDF("doc_id", "text"),
-      "doc_id", "text", 0L)
-    touchDir(dir2, "_ingest_b3_tmp")
-    intercept[IllegalStateException] {
-      graft.operators.Retrieval.bm25Merge(spark, Seq(dir, dir2),
-        java.nio.file.Files.createTempDirectory("guard-dst").toString + "/m") }
+  // merge guards its SOURCES, in every family: a shard with a crashed,
+  // unrecovered batch must refuse, or the merge copies its junk in.
+  // Each input: (family, build a committed one-doc shard, merge)
+  private val ivfCents = Array(Array(1.0, 0.0), Array(0.0, 1.0))
+  Seq[(String, (String, Long) => Unit, (Seq[String], String) => Unit)](
+    ("bm25",
+      (dir, id) => {
+        graft.operators.Retrieval.bm25Init(spark, dir, buckets = 4)
+        graft.operators.Retrieval.bm25IngestBatch(dir,
+          Seq((id, s"eta theta iota w$id")).toDF("doc_id", "text"),
+          "doc_id", "text", 0L)
+      },
+      (paths, dest) => graft.operators.Retrieval.bm25Merge(spark, paths, dest)),
+    ("DedupRegistry",
+      (dir, id) => {
+        graft.operators.DedupRegistry.init(spark, dir, buckets = 4)
+        graft.operators.DedupRegistry.ingestBatch(dir,
+          Seq((id, s"text $id")).toDF("doc_id", "text"), "doc_id", "text", 0L)
+      },
+      (paths, dest) =>
+        graft.operators.DedupRegistry.merge(spark, paths, dest)),
+    ("NearDupRegistry",
+      (dir, id) => {
+        graft.operators.NearDupRegistry.init(spark, dir, buckets = 4)
+        graft.operators.NearDupRegistry.ingestBatch(dir,
+          Seq((id, s"words $id one two three")).toDF("doc_id", "text"),
+          "doc_id", "text", 0L)
+      },
+      (paths, dest) =>
+        graft.operators.NearDupRegistry.merge(spark, paths, dest)),
+    ("ivf",
+      (dir, id) => {
+        graft.operators.Similarity.ivfInit(spark, ivfCents, dir)
+        graft.operators.Similarity.ivfIngestBatch(dir,
+          Seq((id, Seq(0.9, 0.1))).toDF("id", "vec"), "id", "vec", 0L)
+      },
+      (paths, dest) => graft.operators.Similarity.ivfMerge(spark, paths, dest))
+  ).foreach { case (family, shard, merge) =>
+    test(s"merge guards its SOURCES: $family") {
+      val parent = java.nio.file.Files.createTempDirectory("guard-merge-src")
+        .toString
+      shard(s"$parent/a", 1L)
+      shard(s"$parent/b", 9L)
+      touchDir(s"$parent/b", "_ingest_b3_tmp")
+      val e = intercept[IllegalStateException] {
+        merge(Seq(s"$parent/a", s"$parent/b"), s"$parent/m0") }
+      assert(e.getMessage.contains("pending recovery"), e.getMessage)
+      // the debris was the only obstacle: once recovered, the merge runs
+      rm(s"$parent/b", "_ingest_b3_tmp")
+      merge(Seq(s"$parent/a", s"$parent/b"), s"$parent/m1")
+    }
   }
 
   test("ivf maintenance refuses pending ingest debris") {
