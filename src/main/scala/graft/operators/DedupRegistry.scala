@@ -199,7 +199,7 @@ object DedupRegistry {
   /** The registry's ingest tables: accepted rows land as tagged corpus
     * parts, stats swaps.
     */
-  private val RegistryIngest = EstateIngest.Layout("DedupRegistry.ingestBatch",
+  private[operators] val RegistryIngest = EstateIngest.Layout("DedupRegistry.ingestBatch",
     tagged = Seq("corpus" -> "bucket="), swapped = Seq("stats"))
 
   /** One recoverable, idempotent micro-batch apply ([[EstateIngest]]).

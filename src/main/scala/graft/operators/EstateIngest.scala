@@ -96,8 +96,9 @@ object EstateIngest {
 
   /** A family's ingest tables, declared once; the protocol, its
     * recovery sweep, the maintenance guard and the maintenance bracket
-    * all read them. The ingest and the bracket lock every tagged and
-    * swapped table.
+    * all read them. The ingest, the bracket and the batch appends lock
+    * every tagged and swapped table; [[Fsck]] reads the tagged tables'
+    * partition prefixes and `b<id>_` tags.
     *
     * @param op            the family's ingest entry point, for messages
     * @param tagged        tables a batch lands in as `b<id>_` part files,
@@ -222,6 +223,14 @@ object EstateIngest {
         gcKeepGenerations.foreach(k => StableRead.gc(spark, path, k))
         out
       }
+
+    /** Run a batch append's `body` (`bm25Append`, `ivfAppend` and its
+      * int8/PQ twins) under the ingest's writer locks, so a compact,
+      * requantize or split cannot swap away the parts it lands. No
+      * pending-ingest guard: an append never touches `b<id>_` debris.
+      */
+    def locked[T](spark: SparkSession, path: String)(body: => T): T =
+      StableRead.withTableLocks(spark, path, tables)(body)
 
     /** The merge preamble: at least two shards, none of them with a
       * batch pending recovery (a merge would copy its junk parts in). */

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Integrity audits (fsck) for every persisted artifact family — the
   * "trust but verify" operator a production pipeline runs on its 100 TB
@@ -14,15 +16,42 @@ import org.apache.spark.sql.functions._
   * cannot drift from the writer) — and returns a (kind, n) VIOLATION
   * relation, empty iff the artifact is internally consistent.
   *
-  * Scale shape: an fsck is a deliberate FULL SCAN of the artifact (that
-  * is its job — unlike probes, nothing is pruned); every check is a
-  * linear aggregation or an equi-join keyed by the artifact's own keys
-  * (term/id/digest), so it distributes like the build that wrote the
-  * artifact and costs about one build's shuffle. Run it in maintenance
-  * windows, never on the query path. All four audits are read-only and
-  * safe to run concurrently with probes (they read one file listing,
-  * same snapshot semantics as a probe); like every reader they must not
-  * overlap a WRITER's swap windows.
+  * Scale shape: a full audit (no cursor) is a deliberate FULL SCAN of
+  * the artifact (that is its job — unlike probes, nothing is pruned);
+  * every check is a linear aggregation or an equi-join keyed by the
+  * artifact's own keys (term/id/digest), so it distributes like the
+  * build that wrote the artifact and costs about one build's shuffle.
+  * Run it in maintenance windows, never on the query path. Every audit
+  * is read-only and safe to run concurrently with probes (they read one
+  * file listing, same snapshot semantics as a probe); like every reader
+  * they must not overlap a WRITER's swap windows.
+  *
+  * The estate-family audits take an optional cursor, `sinceBatch` (the
+  * last audited ingest batch id; -1 audits everything ever ingested),
+  * and then run the SAME checks over what the ingest stream committed
+  * since it — the nightly-affordable form at 100 TB. That scope is
+  * resolved from the `ingestlog/` markers and one listing per tagged
+  * table of the family's [[EstateIngest.Layout]]:
+  *
+  *   - per-row and per-partition checks read only the partitions
+  *     holding a new batch's `b<id>_` files — partition-pruned reads,
+  *     untouched partitions' files never open;
+  *   - derivation checks over the new rows read the batches' tagged
+  *     files;
+  *   - global-uniqueness checks semi-join the table's narrow key column
+  *     to the delta keys (old-vs-old collisions were audited before the
+  *     cursor); stats recounts and the tombstone overlay stay whole.
+  *
+  * An idle cursor (no batch since it) costs one listing and runs only
+  * the stranded-marker check. Tag lifetime bounds the cursor: compact,
+  * requantize and split rewrite the tags away, so audit since the cursor
+  * at ingest cadence BEFORE maintenance, then run the full audit once
+  * after it and restart the cursor. A BM25 delta is priced by its
+  * touched buckets, and a broad-vocabulary delta's terms hash-spread
+  * over nearly all of them (AuditBench 100x: 10.5 s pruned vs 5.9 s
+  * full), so past half the modulus the BM25 audit resolves to the full
+  * scope — cheaper there AND strictly more complete. IVF cells prune
+  * well (embedding batches cluster) and are never widened.
   *
   * Reference analogue: none — the reference trusts PostgreSQL's
   * constraints (`/root/reference/src/database/DatabaseLoader.cpp:102`);
@@ -53,18 +82,18 @@ object Fsck {
       s"${prefix}_stranded_maintenance_marker", spark)
 
   /** A standing [[graft.sinks.Sinks.deleteRows]] roll-forward intent
-    * marker under `tableDir`: a delete staged its survivors but crashed
-    * before landing them — live reads of the table are missing
-    * committed rows until the next delete (or
+    * marker in a tagged table of `layout` (every table a family's delete
+    * rewrites through deleteRows is one): a delete staged its survivors
+    * but crashed before landing them — live reads of the table are
+    * missing committed rows until the next delete (or
     * [[graft.sinks.Sinks.recoverDeleteIntent]]) rolls it forward.
     * Recoverable debris, but an audit must surface it, not read past it.
     */
-  private def deleteIntentViol(
-      spark: SparkSession, tableDir: String, prefix: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(
-      tableDir, graft.sinks.Sinks.DeleteIntentName)
-    scalarViol(
-      !p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p),
+  private def deleteIntentViol(spark: SparkSession, path: String,
+      layout: EstateIngest.Layout, prefix: String): DataFrame = {
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    scalarViol(!layout.tagged.exists { case (t, _) =>
+        fs.exists(new Path(s"$path/$t", graft.sinks.Sinks.DeleteIntentName)) },
       s"${prefix}_standing_delete_intent", spark)
   }
 
@@ -104,6 +133,123 @@ object Fsck {
         .localCheckpoint(true)
     }
 
+  /** Committed ingest-batch ids newer than `sinceBatch`, from the
+    * artifact's `ingestlog/` markers.
+    */
+  private def batchesSince(
+      spark: SparkSession, path: String, sinceBatch: Long): Seq[Long] = {
+    val log = new Path(s"$path/ingestlog")
+    val fs = log.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(log)) Seq.empty
+    else fs.listStatus(log).toSeq
+      .map(_.getPath.getName)
+      .collect { case s if s.matches("b\\d+") => s.drop(1).toLong }
+      .filter(_ > sinceBatch)
+      .sorted
+  }
+
+  /** The rows one audit covers (object scaladoc): the whole estate at
+    * `path` when `tags` is None, else what batches `tags` landed in the
+    * tagged tables of `layout`. In the full scope every operation
+    * returns its input, so a full audit plans exactly its checks.
+    */
+  private final class Scope(spark: SparkSession, path: String,
+      layout: EstateIngest.Layout, tags: Option[Seq[Long]]) {
+    def full: Boolean = tags.isEmpty
+    def idle: Boolean = tags.exists(_.isEmpty)
+
+    private lazy val fs =
+      new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    private val listings =
+      scala.collection.mutable.Map.empty[String, (Int, Seq[(Path, Option[Long])])]
+
+    /** One listing of tagged `table`: its number of partition dirs, and
+      * the batches' tagged files, each with its partition value. */
+    private def listing(table: String) = listings.getOrElseUpdate(table, {
+      val prefix = layout.tagged.toMap.apply(table)
+      val names = tags.get.map(t => s"b${t}_")
+      def tagged(sts: Seq[org.apache.hadoop.fs.FileStatus]) =
+        sts.map(_.getPath).filter(p => names.exists(p.getName.startsWith))
+      val d = new Path(s"$path/$table")
+      val (parts, top) =
+        if (!fs.exists(d)) (Nil, Nil)
+        else fs.listStatus(d).toSeq.partition(st => prefix.nonEmpty &&
+          st.isDirectory && st.getPath.getName.startsWith(prefix))
+      (parts.size, tagged(top).map(_ -> None) ++ parts.flatMap { dir =>
+        val files = tagged(fs.listStatus(dir.getPath).toSeq)
+        lazy val v = dir.getPath.getName.stripPrefix(prefix).toLong
+        files.map(_ -> Some(v))
+      })
+    })
+
+    private def partitionCol(table: String): String =
+      layout.tagged.toMap.apply(table).stripSuffix("=")
+
+    private def touched(table: String): Seq[Long] =
+      listing(table)._2.flatMap(_._2).distinct.sorted
+
+    /** This scope, or the full one when the batches touched at least
+      * half of `table`'s partitions (the BM25 widening). */
+    def widenedPastHalf(table: String): Scope =
+      if (full || listing(table)._1 == 0 ||
+          touched(table).size * 2 < listing(table)._1) this
+      else new Scope(spark, path, layout, None)
+
+    /** `rows` of `table` (or of a table partitioned like it), pruned to
+      * the partitions holding a new batch's files. */
+    def prune(rows: DataFrame, table: String): DataFrame =
+      if (full) rows
+      else rows.filter(col(partitionCol(table)).isin(touched(table): _*))
+
+    /** The new batches' own rows of `table`: its tagged files, read with
+      * the data columns of `rows` (the table's read), persisted. */
+    def delta(rows: DataFrame, table: String): DataFrame =
+      if (full) rows
+      else {
+        val schema = StructType(
+          rows.schema.filterNot(_.name == partitionCol(table)))
+        val files = listing(table)._2.map(_._1.toString)
+        (if (files.isEmpty)
+          spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+        else spark.read.schema(schema).parquet(files: _*))
+          .transform(graft.CacheScope.persisted)
+      }
+
+    /** The rows of `whole` whose `key` occurs in `keys`. */
+    def keysIn(whole: DataFrame, keys: DataFrame, key: String): DataFrame =
+      if (full) whole
+      else whole.join(keys.select(col(key)), Seq(key), "left_semi")
+
+    /** `rows` with a boolean `delta` column: whether its `key` occurs in
+      * `keys` (always, in the full scope). */
+    def flagged(rows: DataFrame, keys: DataFrame, key: String): DataFrame =
+      if (full) rows.withColumn("delta", lit(true))
+      else rows
+        .join(keys.select(col(key)).withColumn("delta", lit(true)),
+          Seq(key), "left")
+        .withColumn("delta", coalesce(col("delta"), lit(false)))
+  }
+
+  /** One audit of the family estate at `path`: `checks` runs over the
+    * scope `sinceBatch` resolves, with the stranded-marker and
+    * delete-intent checks beside it — or the marker check alone on an
+    * idle cursor. The violation relation is materialized INSIDE the
+    * cache scope: it is tiny, but a lazy return would recompute every
+    * full-scan branch per caller action after the scope released the
+    * shared caches.
+    */
+  private def audit(spark: SparkSession, path: String,
+      layout: EstateIngest.Layout, sinceBatch: Option[Long], prefix: String)(
+      checks: Scope => DataFrame): DataFrame = graft.CacheScope.scoped {
+    val scope = new Scope(spark, path, layout,
+      sinceBatch.map(batchesSince(spark, path, _)))
+    val marker = markerViol(spark, path, prefix)
+    (if (scope.idle) marker
+    else checks(scope).unionByName(marker)
+      .unionByName(deleteIntentViol(spark, path, layout, prefix)))
+      .localCheckpoint(true)
+  }
+
   /** Audit a [[Retrieval.buildBm25Index]]-layout index. Invariants:
     * doclen ids unique; postings (id, term) unique with tf >= 1 and
     * every posted id registered in doclen; per-doc sum(tf) == dl (a
@@ -113,32 +259,39 @@ object Fsck {
     * bucket their term hashes to under the stats modulus (a misplaced
     * row is invisible to every pruned probe — silent recall loss, the
     * worst failure class); stats n_docs == doclen count and
-    * total_tokens == sum(dl).
+    * total_tokens == sum(dl); the tombstone overlay's ids unique and
+    * registered.
     */
-  def bm25Fsck(spark: SparkSession, path: String): DataFrame =
-    graft.CacheScope.scoped {
+  def bm25Fsck(spark: SparkSession, path: String,
+      sinceBatch: Option[Long] = None): DataFrame =
+    audit(spark, path, Retrieval.Bm25Ingest, sinceBatch, "bm25") { cursor =>
+      val scope = cursor.widenedPastHalf("postings")
       val st = spark.read.parquet(s"$path/stats")
         .select(col("n_docs"), col("total_tokens"), col("buckets"))
         .collect()(0)
       val (nDocs, totTok, buckets) = (st.getLong(0), st.getLong(1), st.getLong(2))
-      val terms = spark.read.schema(Retrieval.termsSchema)
-        .parquet(s"$path/terms")
-      val postings = spark.read.schema(Retrieval.postingsSchema)
-        .parquet(s"$path/postings")
+      // terms rows bucket by the same term hash as postings, so both
+      // sides of the df recount prune to the same buckets
+      val terms = scope.prune(spark.read.schema(Retrieval.termsSchema)
+        .parquet(s"$path/terms"), "postings")
+      val postings = scope.prune(spark.read.schema(Retrieval.postingsSchema)
+        .parquet(s"$path/postings"), "postings")
         .transform(graft.CacheScope.persisted)
       val dl = spark.read.schema(Retrieval.doclenSchema)
         .parquet(s"$path/doclen")
         .transform(graft.CacheScope.persisted)
-      val dupDoc = cnt(dl.groupBy(col("id")).agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1), "bm25_dup_doclen_id")
+      val newDl = scope.delta(dl, "doclen")
+      val newPostings = scope.delta(postings, "postings")
+      val dupDoc = cnt(scope.keysIn(dl, newDl, "id").groupBy(col("id"))
+        .agg(count(lit(1)).as("c")).filter(col("c") > 1), "bm25_dup_doclen_id")
       val dupPost = cnt(postings.groupBy(col("id"), col("term"))
         .agg(count(lit(1)).as("c")).filter(col("c") > 1), "bm25_dup_posting")
       val badTf = cnt(postings.filter(col("tf") < 1), "bm25_nonpositive_tf")
       val orphan = cnt(postings.select(col("id")).distinct()
         .join(dl.select(col("id")), Seq("id"), "left_anti"),
         "bm25_posting_for_unregistered_doc")
-      val dlMismatch = cnt(dl
-        .join(postings.groupBy(col("id")).agg(sum(col("tf")).as("s")),
+      val dlMismatch = cnt(newDl
+        .join(newPostings.groupBy(col("id")).agg(sum(col("tf")).as("s")),
           Seq("id"), "left")
         .filter(coalesce(col("s"), lit(0L)) =!= col("dl")),
         "bm25_doclen_tf_mismatch")
@@ -168,197 +321,10 @@ object Fsck {
       // tombstone is a typo'd takedown — auditable, not fatal at probe)
       val tomb = tombstoneChecks(spark,
         Tombstones.read(spark, path), dl.select(col("id")), "bm25")
-      // materialize INSIDE the scope (the CacheScope.consuming
-      // contract): the violation relation is tiny, but a lazy return
-      // would recompute every full-scan branch per caller action after
-      // the scope released the shared postings/doclen caches
       dupDoc.unionByName(dupPost).unionByName(badTf).unionByName(orphan)
         .unionByName(dlMismatch).unionByName(dfMismatch)
         .unionByName(misTerm).unionByName(misPost)
         .unionByName(nOk).unionByName(tokOk).unionByName(tomb)
-        .unionByName(markerViol(spark, path, "bm25"))
-        .unionByName(deleteIntentViol(spark, s"$path/postings", "bm25"))
-        .localCheckpoint(true)
-    }
-
-  /** Committed ingest-batch ids newer than `sinceBatch`, from the
-    * artifact's `ingestlog/` markers — the recorded cursor the
-    * incremental audits key on.
-    */
-  private[graft] def batchesSince(
-      spark: SparkSession, path: String, sinceBatch: Long): Seq[Long] = {
-    val log = new org.apache.hadoop.fs.Path(s"$path/ingestlog")
-    val fs = log.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(log)) Seq.empty
-    else fs.listStatus(log).toSeq
-      .map(_.getPath.getName)
-      .collect { case s if s.matches("b\\d+") => s.drop(1).toLong }
-      .filter(_ > sinceBatch)
-      .sorted
-  }
-
-  /** Part files tagged by any of `tags` under `table` (recursing into
-    * `partitionPrefix` dirs — the [[graft.sinks.Sinks.copyParquetParts]]
-    * layout the ingest applies land in).
-    */
-  private def taggedFiles(
-      spark: SparkSession, path: String, table: String,
-      partitionPrefix: String, tags: Seq[Long]): Seq[String] = {
-    val prefixes = tags.map(t => s"b${t}_")
-    val d = new org.apache.hadoop.fs.Path(s"$path/$table")
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq.flatMap { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith(partitionPrefix))
-        fs.listStatus(st.getPath).toSeq
-      else Seq(st)
-    }.filter(f => prefixes.exists(f.getPath.getName.startsWith))
-      .map(_.getPath.toString)
-  }
-
-  /** INCREMENTAL audit of a [[Retrieval.bm25Init]]-lifecycle index: the
-    * nightly-affordable form of [[bm25Fsck]] at 100 TB, auditing only
-    * what the ingest stream touched since the caller's recorded cursor
-    * (`sinceBatch` = last audited batch id; -1 audits everything ever
-    * ingested). Scope, derived from the `ingestlog/` markers and the
-    * batches' `b<id>_` part tags:
-    *
-    *   - postings/terms checks (dup, tf >= 1, df == recount, bucket
-    *     placement) run over exactly the hash buckets holding a new
-    *     batch's files — PARTITION-PRUNED reads, untouched buckets'
-    *     files never open (the spec pins inputFiles);
-    *   - new docs' registration (dup ids, orphaned postings) and their
-    *     sum(tf) == dl joins read the new batches' TAGGED FILES plus
-    *     the narrow full doclen id column;
-    *   - stats recount: the narrow full doclen scan (id, dl) — cheap
-    *     at any scale and the invariant most maintenance windows bend.
-    *
-    * NOT covered (the full fsck's job, run after maintenance windows):
-    * old buckets' placement/df, old docs' tf sums. Tag lifetime is the
-    * boundary: [[Retrieval.bm25Compact]] rewrites tags away, so run the
-    * incremental audit at ingest cadence BEFORE compaction; after any
-    * maintenance rewrite, run [[bm25Fsck]] once and restart the cursor.
-    *
-    * Granularity economics (the [[Retrieval.bm25Delete]] caveat in
-    * audit form): the pruning unit is the BUCKET, and a text delta's
-    * DISTINCT TERMS hash-spread, so a broad-vocabulary delta touches
-    * ~min(buckets, delta vocabulary) of them — AuditBench's replicated
-    * corpus measures incr ~== full for exactly that reason. The audit
-    * is priced by the touched buckets' total volume, so it wins when
-    * (a) the cursor has no new batches (the common idle-index night —
-    * one listing, zero scans), (b) the delta's vocabulary is narrow
-    * relative to the modulus (per-source or per-shard streams), or
-    * (c) old buckets dominate the volume and the delta's terms skew
-    * hot (Zipf head re-touches few buckets' worth of new volume). The
-    * tagged-file checks (new docs' registration/derivation) and the
-    * stats recount are delta-sized and narrow regardless.
-    */
-  def bm25FsckIncremental(
-      spark: SparkSession, path: String, sinceBatch: Long): DataFrame =
-    graft.CacheScope.scoped {
-      val tags = batchesSince(spark, path, sinceBatch)
-      val empty = spark.range(0)
-        .select(lit("bm25_incr").as("kind"), col("id").as("n"))
-      // an idle cursor still audits for a STRANDED maintenance marker:
-      // a crashed delete/vacuum on an otherwise-idle index leaves
-      // probes refusing the artifact while new-batch work is zero —
-      // the nightly incremental must surface the pending re-run, not
-      // report clean (markerViol's every-per-artifact-audit contract)
-      if (tags.isEmpty)
-        empty.unionByName(markerViol(spark, path, "bm25"))
-          .localCheckpoint(true)
-      else {
-        val st = spark.read.parquet(s"$path/stats")
-          .select(col("n_docs"), col("total_tokens"), col("buckets"))
-          .collect()(0)
-        val (nDocs, totTok, buckets) = (st.getLong(0), st.getLong(1), st.getLong(2))
-        // touched postings buckets: any bucket dir holding a new tag's file
-        val touched = touchedPartitions(spark, path, "postings", "bucket=", tags)
-        val allBuckets = {
-          val d = new org.apache.hadoop.fs.Path(s"$path/postings")
-          val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-          if (!fs.exists(d)) 0
-          else fs.listStatus(d).count(s2 => s2.isDirectory &&
-            s2.getPath.getName.startsWith("bucket="))
-        }
-        // footprint escape hatch (measured, AuditBench 100x: incr
-        // 10.5 s vs full 5.9 s when a broad-vocabulary delta touches
-        // nearly every bucket): the pruned path reads the touched
-        // buckets' postings WITHOUT the full audit's one shared
-        // persisted scan, plus the tagged re-reads — past ~half the
-        // modulus the full audit is cheaper AND strictly more complete,
-        // so delegate instead of paying pruning that prunes (almost)
-        // nothing
-        if (allBuckets > 0 && touched.size * 2 >= allBuckets)
-          bm25Fsck(spark, path)
-        else {
-        val postings = spark.read.schema(Retrieval.postingsSchema)
-          .parquet(s"$path/postings")
-          .filter(col("bucket").isin(touched: _*))
-          .transform(graft.CacheScope.persisted)
-        val terms = spark.read.schema(Retrieval.termsSchema)
-          .parquet(s"$path/terms")
-          .filter(col("bucket").isin(touched: _*))
-        val dl = spark.read.schema(Retrieval.doclenSchema)
-          .parquet(s"$path/doclen")
-          .transform(graft.CacheScope.persisted)
-        val dupPost = cnt(postings.groupBy(col("id"), col("term"))
-          .agg(count(lit(1)).as("c")).filter(col("c") > 1), "bm25_dup_posting")
-        val badTf = cnt(postings.filter(col("tf") < 1), "bm25_nonpositive_tf")
-        val dfRecomputed = postings.groupBy(col("term"), col("bucket"))
-          .agg(count(lit(1)).as("df2"))
-        // merge-on-read df (the round-19 append-delta terms contract)
-        val dfMismatch = cnt(terms
-          .groupBy(col("term"), col("bucket")).agg(sum(col("df")).as("df"))
-          .join(dfRecomputed, Seq("term", "bucket"), "full_outer")
-          .filter(coalesce(col("df"), lit(-1L)) =!= coalesce(col("df2"), lit(-1L))),
-          "bm25_df_mismatch")
-        val bucketOf = pmod(xxhash64(col("term")), lit(buckets))
-        val misTerm = cnt(terms.filter(col("bucket") =!= bucketOf),
-          "bm25_misbucketed_term")
-        val misPost = cnt(postings.filter(col("bucket") =!= bucketOf),
-          "bm25_misbucketed_posting")
-        // the new batches' own rows, read at FILE granularity
-        val dlFiles = taggedFiles(spark, path, "doclen", "bucket=", tags)
-        val postFiles = taggedFiles(spark, path, "postings", "bucket=", tags)
-        val newDl =
-          (if (dlFiles.isEmpty)
-            spark.range(0).select(col("id"), col("id").as("dl"))
-          else spark.read.schema(Retrieval.doclenSchema)
-            .parquet(dlFiles: _*))
-            .transform(graft.CacheScope.persisted)
-        val newPostings =
-          if (postFiles.isEmpty)
-            spark.range(0).select(col("id"),
-              col("id").cast("string").as("term"), col("id").as("tf"))
-          else spark.read
-            .schema("id LONG, term STRING, tf LONG") // no partition col at file grain
-            .parquet(postFiles: _*)
-        val dupDoc = cnt(dl.join(newDl.select(col("id")), Seq("id"), "left_semi")
-          .groupBy(col("id")).agg(count(lit(1)).as("c"))
-          .filter(col("c") > 1), "bm25_dup_doclen_id")
-        val orphan = cnt(postings.select(col("id")).distinct()
-          .join(dl.select(col("id")), Seq("id"), "left_anti"),
-          "bm25_posting_for_unregistered_doc")
-        val dlMismatch = cnt(newDl
-          .join(newPostings.groupBy(col("id")).agg(sum(col("tf")).as("s")),
-            Seq("id"), "left")
-          .filter(coalesce(col("s"), lit(0L)) =!= col("dl")),
-          "bm25_doclen_tf_mismatch")
-        val nOk = scalarViol(dl.count() == nDocs, "bm25_stats_ndocs", spark)
-        val tokSum = dl.agg(coalesce(sum(col("dl")), lit(0L)))
-          .collect()(0).getLong(0)
-        val tokOk = scalarViol(tokSum == totTok, "bm25_stats_tokens", spark)
-        val tomb = tombstoneChecks(spark,
-          Tombstones.read(spark, path), dl.select(col("id")), "bm25")
-        dupDoc.unionByName(dupPost).unionByName(badTf).unionByName(orphan)
-          .unionByName(dlMismatch).unionByName(dfMismatch)
-          .unionByName(misTerm).unionByName(misPost)
-          .unionByName(nOk).unionByName(tokOk).unionByName(tomb)
-          .unionByName(markerViol(spark, path, "bm25"))
-          .localCheckpoint(true)
-        }
-      }
     }
 
   /** Overlay invariants shared by the index audits: tombstone ids
@@ -380,10 +346,14 @@ object Fsck {
   }
 
   /** Audit a [[Similarity.buildIvfIndex]] / [[Similarity.buildIvfQIndex]]
-    * layout index (layout detected from the corpus schema). Invariants:
-    * ids unique; every row's cell exists in the centroid table; on the
-    * quantized layout, qvec == the row's vec re-quantized and qn2 ==
-    * the exact int self-dot (one shared arithmetic with the writers).
+    * / [[Similarity.buildIvfPqIndex]] layout index (layout detected from
+    * the corpus schema). Invariants: ids unique; every row's cell exists
+    * in the centroid table; on the int8 layout, qvec == the row's vec
+    * re-quantized and qn2 == the exact int self-dot; on the PQ layout,
+    * pqcode == the row's vec re-encoded under the persisted codebooks
+    * (the writers' own expressions: a drifted/corrupt code silently
+    * mis-scores stage 1 forever — rerank can only choose among stage-1
+    * survivors); the tombstone overlay's ids unique and registered.
     * `strictAssignment` additionally requires every row to sit in the
     * cell of its NEAREST centroid — true for build/append/ingest/merge
     * states, deliberately NOT an invariant after [[Similarity.ivfSplitCells]]
@@ -395,143 +365,74 @@ object Fsck {
   def ivfFsck(
       spark: SparkSession,
       path: String,
-      strictAssignment: Boolean = true): DataFrame = graft.CacheScope.scoped {
-    val corpus = spark.read.parquet(s"$path/corpus")
-      .transform(graft.CacheScope.persisted)
-    val dupId = cnt(corpus.groupBy(col("id")).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1), "ivf_dup_id")
-    val tomb = tombstoneChecks(spark,
-      Tombstones.read(spark, path), corpus.select(col("id")), "ivf")
-    dupId.unionByName(ivfRowChecks(spark, path, corpus, strictAssignment))
-      .unionByName(tomb)
-      .unionByName(markerViol(spark, path, "ivf"))
-      .localCheckpoint(true) // materialize inside the scope (bm25Fsck note)
-  }
-
-  /** The per-row IVF invariants both [[ivfFsck]] and
-    * [[ivfFsckIncremental]] check over their `corpus` rows: the row's
-    * cell exists in the centroid table; with `strictAssignment`, it is
-    * the cell of the row's nearest centroid; on the int8 layout, qvec
-    * and qn2 re-derive from the row's vec; on the PQ layout, pqcode
-    * re-derives under the persisted codebooks — the writers' own
-    * expressions, the bm25Fsck recompute discipline (a drifted/corrupt
-    * code silently mis-scores stage 1 forever: rerank can only choose
-    * among stage-1 survivors).
-    */
-  private def ivfRowChecks(spark: SparkSession, path: String,
-      corpus: DataFrame, strictAssignment: Boolean): DataFrame = {
-    val (cellIds, centroids) = Similarity.loadCentroidTable(spark, path)
-    val alien = cnt(corpus.filter(!col("cell").isin(cellIds: _*)),
-      "ivf_alien_cell")
-    val assigned = cnt(
-      if (!strictAssignment) spark.range(0).select(col("id"))
-      else corpus.filter(col("cell") =!= Similarity.posToCell(element_at(
-        graft.functions.VecExprs.nearestCentroids(
-          col("vec").cast("array<double>"), centroids, 1), 1), cellIds)),
-      "ivf_not_nearest_cell")
-    val quant =
-      if (!corpus.columns.contains("qvec"))
-        spark.range(0).select(lit("ivf_quantization_mismatch").as("kind"),
-          col("id").as("n"))
-      else cnt(
-        Similarity.quantizeEmbeddings(
-            corpus.select(col("id"), col("qvec").as("stored_q"),
-              col("qn2").as("stored_n2"), col("vec")), "vec")
-          .filter(col("qvec") =!= col("stored_q") ||
-            Similarity.intDot(col("qvec"), col("qvec")) =!= col("stored_n2")),
-        "ivf_quantization_mismatch")
-    val pq =
-      if (!corpus.columns.contains("pqcode"))
-        spark.range(0).select(lit("ivf_pqcode_mismatch").as("kind"),
-          col("id").as("n"))
-      else {
-        val (_, _, books) = Similarity.loadPqCodebooks(spark, path)
-        cnt(corpus
-          .filter(graft.functions.PqExprs.pqEncode(
-            col("vec").cast("array<double>"),
-            books.map(_.map(_.toSeq).toSeq).toSeq) =!= col("pqcode")),
-          "ivf_pqcode_mismatch")
-      }
-    alien.unionByName(assigned).unionByName(quant).unionByName(pq)
-  }
-
-  /** Partition-directory values under `table` holding any of `tags`'
-    * files — the touched-partition set the incremental audits prune to.
-    */
-  private def touchedPartitions(
-      spark: SparkSession, path: String, table: String,
-      partitionPrefix: String, tags: Seq[Long]): Seq[Long] = {
-    val prefixes = tags.map(t => s"b${t}_")
-    val d = new org.apache.hadoop.fs.Path(s"$path/$table")
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(partitionPrefix))
-      .filter(dir => fs.listStatus(dir.getPath)
-        .exists(f => prefixes.exists(f.getPath.getName.startsWith)))
-      .map(_.getPath.getName.stripPrefix(partitionPrefix).toLong)
-      .sorted
-  }
-
-  /** INCREMENTAL audit of an IVF index — [[ivfFsck]] scoped to the
-    * cells the ingest stream touched since the cursor (the
-    * [[bm25FsckIncremental]] discipline and tag-lifetime boundary). The
-    * per-row checks ([[ivfRowChecks]]) run over exactly the touched cells'
-    * partition-pruned reads; id uniqueness of the new rows is checked
-    * against the full corpus's narrow id column. Cell pruning is
-    * GENUINELY effective here, unlike the lexical index's bucket
-    * pruning: a batch touches only the cells its vectors land in, and
-    * embedding batches cluster (that is the index's whole premise).
-    */
-  def ivfFsckIncremental(
-      spark: SparkSession,
-      path: String,
-      sinceBatch: Long,
-      strictAssignment: Boolean = true): DataFrame = graft.CacheScope.scoped {
-    val tags = batchesSince(spark, path, sinceBatch)
-    val empty = spark.range(0)
-      .select(lit("ivf_incr").as("kind"), col("id").as("n"))
-    // idle cursor still audits for a stranded maintenance marker (the
-    // bm25FsckIncremental note)
-    if (tags.isEmpty)
-      empty.unionByName(markerViol(spark, path, "ivf"))
-        .localCheckpoint(true)
-    else {
-      val touched = touchedPartitions(spark, path, "corpus", "cell=", tags)
-      val corpus = spark.read.parquet(s"$path/corpus")
-        .filter(col("cell").isin(touched: _*))
+      strictAssignment: Boolean = true,
+      sinceBatch: Option[Long] = None): DataFrame =
+    audit(spark, path, Similarity.IvfIngest, sinceBatch, "ivf") { scope =>
+      val all = spark.read.parquet(s"$path/corpus")
+      val corpus = scope.prune(all, "corpus")
         .transform(graft.CacheScope.persisted)
-      // global id uniqueness of the touched rows: the narrow full id
-      // column against the touched-cell ids
-      val dupId = cnt(spark.read.parquet(s"$path/corpus").select(col("id"))
-        .join(corpus.select(col("id")), Seq("id"), "left_semi")
-        .groupBy(col("id")).agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1), "ivf_dup_id")
-      dupId.unionByName(ivfRowChecks(spark, path, corpus, strictAssignment))
-        .unionByName(markerViol(spark, path, "ivf"))
-        .localCheckpoint(true)
+      // the delta keys of an IVF audit are its touched cells' ids
+      val dupId = cnt(scope.keysIn(all, corpus, "id").groupBy(col("id"))
+        .agg(count(lit(1)).as("c")).filter(col("c") > 1), "ivf_dup_id")
+      val (cellIds, centroids) = Similarity.loadCentroidTable(spark, path)
+      val alien = cnt(corpus.filter(!col("cell").isin(cellIds: _*)),
+        "ivf_alien_cell")
+      val assigned = cnt(
+        if (!strictAssignment) spark.range(0).select(col("id"))
+        else corpus.filter(col("cell") =!= Similarity.posToCell(element_at(
+          graft.functions.VecExprs.nearestCentroids(
+            col("vec").cast("array<double>"), centroids, 1), 1), cellIds)),
+        "ivf_not_nearest_cell")
+      val quant =
+        if (!corpus.columns.contains("qvec"))
+          spark.range(0).select(lit("ivf_quantization_mismatch").as("kind"),
+            col("id").as("n"))
+        else cnt(
+          Similarity.quantizeEmbeddings(
+              corpus.select(col("id"), col("qvec").as("stored_q"),
+                col("qn2").as("stored_n2"), col("vec")), "vec")
+            .filter(col("qvec") =!= col("stored_q") ||
+              Similarity.intDot(col("qvec"), col("qvec")) =!= col("stored_n2")),
+          "ivf_quantization_mismatch")
+      val pq =
+        if (!corpus.columns.contains("pqcode"))
+          spark.range(0).select(lit("ivf_pqcode_mismatch").as("kind"),
+            col("id").as("n"))
+        else {
+          val (_, _, books) = Similarity.loadPqCodebooks(spark, path)
+          cnt(corpus
+            .filter(graft.functions.PqExprs.pqEncode(
+              col("vec").cast("array<double>"),
+              books.map(_.map(_.toSeq).toSeq).toSeq) =!= col("pqcode")),
+            "ivf_pqcode_mismatch")
+        }
+      val tomb = tombstoneChecks(spark,
+        Tombstones.read(spark, path), all.select(col("id")), "ivf")
+      dupId.unionByName(alien).unionByName(assigned).unionByName(quant)
+        .unionByName(pq).unionByName(tomb)
     }
-  }
 
   /** Audit a [[DedupRegistry]]: digests == md5(text) (a corrupted
     * digest silently stops deduping its content); rows in their
     * digest-hash bucket under the stats modulus; ids unique; digests
     * unique (first-arrival keeps exactly one doc per digest — two rows
     * sharing a digest mean a dropped row leaked through); stats n_docs
-    * == corpus count.
+    * == corpus count; the tombstone overlay's ids unique and registered.
     */
-  def registryFsck(spark: SparkSession, path: String): DataFrame =
-    graft.CacheScope.scoped {
+  def registryFsck(spark: SparkSession, path: String,
+      sinceBatch: Option[Long] = None): DataFrame =
+    audit(spark, path, DedupRegistry.RegistryIngest, sinceBatch, "reg") { scope =>
       val st = spark.read.parquet(s"$path/stats")
         .select(col("n_docs"), col("buckets")).collect()(0)
       val (nDocs, buckets) = (st.getLong(0), st.getLong(1))
-      val corpus = spark.read
+      val all = spark.read
         .schema("id LONG, text STRING, digest STRING, bucket LONG")
         .parquet(s"$path/corpus")
+      val corpus = scope.prune(all, "corpus")
         .transform(graft.CacheScope.persisted)
-      val dupId = cnt(corpus.groupBy(col("id")).agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1), "reg_dup_id")
+      val delta = scope.delta(all, "corpus")
+      val dupId = cnt(scope.keysIn(all, delta, "id").groupBy(col("id"))
+        .agg(count(lit(1)).as("c")).filter(col("c") > 1), "reg_dup_id")
       // digest uniqueness holds over the registry AS SERVED: a
       // tombstoned row stopped witnessing, so the same content
       // re-ingested while it awaits vacuum is a LEGITIMATE second row —
@@ -539,21 +440,20 @@ object Fsck {
       // strict; the overlay itself is audited below)
       val overlay = Tombstones.read(spark, path)
       val served = overlay
-        .map(t => corpus.join(broadcast(t), Seq("id"), "left_anti"))
-        .getOrElse(corpus)
-      val dupDigest = cnt(served.groupBy(col("digest"))
-        .agg(count(lit(1)).as("c")).filter(col("c") > 1), "reg_dup_digest")
+        .map(t => all.join(broadcast(t), Seq("id"), "left_anti"))
+        .getOrElse(all)
+      val dupDigest = cnt(scope.keysIn(served, delta, "digest")
+        .groupBy(col("digest")).agg(count(lit(1)).as("c"))
+        .filter(col("c") > 1), "reg_dup_digest")
       val badDigest = cnt(corpus.filter(col("digest") =!= md5(col("text"))),
         "reg_digest_mismatch")
       val misBucket = cnt(corpus.filter(
         col("bucket") =!= pmod(xxhash64(col("digest")), lit(buckets))),
         "reg_misbucketed_row")
-      val nOk = scalarViol(corpus.count() == nDocs, "reg_stats_ndocs", spark)
-      val tomb = tombstoneChecks(spark, overlay, corpus.select(col("id")), "reg")
+      val nOk = scalarViol(all.count() == nDocs, "reg_stats_ndocs", spark)
+      val tomb = tombstoneChecks(spark, overlay, all.select(col("id")), "reg")
       dupId.unionByName(dupDigest).unionByName(badDigest)
         .unionByName(misBucket).unionByName(nOk).unionByName(tomb)
-        .unionByName(markerViol(spark, path, "reg"))
-        .localCheckpoint(true) // materialize inside the scope (bm25Fsck note)
     }
 
   /** Audit a [[NearDupRegistry]]: ids unique; corpus rows in their
@@ -562,29 +462,36 @@ object Fsck {
     * table == the banding recomputed from the corpus texts, exactly
     * (both directions, pk placement included — a lost band key is
     * silent dedup-recall loss, an alien one resurrects a removed
-    * witness); stats n_docs == corpus count; and the SEMANTIC
-    * invariant: no two registered docs verify at Jaccard >= the
-    * threshold among LSH candidates (every ingest/merge enforced it,
-    * so a violating pair proves a corrupted apply).
+    * witness); stats n_docs == corpus count; the SEMANTIC invariant: no
+    * two registered docs verify at Jaccard >= the threshold among LSH
+    * candidates (every ingest/merge enforced it, so a violating pair
+    * proves a corrupted apply); the tombstone overlay's ids unique and
+    * registered.
     */
-  def nearDupRegistryFsck(spark: SparkSession, path: String): DataFrame =
-    graft.CacheScope.scoped {
+  def nearDupRegistryFsck(spark: SparkSession, path: String,
+      sinceBatch: Option[Long] = None): DataFrame =
+    audit(spark, path, NearDupRegistry.RegistryIngest, sinceBatch, "ndreg") {
+        scope =>
       val st = spark.read.parquet(s"$path/stats").collect()(0)
       val (nDocs, buckets) = (st.getAs[Long]("n_docs"), st.getAs[Long]("buckets"))
       val (shingleSize, numHashes, bands, threshold) = (
         st.getAs[Long]("shingle_size").toInt, st.getAs[Long]("num_hashes").toInt,
         st.getAs[Long]("bands").toInt, st.getAs[Double]("threshold"))
-      val corpus = spark.read
+      val read = spark.read
         .schema("id LONG, text STRING, hs ARRAY<LONG>, bucket LONG")
         .parquet(s"$path/corpus")
-        .withColumn("sh", Dedup.shingles(col("text"), shingleSize))
+      val all = read.withColumn("sh", Dedup.shingles(col("text"), shingleSize))
+      val corpus = scope.prune(all, "corpus")
         .transform(graft.CacheScope.persisted)
-      val bandRows = spark.read
+      val deltaIds = scope.delta(read, "corpus").select(col("id"))
+      // a delta row's band keys all sit in the partitions its batch
+      // touched, and so do those of every row sharing one
+      val bandRows = scope.prune(spark.read
         .schema("band INT, bkey INT, id LONG, pk LONG")
-        .parquet(s"$path/bands")
+        .parquet(s"$path/bands"), "bands")
         .transform(graft.CacheScope.persisted)
-      val dupId = cnt(corpus.groupBy(col("id")).agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1), "ndreg_dup_id")
+      val dupId = cnt(scope.keysIn(all, deltaIds, "id").groupBy(col("id"))
+        .agg(count(lit(1)).as("c")).filter(col("c") > 1), "ndreg_dup_id")
       val misBucket = cnt(corpus.filter(
         col("bucket") =!= pmod(xxhash64(col("id")), lit(buckets))),
         "ndreg_misbucketed_row")
@@ -592,235 +499,46 @@ object Fsck {
         col("hs") =!= graft.functions.HashExprs.hashedSortedSet(col("sh"))),
         "ndreg_hs_mismatch")
       val expected = Dedup.bandedKeys(
-          corpus.filter(size(col("sh")) > 0).select(col("id"), col("sh")),
+          scope.keysIn(corpus, deltaIds, "id")
+            .filter(size(col("sh")) > 0).select(col("id"), col("sh")),
           numHashes, bands)
         .withColumnRenamed("bucket", "bkey")
         .withColumn("pk", pmod(col("bkey"), lit(buckets)))
+      val stored = scope.keysIn(bandRows, deltaIds, "id")
       val bandCols = Seq("band", "bkey", "id", "pk").map(col)
       val missingBand = cnt(expected.select(bandCols: _*)
-        .join(bandRows, Seq("band", "bkey", "id", "pk"), "left_anti"),
+        .join(stored, Seq("band", "bkey", "id", "pk"), "left_anti"),
         "ndreg_missing_band_key")
-      val alienBand = cnt(bandRows
+      val alienBand = cnt(stored
         .join(expected.select(bandCols: _*),
           Seq("band", "bkey", "id", "pk"), "left_anti"),
         "ndreg_alien_band_key")
-      val nOk = scalarViol(corpus.count() == nDocs, "ndreg_stats_ndocs", spark)
+      val nOk = scalarViol(all.count() == nDocs, "ndreg_stats_ndocs", spark)
       // semantic invariant: registered docs are pairwise non-near-dup
       // under LSH candidacy (the same candidate+verify arithmetic the
       // writers used) — over the registry AS SERVED: a tombstoned doc
       // stopped witnessing, so a near-copy legitimately accepted while
       // it awaits vacuum is not a violation (the overlay itself is
-      // audited below)
+      // audited below). A pair needs one delta side: old-old pairs were
+      // audited before the cursor.
       val overlay = Tombstones.read(spark, path)
-      val liveBandRows = overlay
+      val liveBandRows = scope.flagged(overlay
         .map(t => bandRows.join(broadcast(t), Seq("id"), "left_anti"))
-        .getOrElse(bandRows)
+        .getOrElse(bandRows), deltaIds, "id")
       val cands = liveBandRows.as("a")
         .join(liveBandRows.as("b"),
           col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-            col("a.id") < col("b.id"))
+            col("a.id") < col("b.id") && (col("a.delta") || col("b.delta")))
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
         .distinct()
-      val hs = corpus.select(col("id"), col("hs"))
+      val hs = all.select(col("id"), col("hs"))
       val nearDupPair = cnt(
         NearDupRegistry.verified(cands, "id_a", "id_b", hs, hs, threshold),
         "ndreg_registered_near_dup_pair")
-      val tomb = tombstoneChecks(spark, overlay, corpus.select(col("id")), "ndreg")
+      val tomb = tombstoneChecks(spark, overlay, all.select(col("id")), "ndreg")
       dupId.unionByName(misBucket).unionByName(badHs)
         .unionByName(missingBand).unionByName(alienBand)
         .unionByName(nOk).unionByName(nearDupPair).unionByName(tomb)
-        .unionByName(markerViol(spark, path, "ndreg"))
-        .localCheckpoint(true) // materialize inside the scope (bm25Fsck note)
-    }
-
-  /** INCREMENTAL audit of a [[DedupRegistry]] — [[registryFsck]] scoped
-    * to the batches committed since the cursor. Per-row checks (digest
-    * == md5, bucket placement) run over the touched buckets'
-    * partition-pruned reads; the DELTA ids' global uniqueness and the
-    * delta digests' as-served uniqueness read the full corpus's narrow
-    * (id) and (digest) columns (old-vs-old collisions were audited
-    * before the cursor); stats recount is a footer-priced count.
-    */
-  def registryFsckIncremental(
-      spark: SparkSession, path: String, sinceBatch: Long): DataFrame =
-    graft.CacheScope.scoped {
-      val tags = batchesSince(spark, path, sinceBatch)
-      val empty = spark.range(0)
-        .select(lit("reg_incr").as("kind"), col("id").as("n"))
-      // idle cursor still audits for a stranded maintenance marker (the
-      // bm25FsckIncremental note)
-      if (tags.isEmpty)
-        empty.unionByName(markerViol(spark, path, "reg"))
-          .localCheckpoint(true)
-      else {
-        val st = spark.read.parquet(s"$path/stats")
-          .select(col("n_docs"), col("buckets")).collect()(0)
-        val (nDocs, buckets) = (st.getLong(0), st.getLong(1))
-        val touched = touchedPartitions(spark, path, "corpus", "bucket=", tags)
-        val corpusT = spark.read
-          .schema("id LONG, text STRING, digest STRING, bucket LONG")
-          .parquet(s"$path/corpus")
-          .filter(col("bucket").isin(touched: _*))
-          .transform(graft.CacheScope.persisted)
-        // the delta rows proper, at file granularity (an old row in a
-        // touched bucket was audited before the cursor)
-        val dFiles = taggedFiles(spark, path, "corpus", "bucket=", tags)
-        val delta =
-          (if (dFiles.isEmpty)
-            spark.range(0).select(col("id"),
-              col("id").cast("string").as("digest"))
-          else spark.read.schema("id LONG, text STRING, digest STRING")
-            .parquet(dFiles: _*).select(col("id"), col("digest")))
-            .transform(graft.CacheScope.persisted)
-        val allCorpus = spark.read
-          .schema("id LONG, text STRING, digest STRING, bucket LONG")
-          .parquet(s"$path/corpus")
-        val dupId = cnt(allCorpus.select(col("id"))
-          .join(delta.select(col("id")), Seq("id"), "left_semi")
-          .groupBy(col("id")).agg(count(lit(1)).as("c"))
-          .filter(col("c") > 1), "reg_dup_id")
-        // as-served digest uniqueness for the delta's digests (the
-        // registryFsck overlay rationale)
-        val overlay = Tombstones.read(spark, path)
-        val served = overlay
-          .map(t => allCorpus.join(broadcast(t), Seq("id"), "left_anti"))
-          .getOrElse(allCorpus)
-        val dupDigest = cnt(served.select(col("digest"))
-          .join(delta.select(col("digest")).distinct(),
-            Seq("digest"), "left_semi")
-          .groupBy(col("digest")).agg(count(lit(1)).as("c"))
-          .filter(col("c") > 1), "reg_dup_digest")
-        val badDigest = cnt(corpusT.filter(col("digest") =!= md5(col("text"))),
-          "reg_digest_mismatch")
-        val misBucket = cnt(corpusT.filter(
-          col("bucket") =!= pmod(xxhash64(col("digest")), lit(buckets))),
-          "reg_misbucketed_row")
-        val nOk = scalarViol(
-          allCorpus.count() == nDocs, "reg_stats_ndocs", spark)
-        dupId.unionByName(dupDigest).unionByName(badDigest)
-          .unionByName(misBucket).unionByName(nOk)
-          .unionByName(markerViol(spark, path, "reg"))
-          .localCheckpoint(true)
-      }
-    }
-
-  /** INCREMENTAL audit of a [[NearDupRegistry]] —
-    * [[nearDupRegistryFsck]] scoped to the batches since the cursor.
-    * Per-row checks (bucket placement, hs re-derivation) run over the
-    * touched corpus buckets; the band-key equivalence runs for exactly
-    * the DELTA ids (their stored band rows are the touched pk
-    * partitions' tagged content, so both sides of the comparison are
-    * delta-sized); the SEMANTIC check verifies delta-vs-live candidate
-    * pairs only — the delta's band keys join the touched pk partitions
-    * (a new pair must share a band key with the new rows, and old-old
-    * pairs were audited before the cursor). The partner hs lookup is
-    * the one corpus-wide read: a narrow (id, hs) column join, the
-    * honest price of verifying against the whole standing registry.
-    */
-  def nearDupRegistryFsckIncremental(
-      spark: SparkSession, path: String, sinceBatch: Long): DataFrame =
-    graft.CacheScope.scoped {
-      val tags = batchesSince(spark, path, sinceBatch)
-      val empty = spark.range(0)
-        .select(lit("ndreg_incr").as("kind"), col("id").as("n"))
-      // idle cursor still audits for a stranded maintenance marker (the
-      // bm25FsckIncremental note)
-      if (tags.isEmpty)
-        empty.unionByName(markerViol(spark, path, "ndreg"))
-          .localCheckpoint(true)
-      else {
-        val st = spark.read.parquet(s"$path/stats").collect()(0)
-        val (nDocs, buckets) =
-          (st.getAs[Long]("n_docs"), st.getAs[Long]("buckets"))
-        val (shingleSize, numHashes, bands, threshold) = (
-          st.getAs[Long]("shingle_size").toInt,
-          st.getAs[Long]("num_hashes").toInt,
-          st.getAs[Long]("bands").toInt, st.getAs[Double]("threshold"))
-        val touchedB = touchedPartitions(spark, path, "corpus", "bucket=", tags)
-        val touchedPk = touchedPartitions(spark, path, "bands", "pk=", tags)
-        val corpusT = spark.read
-          .schema("id LONG, text STRING, hs ARRAY<LONG>, bucket LONG")
-          .parquet(s"$path/corpus")
-          .filter(col("bucket").isin(touchedB: _*))
-          .withColumn("sh", Dedup.shingles(col("text"), shingleSize))
-          .transform(graft.CacheScope.persisted)
-        val dFiles = taggedFiles(spark, path, "corpus", "bucket=", tags)
-        val deltaIds =
-          (if (dFiles.isEmpty) spark.range(0).select(col("id"))
-          else spark.read.schema("id LONG, text STRING, hs ARRAY<LONG>")
-            .parquet(dFiles: _*).select(col("id")))
-            .transform(graft.CacheScope.persisted)
-        val bandsT = spark.read
-          .schema("band INT, bkey INT, id LONG, pk LONG")
-          .parquet(s"$path/bands")
-          .filter(col("pk").isin(touchedPk: _*))
-          .transform(graft.CacheScope.persisted)
-        val misBucket = cnt(corpusT.filter(
-          col("bucket") =!= pmod(xxhash64(col("id")), lit(buckets))),
-          "ndreg_misbucketed_row")
-        val badHs = cnt(corpusT.filter(
-          col("hs") =!= graft.functions.HashExprs.hashedSortedSet(col("sh"))),
-          "ndreg_hs_mismatch")
-        // delta ids' global uniqueness: narrow full id column
-        val dupId = cnt(spark.read
-          .schema("id LONG, text STRING, hs ARRAY<LONG>, bucket LONG")
-          .parquet(s"$path/corpus").select(col("id"))
-          .join(deltaIds, Seq("id"), "left_semi")
-          .groupBy(col("id")).agg(count(lit(1)).as("c"))
-          .filter(col("c") > 1), "ndreg_dup_id")
-        // band-key equivalence for the delta ids, both directions —
-        // their stored rows all live in the touched pk partitions (the
-        // batch wrote them there)
-        val expectedD = Dedup.bandedKeys(
-            corpusT.join(deltaIds, Seq("id"), "left_semi")
-              .filter(size(col("sh")) > 0).select(col("id"), col("sh")),
-            numHashes, bands)
-          .withColumnRenamed("bucket", "bkey")
-          .withColumn("pk", pmod(col("bkey"), lit(buckets)))
-        val storedD = bandsT.join(deltaIds, Seq("id"), "left_semi")
-        val bandCols = Seq("band", "bkey", "id", "pk").map(col)
-        val missingBand = cnt(expectedD.select(bandCols: _*)
-          .join(storedD, Seq("band", "bkey", "id", "pk"), "left_anti"),
-          "ndreg_missing_band_key")
-        val alienBand = cnt(storedD
-          .join(expectedD.select(bandCols: _*),
-            Seq("band", "bkey", "id", "pk"), "left_anti"),
-          "ndreg_alien_band_key")
-        // semantic: no delta row verifies against ANY live row among
-        // LSH candidates (as served — tombstoned rows don't witness)
-        val overlay = Tombstones.read(spark, path)
-        val liveBandsT = overlay
-          .map(t => bandsT.join(broadcast(t), Seq("id"), "left_anti"))
-          .getOrElse(bandsT)
-        val liveStoredD = overlay
-          .map(t => storedD.join(broadcast(t), Seq("id"), "left_anti"))
-          .getOrElse(storedD)
-        val cands = liveStoredD.as("a")
-          .join(liveBandsT.as("b"),
-            col("a.band") === col("b.band") &&
-              col("a.bkey") === col("b.bkey") && col("a.id") =!= col("b.id"))
-          .select(
-            least(col("a.id"), col("b.id")).as("id_a"),
-            greatest(col("a.id"), col("b.id")).as("id_b"))
-          .distinct()
-        val allHs = spark.read
-          .schema("id LONG, text STRING, hs ARRAY<LONG>, bucket LONG")
-          .parquet(s"$path/corpus").select(col("id"), col("hs"))
-        val nearDupPair = cnt(
-          NearDupRegistry.verified(cands, "id_a", "id_b", allHs, allHs,
-            threshold),
-          "ndreg_registered_near_dup_pair")
-        val nOk = scalarViol(
-          spark.read
-            .schema("id LONG, text STRING, hs ARRAY<LONG>, bucket LONG")
-            .parquet(s"$path/corpus").count() == nDocs,
-          "ndreg_stats_ndocs", spark)
-        dupId.unionByName(misBucket).unionByName(badHs)
-          .unionByName(missingBand).unionByName(alienBand)
-          .unionByName(nOk).unionByName(nearDupPair)
-          .unionByName(markerViol(spark, path, "ndreg"))
-          .localCheckpoint(true)
-      }
     }
 
   /** CROSS-ARTIFACT audit for a curate-then-index composition
@@ -830,7 +548,7 @@ object Fsck {
     * drift BETWEEN the two — a batch committed to the registry but
     * dropped by the index apply (or vice versa), a maintenance op run
     * on one artifact only, junk rows erased from one but not the
-    * other. This audit re-derives the ENTIRE index from the registry's
+    * other. This audit re-derives the index from the registry's
     * committed corpus with the same expressions the sink's index apply
     * used, so any divergence surfaces as a concrete row:
     *
@@ -840,116 +558,46 @@ object Fsck {
     *   - postings == the re-tokenized (id, term, tf) relation of the
     *     registry corpus, row for row;
     *   - doclen == the re-counted token lengths;
-    *   - index stats == the re-summed scalars of the derivation.
+    *   - index stats == the re-summed scalars of the derivation (full
+    *     audit only: it needs the whole corpus's re-derivation; the
+    *     since-cursor [[bm25Fsck]]'s recount covers index-side drift);
+    *   - no stranded maintenance marker on either root.
     *
+    * Both artifacts are fed by ONE sink under one batch id, so a cursor
+    * (the index's `ingestlog/`) selects the same batches' `b<id>_`
+    * files on both sides, and the since-cursor audit reads only those.
     * Works over either registry family (both persist (id, text) in
-    * `corpus/`). Same full-scan economics and read-only contract as the
-    * per-artifact audits; run both sides' internal audits too — this
-    * one checks only the cross-artifact function. Composed states must
-    * not have had SINGLE-SIDED maintenance (a registry-only delete is
-    * exactly the drift this catches — by design, a takedown against a
-    * composed pair must run against BOTH artifacts).
+    * `corpus/`). Run both sides' internal audits too — this one checks
+    * only the cross-artifact function. Composed states must not have
+    * had SINGLE-SIDED maintenance (a registry-only delete is exactly
+    * the drift this catches — by design, a takedown against a composed
+    * pair must run against BOTH artifacts).
     */
   def composedFsck(
       spark: SparkSession,
       regPath: String,
-      idxPath: String): DataFrame = graft.CacheScope.scoped {
-    val acc = spark.read.schema("id LONG, text STRING")
-      .parquet(s"$regPath/corpus")
-      .transform(graft.CacheScope.persisted)
-    val doclen = spark.read.schema(Retrieval.doclenSchema)
-      .parquet(s"$idxPath/doclen")
-      .transform(graft.CacheScope.persisted)
-    val missingFromIdx = cnt(acc.select(col("id"))
-      .join(doclen.select(col("id")), Seq("id"), "left_anti"),
-      "composed_registry_doc_missing_from_index")
-    val alienInIdx = cnt(doclen.select(col("id"))
-      .join(acc.select(col("id")), Seq("id"), "left_anti"),
-      "composed_index_doc_not_in_registry")
-    val expectedTf = acc
-      .select(col("id"),
-        explode(TextAnalysis.tokens(col("text"))).as("term"))
-      .groupBy(col("id"), col("term")).agg(count(lit(1)).as("etf"))
-      .transform(graft.CacheScope.persisted)
-    val postings = spark.read.schema(Retrieval.postingsSchema)
-      .parquet(s"$idxPath/postings")
-    val postingsViol = cnt(postings
-      .join(expectedTf, Seq("id", "term"), "full_outer")
-      .filter(coalesce(col("tf"), lit(-1L)) =!= coalesce(col("etf"), lit(-1L))),
-      "composed_postings_derivation_mismatch")
-    val expectedDl = acc.select(col("id"),
-      size(TextAnalysis.tokens(col("text"))).cast("long").as("edl"))
-    val doclenViol = cnt(doclen
-      .join(expectedDl, Seq("id"), "full_outer")
-      .filter(coalesce(col("dl"), lit(-1L)) =!= coalesce(col("edl"), lit(-1L))),
-      "composed_doclen_derivation_mismatch")
-    val ist = spark.read.parquet(s"$idxPath/stats").collect()(0)
-    val expTok = expectedTf.agg(coalesce(sum(col("etf")), lit(0L)))
-      .collect()(0).getLong(0)
-    val statsViol = scalarViol(
-      ist.getAs[Long]("n_docs") == acc.count() &&
-        ist.getAs[Long]("total_tokens") == expTok,
-      "composed_index_stats_mismatch", spark)
-    missingFromIdx.unionByName(alienInIdx).unionByName(postingsViol)
-      .unionByName(doclenViol).unionByName(statsViol)
-      .localCheckpoint(true) // materialize inside the scope (bm25Fsck note)
-  }
-
-  /** INCREMENTAL cross-artifact audit for a curate-then-index
-    * composition — [[composedFsck]] scoped to the batches committed
-    * since the caller's cursor. Both artifacts are fed by ONE sink
-    * under one batch id, so the delta is well-defined on each side:
-    * the registry's accepted slice and the index's applied rows carry
-    * the same `b<id>_` file tags. The audit reads ONLY those tagged
-    * files (file-granularity pruning — the registry corpus and the
-    * index postings/doclen never full-scan) and re-derives the delta's
-    * postings/doclen with the writers' own expressions:
-    *
-    *   - registry-delta docs all registered in the index delta and
-    *     vice versa (a one-sided apply surfaces immediately);
-    *   - the delta's postings == the re-tokenized relation, row for
-    *     row; its doclen == the re-counted lengths.
-    *
-    * The global stats cross-check stays with [[composedFsck]] (it
-    * needs the full-corpus token re-derivation by definition);
-    * [[bm25FsckIncremental]]'s narrow recount covers index-side stats
-    * drift cheaply. Same tag-lifetime boundary: run at ingest cadence,
-    * full [[composedFsck]] after any compact/maintenance window.
-    */
-  def composedFsckIncremental(
-      spark: SparkSession,
-      regPath: String,
       idxPath: String,
-      sinceBatch: Long): DataFrame = graft.CacheScope.scoped {
-    val tags = batchesSince(spark, idxPath, sinceBatch)
-    val empty = spark.range(0)
-      .select(lit("composed_incr").as("kind"), col("id").as("n"))
-    // idle cursor still audits BOTH roots for a stranded maintenance
-    // marker (the bm25FsckIncremental note)
-    if (tags.isEmpty)
-      empty.unionByName(markerViol(spark, regPath, "composed_reg"))
-        .unionByName(markerViol(spark, idxPath, "composed_idx"))
-        .localCheckpoint(true)
+      sinceBatch: Option[Long] = None): DataFrame = graft.CacheScope.scoped {
+    val tags = sinceBatch.map(batchesSince(spark, idxPath, _))
+    val idx = new Scope(spark, idxPath, Retrieval.Bm25Ingest, tags)
+    val markers = markerViol(spark, regPath, "composed_reg")
+      .unionByName(markerViol(spark, idxPath, "composed_idx"))
+    (if (idx.idle) markers
     else {
-      def readOr(files: Seq[String], schema: String, fallback: DataFrame) =
-        if (files.isEmpty) fallback
-        else spark.read.schema(schema).parquet(files: _*)
-      val acc = readOr(
-        taggedFiles(spark, regPath, "corpus", "bucket=", tags),
-        "id LONG, text STRING",
-        spark.range(0).select(col("id"), col("id").cast("string").as("text")))
-        .select(col("id"), col("text"))
-        .transform(graft.CacheScope.persisted)
-      val doclen = readOr(
-        taggedFiles(spark, idxPath, "doclen", "bucket=", tags),
-        "id LONG, dl LONG",
-        spark.range(0).select(col("id"), col("id").as("dl")))
-        .transform(graft.CacheScope.persisted)
-      val postings = readOr(
-        taggedFiles(spark, idxPath, "postings", "bucket=", tags),
-        "id LONG, term STRING, tf LONG",
-        spark.range(0).select(col("id"),
-          col("id").cast("string").as("term"), col("id").as("tf")))
+      val regFs = new Path(regPath)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      val reg = new Scope(spark, regPath,
+        if (regFs.exists(new Path(s"$regPath/bands")))
+          NearDupRegistry.RegistryIngest
+        else DedupRegistry.RegistryIngest, tags)
+      val acc = reg.delta(spark.read.schema("id LONG, text STRING")
+        .parquet(s"$regPath/corpus")
+        .transform(graft.CacheScope.persisted), "corpus")
+      val doclen = idx.delta(spark.read.schema(Retrieval.doclenSchema)
+        .parquet(s"$idxPath/doclen")
+        .transform(graft.CacheScope.persisted), "doclen")
+      val postings = idx.delta(spark.read.schema(Retrieval.postingsSchema)
+        .parquet(s"$idxPath/postings"), "postings")
       val missingFromIdx = cnt(acc.select(col("id"))
         .join(doclen.select(col("id")), Seq("id"), "left_anti"),
         "composed_registry_doc_missing_from_index")
@@ -960,6 +608,7 @@ object Fsck {
         .select(col("id"),
           explode(TextAnalysis.tokens(col("text"))).as("term"))
         .groupBy(col("id"), col("term")).agg(count(lit(1)).as("etf"))
+        .transform(graft.CacheScope.persisted)
       val postingsViol = cnt(postings
         .join(expectedTf, Seq("id", "term"), "full_outer")
         .filter(coalesce(col("tf"), lit(-1L)) =!= coalesce(col("etf"), lit(-1L))),
@@ -970,12 +619,19 @@ object Fsck {
         .join(expectedDl, Seq("id"), "full_outer")
         .filter(coalesce(col("dl"), lit(-1L)) =!= coalesce(col("edl"), lit(-1L))),
         "composed_doclen_derivation_mismatch")
-      missingFromIdx.unionByName(alienInIdx).unionByName(postingsViol)
-        .unionByName(doclenViol)
-        .unionByName(markerViol(spark, regPath, "composed_reg"))
-        .unionByName(markerViol(spark, idxPath, "composed_idx"))
-        .localCheckpoint(true)
-    }
+      val checks = missingFromIdx.unionByName(alienInIdx)
+        .unionByName(postingsViol).unionByName(doclenViol)
+      (if (!idx.full) checks
+      else {
+        val ist = spark.read.parquet(s"$idxPath/stats").collect()(0)
+        val expTok = expectedTf.agg(coalesce(sum(col("etf")), lit(0L)))
+          .collect()(0).getLong(0)
+        checks.unionByName(scalarViol(
+          ist.getAs[Long]("n_docs") == acc.count() &&
+            ist.getAs[Long]("total_tokens") == expTok,
+          "composed_index_stats_mismatch", spark))
+      }).unionByName(markers)
+    }).localCheckpoint(true)
   }
 
   /** Audit the COMMIT-PROTOCOL estate itself (round 18) — the metadata

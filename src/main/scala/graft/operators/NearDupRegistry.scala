@@ -253,7 +253,7 @@ object NearDupRegistry {
   /** The registry's ingest tables: accepted rows land as tagged corpus
     * and bands parts, stats swaps.
     */
-  private val RegistryIngest = EstateIngest.Layout("NearDupRegistry.ingestBatch",
+  private[operators] val RegistryIngest = EstateIngest.Layout("NearDupRegistry.ingestBatch",
     tagged = Seq("corpus" -> "bucket=", "bands" -> "pk="), swapped = Seq("stats"))
 
   /** One recoverable, idempotent micro-batch apply ([[EstateIngest]]). */

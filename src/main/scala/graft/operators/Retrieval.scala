@@ -318,7 +318,9 @@ object Retrieval {
     * observe()-carried scalars that the append writes fill for free.
     * After append, [[bm25TopKIndexed]] scores the union corpus
     * bit-identically to a from-scratch rebuild — q143 pins exactly that
-    * against q127's verbatim oracle.
+    * against q127's verbatim oracle. Runs, stats read included, under
+    * the ingest's writer locks ([[EstateIngest.Layout.locked]]), so a
+    * concurrent compact waits instead of swapping the landed parts away.
     */
   def bm25Append(
       path: String,
@@ -326,6 +328,7 @@ object Retrieval {
       idCol: String,
       textCol: String): Unit = {
     val spark = docs.sparkSession
+    Bm25Ingest.locked(spark, path) {
     val st = spark.read.parquet(s"$path/stats")
       .select(col("n_docs"), col("total_tokens"), col("buckets"))
       .collect()(0)
@@ -406,6 +409,7 @@ object Retrieval {
           .coalesce(1),
         path, "stats"))
     }
+    }
   }
 
   /** Exactly-once STREAMING ingest into a persisted [[buildBm25Index]]
@@ -437,7 +441,7 @@ object Retrieval {
     * treats it as swapped so pre-round-19 crash debris
     * (`terms_b<id>_new` / `_bak`) still refuses or retires.
     */
-  private val Bm25Ingest = EstateIngest.Layout("bm25IngestBatch",
+  private[operators] val Bm25Ingest = EstateIngest.Layout("bm25IngestBatch",
     tagged = Seq("postings" -> "bucket=", "doclen" -> "", "terms" -> "bucket="),
     swapped = Seq("stats"),
     legacySwapped = Seq("terms"))

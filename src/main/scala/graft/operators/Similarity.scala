@@ -810,25 +810,30 @@ object Similarity {
     * and the shuffle buys one file per touched cell per append instead
     * of tasks x cells (the small-files decay [[ivfCompact]] exists to
     * repair; clustering the append slows the decay at its source).
+    * Runs, centroid read included, under the ingest's writer locks
+    * ([[EstateIngest.Layout.locked]]): a concurrent requantize or split
+    * waits instead of swapping the landed parts away.
     */
   def ivfAppend(
       indexPath: String, batch: DataFrame,
       idCol: String, vecCol: String): Unit = {
     val spark = batch.sparkSession
-    val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
-    // reader-isolation bracket + manifest commit ([[StableRead]])
-    StableRead.withMaintenanceMarker(spark, indexPath) {
-      batch
-        .select(col(idCol).as("id"),
-          col(vecCol).cast("array<double>").as("vec"))
-        .withColumn("cell", posToCell(element_at(
-          graft.functions.VecExprs.nearestCentroids(
-            col("vec"), centroids, 1), 1),
-          cellIds))
-        .repartition(col("cell")) // one file per touched cell per append
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$indexPath/corpus")
-      StableRead.noteTouched(indexPath, "corpus") // incremental snapshot
+    IvfIngest.locked(spark, indexPath) {
+      val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
+      // reader-isolation bracket + manifest commit ([[StableRead]])
+      StableRead.withMaintenanceMarker(spark, indexPath) {
+        batch
+          .select(col(idCol).as("id"),
+            col(vecCol).cast("array<double>").as("vec"))
+          .withColumn("cell", posToCell(element_at(
+            graft.functions.VecExprs.nearestCentroids(
+              col("vec"), centroids, 1), 1),
+            cellIds))
+          .repartition(col("cell")) // one file per touched cell per append
+          .write.mode("append").partitionBy("cell")
+          .parquet(s"$indexPath/corpus")
+        StableRead.noteTouched(indexPath, "corpus") // incremental snapshot
+      }
     }
   }
 
@@ -882,7 +887,7 @@ object Similarity {
   /** The IVF index's ingest tables: batches land as tagged corpus parts
     * in the cell partitions.
     */
-  private val IvfIngest = EstateIngest.Layout("ivfIngestBatch",
+  private[operators] val IvfIngest = EstateIngest.Layout("ivfIngestBatch",
     tagged = Seq("corpus" -> "cell="))
 
   /** One recoverable, idempotent micro-batch apply ([[EstateIngest]]).
@@ -1081,22 +1086,24 @@ object Similarity {
       indexPath: String, batch: DataFrame,
       idCol: String, vecCol: String): Unit = {
     val spark = batch.sparkSession
-    val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
-    // reader-isolation bracket + manifest commit ([[StableRead]])
-    StableRead.withMaintenanceMarker(spark, indexPath) {
-      quantizeEmbeddings(
-          batch.select(col(idCol).as("id"),
-            col(vecCol).cast("array<double>").as("vec")), "vec")
-        .select(col("id"), col("vec"), col("qvec"),
-          intDot(col("qvec"), col("qvec")).as("qn2"))
-        .withColumn("cell", posToCell(element_at(
-          graft.functions.VecExprs.nearestCentroids(
-            col("vec"), centroids, 1), 1),
-          cellIds))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$indexPath/corpus")
-      StableRead.noteTouched(indexPath, "corpus") // incremental snapshot
+    IvfIngest.locked(spark, indexPath) {
+      val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
+      // reader-isolation bracket + manifest commit ([[StableRead]])
+      StableRead.withMaintenanceMarker(spark, indexPath) {
+        quantizeEmbeddings(
+            batch.select(col(idCol).as("id"),
+              col(vecCol).cast("array<double>").as("vec")), "vec")
+          .select(col("id"), col("vec"), col("qvec"),
+            intDot(col("qvec"), col("qvec")).as("qn2"))
+          .withColumn("cell", posToCell(element_at(
+            graft.functions.VecExprs.nearestCentroids(
+              col("vec"), centroids, 1), 1),
+            cellIds))
+          .repartition(col("cell"))
+          .write.mode("append").partitionBy("cell")
+          .parquet(s"$indexPath/corpus")
+        StableRead.noteTouched(indexPath, "corpus") // incremental snapshot
+      }
     }
   }
 
@@ -1364,22 +1371,24 @@ object Similarity {
       indexPath: String, batch: DataFrame,
       idCol: String, vecCol: String): Unit = {
     val spark = batch.sparkSession
-    val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
-    val (_, _, books) = loadPqCodebooks(spark, indexPath)
-    val booksSeq = books.map(_.map(_.toSeq).toSeq).toSeq
-    StableRead.withMaintenanceMarker(spark, indexPath) {
-      batch.select(col(idCol).as("id"),
-          col(vecCol).cast("array<double>").as("vec"))
-        .withColumn("pqcode",
-          graft.functions.PqExprs.pqEncode(col("vec"), booksSeq))
-        .withColumn("cell", posToCell(element_at(
-          graft.functions.VecExprs.nearestCentroids(
-            col("vec"), centroids, 1), 1),
-          cellIds))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$indexPath/corpus")
-      StableRead.noteTouched(indexPath, "corpus")
+    IvfIngest.locked(spark, indexPath) {
+      val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
+      val (_, _, books) = loadPqCodebooks(spark, indexPath)
+      val booksSeq = books.map(_.map(_.toSeq).toSeq).toSeq
+      StableRead.withMaintenanceMarker(spark, indexPath) {
+        batch.select(col(idCol).as("id"),
+            col(vecCol).cast("array<double>").as("vec"))
+          .withColumn("pqcode",
+            graft.functions.PqExprs.pqEncode(col("vec"), booksSeq))
+          .withColumn("cell", posToCell(element_at(
+            graft.functions.VecExprs.nearestCentroids(
+              col("vec"), centroids, 1), 1),
+            cellIds))
+          .repartition(col("cell"))
+          .write.mode("append").partitionBy("cell")
+          .parquet(s"$indexPath/corpus")
+        StableRead.noteTouched(indexPath, "corpus")
+      }
     }
   }
 

@@ -76,7 +76,7 @@ object AuditBench {
       // those into the pruning signal)
       val bmFsckIncr = timed {
         assert(graft.operators.Fsck
-          .bm25FsckIncremental(spark, s"$root/bm25i", 0L)
+          .bm25Fsck(spark, s"$root/bm25i", Some(0L))
           .collect().isEmpty)
       }
       val bmFsckI = timed {
@@ -100,7 +100,7 @@ object AuditBench {
       // most (the full audit is the estate's costliest)
       val ndFsckIncr = timed {
         assert(graft.operators.Fsck
-          .nearDupRegistryFsckIncremental(spark, s"$root/ndreg", 0L)
+          .nearDupRegistryFsck(spark, s"$root/ndreg", Some(0L))
           .collect().isEmpty)
       }
       // ---- registry shard-and-merge arms (shards built untimed) ----

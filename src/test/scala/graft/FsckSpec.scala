@@ -258,4 +258,25 @@ class FsckSpec extends SparkSpec {
     unplant(nd)
     assert(Fsck.nearDupRegistryFsck(spark, nd).count() === 0L)
   }
+
+  // every table each family's delete rewrites through Sinks.deleteRows
+  Seq("bm25" -> Seq("postings"), "ivf" -> Seq("corpus"),
+      "reg" -> Seq("corpus"), "ndreg" -> Seq("corpus", "bands")).foreach {
+    case (family, tables) =>
+      test(s"$family fsck: a standing delete intent is caught in both scopes") {
+        val (dir, audit) = IncrementalFsckSpec.twoBatches(spark, family)
+        val cursors = Seq(None, Some(0L))
+        cursors.foreach(c => assert(audit(c).count() === 0L, s"cursor $c"))
+        val fs = new org.apache.hadoop.fs.Path(dir)
+          .getFileSystem(spark.sessionState.newHadoopConf())
+        tables.foreach { t =>
+          val intent = new org.apache.hadoop.fs.Path(
+            s"$dir/$t", graft.sinks.Sinks.DeleteIntentName)
+          fs.create(intent, false).close()
+          cursors.foreach(c => assert(kinds(audit(c)) ===
+            Set(s"${family}_standing_delete_intent"), s"$t, cursor $c"))
+          fs.delete(intent, false)
+        }
+      }
+  }
 }

@@ -1,10 +1,10 @@
 package graft
 
-import graft.operators.{DedupRegistry, Fsck, NearDupRegistry, Retrieval}
+import graft.operators.{DedupRegistry, Fsck, NearDupRegistry, Retrieval, Similarity, Tombstones}
 import org.apache.spark.sql.functions._
 
 /** Teeth and pruning for the INCREMENTAL audits
-  * ([[Fsck.bm25FsckIncremental]] / [[Fsck.composedFsckIncremental]]):
+  * ([[Fsck.bm25Fsck]] / [[Fsck.composedFsck]] with a `sinceBatch` cursor):
   * a planted corruption in a bucket the new batches touched is caught;
   * the same corruption planted in an untouched bucket is NOT READ
   * (inputFiles pin on the audit's own scoped read shape) while the
@@ -43,8 +43,8 @@ class IncrementalFsckSpec extends SparkSpec {
     Retrieval.bm25IngestBatch(dir,
       Seq((3L, "omega omega omega")).toDF("doc_id", "text"),
       "doc_id", "text", 1L)
-    assert(Fsck.bm25FsckIncremental(spark, dir, -1L).count() === 0L)
-    assert(Fsck.bm25FsckIncremental(spark, dir, 1L).count() === 0L) // no new batches
+    assert(Fsck.bm25Fsck(spark, dir, Some(-1L)).count() === 0L)
+    assert(Fsck.bm25Fsck(spark, dir, Some(1L)).count() === 0L) // no new batches
     val buckets = 16L
     def bucketOf(t: String): Long = {
       val r = Seq(t).toDF("term")
@@ -60,7 +60,7 @@ class IncrementalFsckSpec extends SparkSpec {
     // corruption in the TOUCHED bucket: a tf=0 junk posting -> the
     // since-batch-0 audit reads that bucket and must flag it
     plantPosting(dir, touched, 999L, "omega", 0L)
-    val gotTouched = kinds(Fsck.bm25FsckIncremental(spark, dir, 0L))
+    val gotTouched = kinds(Fsck.bm25Fsck(spark, dir, Some(0L)))
     assert(gotTouched.contains("bm25_nonpositive_tf"), s"got $gotTouched")
     assert(gotTouched.contains("bm25_posting_for_unregistered_doc"))
     // remove it; corrupt an UNTOUCHED bucket the same way
@@ -68,7 +68,7 @@ class IncrementalFsckSpec extends SparkSpec {
       .delete()
     plantPosting(dir, untouched, 998L, untouchedTerm, 0L)
     // the incremental audit does not read that bucket -> silent here...
-    assert(Fsck.bm25FsckIncremental(spark, dir, 0L).count() === 0L)
+    assert(Fsck.bm25Fsck(spark, dir, Some(0L)).count() === 0L)
     // ...and the PRUNING is structural, not luck: the audit's own read
     // shape (schema + bucket isin) carries the bucket predicate as a
     // PartitionFilter — files outside the touched set never open
@@ -92,7 +92,7 @@ class IncrementalFsckSpec extends SparkSpec {
     Retrieval.bm25IngestBatch(dir,
       Seq((2L, "gamma delta gamma")).toDF("doc_id", "text"),
       "doc_id", "text", 1L)
-    assert(Fsck.bm25FsckIncremental(spark, dir, 0L).count() === 0L)
+    assert(Fsck.bm25Fsck(spark, dir, Some(0L)).count() === 0L)
     // corrupt batch 1's doclen: rewrite its dl to a wrong value by
     // planting a duplicate registration with a bad length
     val tmp = java.nio.file.Files.createTempDirectory("fsck-plant-dl").toString
@@ -103,7 +103,7 @@ class IncrementalFsckSpec extends SparkSpec {
     // tagged as batch 1 so the incremental audit owns it
     java.nio.file.Files.copy(src.toPath,
       new java.io.File(s"$dir/doclen/b1_zz_junk.parquet").toPath)
-    val got = kinds(Fsck.bm25FsckIncremental(spark, dir, 0L))
+    val got = kinds(Fsck.bm25Fsck(spark, dir, Some(0L)))
     assert(got.contains("bm25_dup_doclen_id"), s"got $got")
     assert(got.contains("bm25_doclen_tf_mismatch"), s"got $got")
     assert(got.contains("bm25_stats_ndocs"), s"got $got")
@@ -123,8 +123,8 @@ class IncrementalFsckSpec extends SparkSpec {
     // the recoverable apply (tags + ingestlog)
     graft.operators.Similarity.ivfIngestBatch(
       dir, cluster(10, 200L, 8.0).toDF("id", "vec"), "id", "vec", 1L)
-    assert(Fsck.ivfFsckIncremental(spark, dir, 0L).count() === 0L)
-    assert(Fsck.ivfFsckIncremental(spark, dir, 1L).count() === 0L)
+    assert(Fsck.ivfFsck(spark, dir, sinceBatch = Some(0L)).count() === 0L)
+    assert(Fsck.ivfFsck(spark, dir, sinceBatch = Some(1L)).count() === 0L)
     val cells = new java.io.File(s"$dir/corpus").listFiles()
       .filter(_.getName.startsWith("cell=")).map(_.getName).sorted
     assert(cells.length === 2)
@@ -142,7 +142,7 @@ class IncrementalFsckSpec extends SparkSpec {
     }
     // a zero vector in the +8 cluster's cell is NOT nearest to it
     plantVec(touched, 990L)
-    val got = kinds(Fsck.ivfFsckIncremental(spark, dir, 0L))
+    val got = kinds(Fsck.ivfFsck(spark, dir, sinceBatch = Some(0L)))
     assert(got.contains("ivf_not_nearest_cell"), s"got $got")
     new java.io.File(s"$dir/corpus/$touched/zz_junk.parquet").delete()
     // same corruption in the untouched cell: skipped incrementally,
@@ -155,7 +155,7 @@ class IncrementalFsckSpec extends SparkSpec {
       new java.io.File(tmp2).listFiles()
         .filter(_.getName.endsWith(".parquet")).head.toPath,
       new java.io.File(s"$dir/corpus/$untouched/zz_junk2.parquet").toPath)
-    assert(Fsck.ivfFsckIncremental(spark, dir, 0L).count() === 0L)
+    assert(Fsck.ivfFsck(spark, dir, sinceBatch = Some(0L)).count() === 0L)
     assert(kinds(Fsck.ivfFsck(spark, dir)).contains("ivf_not_nearest_cell"))
   }
 
@@ -174,7 +174,7 @@ class IncrementalFsckSpec extends SparkSpec {
     graft.operators.Similarity.ivfIngestBatch(dir, b0, "id", "vec", 0L)
     graft.operators.Similarity.ivfIngestBatch(
       dir, cluster(10, 200L, 8.0).toDF("id", "vec"), "id", "vec", 1L)
-    assert(Fsck.ivfFsckIncremental(spark, dir, 0L).count() === 0L)
+    assert(Fsck.ivfFsck(spark, dir, sinceBatch = Some(0L)).count() === 0L)
     val touched = new java.io.File(s"$dir/corpus").listFiles()
       .filter(_.getName.startsWith("cell="))
       .find(_.listFiles().exists(_.getName.startsWith("b1_"))).get
@@ -190,7 +190,7 @@ class IncrementalFsckSpec extends SparkSpec {
       new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head.toPath,
       new java.io.File(touched, "zz_junk.parquet").toPath)
-    val got = kinds(Fsck.ivfFsckIncremental(spark, dir, 0L))
+    val got = kinds(Fsck.ivfFsck(spark, dir, sinceBatch = Some(0L)))
     assert(got === Set("ivf_pqcode_mismatch"), s"got $got")
     assert(kinds(Fsck.ivfFsck(spark, dir)) === Set("ivf_pqcode_mismatch"))
   }
@@ -205,7 +205,7 @@ class IncrementalFsckSpec extends SparkSpec {
       "doc_id", "text", 0L)
     DedupRegistry.ingestBatch(reg,
       Seq((11L, "gamma")).toDF("doc_id", "text"), "doc_id", "text", 1L)
-    assert(Fsck.registryFsckIncremental(spark, reg, 0L).count() === 0L)
+    assert(Fsck.registryFsck(spark, reg, Some(0L)).count() === 0L)
     val tmp = java.nio.file.Files.createTempDirectory("reg-plant").toString
     // digest of "alpha" recomputed the writers' way
     val dAlpha = Seq("alpha").toDF("t")
@@ -218,13 +218,13 @@ class IncrementalFsckSpec extends SparkSpec {
       new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head.toPath,
       new java.io.File(s"$bucketDir/b1_zz_dup.parquet").toPath)
-    val got = kinds(Fsck.registryFsckIncremental(spark, reg, 0L))
+    val got = kinds(Fsck.registryFsck(spark, reg, Some(0L)))
     assert(got.contains("reg_dup_digest"), s"got $got")
     assert(got.contains("reg_stats_ndocs"), s"got $got")
     // cursor past the planted tag: out of scope entirely (no new
     // batches -> one listing, zero scans — the idle-night contract);
     // the full audit still owns it
-    assert(Fsck.registryFsckIncremental(spark, reg, 1L).count() === 0L)
+    assert(Fsck.registryFsck(spark, reg, Some(1L)).count() === 0L)
     assert(kinds(Fsck.registryFsck(spark, reg)).contains("reg_dup_digest"))
 
     // near-dup registry: a b1-tagged near-copy of a batch-0 doc that
@@ -238,7 +238,7 @@ class IncrementalFsckSpec extends SparkSpec {
     NearDupRegistry.ingestBatch(nd,
       Seq((11L, "totally different words here entirely"))
         .toDF("doc_id", "text"), "doc_id", "text", 1L)
-    assert(Fsck.nearDupRegistryFsckIncremental(spark, nd, 0L).count() === 0L)
+    assert(Fsck.nearDupRegistryFsck(spark, nd, Some(0L)).count() === 0L)
     // manufacture the violating state by re-ingesting an exact copy
     // with the witness TOMBSTONED (legal), then clearing the tombstone
     // by hand (the corruption: a resurrected witness beside its copy)
@@ -248,10 +248,10 @@ class IncrementalFsckSpec extends SparkSpec {
         .toDF("doc_id", "text"), "doc_id", "text", 2L)
     val ov = new org.apache.hadoop.fs.Path(s"$nd/tombstones")
     ov.getFileSystem(spark.sessionState.newHadoopConf()).delete(ov, true)
-    val ndGot = kinds(Fsck.nearDupRegistryFsckIncremental(spark, nd, 1L))
+    val ndGot = kinds(Fsck.nearDupRegistryFsck(spark, nd, Some(1L)))
     assert(ndGot.contains("ndreg_registered_near_dup_pair"), s"got $ndGot")
     // the pair involves batch 2's delta; a cursor past it sees nothing
-    assert(Fsck.nearDupRegistryFsckIncremental(spark, nd, 2L).count() === 0L)
+    assert(Fsck.nearDupRegistryFsck(spark, nd, Some(2L)).count() === 0L)
   }
 
   test("composed incremental: one-sided batch surfaces; older batches out of scope") {
@@ -262,8 +262,8 @@ class IncrementalFsckSpec extends SparkSpec {
     val sink = DedupRegistry.dedupIndexStreamSink(reg, idx, "doc_id", "text")
     sink(Seq((1L, "alpha beta")).toDF("doc_id", "text"), 0L)
     sink(Seq((2L, "gamma delta")).toDF("doc_id", "text"), 1L)
-    assert(Fsck.composedFsckIncremental(spark, reg, idx, -1L).count() === 0L)
-    assert(Fsck.composedFsckIncremental(spark, reg, idx, 1L).count() === 0L)
+    assert(Fsck.composedFsck(spark, reg, idx, Some(-1L)).count() === 0L)
+    assert(Fsck.composedFsck(spark, reg, idx, Some(1L)).count() === 0L)
     // manufacture one-sided drift in batch 1: the registry accepted a
     // doc the index never applied (plant a tagged registry corpus row)
     val tmp = java.nio.file.Files.createTempDirectory("fsck-cmp-plant").toString
@@ -278,12 +278,66 @@ class IncrementalFsckSpec extends SparkSpec {
       new java.io.File(s"$bucketDir/b1_zz_stray.parquet").toPath)
     // the stray doc violates registration AND the derivation relations
     // (its expected postings/doclen have no index rows) — all flagged
-    val got = kinds(Fsck.composedFsckIncremental(spark, reg, idx, 0L))
+    val got = kinds(Fsck.composedFsck(spark, reg, idx, Some(0L)))
     assert(got.contains("composed_registry_doc_missing_from_index"), s"got $got")
     // a cursor past batch 1 never reads the planted file
-    assert(Fsck.composedFsckIncremental(spark, reg, idx, 1L).count() === 0L)
+    assert(Fsck.composedFsck(spark, reg, idx, Some(1L)).count() === 0L)
     // the full audit sees it too
     assert(kinds(Fsck.composedFsck(spark, reg, idx))
       .contains("composed_registry_doc_missing_from_index"))
+  }
+
+  Seq("bm25", "ivf", "reg", "ndreg").foreach { family =>
+    test(s"$family since-cursor audit checks the tombstone overlay") {
+      val (dir, audit) = IncrementalFsckSpec.twoBatches(spark, family)
+      assert(audit(Some(0L)).count() === 0L)
+      // a tombstone for an unknown id, and a duplicate of a live one
+      Tombstones.add(spark, dir, Seq(1L, 999L).toDF("id"), "id")
+      Seq(1L).toDF("id").coalesce(1).write.mode("append")
+        .parquet(s"$dir/tombstones")
+      val got = kinds(audit(Some(0L)))
+      assert(got === Set(s"${family}_dup_tombstone",
+        s"${family}_tombstone_for_unknown_doc"), s"got $got")
+    }
+  }
+}
+
+object IncrementalFsckSpec {
+
+  /** A two-batch ingest-lifecycle estate of `family` ("bm25", "ivf",
+    * "reg" or "ndreg"): doc 1 in batch 0, doc 2 in batch 1. Returns its
+    * path and its audit over the scope a cursor selects.
+    */
+  def twoBatches(spark: org.apache.spark.sql.SparkSession, family: String)
+      : (String, Option[Long] => org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(s"fsck-$family").toString
+    val docs = Seq((1L, "alpha beta gamma delta epsilon"),
+      (2L, "omega psi chi phi upsilon")).toDF("doc_id", "text")
+    def batch(i: Long) = docs.filter(col("doc_id") === i + 1L)
+    family match {
+      case "bm25" =>
+        Retrieval.bm25Init(spark, dir, buckets = 8)
+        (0L to 1L).foreach(i =>
+          Retrieval.bm25IngestBatch(dir, batch(i), "doc_id", "text", i))
+        (dir, Fsck.bm25Fsck(spark, dir, _))
+      case "ivf" =>
+        val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))).toDF("id", "vec")
+        Similarity.ivfInit(spark,
+          Similarity.trainIvfCentroids(vecs, "id", "vec", 2), dir)
+        (0L to 1L).foreach(i => Similarity.ivfIngestBatch(
+          dir, vecs.filter(col("id") === i + 1L), "id", "vec", i))
+        (dir, c => Fsck.ivfFsck(spark, dir, sinceBatch = c))
+      case "reg" =>
+        DedupRegistry.init(spark, dir, buckets = 4)
+        (0L to 1L).foreach(i =>
+          DedupRegistry.ingestBatch(dir, batch(i), "doc_id", "text", i))
+        (dir, Fsck.registryFsck(spark, dir, _))
+      case "ndreg" =>
+        NearDupRegistry.init(spark, dir, buckets = 4)
+        (0L to 1L).foreach(i =>
+          NearDupRegistry.ingestBatch(dir, batch(i), "doc_id", "text", i))
+        (dir, Fsck.nearDupRegistryFsck(spark, dir, _))
+    }
   }
 }

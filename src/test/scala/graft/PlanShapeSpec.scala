@@ -397,12 +397,12 @@ class PlanShapeSpec extends SparkSpec {
         // round 15: the quantizer refresh (retrain + reassignment +
         // swaps) and the incremental audits' pruned/delta join plans
         operators.Similarity.ivfRequantize(spark, ivfPath, nlist = 8)
-        operators.Fsck.bm25FsckIncremental(spark, path, -1L).collect()
-        operators.Fsck.registryFsckIncremental(spark, regPath, -1L).collect()
-        operators.Fsck.nearDupRegistryFsckIncremental(spark, ndPath, -1L)
+        operators.Fsck.bm25Fsck(spark, path, Some(-1L)).collect()
+        operators.Fsck.registryFsck(spark, regPath, Some(-1L)).collect()
+        operators.Fsck.nearDupRegistryFsck(spark, ndPath, Some(-1L))
           .collect()
-        operators.Fsck.composedFsckIncremental(
-          spark, s"$compRoot/reg", s"$compRoot/idx", -1L).collect()
+        operators.Fsck.composedFsck(
+          spark, s"$compRoot/reg", s"$compRoot/idx", Some(-1L)).collect()
       }
       // listener delivery is async on the bus — wait for it to drain
       val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
