@@ -132,7 +132,7 @@ object Bench {
       val valid = validQ.persist(StorageLevel.MEMORY_AND_DISK)
       valid.count() // warm, untimed
       // headline indicators strategy = the single-pass bounded-state
-      // aggregator (what BatchEtl.run uses); window/tail variants reported
+      // aggregator (what BatchEtl.run uses); the window variant reported
       staged("etl1m_indicators") {
         graft.operators.IndicatorAggregator.summary(
           valid, "symbol", "price", Some("volume"),
@@ -140,11 +140,6 @@ object Bench {
       }
       staged("etl1m_indicators_window") {
         graft.operators.Indicators.summary(
-          valid, Seq("symbol"), "price", Some("volume"),
-          Seq("timestamp", "trade_id"), period = 5).count()
-      }
-      staged("etl1m_indicators_tail") {
-        graft.operators.Indicators.summaryTail(
           valid, Seq("symbol"), "price", Some("volume"),
           Seq("timestamp", "trade_id"), period = 5).count()
       }

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Single-pass typed aggregation of SMA/RSI/VWAP — the Aggregator form of
+/** Single-pass aggregation of SMA/RSI/VWAP — the aggregate form of
   * Indicators.summary (SURVEY.md §2.8): identical output, different
   * physical plan.
   *
@@ -79,9 +78,9 @@ object IndicatorAggregator {
     if (isMax && m == cap) {
       // steady-state hot path (time-ordered input, buffer full): shift left
       // in place and append — zero allocation per row. Mutating b's arrays
-      // is safe: the object-aggregation iterator hands each group's buffer
-      // exclusively to reduce() and replaces it with the return value, and
-      // the product-encoder deserializer materializes fresh arrays.
+      // is safe: the native aggregate hands each group's buffer exclusively
+      // to update() and replaces it with the return value, and the
+      // streaming state's deserializer materializes fresh arrays.
       System.arraycopy(b.ts, 1, b.ts, 0, cap - 1)
       System.arraycopy(b.ids, 1, b.ids, 0, cap - 1)
       System.arraycopy(b.prices, 1, b.prices, 0, cap - 1)
@@ -137,20 +136,11 @@ object IndicatorAggregator {
     Out(sma, rsi, vwap, math.min(period, b.n).toInt, b.n)
   }
 
-  final class Agg(period: Int) extends Aggregator[Point, Buf, Out] {
-    override def zero: Buf = emptyBuf
-    override def reduce(b: Buf, p: Point): Buf = mergePoint(b, p, period)
-    override def merge(a: Buf, b: Buf): Buf = mergeBufs(a, b, period)
-    override def finish(b: Buf): Out = finishBuf(b, period)
-    override def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
-    override def outputEncoder: Encoder[Out] = Encoders.product[Out]
-  }
-
   /** DataFrame adapter mirroring Indicators.summary's signature: one row
     * per group with (groupCol, sma, rsi, vwap, period, n_rows). Runs the
     * NATIVE aggregate expression (functions.IndicatorAggExpr — same
     * algebra, no per-row Point materialization, no product-encoder
-    * round-trips); `summaryTyped` keeps the Dataset Aggregator form.
+    * round-trips).
     */
   def summary(
       df: DataFrame,
@@ -173,35 +163,4 @@ object IndicatorAggregator {
         col("out.vwap").as("vwap"),
         col("out.period").as("period"),
         col("out.n_rows").as("n_rows"))
-
-  /** The Dataset-typed Aggregator form of [[summary]] (same algebra; kept
-    * as the §2.8 typed-API exhibit and to pin the two forms equal).
-    */
-  def summaryTyped(
-      df: DataFrame,
-      groupCol: String,
-      priceCol: String,
-      volumeCol: Option[String],
-      tsCol: String,
-      idCol: String,
-      period: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val pts = df.select(
-      col(groupCol).cast("string").as("key"),
-      col(tsCol).cast("long").as("ts"),
-      col(idCol).cast("long").as("id"),
-      col(priceCol).cast("double").as("price"),
-      volumeCol.map(v => col(v).cast("double")).getOrElse(lit(1.0)).as("volume"))
-      .as[Point]
-    pts.groupByKey(_.key)
-      .agg(new Agg(period).toColumn.name("out"))
-      .select(
-        col("key").as(groupCol),
-        col("out.sma").as("sma"),
-        col("out.rsi").as("rsi"),
-        col("out.vwap").as("vwap"),
-        col("out.period").as("period"),
-        col("out.n_rows").as("n_rows"))
-  }
 }

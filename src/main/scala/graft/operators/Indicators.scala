@@ -86,73 +86,6 @@ object Indicators {
           col("__n").as("n_rows")): _*)
   }
 
-  /** Tail-extraction formulation of `summary` — identical output, fastest
-    * physical plan for the summary-at-group-end case: only the last
-    * (period+1) rows per group are shuffled. The row_number filter
-    * triggers Spark's WindowGroupLimit, which prunes to (period+1) rows
-    * per group PER MAP PARTITION before the exchange, so the sort touches
-    * a few thousand rows regardless of input size; VWAP runs as a plain
-    * codegen'd hash aggregation over the full data; the two tiny frames
-    * join at the end. ~4x faster than the full-window form at 1M rows.
-    */
-  def summaryTail(
-      df: DataFrame,
-      groupCols: Seq[String],
-      priceCol: String,
-      volumeCol: Option[String],
-      orderBy: Seq[String],
-      period: Int): DataFrame = {
-    val gcols = groupCols.map(col)
-    val ord = orderBy.map(col)
-    val wDesc = Window.partitionBy(gcols: _*).orderBy(ord.map(_.desc): _*)
-
-    val tail = df
-      .withColumn("__rn", row_number().over(wDesc))
-      .filter(col("__rn") <= period + 1)
-
-    val ordStruct = struct((ord :+ col(priceCol).as("__p")): _*)
-    val prices = transform(
-      sort_array(collect_list(ordStruct)), s => s.getField("__p"))
-
-    val m = size(prices)
-    val smaCnt = least(lit(period), m)
-    val sma = when(m === 0, lit(0.0)).otherwise(
-      aggregate(slice(prices, -smaCnt, smaCnt), lit(0.0), (a, x) => a + x)
-        .cast("double") / smaCnt)
-    // consecutive diffs over the tail window
-    val diffs = zip_with(
-      slice(prices, lit(2), m - 1), slice(prices, lit(1), m - 1),
-      (late, early) => late - early)
-    val gainSum = aggregate(diffs, lit(0.0),
-      (a, d) => a + when(d > 0, d).otherwise(0.0))
-    val lossSum = aggregate(diffs, lit(0.0),
-      (a, d) => a + when(d < 0, -d).otherwise(0.0))
-    val nd = size(diffs)
-    val rsi = when(nd === 0, lit(50.0))
-      .when(lossSum === 0, lit(100.0))
-      .otherwise(lit(100.0) -
-        lit(100.0) / (lit(1.0) + (gainSum / nd) / (lossSum / nd)))
-
-    val tailAgg = tail
-      .groupBy(gcols: _*)
-      .agg(sma.as("sma"), rsi.as("rsi"))
-
-    val price = col(priceCol)
-    val allAgg = df.groupBy(gcols: _*).agg(
-      (volumeCol match {
-        case Some(v) => sum(price * col(v)) / sum(col(v))
-        case None => avg(price)
-      }).as("vwap"),
-      count(lit(1)).as("n_rows"))
-
-    tailAgg.join(allAgg, groupCols)
-      .select(
-        gcols ++ Seq(
-          col("sma"), col("rsi"), col("vwap"),
-          least(lit(period), col("n_rows")).cast("int").as("period"),
-          col("n_rows")): _*)
-  }
-
   /** Rolling SMA per row (keeps every input row) — the row-frame window the
     * reference evaluates only at group end, exposed as a full column for
     * relational use (SURVEY.md §2.5 W1).

@@ -212,39 +212,14 @@ object MarketAnalytics {
     // oracle SQL. mergePoint's arrival-order invariance (spec-pinned) is
     // what makes the replay order irrelevant.
     "q55_stream_parity" -> ((s, dir) =>
-      replaySnapshot(s, dir, "q55_snapshot",
-          stream => graft.streaming.StreamingEtl.statefulIndicators(
-            asTrades(stream), period = 14).toDF(),
-          Seq("symbol"), "n_rows")
-        .select(
-          col("symbol").as("event_type"),
-          round(col("sma"), 4).as("sma"),
-          round(col("rsi"), 4).as("rsi"),
-          round(col("vwap"), 4).as("vwap"),
-          col("period"),
-          col("n_rows"))
-        .orderBy(col("event_type"))),
+      indicatorReplay(s, dir, "q55_snapshot")),
 
-    // §2.8/§2.7 gate: the SAME indicator state machine on Spark 4's
-    // transformWithState (StatefulProcessor + typed ValueState — the
-    // successor API to flatMapGroupsWithState, RocksDB-only by its
-    // contract). Both state APIs fold the identical mergePoint/finishBuf
-    // algebra; this gate pins the new API's replay against q55's
-    // verbatim oracle, so the engine proves one semantics on both.
-    "q154_stream_indicators_tws" -> ((s, dir) => withRocksDb(s) {
-      replaySnapshot(s, dir, "q154_tws",
-          stream => graft.streaming.StreamingEtl.statefulIndicatorsTws(
-            asTrades(stream), period = 14).toDF(),
-          Seq("symbol"), "n_rows")
-        .select(
-          col("symbol").as("event_type"),
-          round(col("sma"), 4).as("sma"),
-          round(col("rsi"), 4).as("rsi"),
-          round(col("vwap"), 4).as("vwap"),
-          col("period"),
-          col("n_rows"))
-        .orderBy(col("event_type"))
-    }),
+    // §2.8/§2.7 gate: q55's indicator state machine
+    // (statefulIndicators, flatMapGroupsWithState) replayed under the
+    // RocksDB state-store provider against q55's verbatim oracle, so the
+    // keyed indicator state is proven provider-independent.
+    "q154_stream_indicators_tws" -> ((s, dir) =>
+      withRocksDb(s) { indicatorReplay(s, dir, "q154_tws") }),
 
     // Inter-arrival gap profile per event_type — the feed-health
     // counterpart of q17's per-user sessions: consecutive gaps in
@@ -270,54 +245,27 @@ object MarketAnalytics {
     // (including a late event bridging two intervals into one) converges
     // exactly to q17's batch oracle, with no ordering assumption at all.
     "q92_stream_sessions" -> ((s, dir) =>
-      replaySnapshot(s, dir, "q92_snapshot",
-          stream => graft.streaming.StreamingEtl.statefulSessions(
-            stream.select(col("user_id"), col("ts")),
-            gap = 1800000000000L).toDF(),
-          Seq("user_id"), "n_events")
-        .select(col("user_id"), col("n_sessions"), col("n_events"))
-        .orderBy(col("user_id"))),
+      sessionReplay(s, dir, "q92_snapshot")),
 
-    // §2.7/§2.8 gate: the SAME session interval algebra on
-    // transformWithState (the third semantics on the successor API —
-    // q154 indicators, q157 TTL dedup, now sessions). Identical replay,
-    // q17's verbatim oracle by reference, RocksDB-pinned.
-    "q160_stream_sessions_tws" -> ((s, dir) => withRocksDb(s) {
-      replaySnapshot(s, dir, "q160_tws",
-          stream => graft.streaming.StreamingEtl.statefulSessionsTws(
-            stream.select(col("user_id"), col("ts")),
-            gap = 1800000000000L).toDF(),
-          Seq("user_id"), "n_events")
-        .select(col("user_id"), col("n_sessions"), col("n_events"))
-        .orderBy(col("user_id"))
-    }),
+    // §2.7/§2.8 gate: q92's session interval algebra
+    // (statefulSessions) replayed under the RocksDB state-store
+    // provider — identical replay, q17's verbatim oracle by reference.
+    "q160_stream_sessions_tws" -> ((s, dir) =>
+      withRocksDb(s) { sessionReplay(s, dir, "q160_tws") }),
 
-    // §2.7/§2.8 gate: the CANDLE algebra on transformWithState — the
-    // FOURTH semantics on the successor state API (q154 indicators,
-    // q157 TTL dedup, q160 sessions): key = (symbol, window start),
-    // state = the native OhlcAggExpr.Buf itself, so batch (q80),
-    // built-in streaming aggregation (q86), and TWS fold ONE candle
-    // algebra. Identical replay, q80's verbatim batch oracle by
-    // reference, RocksDB-pinned like every TWS gate.
-    "q164_stream_ohlc_tws" -> ((s, dir) => withRocksDb(s) {
-      replaySnapshot(s, dir, "q164_tws",
-          stream => graft.streaming.StreamingEtl.statefulOhlcTws(
-            asTrades(stream)).toDF(),
-          Seq("symbol", "window_start_us"), "n_ticks")
-        .select(
-          col("symbol").as("event_type"),
-          date_format(timestamp_micros(col("window_start_us")),
-            "yyyy-MM-dd HH:00").as("hour"),
-          col("open"), col("high"), col("low"), col("close"),
-          col("volume"), col("n_ticks"))
-        .orderBy(col("event_type"), col("hour"))
-    }),
+    // §2.7/§2.8 gate: q86's CANDLE replay (windowedOhlc — the native
+    // OhlcAggExpr buffer in the state store) under the RocksDB
+    // state-store provider. Identical replay and projection, q80's
+    // verbatim batch oracle by reference.
+    "q164_stream_ohlc_tws" -> ((s, dir) =>
+      withRocksDb(s) { ohlcReplay(s, dir, "q164_tws") }),
 
-    // §2.7/§2.8 gate: APPEND-MODE candles finalized by TWS event-time
-    // TIMERS (statefulOhlcTwsFinalize) — the watermark-bounded
-    // production form of q164: each (symbol, window) emits exactly
-    // once when the watermark passes its end, late rows drop, state
-    // clears per window. Driven with q116's sentinel phase design
+    // §2.7/§2.8 gate: APPEND-MODE candles finalized by the watermark
+    // (windowedOhlc with a 2 h delay) under the RocksDB state-store
+    // provider — the watermark-bounded production form of q86/q164:
+    // each (symbol, window) emits exactly once when the watermark
+    // passes its end, late rows drop, the finalized window's state
+    // evicts. Driven with q116's sentinel phase design
     // (late-drop class, accepted-late duplicate class, two
     // watermark-advancing sentinels + an empty spacer for the
     // one-batch watermark lag); the oracle is the batch OHLC over
@@ -325,31 +273,13 @@ object MarketAnalytics {
     // finalized window, a dropped live row, or a kept late row all
     // break rows or sums.
     "q165_stream_ohlc_finalize" -> ((s, dir) => withRocksDb(s) {
-      val events = t(s, dir, "events")
-      val tsUs = call_function("div", col("ts"), lit(1000L))
-      val hourUs = 3600L * 1000000L
-      val maxUs = events.agg(max(tsUs)).collect()(0).getLong(0)
-      val lateDrop = events
-        .filter(col("event_id") % 9 === 0 && tsUs < maxUs - 3 * hourUs)
-      val lateKeep = events
-        .filter(col("event_id") % 4 === 1 && tsUs >= maxUs - hourUs)
-      def sentinel(offsetUs: Long) = events.sparkSession.range(1).select(
-        lit(-1L).as("event_id"),
-        lit((maxUs + offsetUs) * 1000L).as("ts"),
-        lit(0L).as("user_id"),
-        lit("wm_probe").as("event_type"),
-        lit(0.0d).as("value"),
-        lit("").as("props"))
-      replayPhases(s, "q165_ohlc_fin", dir,
-          Seq(events, events.limit(0), lateDrop.union(lateKeep),
-            sentinel(6 * hourUs), sentinel(12 * hourUs)),
-          stream => graft.streaming.StreamingEtl.statefulOhlcTwsFinalize(
-            asTrades(stream)).toDF())
+      replayPhases(s, "q165_ohlc_fin", dir, watermarkPhases(s, dir),
+          stream => graft.streaming.StreamingEtl.windowedOhlc(
+            asTrades(stream), "1 hour", Some("2 hours")))
         .filter(col("symbol") =!= "wm_probe")
         .select(
           col("symbol").as("event_type"),
-          date_format(timestamp_micros(col("window_start_us")),
-            "yyyy-MM-dd HH:00").as("hour"),
+          date_format(col("window.start"), "yyyy-MM-dd HH:00").as("hour"),
           col("open"), col("high"), col("low"), col("close"),
           col("volume"), col("n_ticks"))
         .orderBy(col("event_type"), col("hour"))
@@ -363,16 +293,7 @@ object MarketAnalytics {
     // per-(window, symbol) snapshot is checked against q80's verbatim
     // batch oracle. No watermark: a replay must not drop late rows.
     "q86_stream_ohlc_parity" -> ((s, dir) =>
-      replaySnapshot(s, dir, "q86_snapshot",
-          stream => graft.streaming.StreamingEtl.windowedOhlc(
-            asTrades(stream), "1 hour"),
-          Seq("window", "symbol"), "n_ticks")
-        .select(
-          col("symbol").as("event_type"),
-          date_format(col("window.start"), "yyyy-MM-dd HH:00").as("hour"),
-          col("open"), col("high"), col("low"), col("close"),
-          col("volume"), col("n_ticks"))
-        .orderBy(col("event_type"), col("hour"))),
+      ohlcReplay(s, dir, "q86_snapshot")),
 
     // §2.7 gate #4: STREAMING DEDUP through the driver's oracle. Every
     // id%5==0 event is planted as an exact second copy before the
@@ -589,26 +510,8 @@ object MarketAnalytics {
     // fails the hash. Both row classes are robust to either predicate
     // form (event-time vs window-end) and to ms-vs-µs watermark
     // truncation: every boundary has >= 26 min of slack at all SFs.
-    "q116_stream_watermark" -> ((s, dir) => {
-      val events = t(s, dir, "events")
-      val tsUs = call_function("div", col("ts"), lit(1000L))
-      val hourUs = 3600L * 1000000L
-      // bounded driver read: ONE long (the corpus's max event time)
-      val maxUs = events.agg(max(tsUs)).collect()(0).getLong(0)
-      val lateDrop = events
-        .filter(col("event_id") % 9 === 0 && tsUs < maxUs - 3 * hourUs)
-      val lateKeep = events
-        .filter(col("event_id") % 4 === 1 && tsUs >= maxUs - hourUs)
-      def sentinel(offsetUs: Long) = events.sparkSession.range(1).select(
-        lit(-1L).as("event_id"),
-        lit((maxUs + offsetUs) * 1000L).as("ts"),
-        lit(0L).as("user_id"),
-        lit("wm_probe").as("event_type"),
-        lit(0.0d).as("value"),
-        lit("").as("props"))
-      replayPhases(s, "q116_wm", dir,
-          Seq(events, events.limit(0), lateDrop.union(lateKeep),
-            sentinel(6 * hourUs), sentinel(12 * hourUs)),
+    "q116_stream_watermark" -> ((s, dir) =>
+      replayPhases(s, "q116_wm", dir, watermarkPhases(s, dir),
           stream => graft.streaming.StreamingEtl.watermarkedWindowCounts(
             stream, "event_type", "ts", "event_id", "user_id"))
         .filter(col("event_type") =!= "wm_probe")
@@ -616,8 +519,7 @@ object MarketAnalytics {
           col("event_type"),
           date_format(col("window.start"), "yyyy-MM-dd HH:00").as("hour"),
           col("n_events"), col("id_sum"), col("user_sum"))
-        .orderBy(col("event_type"), col("hour"))
-    }),
+        .orderBy(col("event_type"), col("hour"))),
 
     // §2.7 gate #12: TTL-BOUNDED streaming dedup
     // (dropDuplicatesWithinWatermark) — the production form of q111's
@@ -636,16 +538,14 @@ object MarketAnalytics {
         stream => graft.streaming.StreamingEtl.dedupWithinWatermark(
           stream, Seq("event_id"), "ts", "2 hours"))),
 
-    // §2.7 gate #13: the SAME TTL-dedup contract on Spark 4's
-    // transformWithState — first-class event-time TIMERS carry the
-    // eviction dropDuplicatesWithinWatermark builds in (q154's
-    // successor-API rationale, now for an eviction-BEARING semantics).
-    // Identical phases, identical oracle (q153's, by reference): a
-    // divergence in the late-drop rule, the suppress window, or timer
-    // eviction breaks a counter. RocksDB-pinned like every TWS gate.
+    // §2.7 gate #13: q153's TTL-dedup contract
+    // (dropDuplicatesWithinWatermark) under the RocksDB state-store
+    // provider. Identical phases, identical oracle (q153's, by
+    // reference): a provider divergence in the late-drop rule, the
+    // suppress window, or watermark eviction breaks a counter.
     "q157_stream_dedup_ttl_tws" -> ((s, dir) => withRocksDb(s) {
       ttlDedupGate(s, dir,
-        stream => graft.streaming.StreamingEtl.dedupWithinWatermarkTws(
+        stream => graft.streaming.StreamingEtl.dedupWithinWatermark(
           stream, Seq("event_id"), "ts", "2 hours"))
     }),
 
@@ -962,10 +862,10 @@ object MarketAnalytics {
     } finally c.close()
   }
 
-  /** Pin the RocksDB state-store provider around a transformWithState
-    * gate body (the TWS runtime requires it), restoring the prior
-    * session conf afterwards — shared by every TWS gate so the wrap
-    * cannot drift per gate.
+  /** Pin the RocksDB state-store provider around a gate body, restoring
+    * the prior session conf afterwards — shared by the gates that re-run
+    * a stateful semantics under RocksDB (q154, q157, q160, q164, q165)
+    * so the wrap cannot drift per gate.
     */
   private def withRocksDb[A](s: SparkSession)(body: => A): A = {
     val spark = Tables.configure(s)
@@ -993,6 +893,55 @@ object MarketAnalytics {
       partCols: Seq[String], counterCol: String): DataFrame =
     finalSnapshot(
       replayRaw(s, dir, name, identity, build), partCols, counterCol)
+
+  /** The indicator state machine's replay in q16's output shape — q55 on
+    * the default state store, q154 under RocksDB. `name` keys the
+    * memory sink and the memoized replay input.
+    */
+  private def indicatorReplay(
+      s: SparkSession, dir: String, name: String): DataFrame =
+    replaySnapshot(s, dir, name,
+        stream => graft.streaming.StreamingEtl.statefulIndicators(
+          asTrades(stream), period = 14).toDF(),
+        Seq("symbol"), "n_rows")
+      .select(
+        col("symbol").as("event_type"),
+        round(col("sma"), 4).as("sma"),
+        round(col("rsi"), 4).as("rsi"),
+        round(col("vwap"), 4).as("vwap"),
+        col("period"),
+        col("n_rows"))
+      .orderBy(col("event_type"))
+
+  /** The session interval algebra's replay in q17's output shape — q92
+    * on the default state store, q160 under RocksDB.
+    */
+  private def sessionReplay(
+      s: SparkSession, dir: String, name: String): DataFrame =
+    replaySnapshot(s, dir, name,
+        stream => graft.streaming.StreamingEtl.statefulSessions(
+          stream.select(col("user_id"), col("ts")),
+          gap = 1800000000000L).toDF(),
+        Seq("user_id"), "n_events")
+      .select(col("user_id"), col("n_sessions"), col("n_events"))
+      .orderBy(col("user_id"))
+
+  /** The hourly candle replay in q80's output shape — q86 on the default
+    * state store, q164 under RocksDB. No watermark: a replay must not
+    * drop late rows.
+    */
+  private def ohlcReplay(
+      s: SparkSession, dir: String, name: String): DataFrame =
+    replaySnapshot(s, dir, name,
+        stream => graft.streaming.StreamingEtl.windowedOhlc(
+          asTrades(stream), "1 hour"),
+        Seq("window", "symbol"), "n_ticks")
+      .select(
+        col("symbol").as("event_type"),
+        date_format(col("window.start"), "yyyy-MM-dd HH:00").as("hour"),
+        col("open"), col("high"), col("low"), col("close"),
+        col("volume"), col("n_ticks"))
+      .orderBy(col("event_type"), col("hour"))
 
   /** The replay harness without the per-key snapshot: returns the raw
     * update-mode memory-sink table. `prep` transforms the events table
@@ -1073,8 +1022,36 @@ object MarketAnalytics {
     spark.table(qname)
   }
 
+  /** q116's five watermark phases, shared by q165: the whole corpus, an
+    * empty spacer (late filtering lags the watermark by one batch), the
+    * late-drop (>= 3 h behind) and accepted-late (<= 1 h behind) copy
+    * classes, then two `wm_probe` sentinels 6 h and 12 h past the corpus
+    * that push the watermark past every real window and trigger the
+    * emitting batch.
+    */
+  private def watermarkPhases(s: SparkSession, dir: String): Seq[DataFrame] = {
+    val events = t(s, dir, "events")
+    val tsUs = call_function("div", col("ts"), lit(1000L))
+    val hourUs = 3600L * 1000000L
+    // bounded driver read: ONE long (the corpus's max event time)
+    val maxUs = events.agg(max(tsUs)).collect()(0).getLong(0)
+    val lateDrop = events
+      .filter(col("event_id") % 9 === 0 && tsUs < maxUs - 3 * hourUs)
+    val lateKeep = events
+      .filter(col("event_id") % 4 === 1 && tsUs >= maxUs - hourUs)
+    def sentinel(offsetUs: Long) = events.sparkSession.range(1).select(
+      lit(-1L).as("event_id"),
+      lit((maxUs + offsetUs) * 1000L).as("ts"),
+      lit(0L).as("user_id"),
+      lit("wm_probe").as("event_type"),
+      lit(0.0d).as("value"),
+      lit("").as("props"))
+    Seq(events, events.limit(0), lateDrop.union(lateKeep),
+      sentinel(6 * hourUs), sentinel(12 * hourUs))
+  }
+
   /** Shared q153/q157 gate body — ONE phase construction and final
-    * aggregation for both TTL-dedup forms, so the two state APIs replay
+    * aggregation for both state-store providers, so the two runs replay
     * byte-identical inputs against the shared oracle. Phase 1 is the
     * whole corpus (watermark lands at max − 2 h). Phase 2 plants
     * duplicate copies: recent ones (≥ max − 1 h, state alive) suppress;
@@ -1386,8 +1363,8 @@ object MarketAnalytics {
   // ids emit once; planted duplicate copies suppress or late-drop —
   // phase design makes every row's fate static) plus the fresh
   // above-watermark plants. Stale plants of BOTH kinds drop. Shared by
-  // q153 (dropDuplicatesWithinWatermark) and q157 (the
-  // transformWithState timer form): one contract, two state APIs.
+  // q153 (dropDuplicatesWithinWatermark on the default state store) and
+  // q157 (the same operator under RocksDB): one contract, two providers.
   private val ttlDedupOracle: String =
     """WITH m AS (SELECT max(epoch_us(ts)) AS max_us FROM events),
          fresh AS (
@@ -1525,15 +1502,16 @@ object MarketAnalytics {
     // parity claim IS "same answer as the batch aggregate", so the oracle
     // is q16's verbatim
     "q55_stream_parity" -> indicatorOracle,
-    // same oracle, by reference: the state API (flatMapGroupsWithState
-    // vs transformWithState) is an implementation choice, not semantics
+    // same oracle, by reference: the state-store provider (q154 runs
+    // q55's state machine under RocksDB) is a deployment knob, not
+    // semantics
     "q154_stream_indicators_tws" -> indicatorOracle,
     "q17_sessionize" -> sessionOracle,
     // q92 replays the same rows through the interval-algebra state
     // machine; the parity claim IS "same sessions as the batch window"
     "q92_stream_sessions" -> sessionOracle,
-    // same oracle, by reference: the state API is an implementation
-    // choice (the q154/q157 rationale, now for the session algebra)
+    // same oracle, by reference: q92's state machine under RocksDB
+    // (the q154/q157 rationale, now for the session algebra)
     "q160_stream_sessions_tws" -> sessionOracle,
     "q18_json" ->
       """SELECT event_type,
@@ -1577,10 +1555,10 @@ object MarketAnalytics {
     // q86 replays the same rows through the streaming state machine; the
     // parity claim IS "same candles as the batch aggregate" (q55 pattern)
     "q86_stream_ohlc_parity" -> ohlcOracle,
-    // The TWS form replays the same rows through the same candle
-    // algebra — same oracle, by reference (the q154/q160 rationale).
+    // q86's candle replay under RocksDB — same oracle, by reference
+    // (the q154/q160 rationale).
     "q164_stream_ohlc_tws" -> ohlcOracle,
-    // Timer-finalized candles under a watermark: the q116 retention
+    // Watermark-finalized candles (append mode): the q116 retention
     // contract (accepted-late copies merge, stale rows drop — the
     // sentinels push the watermark past every real window, so all of
     // them finalize) applied to the q80/q86 candle relation. rn ties
@@ -1727,9 +1705,8 @@ object MarketAnalytics {
     // above-watermark plants. Stale plants of BOTH kinds drop.
     "q153_stream_dedup_ttl" -> ttlDedupOracle,
     // same oracle, by reference: the q154 rationale for the
-    // EVICTION-bearing semantics — dropDuplicatesWithinWatermark vs the
-    // transformWithState timer processor is an implementation choice,
-    // the late-drop/suppress/evict contract is one
+    // EVICTION-bearing semantics — q153's operator under RocksDB keeps
+    // one late-drop/suppress/evict contract
     "q157_stream_dedup_ttl_tws" -> ttlDedupOracle,
     // The sink round trips are identity relations: the oracle aggregates
     // the SOURCE table; the gate aggregates what the sink wrote and read

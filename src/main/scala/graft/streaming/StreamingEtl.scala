@@ -137,7 +137,8 @@ object StreamingEtl {
     * (unbounded per-symbol hash map, reference
     * src/tools/websocket_demo.cpp:73-125) upgraded to indicator state with
     * bounded memory: state size is O(period) per symbol regardless of
-    * stream length, checkpointable by the state store.
+    * stream length, checkpointable by either state-store provider (q55
+    * runs it on the default store, q154 on RocksDB).
     */
   def statefulIndicators(
       trades: DataFrame,
@@ -163,67 +164,6 @@ object StreamingEtl {
           val o = finishBuf(buf, period)
           Iterator.single(KeyedOut(key, o.sma, o.rsi, o.vwap, o.period, o.n_rows))
       }
-  }
-
-  /** [[statefulIndicators]]' state machine re-expressed on Spark 4's
-    * `transformWithState` (StatefulProcessor + typed ValueState) — the
-    * successor API to flatMapGroupsWithState: state is named and typed
-    * per variable (schema-evolvable), timers are first-class, and the
-    * runtime REQUIRES the RocksDB state-store provider (callers set it;
-    * the q154 gate wraps the conf). Semantics are identical by
-    * construction — both paths fold the same
-    * IndicatorAggregator.mergePoint/finishBuf algebra — and the q154
-    * gate pins the output against q55's verbatim oracle, so the engine
-    * carries the old and new state APIs with one proven semantics.
-    */
-  def statefulIndicatorsTws(
-      trades: DataFrame,
-      period: Int = 14): org.apache.spark.sql.Dataset[
-        graft.operators.IndicatorAggregator.KeyedOut] = {
-    import graft.operators.IndicatorAggregator.{KeyedOut, Point}
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = trades.sparkSession
-    import spark.implicits._
-    val pts = trades.select(
-      col("symbol").as("key"),
-      col("timestamp").cast("long").as("ts"),
-      col("trade_id").cast("long").as("id"),
-      col("price").cast("double").as("price"),
-      col("volume").cast("double").as("volume")).as[Point]
-    pts.groupByKey(_.key)
-      .transformWithState(
-        new IndicatorProcessor(period), TimeMode.None(), OutputMode.Update())
-  }
-
-  /** The [[statefulIndicatorsTws]] processor: one typed ValueState holds
-    * the same bounded Buf the batch Aggregator and the
-    * flatMapGroupsWithState path fold.
-    */
-  private class IndicatorProcessor(period: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String,
-        graft.operators.IndicatorAggregator.Point,
-        graft.operators.IndicatorAggregator.KeyedOut] {
-    import graft.operators.IndicatorAggregator.{Buf, KeyedOut, Point, emptyBuf, finishBuf, mergePoint}
-    @transient private var buf: org.apache.spark.sql.streaming.ValueState[Buf] = _
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      buf = getHandle.getValueState[Buf](
-        "buf",
-        org.apache.spark.sql.Encoders.product[Buf],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[Point],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[KeyedOut] = {
-      var b = if (buf.exists()) buf.get() else emptyBuf
-      rows.foreach(p => b = mergePoint(b, p, period))
-      buf.update(b)
-      val o = finishBuf(b, period)
-      Iterator.single(KeyedOut(key, o.sma, o.rsi, o.vwap, o.period, o.n_rows))
-    }
   }
 
   /** Keyed streaming sessionization — the stateful form of
@@ -259,78 +199,6 @@ object StreamingEtl {
             SessionSnapshot(key, s.starts.length.toLong, s.nEvents))
       }
   }
-
-  /** [[statefulSessions]] re-expressed on `transformWithState` — the
-    * third semantics carried on the successor state API (q154
-    * indicators, q157 TTL dedup): the SAME order-invariant interval
-    * algebra (Sessionize.mergeTs), its state now a named typed
-    * ValueState. The q160 gate replays it against q17's verbatim batch
-    * oracle, RocksDB-pinned like every TWS gate.
-    */
-  def statefulSessionsTws(
-      events: DataFrame,
-      gap: Long): org.apache.spark.sql.Dataset[
-        graft.operators.Sessionize.SessionSnapshot] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(
-        col("user_id").cast("long").as("_1"),
-        col("ts").cast("long").as("_2")).as[(Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(
-        new SessionProcessor(gap), TimeMode.None(), OutputMode.Update())
-  }
-
-  /** The [[statefulSessionsTws]] processor: one typed ValueState holds
-    * the key's disjoint session intervals (the q92 state, renamed onto
-    * the new API).
-    */
-  private class SessionProcessor(gap: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long), graft.operators.Sessionize.SessionSnapshot] {
-    import graft.operators.Sessionize.{mergeTs, SessionIntervals, SessionSnapshot}
-    @transient private var state:
-      org.apache.spark.sql.streaming.ValueState[SessionIntervals] = _
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      state = getHandle.getValueState[SessionIntervals](
-        "sessions",
-        org.apache.spark.sql.Encoders.product[SessionIntervals],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(
-        key: Long,
-        rows: Iterator[(Long, Long)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[SessionSnapshot] = {
-      var s = if (state.exists()) state.get()
-        else SessionIntervals(Vector.empty, Vector.empty, 0L)
-      rows.foreach { case (_, ts) => s = mergeTs(s, ts, gap) }
-      state.update(s)
-      Iterator.single(SessionSnapshot(key, s.starts.length.toLong, s.nEvents))
-    }
-  }
-
-  /** Streaming deduplication on business keys, state bounded by the
-    * watermark: a duplicate arriving within `watermarkDelay` of the first
-    * occurrence's event time is dropped; dedup state is evicted once the
-    * watermark passes it, so state size tracks the horizon's key cardinality
-    * instead of the stream's full history — the property that makes
-    * streaming ingest dedup viable at 100 TB/day (an unbounded
-    * dropDuplicates would OOM on state). The batch analogues for full-
-    * history dedup are in operators.Dedup.
-    *
-    * `eventTimeCol` must be a timestamp column; pass the ns-long wire
-    * `timestamp` through [[toEventTime]] first.
-    */
-  def dedupStream(
-      df: DataFrame,
-      eventTimeCol: String,
-      watermarkDelay: String,
-      keyCols: Seq[String]): DataFrame =
-    df.withWatermark(eventTimeCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark(keyCols)
 
   /** ns-since-epoch long -> µs-precision event-time timestamp column.
     * Decimal arithmetic keeps the division exact where a double divide
@@ -395,104 +263,6 @@ object StreamingEtl {
     df.withColumn("event_time", toEventTime(col(nsTsCol)))
       .withWatermark("event_time", delay)
       .dropDuplicatesWithinWatermark(keyCols)
-  }
-
-  /** [[dedupWithinWatermark]] re-expressed on Spark 4's
-    * `transformWithState` — the successor-API twin the way
-    * [[statefulIndicatorsTws]] twins [[statefulIndicators]], now for an
-    * EVICTION-bearing semantics: where the indicator state machine only
-    * accretes, this one must also expire state, which TWS models with
-    * first-class EVENT-TIME TIMERS instead of the fixed operator
-    * built into `dropDuplicatesWithinWatermark`. The contract is
-    * pinned identical (q157 runs against q153's verbatim oracle):
-    *
-    *   - a row behind the watermark drops as late (first copies
-    *     included) — checked in the processor against the batch
-    *     watermark, the same rule the built-in exec applies;
-    *   - the first surviving copy of a key emits and registers a timer
-    *     at its event time + `delay`;
-    *   - further copies suppress while the key's state lives;
-    *   - the timer fires once the watermark passes it and CLEARS the
-    *     key's state — state is bounded by the delay window's key
-    *     density, exactly the built-in's eviction bound (spec-measured,
-    *     the q153 3->1 discipline).
-    *
-    * Runs on any key-column types (the group key is the key columns'
-    * string rendering — null renders as "null", distinct from the
-    * string "null" only if callers avoid that collision; the built-in
-    * has the same physical-key flattening). RocksDB provider required
-    * (the TWS contract; gates wrap the conf).
-    */
-  def dedupWithinWatermarkTws(
-      df: DataFrame,
-      keyCols: Seq[String],
-      nsTsCol: String,
-      delay: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    import org.apache.spark.sql.{Encoders, Row}
-    require(keyCols.nonEmpty, "dedup needs at least one key column")
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-      org.apache.spark.unsafe.types.UTF8String.fromString(delay))
-    require(iv.months == 0,
-      s"dedup delay must be a fixed duration, got '$delay' (months vary)")
-    val delayMs = iv.days * 86400000L + iv.microseconds / 1000L
-    val withTime = df.withColumn("event_time", toEventTime(col(nsTsCol)))
-      .withWatermark("event_time", delay)
-    val schema = withTime.schema
-    val keyIdx = keyCols.map(schema.fieldIndex)
-    implicit val rowEnc: org.apache.spark.sql.Encoder[Row] = Encoders.row(schema)
-    withTime.as(rowEnc)
-      .groupByKey(r => keyIdx.map(i => String.valueOf(r.get(i)))
-        .mkString("\u001f"))(Encoders.STRING)
-      .transformWithState(
-        new DedupTtlProcessor(schema.fieldIndex("event_time"), delayMs),
-        TimeMode.EventTime(), OutputMode.Append())
-      .toDF()
-  }
-
-  /** The [[dedupWithinWatermarkTws]] processor: one Long ValueState per
-    * key (the first copy's expiry instant) plus one event-time timer
-    * that clears it. TTLConfig.NONE because TTL there is PROCESSING-
-    * time — the event-time-faithful bound is the timer.
-    */
-  private class DedupTtlProcessor(eventTimeIdx: Int, delayMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, org.apache.spark.sql.Row, org.apache.spark.sql.Row] {
-    @transient private var seen:
-      org.apache.spark.sql.streaming.ValueState[Long] = _
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      seen = getHandle.getValueState[Long](
-        "seen",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[org.apache.spark.sql.Row],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[org.apache.spark.sql.Row] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      rows.filter { r =>
-        val tMs = r.getAs[java.sql.Timestamp](eventTimeIdx).getTime
-        if (tMs < wm) false // late: behind the watermark, first copy or not
-        else if (seen.exists()) false // duplicate within the live window
-        else {
-          val expiry = tMs + delayMs
-          seen.update(expiry)
-          getHandle.registerTimer(expiry)
-          true
-        }
-      }
-    }
-    override def handleExpiredTimer(
-        key: String,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[org.apache.spark.sql.Row] = {
-      seen.clear()
-      Iterator.empty
-    }
   }
 
   /** Stream-stream interval join: left row L matches right row R iff
@@ -589,237 +359,6 @@ object StreamingEtl {
         sum(col("volume")).as("volume"),
         count(lit(1)).as("n_ticks"))
 
-  /** One tick routed to its (symbol, event-time window) candle — the
-    * [[statefulOhlcTws]] input row. `tsNs` keeps the RAW ns timestamp:
-    * open/close selection orders by (tsNs, id), exactly the tuple the
-    * native [[graft.functions.OhlcAggExpr]] orders by in
-    * [[windowedOhlc]] and the batch [[graft.operators.Ohlc.bars]].
-    */
-  final case class OhlcPoint(
-      symbol: String, tsNs: Long, id: Long, price: Double, volume: Long,
-      winStart: Long)
-
-  /** The candle buffer persisted per (symbol, window) key: the nine
-    * primitives of [[graft.functions.OhlcAggExpr.Buf]] plus the volume
-    * sum — the same 72-byte state the native aggregate ships between
-    * map and reduce, here living in the state store across batches.
-    */
-  final case class OhlcTwsState(
-      n: Long, oo1: Long, oo2: Long, open: Double,
-      co1: Long, co2: Long, close: Double, high: Double, low: Double,
-      volume: Long)
-
-  final case class OhlcTwsSnapshot(
-      symbol: String, window_start_us: Long,
-      open: Double, high: Double, low: Double, close: Double,
-      volume: Long, n_ticks: Long)
-
-  /** [[windowedOhlc]]'s candle algebra as CUSTOM KEYED STATE on Spark
-    * 4's `transformWithState` — the FOURTH semantics carried on the
-    * successor state API (q154 indicators, q157 TTL dedup, q160
-    * sessions, now OHLC): the key is (symbol, window start), the state
-    * is literally [[graft.functions.OhlcAggExpr.Buf]] reconstructed
-    * per batch — batch aggregation, built-in streaming aggregation,
-    * and TWS all fold ONE candle algebra, so a divergence anywhere is
-    * a bug by definition (the q164 gate pins this replay against q80's
-    * verbatim batch oracle, RocksDB-pinned like every TWS gate).
-    * Open/close order by the unique (ts, trade_id) tuple; prices are
-    * raw row values; volume sums longs — every output exact.
-    *
-    * Window start is µs-anchored (the [[toEventTime]] F7 bound):
-    * floor(ts/1000 / windowUs) · windowUs, identical to
-    * `window(event_time, dur)` on the µs event time. No watermark by
-    * default (the replay contract — late rows must not drop); bound
-    * production state by composing a watermark upstream and a timer
-    * eviction, or use [[windowedOhlc]] where the built-in operator's
-    * eviction suffices.
-    */
-  def statefulOhlcTws(
-      trades: DataFrame,
-      windowUs: Long = 3600000000L): org.apache.spark.sql.Dataset[OhlcTwsSnapshot] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    require(windowUs > 0, s"window must be positive, got $windowUs µs")
-    val spark = trades.sparkSession
-    import spark.implicits._
-    val us = (col("timestamp").cast("decimal(38,0)") / lit(1000)).cast("long")
-    trades.select(
-        col("symbol"),
-        col("timestamp").cast("long").as("tsNs"),
-        col("trade_id").cast("long").as("id"),
-        col("price").cast("double").as("price"),
-        col("volume").cast("long").as("volume"),
-        (us - pmod(us, lit(windowUs))).as("winStart")).as[OhlcPoint]
-      .groupByKey(p => (p.symbol, p.winStart))
-      .transformWithState(
-        new OhlcProcessor, TimeMode.None(), OutputMode.Update())
-  }
-
-  /** The [[statefulOhlcTws]] processor: one typed ValueState holds the
-    * candle buffer; each batch folds through the SAME Buf.observe the
-    * native aggregate runs.
-    */
-  private class OhlcProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (String, Long), OhlcPoint, OhlcTwsSnapshot] {
-    @transient private var bar:
-      org.apache.spark.sql.streaming.ValueState[OhlcTwsState] = _
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      bar = getHandle.getValueState[OhlcTwsState](
-        "bar",
-        org.apache.spark.sql.Encoders.product[OhlcTwsState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(
-        key: (String, Long),
-        rows: Iterator[OhlcPoint],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[OhlcTwsSnapshot] = {
-      val b = new graft.functions.OhlcAggExpr.Buf()
-      var vol = 0L
-      if (bar.exists()) {
-        val st = bar.get()
-        b.n = st.n
-        b.openOrd1 = st.oo1; b.openOrd2 = st.oo2; b.open = st.open
-        b.closeOrd1 = st.co1; b.closeOrd2 = st.co2; b.close = st.close
-        b.high = st.high; b.low = st.low
-        vol = st.volume
-      }
-      rows.foreach { p => b.observe(p.tsNs, p.id, p.price); vol += p.volume }
-      bar.update(OhlcTwsState(
-        b.n, b.openOrd1, b.openOrd2, b.open,
-        b.closeOrd1, b.closeOrd2, b.close, b.high, b.low, vol))
-      Iterator.single(OhlcTwsSnapshot(
-        key._1, key._2, b.open, b.high, b.low, b.close, vol, b.n))
-    }
-  }
-
-  /** [[statefulOhlcTws]]'s input row carrying the WATERMARKED event-time
-    * column (the watermark must survive into the typed stream, so the
-    * projection keeps it — the q157 Row-retention rule).
-    */
-  final case class OhlcWmPoint(
-      symbol: String, tsNs: Long, id: Long, price: Double, volume: Long,
-      winStart: Long, event_time: java.sql.Timestamp)
-
-  /** PRODUCTION-BOUNDED candles on `transformWithState`: the
-    * [[statefulOhlcTws]] algebra under a WATERMARK, with first-class
-    * EVENT-TIME TIMERS doing what the built-in windowed aggregation's
-    * eviction does in [[windowedOhlc]] — each (symbol, window) candle
-    * emits EXACTLY ONCE, when the watermark passes its window end, and
-    * its state clears (append output mode). This is the second
-    * timer-driven eviction semantics on the successor API (q157's TTL
-    * dedup evicts per KEY; this finalizes per WINDOW) and the bounded
-    * form the [[statefulOhlcTws]] scaladoc defers to:
-    *
-    *   - a row behind the current watermark drops as late (the
-    *     built-in exec's rule, checked per batch) — in particular a
-    *     row for an already-finalized window can never reopen it
-    *     (its window end is <= the watermark by construction);
-    *   - the first row of a (symbol, window) key creates the candle
-    *     buffer and registers ONE timer at the window end (ms-floored
-    *     — timers are ms-granular; a sub-ms window boundary row can
-    *     fire a timer up to 1 ms early, irrelevant at any real window
-    *     size);
-    *   - the timer fires once the watermark passes it: the candle
-    *     emits and the key's state clears — state is O(open windows),
-    *     the [[watermarkedWindowCounts]] bound, carried by explicit
-    *     timers instead of the built-in operator.
-    *
-    * The q165 gate drives it with q116's sentinel phase design (late
-    * drops, accepted late duplicates, watermark-advancing sentinels)
-    * against a batch oracle applying the same retention in SQL.
-    * RocksDB provider required (the TWS contract; gates wrap it).
-    */
-  def statefulOhlcTwsFinalize(
-      trades: DataFrame,
-      windowUs: Long = 3600000000L,
-      watermarkDelay: String = "2 hours"): org.apache.spark.sql.Dataset[OhlcTwsSnapshot] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    require(windowUs > 0, s"window must be positive, got $windowUs µs")
-    val spark = trades.sparkSession
-    import spark.implicits._
-    val us = (col("timestamp").cast("decimal(38,0)") / lit(1000)).cast("long")
-    trades
-      .withColumn("event_time", toEventTime(col("timestamp")))
-      .withWatermark("event_time", watermarkDelay)
-      .select(
-        col("symbol"),
-        col("timestamp").cast("long").as("tsNs"),
-        col("trade_id").cast("long").as("id"),
-        col("price").cast("double").as("price"),
-        col("volume").cast("long").as("volume"),
-        (us - pmod(us, lit(windowUs))).as("winStart"),
-        col("event_time")).as[OhlcWmPoint]
-      .groupByKey(p => (p.symbol, p.winStart))
-      .transformWithState(
-        new OhlcFinalizeProcessor(windowUs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** The [[statefulOhlcTwsFinalize]] processor: candle buffer in a
-    * typed ValueState, one event-time timer per open window; emission
-    * happens ONLY in the timer handler (append semantics).
-    */
-  private class OhlcFinalizeProcessor(windowUs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        (String, Long), OhlcWmPoint, OhlcTwsSnapshot] {
-    @transient private var bar:
-      org.apache.spark.sql.streaming.ValueState[OhlcTwsState] = _
-    override def init(
-        outputMode: org.apache.spark.sql.streaming.OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      bar = getHandle.getValueState[OhlcTwsState](
-        "bar",
-        org.apache.spark.sql.Encoders.product[OhlcTwsState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(
-        key: (String, Long),
-        rows: Iterator[OhlcWmPoint],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[OhlcTwsSnapshot] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val live = rows.filter(_.event_time.getTime >= wm) // late rows drop
-      if (live.isEmpty) return Iterator.empty
-      val b = new graft.functions.OhlcAggExpr.Buf()
-      var vol = 0L
-      val existed = bar.exists()
-      if (existed) {
-        val st = bar.get()
-        b.n = st.n
-        b.openOrd1 = st.oo1; b.openOrd2 = st.oo2; b.open = st.open
-        b.closeOrd1 = st.co1; b.closeOrd2 = st.co2; b.close = st.close
-        b.high = st.high; b.low = st.low
-        vol = st.volume
-      }
-      live.foreach { p => b.observe(p.tsNs, p.id, p.price); vol += p.volume }
-      bar.update(OhlcTwsState(
-        b.n, b.openOrd1, b.openOrd2, b.open,
-        b.closeOrd1, b.closeOrd2, b.close, b.high, b.low, vol))
-      // first life of this window's state: arm its finalize timer at the
-      // window end — µs -> ms CEILING, never floor: a floored timer on a
-      // non-ms-multiple window fires before the window truly ends, and a
-      // row in the last sub-ms sliver (event_time_ms == watermark) would
-      // pass the late filter after the state cleared, recreating the key
-      // and emitting a SECOND candle for the same window in append mode
-      if (!existed)
-        getHandle.registerTimer((key._2 + windowUs + 999L) / 1000L)
-      Iterator.empty
-    }
-    override def handleExpiredTimer(
-        key: (String, Long),
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[OhlcTwsSnapshot] = {
-      if (!bar.exists()) return Iterator.empty
-      val st = bar.get()
-      bar.clear()
-      Iterator.single(OhlcTwsSnapshot(
-        key._1, key._2, st.open, st.high, st.low, st.close,
-        st.volume, st.n))
-    }
-  }
-
   /** Deterministic event-time candle bars — the streaming form of
     * [[graft.operators.Ohlc.bars]], sharing the SAME native aggregate
     * ([[graft.functions.OhlcAggExpr]]) so batch and stream run one candle
@@ -829,7 +368,11 @@ object StreamingEtl {
     * every output is a raw row value or a long sum — which is what lets
     * q86 gate the final stream snapshot against the batch oracle
     * hash-exact. No watermark by default: a replay gate must not drop
-    * late rows; production callers pass one to bound state.
+    * late rows; production callers pass one to bound state. With a
+    * watermark and append output mode each (window, symbol) candle emits
+    * exactly once, when the watermark passes its window end; rows behind
+    * the watermark drop and the finalized window's state evicts (the
+    * q165 gate drives this form).
     */
   def windowedOhlc(
       trades: DataFrame,

@@ -65,10 +65,6 @@ object ProfileStages {
     // ---- indicators variants ----
     val valid = validQ.persist(StorageLevel.MEMORY_AND_DISK)
     valid.count()
-    report("indicators_tail") {
-      Indicators.summaryTail(valid, Seq("symbol"), "price", Some("volume"),
-        Seq("timestamp", "trade_id"), period = 5).count()
-    }
     report("indicators_window") {
       Indicators.summary(valid, Seq("symbol"), "price", Some("volume"),
         Seq("timestamp", "trade_id"), period = 5).count()
@@ -77,10 +73,9 @@ object ProfileStages {
       IndicatorAggregator.summary(valid, "symbol", "price", Some("volume"),
         "timestamp", "trade_id", period = 5).count()
     }
-    val validPqC = validPq
-    report("indicators_tail_parquet") {
-      Indicators.summaryTail(validPqC, Seq("symbol"), "price", Some("volume"),
-        Seq("timestamp", "trade_id"), period = 5).count()
+    report("indicators_singlepass_parquet") {
+      IndicatorAggregator.summary(validPq, "symbol", "price", Some("volume"),
+        "timestamp", "trade_id", period = 5).count()
     }
 
     // ---- sink ----

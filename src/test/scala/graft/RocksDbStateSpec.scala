@@ -20,6 +20,8 @@ package graft
   *     stateless, but the downstream keyed counters live in the store
   *   - q148: full-outer join — BOTH eviction directions (left-null and
   *     right-null emission) in one query
+  * The four "transformWithState …" cases compare a RocksDB-pinned gate
+  * (q154, q157, q160, q164) with its default-store twin gate.
   */
 class RocksDbStateSpec extends SparkSpec {
   private val providerKey = "spark.sql.streaming.stateStore.providerClass"
@@ -94,9 +96,9 @@ class RocksDbStateSpec extends SparkSpec {
   }
 
   test("transformWithState indicator replay equals the flatMapGroupsWithState path") {
-    // two state APIs, one semantics: the q154 gate (StatefulProcessor +
-    // typed ValueState, RocksDB-backed by the API's contract) must
-    // reproduce the q55 gate (flatMapGroupsWithState) relation exactly
+    // one state machine, two providers: the q154 gate (q55's
+    // flatMapGroupsWithState replay, RocksDB-pinned by the gate itself)
+    // must reproduce the q55 gate's default-store relation exactly
     val dir = "/root/testdata/sf0.001"
     val old = SparkEntry.queries("q55_stream_parity")(spark, dir)
       .collect().map(_.toString).sorted.toSeq
@@ -111,9 +113,9 @@ class RocksDbStateSpec extends SparkSpec {
   }
 
   test("transformWithState TTL-dedup equals the dropDuplicatesWithinWatermark path") {
-    // the q157 gate (event-time-timer eviction) must reproduce the q153
-    // gate (the built-in eviction) relation exactly — same phases, same
-    // late-drop/suppress/evict contract, two state APIs
+    // the q157 gate (dropDuplicatesWithinWatermark, RocksDB-pinned) must
+    // reproduce the q153 gate (default store) relation exactly — same
+    // phases, same late-drop/suppress/evict contract, two providers
     val dir = "/root/testdata/sf0.001"
     val old = SparkEntry.queries("q153_stream_dedup_ttl")(spark, dir)
       .collect().map(_.toString).sorted.toSeq
@@ -124,7 +126,7 @@ class RocksDbStateSpec extends SparkSpec {
 
   test("transformWithState session replay equals the flatMapGroupsWithState path") {
     // the q160 gate must reproduce the q92 gate relation exactly — the
-    // order-invariant interval algebra on both state APIs
+    // order-invariant interval algebra on both state-store providers
     val dir = "/root/testdata/sf0.001"
     val old = SparkEntry.queries("q92_stream_sessions")(spark, dir)
       .collect().map(_.toString).sorted.toSeq
@@ -134,10 +136,9 @@ class RocksDbStateSpec extends SparkSpec {
   }
 
   test("transformWithState OHLC replay equals the windowed-aggregation path") {
-    // the q164 gate (candle buffers as typed ValueState, keyed by
-    // (symbol, window)) must reproduce the q86 gate (built-in windowed
-    // aggregation over the SAME native OhlcAggExpr) relation exactly —
-    // one candle algebra on a third execution substrate
+    // the q164 gate (q86's windowed OhlcAggExpr replay, RocksDB-pinned)
+    // must reproduce the q86 gate (default store) relation exactly —
+    // one candle algebra on both state-store providers
     val dir = "/root/testdata/sf0.001"
     val win = SparkEntry.queries("q86_stream_ohlc_parity")(spark, dir)
       .collect().map(_.toString).sorted.toSeq

@@ -135,10 +135,9 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val t0 = 1700000000000000000L // ns
     val input = MemoryStream[(Long, String, Long)]
-    val deduped = StreamingEtl.dedupStream(
-      input.toDF().toDF("trade_id", "symbol", "ts_ns")
-        .withColumn("event_time", StreamingEtl.toEventTime(col("ts_ns"))),
-      "event_time", "10 seconds", Seq("trade_id"))
+    val deduped = StreamingEtl.dedupWithinWatermark(
+      input.toDF().toDF("trade_id", "symbol", "ts_ns"),
+      Seq("trade_id"), "ts_ns", "10 seconds")
 
     val query = deduped.writeStream
       .format("memory").queryName("dedup_out").outputMode("append").start()

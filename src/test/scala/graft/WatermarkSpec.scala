@@ -166,8 +166,10 @@ class WatermarkSpec extends SparkSpec {
         col("event_type").as("symbol"), col("ts").as("timestamp"),
         col("event_id").as("trade_id"), col("value").as("price"),
         col("user_id").as("volume"))
-    val query = StreamingEtl.statefulOhlcTwsFinalize(stream)
-      .toDF()
+    // the watermark-finalized candle form the q165 gate drives, under
+    // RocksDB like the gate
+    val query = StreamingEtl.windowedOhlc(stream, "1 hour", Some("2 hours"))
+      .withColumn("window_start_us", unix_micros(col("window.start")))
       .writeStream.format("memory").queryName("ohlc_fin_unit")
       .outputMode("append").start()
     try {
@@ -181,7 +183,7 @@ class WatermarkSpec extends SparkSpec {
       assert(spark.table("ohlc_fin_unit").count() === 0L,
         "append-mode candle emitted before its window finalized")
       // batch 1 + spacer: a far-future tick advances the watermark past
-      // both window ends; timers fire, candles emit, state clears
+      // both window ends; candles emit, their state evicts
       input.addData(Seq(row(99, H(30), 1.0)))
       query.processAllAvailable()
       input.addData(Seq.empty[(Long, Long, Long, String, Double, String)])
@@ -195,7 +197,7 @@ class WatermarkSpec extends SparkSpec {
         (H(0), 10.0, 30.0, 10.0, 20.0, 3L, 3L),
         (H(1), 5.0, 5.0, 5.0, 5.0, 1L, 1L)),
         s"finalized candles diverged: $emitted")
-      // only the far-future window's buffer remains in the timer store
+      // only the far-future window's buffer remains in the state store
       assert(stateRows <= 2L, s"finalized window state not evicted: $stateRows")
       // a late tick for the finalized W0 must DROP, never reopen/re-emit
       input.addData(Seq(row(7, H(0) + 10, 999.0)))
@@ -221,7 +223,8 @@ class WatermarkSpec extends SparkSpec {
     def row(id: Long, us: Long) = (id, us * 1000L, id * 10L, "A", 0.0d, "")
     val stream = input.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val query = StreamingEtl.dedupWithinWatermarkTws(
+    // the q157 gate's form: dropDuplicatesWithinWatermark under RocksDB
+    val query = StreamingEtl.dedupWithinWatermark(
         stream, Seq("event_id"), "ts", "2 hours")
       .select(col("event_id"))
       .writeStream.format("memory").queryName("ttl_tws_unit")
@@ -229,7 +232,7 @@ class WatermarkSpec extends SparkSpec {
     try {
       def stateRows: Long =
         query.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      // the q153 MemoryStream drive replayed verbatim on the TWS form
+      // the q153 MemoryStream drive replayed verbatim under RocksDB
       input.addData(Seq(row(1, H(0)), row(2, H(0) + hourUs / 2), row(3, H(1))))
       query.processAllAvailable()
       assert(stateRows === 3L, s"expected 3 keys in state, got $stateRows")
@@ -239,7 +242,7 @@ class WatermarkSpec extends SparkSpec {
       query.processAllAvailable()
       input.addData(Seq.empty[(Long, Long, Long, String, Double, String)])
       query.processAllAvailable()
-      // the timer-driven eviction: three stale keys cleared, one live
+      // the watermark-driven eviction: three stale keys cleared, one live
       assert(stateRows === 1L,
         s"stale TWS dedup state did not evict: $stateRows rows")
       input.addData(Seq(row(50, H(0))))

@@ -7,16 +7,28 @@ The comparison is dtype-strict, mirroring the driver's hash: an int64 Spark
 column against a float64 oracle column (e.g. DuckDB HUGEINT sum widened to
 float) FAILS even when every value is numerically equal — that is exactly
 the q42/q43 round-3 miss the old tolerance-based compare let through.
+
+`--same-as <otherVerifyOutDir>` compares every output of two graft.Verify
+runs instead (a refactor's before/after, or one commit at two core counts):
+each output hashes as sha256 over its schema (column names and types in
+order; nullability flags are left out) plus its rows sorted, and any
+output that differs or exists in only one run fails. Given an sfDir as well,
+both checks run.
 Usage:
 
     python3 tools/selfcheck.py <sfDir> <verifyOutDir>
+    python3 tools/selfcheck.py [<sfDir>] <verifyOutDir> --same-as <otherVerifyOutDir>
 """
+import argparse
+import glob
+import hashlib
 import json
 import math
 import sys
 
 import duckdb
 import pandas as pd
+import pyarrow.parquet as pq
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -65,14 +77,53 @@ def cmp_frames(name, spark_df, duck_df):
     return errs
 
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+def output_hashes(out_dir):
+    """{query: sha256 over schema plus sorted rows} for one Verify run."""
+    hashes = {}
+    for d in sorted(glob.glob(f"{out_dir}/*/")):
+        files = sorted(glob.glob(f"{d}*.parquet"))
+        if not files:
+            continue
+        tables = [pq.read_table(f) for f in files]
+        schema = tables[0].schema
+        h = hashlib.sha256()
+        for field in schema:
+            h.update(f"{field.name}:{field.type}\n".encode())
+        rows = sorted(repr(tuple(r.values()))
+                      for t in tables for r in t.to_pylist())
+        for r in rows:
+            h.update(r.encode() + b"\n")
+        hashes[d.rstrip("/").split("/")[-1]] = h.hexdigest()
+    return hashes
+
+
+def same_as(out_dir, other_dir):
+    """Print one line per output that differs or exists in only one run;
+    return the number of such outputs."""
+    mine, theirs = output_hashes(out_dir), output_hashes(other_dir)
+    n_same = n_bad = 0
+    for name in sorted(set(mine) | set(theirs)):
+        if name not in mine or name not in theirs:
+            where = out_dir if name not in mine else other_dir
+            print(f"MISSING {name}: no output in {where}")
+            n_bad += 1
+        elif mine[name] != theirs[name]:
+            print(f"DIFFER {name}: {mine[name][:16]} vs {theirs[name][:16]}")
+            n_bad += 1
+        else:
+            n_same += 1
+    print(f"\n{n_same} identical, {n_bad} differing or missing")
+    return n_bad
+
+
+def oracle_check(sf_dir, out_dir):
+    """Compare each Verify output with its DuckDB oracle; return the number
+    of failures."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    import glob
     produced = {p.rstrip("/").split("/")[-1]
                 for p in glob.glob(f"{out_dir}/*/")}
     n_pass = n_fail = 0
@@ -105,7 +156,23 @@ def main():
         n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail, "
           f"{len(produced - set(oracle))} rows-only")
-    sys.exit(1 if n_fail else 0)
+    return n_fail
+
+
+def main():
+    ap = argparse.ArgumentParser(
+        usage="%(prog)s [sfDir] verifyOutDir [--same-as otherVerifyOutDir]")
+    ap.add_argument("dirs", nargs="+", help=argparse.SUPPRESS)
+    ap.add_argument("--same-as", metavar="otherVerifyOutDir")
+    args = ap.parse_args()
+    if len(args.dirs) > 2 or (len(args.dirs) == 1 and not args.same_as):
+        ap.error("expected sfDir and verifyOutDir, or --same-as")
+    n_bad = 0
+    if len(args.dirs) == 2:
+        n_bad += oracle_check(*args.dirs)
+    if args.same_as:
+        n_bad += same_as(args.dirs[-1], args.same_as)
+    sys.exit(1 if n_bad else 0)
 
 
 if __name__ == "__main__":
