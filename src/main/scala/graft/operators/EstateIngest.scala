@@ -224,8 +224,8 @@ object EstateIngest {
         out
       }
 
-    /** Run a batch append's `body` (`bm25Append`, `ivfAppend` and its
-      * int8/PQ twins) under the ingest's writer locks, so a compact,
+    /** Run a batch append's `body` (`bm25Append`, `ivfAppend` in all
+      * three layouts) under the ingest's writer locks, so a compact,
       * requantize or split cannot swap away the parts it lands. No
       * pending-ingest guard: an append never touches `b<id>_` debris.
       */

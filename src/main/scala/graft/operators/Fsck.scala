@@ -345,10 +345,13 @@ object Fsck {
           s"${prefix}_tombstone_for_unknown_doc"))
   }
 
-  /** Audit a [[Similarity.buildIvfIndex]] / [[Similarity.buildIvfQIndex]]
-    * / [[Similarity.buildIvfPqIndex]] layout index (layout detected from
-    * the corpus schema). Invariants: ids unique; every row's cell exists
-    * in the centroid table; on the int8 layout, qvec == the row's vec
+  /** Audit an IVF index of any layout — [[Similarity.buildIvfIndex]]
+    * (float, or int8 with `quantized`) or [[Similarity.buildIvfPqIndex]].
+    * The layout is resolved where every IVF writer resolves it,
+    * `Similarity.ivfCodec`: PQ when the index has codebooks, else the
+    * layout `corpus/` stores, and a corpus that contradicts its
+    * codebooks fails the audit loudly. Invariants: ids unique; every
+    * row's cell exists in the centroid table; on the int8 layout, qvec == the row's vec
     * re-quantized and qn2 == the exact int self-dot; on the PQ layout,
     * pqcode == the row's vec re-encoded under the persisted codebooks
     * (the writers' own expressions: a drifted/corrupt code silently
@@ -383,29 +386,17 @@ object Fsck {
           graft.functions.VecExprs.nearestCentroids(
             col("vec").cast("array<double>"), centroids, 1), 1), cellIds)),
         "ivf_not_nearest_cell")
-      val quant =
-        if (!corpus.columns.contains("qvec"))
-          spark.range(0).select(lit("ivf_quantization_mismatch").as("kind"),
-            col("id").as("n"))
-        else cnt(
-          Similarity.quantizeEmbeddings(
-              corpus.select(col("id"), col("qvec").as("stored_q"),
-                col("qn2").as("stored_n2"), col("vec")), "vec")
-            .filter(col("qvec") =!= col("stored_q") ||
-              Similarity.intDot(col("qvec"), col("qvec")) =!= col("stored_n2")),
-          "ivf_quantization_mismatch")
-      val pq =
-        if (!corpus.columns.contains("pqcode"))
-          spark.range(0).select(lit("ivf_pqcode_mismatch").as("kind"),
-            col("id").as("n"))
-        else {
-          val (_, _, books) = Similarity.loadPqCodebooks(spark, path)
-          cnt(corpus
-            .filter(graft.functions.PqExprs.pqEncode(
-              col("vec").cast("array<double>"),
-              books.map(_.map(_.toSeq).toSeq).toSeq) =!= col("pqcode")),
-            "ivf_pqcode_mismatch")
-        }
+      // the stored codes re-derived by the layout's own encode: a
+      // drifted/corrupt code silently mis-scores stage 1 forever
+      val codec = Similarity.ivfCodec(spark, path, None, "ivfFsck")
+      def recoded(layout: String, kind: String): DataFrame =
+        if (codec.layout != layout) scalarViol(ok = true, kind, spark)
+        else cnt(codec.encode(corpus.select(col("id") +: col("vec") +:
+            codec.columns.map(c => col(c).as(s"stored_$c")): _*))
+          .filter(codec.columns
+            .map(c => col(c) =!= col(s"stored_$c")).reduce(_ || _)), kind)
+      val quant = recoded("int8", "ivf_quantization_mismatch")
+      val pq = recoded("pq", "ivf_pqcode_mismatch")
       val tomb = tombstoneChecks(spark,
         Tombstones.read(spark, path), all.select(col("id")), "ivf")
       dupId.unionByName(alien).unionByName(assigned).unionByName(quant)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Embedding similarity search: brute-force cosine top-k as the exact
   * baseline, and a random-hyperplane LSH-bucketed variant as the scale path.
@@ -489,26 +490,40 @@ object Similarity {
       nlist: Int,
       sampleN: Int = 4096,
       iters: Int = 8): Array[Array[Double]] = {
-    val sample = corpus
+    val sample = trainingSample(corpus, idCol, vecCol, sampleN)
+    require(sample.length >= nlist, s"need >= $nlist sample vectors")
+    lloyd(sample, nlist, iters)
+  }
+
+  /** The first `sampleN` vectors in md5(id) order — the deterministic
+    * pseudo-random draw both quantizers train on. */
+  private def trainingSample(
+      corpus: DataFrame, idCol: String, vecCol: String,
+      sampleN: Int): Array[Array[Double]] =
+    corpus
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .orderBy(md5(col("id").cast("string")), col("id")).limit(sampleN)
       .collect().map(_.getSeq[Double](1).toArray)
-    require(sample.length >= nlist, s"need >= $nlist sample vectors")
-    val dim = sample.head.length
-    // spread initial centroids evenly through the (md5-ordered) sample
-    var centroids = Array.tabulate(nlist)(i =>
-      sample((i.toLong * sample.length / nlist).toInt).clone())
+
+  /** Deterministic Lloyd's k-means over `points`: initial centroids
+    * spread evenly through the (md5-ordered) points, `iters` rounds,
+    * an empty cluster keeps its centroid. */
+  private def lloyd(
+      points: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
+    val dim = points.head.length
+    var centroids = Array.tabulate(k)(i =>
+      points((i.toLong * points.length / k).toInt).clone())
     def d2(a: Array[Double], b: Array[Double]): Double = {
       var s = 0.0; var i = 0
       while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
       s
     }
     for (_ <- 0 until iters) {
-      val sums = Array.fill(nlist)(new Array[Double](dim))
-      val counts = new Array[Int](nlist)
-      sample.foreach { v =>
+      val sums = Array.fill(k)(new Array[Double](dim))
+      val counts = new Array[Int](k)
+      points.foreach { v =>
         var best = 0; var bd = Double.MaxValue; var c = 0
-        while (c < nlist) {
+        while (c < k) {
           val dd = d2(v, centroids(c)); if (dd < bd) { bd = dd; best = c }
           c += 1
         }
@@ -516,7 +531,7 @@ object Similarity {
         var i = 0
         while (i < dim) { sums(best)(i) += v(i); i += 1 }
       }
-      centroids = Array.tabulate(nlist)(c =>
+      centroids = Array.tabulate(k)(c =>
         if (counts(c) == 0) centroids(c)
         else sums(c).map(_ / counts(c)))
     }
@@ -589,6 +604,19 @@ object Similarity {
     * nprobe/nlist of the corpus through partition pruning — at 100 TB the
     * difference between a full scan per query batch and touching a few
     * percent of files.
+    *
+    * `quantized = true` builds the QUANTIZED layout: the corpus stores
+    * int8 codes ([[quantizeEmbeddings]]'s codec) ALONGSIDE the float
+    * vector in the same cell-partitioned table, plus the precomputed
+    * int8 self-dot — (id, vec, qvec, qn2 | cell). This composes the
+    * library's two ANN cost levers into the production layout: a
+    * [[ivfQTopKIndexed]] probe's stage-1 scan reads ONLY (id, qvec,
+    * qn2) of the probed cells — partition pruning x column pruning,
+    * nprobe/nlist of the corpus at 1/8th the float64 bytes — and stage
+    * 2 fetches float vectors for the k·rerankFactor survivors from
+    * those same pruned cells. Zero vectors are stored (the registry
+    * stays complete for [[ivfDelete]], which works unchanged on this
+    * layout) and filtered at probe time like every cosine path.
     */
   def buildIvfIndex(
       corpus: DataFrame,
@@ -596,34 +624,254 @@ object Similarity {
       vecCol: String,
       nlist: Int,
       path: String,
-      sampleN: Int = 4096): Unit = {
+      sampleN: Int = 4096,
+      quantized: Boolean = false): Unit =
+    buildIvf(corpus, idCol, vecCol, nlist, path, sampleN)(_ =>
+      if (quantized) IvfCodec.Int8 else IvfCodec.Float)
+
+  /** The one build body of the three layouts: trains the coarse
+    * quantizer on the (id, vec) projection, asks `codecOf` for the
+    * layout (PQ trains its codebooks here), then lands the centroid
+    * table, the layout's side table and the encoded, cell-clustered
+    * corpus.
+    */
+  private def buildIvf(
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      nlist: Int,
+      path: String,
+      sampleN: Int)(codecOf: DataFrame => IvfCodec): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val centroids = trainIvfCentroids(corpus, idCol, vecCol, nlist, sampleN)
+    val vecs = corpus.select(col(idCol).as("id"),
+      col(vecCol).cast("array<double>").as("vec"))
+    val centroids = trainIvfCentroids(vecs, "id", "vec", nlist, sampleN)
+    val codec = codecOf(vecs)
     // reader-isolation bracket + manifest commit ([[StableRead]]): a
     // (re)build into a live root must not validate mid-write
     StableRead.withMaintenanceMarker(spark, path) {
-    // tmp + swap/rename per table (Sinks.landTable): a rebuild into a
-    // LIVE root must never overwrite committed files in place
-    graft.sinks.Sinks.landTable(
-      centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1),
-      path, "centroids")
-    graft.sinks.Sinks.landTable(
-      corpus
-        .select(col(idCol).as("id"),
-          col(vecCol).cast("array<double>").as("vec"))
-        .withColumn("cell", element_at(
-          graft.functions.VecExprs.nearestCentroids(
-            col("vec"), centroids.map(_.toSeq).toSeq, 1), 1))
-        // cluster by the partition key before the dynamic-partition
-        // write (the bm25 build's small-files lesson: without it every
-        // task writes a file into every cell directory)
-        .repartition(col("cell")),
-      path, "corpus", Seq("cell"))
+      // tmp + swap/rename per table (Sinks.landTable): a rebuild into a
+      // LIVE root must never overwrite committed files in place
+      graft.sinks.Sinks.landTable(centroidTable(spark, centroids),
+        path, "centroids")
+      codec match {
+        case IvfCodec.Pq(books) =>
+          graft.sinks.Sinks.landTable(codebookTable(spark, books),
+            path, "codebooks")
+        case _ =>
+      }
+      graft.sinks.Sinks.landTable(
+        codec.encode(vecs)
+          .withColumn("cell", ivfCell(col("vec"), centroids))
+          // cluster by the partition key before the dynamic-partition
+          // write (the bm25 build's small-files lesson: without it every
+          // task writes a file into every cell directory)
+          .repartition(col("cell")),
+        path, "corpus", Seq("cell"))
     }
+  }
+
+  /** The persisted `(cell, centroid)` table, in one file. */
+  private def centroidTable(
+      spark: org.apache.spark.sql.SparkSession,
+      cells: Seq[(Int, Seq[Double])]): DataFrame = {
+    import spark.implicits._
+    cells.toDF("cell", "centroid").coalesce(1)
+  }
+
+  /** [[centroidTable]] of freshly trained centroids: cell ids 0..n-1. */
+  private def centroidTable(
+      spark: org.apache.spark.sql.SparkSession,
+      centroids: Array[Array[Double]]): DataFrame =
+    centroidTable(spark,
+      centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
+
+  /** The persisted PQ `codebooks/` table: one (sub, code, cw, n2) row
+    * per codeword, n2 its squared norm. */
+  private def codebookTable(
+      spark: org.apache.spark.sql.SparkSession,
+      books: Array[Array[Array[Double]]]): DataFrame = {
+    import spark.implicits._
+    books.toSeq.zipWithIndex.flatMap { case (book, s) =>
+      book.toSeq.zipWithIndex.map { case (cw, c) =>
+        (s, c, cw.toSeq, cw.map(x => x * x).sum)
+      }
+    }.toDF("sub", "code", "cw", "n2").coalesce(1)
+  }
+
+  /** How an IVF layout stores a vector beside its (id, vec | cell) row:
+    * float (nothing more), int8 (`qvec` codes plus their exact int
+    * self-dot `qn2`, [[quantizeEmbeddings]]'s codec) or PQ (an m-byte
+    * `pqcode` under the index's own `codebooks/` table). Build, append,
+    * ingest and fsck encode through it; the two quantized layouts also
+    * supply stage 1 of the two-stage probe ([[twoStageTopK]]). An
+    * existing index's layout is resolved only by [[ivfCodec]].
+    */
+  private[operators] sealed trait IvfCodec {
+    def layout: String
+    /** The stored columns this layout adds to (id, vec). */
+    def columns: Seq[String]
+    /** (id, vec, ...) rows -> the same rows plus [[columns]]. */
+    def encode(vecs: DataFrame): DataFrame
+  }
+
+  /** A quantized layout: stage 1 of [[twoStageTopK]] scores its codes. */
+  private[operators] sealed trait TwoStageCodec extends IvfCodec {
+    /** The stored columns stage 1 reads beside id and cell — never vec. */
+    def stage1Cols: Seq[Column]
+    /** (qid, qv) -> the same plus the query-side columns stage 1 needs. */
+    def prepQueries(qs: DataFrame, indexPath: String): DataFrame
+    /** Candidate pairs -> the scorable ones with their approximate
+      * cosine `ascore`. */
+    def score(pairs: DataFrame): DataFrame
+  }
+
+  private[operators] object IvfCodec {
+    case object Float extends IvfCodec {
+      val layout = "float"
+      val columns = Seq.empty[String]
+      def encode(vecs: DataFrame): DataFrame = vecs
+    }
+
+    case object Int8 extends TwoStageCodec {
+      val layout = "int8"
+      val columns = Seq("qvec", "qn2")
+      def encode(vecs: DataFrame): DataFrame =
+        quantizeEmbeddings(vecs, "vec").drop("scale", "max_abs_err")
+          .withColumn("qn2", intDot(col("qvec"), col("qvec")))
+      def stage1Cols: Seq[Column] =
+        Seq(col("qvec").as("cq"), col("qn2").as("cn2"))
+      // quantized once per index and persisted: the probes, the
+      // probed-cell collect and the rerank all read it
+      def prepQueries(qs: DataFrame, indexPath: String): DataFrame =
+        quantizeEmbeddings(qs, "qv")
+          .select(col("qid"), col("qv"), col("qvec").as("qq"),
+            intDot(col("qvec"), col("qvec")).as("qqn2"))
+          .transform(graft.CacheScope.persisted)
+      // cosine is scale-free, so the approximate score is
+      // intdot(qq, cq) / (sqrt(qq.qq) * sqrt(cq.cq)) — exact int64 sums
+      def score(pairs: DataFrame): DataFrame =
+        pairs.filter(col("cn2") > 0 && col("qqn2") > 0)
+          .withColumn("ascore",
+            intDot(col("cq"), col("qq")).cast("double") /
+              (sqrt(col("cn2").cast("double")) *
+                sqrt(col("qqn2").cast("double"))))
+    }
+
+    /** `books` is [m][ksub][dsub], as [[trainPqCodebooks]] returns it. */
+    final case class Pq(books: Array[Array[Array[Double]]])
+        extends TwoStageCodec {
+      val layout = "pq"
+      val columns = Seq("pqcode")
+      private val ksub = books(0).length
+      private val dsub = books(0)(0).length
+      def encode(vecs: DataFrame): DataFrame =
+        vecs.withColumn("pqcode", graft.functions.PqExprs.pqEncode(
+          col("vec"), books.map(_.map(_.toSeq).toSeq).toSeq))
+      def stage1Cols: Seq[Column] = Seq(col("pqcode"))
+      // ADC: per query ONE lookup table of <q_sub, codeword> partial
+      // inner products, built driver-side (m x ksub doubles; the query
+      // table is small by the probe contract) and broadcast with the
+      // probes
+      def prepQueries(qs: DataFrame, indexPath: String): DataFrame = {
+        val spark = qs.sparkSession
+        import spark.implicits._
+        val m = books.length
+        qs.select(col("qid").cast("long"), col("qv")).collect().map { r =>
+          val qv = r.getSeq[Double](1).toArray
+          require(qv.length == m * dsub,
+            s"ivfPqTopKFederated: query dim ${qv.length} != index dim " +
+              s"${m * dsub} at $indexPath")
+          val lut = new Array[Double](m * ksub)
+          var s = 0
+          while (s < m) {
+            var c = 0
+            while (c < ksub) {
+              val cw = books(s)(c)
+              var acc = 0.0; var i = 0
+              while (i < dsub) { acc += qv(s * dsub + i) * cw(i); i += 1 }
+              lut(s * ksub + c) = acc
+              c += 1
+            }
+            s += 1
+          }
+          var qn2 = 0.0; var i = 0
+          while (i < qv.length) { qn2 += qv(i) * qv(i); i += 1 }
+          (r.getLong(0), qv.toSeq, lut.toSeq, qn2)
+        }.toSeq.toDF("qid", "qv", "lut", "qn2")
+      }
+      // a candidate's approximate cosine is m lookups for the inner
+      // product and m for the reconstructed norm, whose table is
+      // query-INDEPENDENT (one literal per index) — never any arithmetic
+      // on a stored vector
+      def score(pairs: DataFrame): DataFrame = {
+        val n2lut: Seq[Double] = books.toSeq.flatMap(_.toSeq.map { cw =>
+          var s = 0.0; var i = 0
+          while (i < cw.length) { s += cw(i) * cw(i); i += 1 }
+          s
+        })
+        pairs
+          .withColumn("rn2", graft.functions.PqExprs.pqAdcScore(
+            col("pqcode"), typedLit(n2lut), ksub))
+          .filter(col("qn2") > 0 && col("rn2") > 0)
+          .withColumn("ascore",
+            graft.functions.PqExprs.pqAdcScore(col("pqcode"), col("lut"), ksub) /
+              (sqrt(col("qn2")) * sqrt(col("rn2"))))
+      }
+    }
+  }
+
+  /** The layout of the index at `indexPath`, resolved in this one place:
+    * PQ when the index has a `codebooks/` table (where
+    * `quantized = Some(true)` is refused), else int8 when `quantized`
+    * asks for it, else float; `quantized = None` takes the layout
+    * `corpus/` already stores. When `corpus/` holds part files, the
+    * resolved layout must be the one their footer stores: reads infer
+    * a table's schema from ONE footer (no mergeSchema), so rows of a
+    * second layout would either fail a probe on a missing column or
+    * land with null codes that stage 1 filters out without a word.
+    */
+  private[operators] def ivfCodec(
+      spark: org.apache.spark.sql.SparkSession,
+      indexPath: String,
+      quantized: Option[Boolean],
+      op: String): IvfCodec = {
+    val fs = new org.apache.hadoop.fs.Path(indexPath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def parts(dir: org.apache.hadoop.fs.Path)
+        : Iterator[org.apache.hadoop.fs.Path] =
+      fs.listStatus(dir).iterator
+        .filterNot(st => st.getPath.getName.startsWith("_") ||
+          st.getPath.getName.startsWith("."))
+        .flatMap(st =>
+          if (st.isDirectory) parts(st.getPath)
+          else Iterator(st.getPath).filter(_.getName.endsWith(".parquet")))
+    val corpus = new org.apache.hadoop.fs.Path(s"$indexPath/corpus")
+    val stored =
+      (if (fs.exists(corpus)) parts(corpus) else Iterator.empty)
+        .nextOption().map { part =>
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile
+              .fromPath(part, fs.getConf))
+          val cols =
+            try reader.getFileMetaData.getSchema.getFields.asScala
+              .map(_.getName).toSet
+            finally reader.close()
+          if (cols("pqcode")) "pq" else if (cols("qvec")) "int8" else "float"
+        }
+    val codec =
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/codebooks"))) {
+        require(!quantized.contains(true),
+          s"$op: $indexPath is a PQ index (codebooks present) — the " +
+            "quantized=true int8 flag does not apply")
+        IvfCodec.Pq(loadPqCodebooks(spark, indexPath)._3)
+      } else if (quantized.getOrElse(stored.contains("int8"))) IvfCodec.Int8
+      else IvfCodec.Float
+    stored.foreach(s => require(s == codec.layout,
+      s"$op: layout mismatch at $indexPath — corpus/ stores the $s " +
+        s"layout, this call asks for the ${codec.layout} layout; one " +
+        "table cannot hold both row schemas"))
+    codec
   }
 
   /** Initialize an EMPTY IVF index from a pre-trained centroid table —
@@ -639,19 +887,8 @@ object Similarity {
   def ivfInit(
       spark: org.apache.spark.sql.SparkSession,
       centroids: Array[Array[Double]],
-      path: String): Unit = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(s"$path/centroids")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(!fs.exists(p), s"ivfInit: $p already exists")
-    StableRead.withMaintenanceMarker(spark, path) {
-      centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(p.toString)
-    }
-  }
+      path: String): Unit =
+    initIvf(spark, centroids, None, path, "ivfInit")
 
   /** Initialize an EMPTY product-quantized IVF index from an
     * already-trained coarse quantizer AND PQ codebooks — the
@@ -659,34 +896,37 @@ object Similarity {
     * distributed bootstrap: train both quantizers ONCE
     * ([[trainIvfCentroids]] + [[trainPqCodebooks]] over a global
     * sample), init N shard roots from them, fill each shard in
-    * parallel with [[ivfPqAppend]] over its corpus slice, then
-    * [[ivfMerge]] (which verifies centroid AND codebook equality and
-    * is pure metadata). Refuses a pre-existing index.
+    * parallel with [[ivfAppend]] over its corpus slice (the codebooks
+    * table makes it encode PQ), then [[ivfMerge]] (which verifies
+    * centroid AND codebook equality and is pure metadata). Refuses a
+    * pre-existing index.
     */
   def ivfPqInit(
       spark: org.apache.spark.sql.SparkSession,
       centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]],
       path: String): Unit = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(s"$path/centroids")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(!fs.exists(p), s"ivfPqInit: $p already exists")
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "ivfPqInit: empty codebooks")
+    initIvf(spark, centroids, Some(codebooks), path, "ivfPqInit")
+  }
+
+  private def initIvf(
+      spark: org.apache.spark.sql.SparkSession,
+      centroids: Array[Array[Double]],
+      codebooks: Option[Array[Array[Array[Double]]]],
+      path: String,
+      op: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/centroids")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    require(!fs.exists(p), s"$op: $p already exists")
     StableRead.withMaintenanceMarker(spark, path) {
-      centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(p.toString)
-      codebooks.zipWithIndex.flatMap { case (book, s) =>
-        book.zipWithIndex.map { case (cw, c) =>
-          (s, c, cw.toSeq, cw.map(x => x * x).sum)
-        }
-      }.toSeq.toDF("sub", "code", "cw", "n2").coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/codebooks")
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/corpus"))
+      centroidTable(spark, centroids).write.mode("overwrite").parquet(p.toString)
+      codebooks.foreach { books =>
+        codebookTable(spark, books)
+          .write.mode("overwrite").parquet(s"$path/codebooks")
+        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/corpus"))
+      }
     }
   }
 
@@ -712,10 +952,12 @@ object Similarity {
     * construction; a drifted quantizer aborts). The N-way form merges
     * any shard count in ONE invocation — a pairwise tree re-walks the
     * file listing per level for nothing, since there is no per-level
-    * job to amortize here at all. Works on both the float
-    * ([[buildIvfIndex]]) and quantized ([[buildIvfQIndex]]) layouts —
-    * the row schema is unioned blind. Caller contract: id sets
-    * pairwise disjoint (the append contract). `dest` must not exist.
+    * job to amortize here at all. Works on all three layouts — float,
+    * int8 ([[buildIvfIndex]] with `quantized`) and PQ
+    * ([[buildIvfPqIndex]], whose shards must also share one codebooks
+    * table) — the row schema is unioned blind. Caller contract: id sets
+    * pairwise disjoint (the append contract), shards of one layout.
+    * `dest` must not exist.
     *
     * `move = false` (default) preserves the shards but streams every
     * corpus byte through one driver thread; `move = true` renames part
@@ -741,12 +983,8 @@ object Similarity {
     // part-file renames CONSUME them under any reader still probing
     StableRead.withMaintenanceMarkers(
       spark, dest +: (if (move) paths else Seq.empty)) {
-    def cents(p: String): Seq[(Int, Seq[Double])] =
-      spark.read.parquet(s"$p/centroids")
-        .orderBy(col("cell")).collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
-    val first = cents(paths.head)
-    paths.tail.foreach(p => require(cents(p) == first,
+    val first = loadCentroidTable(spark, paths.head)
+    paths.tail.foreach(p => require(loadCentroidTable(spark, p) == first,
       s"ivfMerge: centroid tables differ (${paths.head} vs $p) — the " +
         "shards were assigned under different quantizers and their cells " +
         "are not compatible; rebuild the shards from one ivfInit centroid " +
@@ -757,14 +995,9 @@ object Similarity {
     // are row-for-row equal (the centroid discipline extended to the
     // sub-quantizer; a silent mismatch would mis-score every foreign
     // code forever, which no fsck could distinguish from drift)
-    def codebooks(p: String): Option[Seq[(Int, Int, Seq[Double])]] = {
-      val t = new org.apache.hadoop.fs.Path(s"$p/codebooks")
-      if (!fs.exists(t)) None
-      else Some(spark.read.parquet(t.toString)
-        .select(col("sub").cast("int"), col("code").cast("int"), col("cw"))
-        .orderBy(col("sub"), col("code")).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2))).toSeq)
-    }
+    def codebooks(p: String): Option[Seq[Seq[Seq[Double]]]] =
+      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$p/codebooks"))) None
+      else Some(loadPqCodebooks(spark, p)._3.map(_.map(_.toSeq).toSeq).toSeq)
     val firstBooks = codebooks(paths.head)
     paths.tail.foreach(p => require(codebooks(p) == firstBooks,
       s"ivfMerge: PQ codebooks differ (${paths.head} vs $p) — the " +
@@ -813,28 +1046,46 @@ object Similarity {
     * Runs, centroid read included, under the ingest's writer locks
     * ([[EstateIngest.Layout.locked]]): a concurrent requantize or split
     * waits instead of swapping the landed parts away.
+    *
+    * The batch is encoded for the index's layout ([[ivfCodec]]): PQ
+    * codes under the index's OWN codebooks when it has them (never
+    * retrained — a drifted codebook would make old codes unscorable;
+    * re-encode via a rebuild), int8 codes when `quantized`, plain
+    * vectors otherwise. A request that does not match the layout the
+    * corpus already stores is refused.
     */
   def ivfAppend(
       indexPath: String, batch: DataFrame,
-      idCol: String, vecCol: String): Unit = {
+      idCol: String, vecCol: String,
+      quantized: Boolean = false): Unit = {
     val spark = batch.sparkSession
     IvfIngest.locked(spark, indexPath) {
-      val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
+      val assigned = ivfAssign(indexPath,
+        ivfCodec(spark, indexPath, Some(quantized), "ivfAppend"),
+        batch, idCol, vecCol)
       // reader-isolation bracket + manifest commit ([[StableRead]])
       StableRead.withMaintenanceMarker(spark, indexPath) {
-        batch
-          .select(col(idCol).as("id"),
-            col(vecCol).cast("array<double>").as("vec"))
-          .withColumn("cell", posToCell(element_at(
-            graft.functions.VecExprs.nearestCentroids(
-              col("vec"), centroids, 1), 1),
-            cellIds))
-          .repartition(col("cell")) // one file per touched cell per append
-          .write.mode("append").partitionBy("cell")
+        assigned.write.mode("append").partitionBy("cell")
           .parquet(s"$indexPath/corpus")
         StableRead.noteTouched(indexPath, "corpus") // incremental snapshot
       }
     }
+  }
+
+  /** `batch` as corpus rows of the index at `indexPath`: encoded by its
+    * resolved `codec`, assigned to the index's own cells, and clustered
+    * by cell — one file per touched cell per write.
+    */
+  private def ivfAssign(
+      indexPath: String, codec: IvfCodec, batch: DataFrame,
+      idCol: String, vecCol: String): DataFrame = {
+    val (cellIds, centroids) = loadCentroidTable(batch.sparkSession, indexPath)
+    codec.encode(batch.select(col(idCol).as("id"),
+        col(vecCol).cast("array<double>").as("vec")))
+      .withColumn("cell", posToCell(element_at(
+        graft.functions.VecExprs.nearestCentroids(col("vec"), centroids, 1), 1),
+        cellIds))
+      .repartition(col("cell"))
   }
 
   /** A persisted centroid table, position-aligned: the cell ids ordered
@@ -865,8 +1116,8 @@ object Similarity {
 
   /** Exactly-once STREAMING ingest into a persisted IVF index — the
     * dense twin of [[graft.operators.Retrieval.bm25StreamSink]]: each
-    * micro-batch applies [[ivfAppend]] (or [[ivfQAppend]] when
-    * `quantized`, [[ivfPqAppend]] on a PQ index) under the recoverable
+    * micro-batch applies [[ivfAppend]]'s encode-and-assign (int8 when
+    * `quantized`, PQ on an index with codebooks) under the recoverable
     * ingest protocol of [[EstateIngest]], so a foreachBatch re-delivery
     * after any crash converges to exactly one application. Centroids
     * are append-invariant, so the whole increment is tagged corpus part
@@ -899,45 +1150,22 @@ object Similarity {
       idCol: String,
       vecCol: String,
       batchId: Long,
-      quantized: Boolean = false): Unit =
-    IvfIngest.ingest(batch.sparkSession, indexPath, batchId) { b =>
-      // stage the assignment (the ivfAppend / ivfQAppend / ivfPqAppend
-      // body). The PQ layout is AUTO-detected from the index's own
-      // codebooks table — the unambiguous persisted signal (the int8
-      // layout has no side table, hence its explicit flag) — so one sink
-      // serves all three layouts and a PQ index can never be fed
-      // un-encoded rows by a mis-flagged caller.
-      val spark = batch.sparkSession
-      val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
-      val pqBooks =
-        if (b.fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/codebooks")))
-          Some(loadPqCodebooks(spark, indexPath)._3)
-        else None
-      require(!(quantized && pqBooks.isDefined),
-        s"ivfIngestBatch: $indexPath is a PQ index (codebooks present) — " +
-          "the quantized=true int8 flag does not apply")
-      val prepped = batch.select(
-        col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))
-      val assigned =
-        (pqBooks match {
-          case Some(books) =>
-            prepped.withColumn("pqcode", graft.functions.PqExprs.pqEncode(
-              col("vec"), books.map(_.map(_.toSeq).toSeq).toSeq))
-          case None if quantized =>
-            quantizeEmbeddings(prepped, "vec")
-              .select(col("id"), col("vec"), col("qvec"),
-                intDot(col("qvec"), col("qvec")).as("qn2"))
-          case None => prepped
-        })
-          .withColumn("cell", posToCell(element_at(
-            graft.functions.VecExprs.nearestCentroids(col("vec"), centroids, 1), 1),
-            cellIds))
-      assigned
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(b.staged("corpus"))
-      true
+      quantized: Boolean = false): Unit = {
+    val spark = batch.sparkSession
+    // one sink serves all three layouts. The layout resolves under the
+    // ingest's (reentrant) locks but BEFORE its maintenance marker, so a
+    // refused mis-flagged call leaves no crash state behind
+    IvfIngest.locked(spark, indexPath) {
+      val codec = ivfCodec(spark, indexPath, Some(quantized), "ivfIngestBatch")
+      IvfIngest.ingest(spark, indexPath, batchId) { b =>
+        // stage ivfAppend's encode-and-assign
+        ivfAssign(indexPath, codec, batch, idCol, vecCol)
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(b.staged("corpus"))
+        true
+      }
     }
+  }
 
   /** Retrain the coarse quantizer IN PLACE — the drift repair
     * [[ivfAppend]]'s scaladoc promises: appends assign to the index's
@@ -979,7 +1207,6 @@ object Similarity {
       iters: Int = 8): Unit = {
     require(nlist > 0, s"ivfRequantize: nlist must be positive, got $nlist")
     IvfIngest.maintain(spark, indexPath, "ivfRequantize") {
-      import spark.implicits._
       val hconf = spark.sessionState.newHadoopConf()
       val corpusCur = new org.apache.hadoop.fs.Path(s"$indexPath/corpus")
       val fs = corpusCur.getFileSystem(hconf)
@@ -994,10 +1221,7 @@ object Similarity {
         .write.mode("overwrite").partitionBy("cell").parquet(corpusTmp.toString)
       val centTmp = new org.apache.hadoop.fs.Path(
         s"$indexPath/centroids_requant_tmp")
-      centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1)
+      centroidTable(spark, centroids)
         .write.mode("overwrite").parquet(centTmp.toString)
       graft.sinks.Sinks.swapByRename(fs, corpusTmp, corpusCur)
       graft.sinks.Sinks.swapByRename(fs, centTmp,
@@ -1026,98 +1250,18 @@ object Similarity {
       graft.sinks.Sinks.compactTable(spark, indexPath, "corpus", Some("cell"))
     }
 
-  /** Build the QUANTIZED IVF index — [[buildIvfIndex]]'s cell layout
-    * with the corpus stored int8 ([[quantizeEmbeddings]]'s codec)
-    * ALONGSIDE the float vector in the same cell-partitioned table,
-    * plus the precomputed int8 self-dot. This composes the library's
-    * two ANN cost levers into the production layout: a probe's stage-1
-    * scan reads ONLY (id, qvec, qn2) of the probed cells — partition
-    * pruning x column pruning, nprobe/nlist of the corpus at 1/8th the
-    * float64 bytes — and stage 2 fetches float vectors for the
-    * k·rerankFactor survivors from those same pruned cells. At 100 TB
-    * that is the difference between a disk-bound and a page-cache-
-    * resident candidate scan ([[quantizedTopK]]'s scaladoc bound, now
-    * bought at rest). Zero vectors are stored (the registry stays
-    * complete for [[ivfDelete]], which works unchanged on this layout)
-    * and filtered at probe time like every cosine path.
-    */
-  def buildIvfQIndex(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nlist: Int,
-      path: String,
-      sampleN: Int = 4096): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centroids = trainIvfCentroids(corpus, idCol, vecCol, nlist, sampleN)
-    // reader-isolation bracket + manifest commit ([[StableRead]])
-    StableRead.withMaintenanceMarker(spark, path) {
-    // tmp + swap/rename per table (the buildIvfIndex landTable note)
-    graft.sinks.Sinks.landTable(
-      centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1),
-      path, "centroids")
-    graft.sinks.Sinks.landTable(
-      quantizeEmbeddings(
-          corpus.select(col(idCol).as("id"),
-            col(vecCol).cast("array<double>").as("vec")), "vec")
-        .select(col("id"), col("vec"), col("qvec"),
-          intDot(col("qvec"), col("qvec")).as("qn2"))
-        .withColumn("cell", element_at(
-          graft.functions.VecExprs.nearestCentroids(
-            col("vec"), centroids.map(_.toSeq).toSeq, 1), 1))
-        .repartition(col("cell")),
-      path, "corpus", Seq("cell"))
-    }
-  }
-
-  /** Append a batch to a persisted [[buildIvfQIndex]] index —
-    * [[ivfAppend]]'s contract (existing centroids, batch-sized
-    * cluster-by-cell shuffle, one file per touched cell, disjoint ids,
-    * the documented centroid-drift bound) with the batch quantized
-    * map-side into the same (id, vec, qvec, qn2, cell) layout.
-    * [[ivfCompact]] and [[ivfDelete]] are layout-blind (they rewrite /
-    * filter whole rows) and work on this index unchanged.
-    */
-  def ivfQAppend(
-      indexPath: String, batch: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val spark = batch.sparkSession
-    IvfIngest.locked(spark, indexPath) {
-      val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
-      // reader-isolation bracket + manifest commit ([[StableRead]])
-      StableRead.withMaintenanceMarker(spark, indexPath) {
-        quantizeEmbeddings(
-            batch.select(col(idCol).as("id"),
-              col(vecCol).cast("array<double>").as("vec")), "vec")
-          .select(col("id"), col("vec"), col("qvec"),
-            intDot(col("qvec"), col("qvec")).as("qn2"))
-          .withColumn("cell", posToCell(element_at(
-            graft.functions.VecExprs.nearestCentroids(
-              col("vec"), centroids, 1), 1),
-            cellIds))
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell")
-          .parquet(s"$indexPath/corpus")
-        StableRead.noteTouched(indexPath, "corpus") // incremental snapshot
-      }
-    }
-  }
-
-  /** Probe a [[buildIvfQIndex]] index: [[ivfTopKIndexed]]'s cell
-    * pruning composed with [[quantizedTopK]]'s two stages. Stage 1
-    * scores the probed cells' candidates on the int8 forms only
-    * (cosine is scale-free, so the approx score is
-    * intdot(qq,cq)/(sqrt(qq.qq)·sqrt(cq.cq)) — exact int64 sums) and
-    * keeps k·rerankFactor per query; stage 2 re-scores exactly those
-    * survivors with the exact float cosine from the SAME pruned cells.
-    * The probed-cell set lands in both scans as a partition filter
-    * (driver-derived from the query table — small by the same contract
-    * as every probe). Reported sims are exact cosines, so the q159
-    * soundness gate can re-verify every hit independently.
+  /** Probe a quantized ([[buildIvfIndex]] with `quantized`) index:
+    * [[ivfTopKIndexed]]'s cell pruning composed with
+    * [[quantizedTopK]]'s two stages. Stage 1 scores the probed cells'
+    * candidates on the int8 forms only (cosine is scale-free, so the
+    * approx score is intdot(qq,cq)/(sqrt(qq.qq)·sqrt(cq.cq)) — exact
+    * int64 sums) and keeps k·rerankFactor per query; stage 2 re-scores
+    * exactly those survivors with the exact float cosine from the SAME
+    * pruned cells. The probed-cell set lands in both scans as a
+    * partition filter (driver-derived from the query table — small by
+    * the same contract as every probe). Reported sims are exact
+    * cosines, so the q159 soundness gate can re-verify every hit
+    * independently.
     */
   def ivfQTopKIndexed(
       indexPath: String,
@@ -1130,25 +1274,16 @@ object Similarity {
     ivfQTopKFederated(Seq(indexPath), queries, qidCol, qvecCol,
       k, nprobe, rerankFactor)
 
-  /** Quantized-IVF top-k over the UNION of N persisted
-    * [[buildIvfQIndex]] indexes WITHOUT merging — the production-layout
-    * form of [[ivfTopKFederated]] (main+delta serving on the int8
-    * index). [[ivfQTopKIndexed]] IS this at N=1: one body, so the
-    * federated probe cannot drift from the single-index probe.
-    *
-    * Per index: probe with its OWN centroids, prune its corpus to the
-    * probed cells (partition filter), score the int8 candidates. Then
-    * ONE global stage-1 ranking keeps k·rerankFactor per query across
-    * ALL indexes' candidates — the rerank budget is global, exactly as
-    * a merged index would spend it, NOT per-index (a per-index budget
-    * would over-fetch N·k·rerankFactor and change the result) — and
-    * stage 2 reranks those survivors on the exact float cosine fetched
-    * from their home indexes' pruned cells. Under a shared quantizer
-    * ([[ivfInit]] shards) the probed cells and candidate pools are
-    * identical to the merged index's, so the result is bit-for-bit the
-    * merged probe ([[FederatedProbeSpec]]); under distinct quantizers
-    * every reported sim is still an exact cosine. Caller contract: id
-    * sets pairwise disjoint.
+  /** Quantized-IVF top-k over the UNION of N persisted int8-layout
+    * indexes WITHOUT merging — the production-layout form of
+    * [[ivfTopKFederated]] (main+delta serving on the int8 index), and
+    * [[twoStageTopK]] with the int8 stage 1. [[ivfQTopKIndexed]] IS
+    * this at N=1. Under a shared quantizer ([[ivfInit]] shards) the
+    * probed cells and candidate pools are identical to the merged
+    * index's, so the result is bit-for-bit the merged probe
+    * ([[FederatedProbeSpec]]); under distinct quantizers every
+    * reported sim is still an exact cosine. Caller contract: id sets
+    * pairwise disjoint.
     */
   def ivfQTopKFederated(
       paths: Seq[String],
@@ -1157,29 +1292,51 @@ object Similarity {
       qvecCol: String,
       k: Int,
       nprobe: Int = 4,
-      rerankFactor: Int = 4): DataFrame = {
-    require(paths.nonEmpty, "ivfQTopKFederated: need >= 1 index path")
+      rerankFactor: Int = 4): DataFrame =
+    twoStageTopK(paths, queries, qidCol, qvecCol, k, nprobe, rerankFactor,
+      "ivfQTopKFederated")(_ => IvfCodec.Int8)
+
+  /** The two-stage probe of the quantized layouts over N indexes — the
+    * one body of [[ivfQTopKFederated]] and [[ivfPqTopKFederated]],
+    * which differ only in the stage-1 scorer `codecAt` supplies per
+    * index. Per index: probe with its OWN centroids, prune its corpus
+    * to the probed cells (a partition filter on both scans), drop the
+    * POOLED soft-delete overlay's ids ([[pooledOverlay]]), and score
+    * the candidates on the stored codes alone (stage 1 never reads
+    * `vec`). Then ONE global stage-1 ranking keeps k·rerankFactor per
+    * query across ALL indexes' candidates — the rerank budget is
+    * global, exactly as a merged index would spend it, NOT per-index (a
+    * per-index budget would over-fetch N·k·rerankFactor and change the
+    * result) — and stage 2 reranks those survivors on the exact float
+    * cosine fetched from their home indexes' pruned cells.
+    */
+  private def twoStageTopK(
+      paths: Seq[String],
+      queries: DataFrame,
+      qidCol: String,
+      qvecCol: String,
+      k: Int,
+      nprobe: Int,
+      rerankFactor: Int,
+      op: String)(codecAt: String => TwoStageCodec): DataFrame = {
+    require(paths.nonEmpty, s"$op: need >= 1 index path")
     require(k >= 1 && rerankFactor >= 1,
       s"k and rerankFactor must be >= 1, got k=$k rerankFactor=$rerankFactor")
     val spark = queries.sparkSession
-    // the query-side float vec is named qv so quantizeEmbeddings' added
-    // `qvec` column cannot collide with it; quantized ONCE for all indexes
-    val qs = quantizeEmbeddings(
-        queries.select(col(qidCol).as("qid"),
-          col(qvecCol).cast("array<double>").as("qv")), "qv")
-      .select(col("qid"), col("qv"), col("qvec").as("qq"),
-        intDot(col("qvec"), col("qvec")).as("qqn2"))
-      .transform(graft.CacheScope.persisted)
-    // pooled soft-delete overlay: the merged-probe contract (see
-    // pooledOverlay) applies to the quantized layout identically
+    // the query-side float vec is named qv so the int8 codec's added
+    // `qvec` column cannot collide with it
+    val qs = queries.select(col(qidCol).as("qid"),
+      col(qvecCol).cast("array<double>").as("qv"))
     val overlay = pooledOverlay(spark, paths)
     val perIndex = paths.map { indexPath =>
+      val codec = codecAt(indexPath)
       val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
-      val probes = qs
-        .select(col("qid"), col("qq"), col("qqn2"), explode(transform(
+      val prepped = codec.prepQueries(qs, indexPath)
+      val probes = prepped.select(
+        prepped.columns.filter(_ != "qv").map(col).toSeq :+ explode(transform(
           graft.functions.VecExprs.nearestCentroids(
             col("qv"), centroids, nprobe),
-          p => posToCell(p, cellIds))).as("cell"))
+          p => posToCell(p, cellIds))).as("cell"): _*)
       // bounded driver read: the probed-cell VALUES (<= queries x nprobe),
       // pushed into both corpus scans as a partition filter
       val probedCells = probes.select(col("cell")).distinct()
@@ -1190,15 +1347,14 @@ object Similarity {
       val corpus = overlay
         .map(d => corpus0.join(broadcast(d), Seq("id"), "left_anti"))
         .getOrElse(corpus0)
-      val stage1 = corpus.select(col("id"), col("qvec").as("cq"),
-          col("qn2").as("cn2"), col("cell"))
+      val stage1 = corpus
+        .select((col("id") +: codec.stage1Cols) :+ col("cell"): _*)
         .join(broadcast(probes), "cell")
-        .filter(col("qid") =!= col("id") && col("cn2") > 0 && col("qqn2") > 0)
-        .withColumn("ascore",
-          intDot(col("cq"), col("qq")).cast("double") /
-            (sqrt(col("cn2").cast("double")) * sqrt(col("qqn2").cast("double"))))
+        .filter(col("qid") =!= col("id"))
+        .transform(codec.score)
         .select(col("qid"), col("id"), col("ascore"))
-      (stage1, corpus.select(col("id"), col("vec")))
+      (stage1, corpus.select(col("id"), col("vec")),
+        prepped.select(col("qid"), col("qv")))
     }
     val wa = Window.partitionBy(col("qid")).orderBy(col("ascore").desc, col("id"))
     val cands = perIndex.map(_._1).reduce(_.unionByName(_))
@@ -1208,7 +1364,7 @@ object Similarity {
     val we = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
     cands
       .join(perIndex.map(_._2).reduce(_.unionByName(_)), Seq("id"))
-      .join(broadcast(qs.select(col("qid"), col("qv"))), Seq("qid"))
+      .join(broadcast(perIndex.head._3), Seq("qid"))
       .withColumn("sim", cosine(col("vec"), col("qv")))
       .filter(col("sim").isNotNull)
       .withColumn("rank", row_number().over(we))
@@ -1241,49 +1397,19 @@ object Similarity {
     require(m >= 1, s"trainPqCodebooks: m must be >= 1, got $m")
     require(ksub >= 1 && ksub <= 256,
       s"trainPqCodebooks: ksub must be in [1, 256], got $ksub")
-    val sample = corpus
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .orderBy(md5(col("id").cast("string")), col("id")).limit(sampleN)
-      .collect().map(_.getSeq[Double](1).toArray)
+    val sample = trainingSample(corpus, idCol, vecCol, sampleN)
     require(sample.length >= ksub,
       s"trainPqCodebooks: need >= $ksub sample vectors, got ${sample.length}")
     val dim = sample.head.length
     require(dim % m == 0,
       s"trainPqCodebooks: dim $dim not divisible by m=$m")
     val dsub = dim / m
-    Array.tabulate(m) { s =>
-      val sub = sample.map(v =>
-        java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
-      var cents = Array.tabulate(ksub)(i =>
-        sub((i.toLong * sub.length / ksub).toInt).clone())
-      def d2(a: Array[Double], b: Array[Double]): Double = {
-        var acc = 0.0; var i = 0
-        while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
-        acc
-      }
-      for (_ <- 0 until iters) {
-        val sums = Array.fill(ksub)(new Array[Double](dsub))
-        val counts = new Array[Int](ksub)
-        sub.foreach { v =>
-          var best = 0; var bd = Double.MaxValue; var c = 0
-          while (c < ksub) {
-            val dd = d2(v, cents(c)); if (dd < bd) { bd = dd; best = c }
-            c += 1
-          }
-          counts(best) += 1
-          var i = 0
-          while (i < dsub) { sums(best)(i) += v(i); i += 1 }
-        }
-        cents = Array.tabulate(ksub)(c =>
-          if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c)))
-      }
-      cents
-    }
+    Array.tabulate(m)(s => lloyd(sample.map(v =>
+      java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub)), ksub, iters))
   }
 
-  /** Build a persisted PRODUCT-QUANTIZED IVF index — the
-    * [[buildIvfQIndex]] layout with the int8 columns replaced by an
-    * m-byte `pqcode`:
+  /** Build a persisted PRODUCT-QUANTIZED IVF index — the quantized
+    * layout with the int8 columns replaced by an m-byte `pqcode`:
     *
     *   - `centroids/` (cell, centroid) — the coarse quantizer, verbatim;
     *   - `codebooks/` (sub, code, cw, n2) — m*ksub codewords with their
@@ -1295,9 +1421,11 @@ object Similarity {
     *     the int8 index), stage 2 exact-reranks from the same cells'
     *     `vec`.
     *
-    * Same maintenance surface as the other IVF layouts: compact /
-    * delete / vacuum / split are layout-blind (whole-row rewrites),
-    * [[ivfPqAppend]] is the batch increment, fsck re-derives the codes.
+    * [[buildIvfIndex]]'s build body with the codebooks trained on the
+    * same (id, vec) projection. Same maintenance surface as the other
+    * IVF layouts: compact / delete / vacuum / split are layout-blind
+    * (whole-row rewrites), [[ivfAppend]] encodes under the persisted
+    * codebooks, fsck re-derives the codes.
     */
   def buildIvfPqIndex(
       corpus: DataFrame,
@@ -1307,39 +1435,9 @@ object Similarity {
       m: Int,
       path: String,
       ksub: Int = 256,
-      sampleN: Int = 4096): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val prepped = corpus.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-    val centroids = trainIvfCentroids(prepped, "id", "vec", nlist, sampleN)
-    val books = trainPqCodebooks(prepped, "id", "vec", m, ksub, sampleN)
-    val booksSeq = books.map(_.map(_.toSeq).toSeq).toSeq
-    StableRead.withMaintenanceMarker(spark, path) {
-      graft.sinks.Sinks.landTable(
-        centroids.zipWithIndex
-          .map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cell", "centroid")
-          .coalesce(1),
-        path, "centroids")
-      graft.sinks.Sinks.landTable(
-        books.zipWithIndex.flatMap { case (book, s) =>
-          book.zipWithIndex.map { case (cw, c) =>
-            (s, c, cw.toSeq, cw.map(x => x * x).sum)
-          }
-        }.toSeq.toDF("sub", "code", "cw", "n2").coalesce(1),
-        path, "codebooks")
-      graft.sinks.Sinks.landTable(
-        prepped
-          .withColumn("pqcode",
-            graft.functions.PqExprs.pqEncode(col("vec"), booksSeq))
-          .withColumn("cell", element_at(
-            graft.functions.VecExprs.nearestCentroids(
-              col("vec"), centroids.map(_.toSeq).toSeq, 1), 1))
-          .repartition(col("cell")),
-        path, "corpus", Seq("cell"))
-    }
-  }
+      sampleN: Int = 4096): Unit =
+    buildIvf(corpus, idCol, vecCol, nlist, path, sampleN)(vecs =>
+      IvfCodec.Pq(trainPqCodebooks(vecs, "id", "vec", m, ksub, sampleN)))
 
   /** The persisted codebooks, position-aligned: (m, ksub, [m][ksub]
     * codewords). Bounded driver read (m*ksub*dsub doubles — KBs). */
@@ -1361,37 +1459,6 @@ object Similarity {
     (m, ksub, books.map(_.map(identity)))
   }
 
-  /** Append a batch to a persisted [[buildIvfPqIndex]] index —
-    * [[ivfQAppend]]'s contract with the batch PQ-encoded map-side
-    * under the index's OWN codebooks (never retrained — a drifted
-    * codebook would make old codes unscorable; re-encode via a rebuild,
-    * the [[ivfRequantize]] discipline).
-    */
-  def ivfPqAppend(
-      indexPath: String, batch: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val spark = batch.sparkSession
-    IvfIngest.locked(spark, indexPath) {
-      val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
-      val (_, _, books) = loadPqCodebooks(spark, indexPath)
-      val booksSeq = books.map(_.map(_.toSeq).toSeq).toSeq
-      StableRead.withMaintenanceMarker(spark, indexPath) {
-        batch.select(col(idCol).as("id"),
-            col(vecCol).cast("array<double>").as("vec"))
-          .withColumn("pqcode",
-            graft.functions.PqExprs.pqEncode(col("vec"), booksSeq))
-          .withColumn("cell", posToCell(element_at(
-            graft.functions.VecExprs.nearestCentroids(
-              col("vec"), centroids, 1), 1),
-            cellIds))
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell")
-          .parquet(s"$indexPath/corpus")
-        StableRead.noteTouched(indexPath, "corpus")
-      }
-    }
-  }
-
   def ivfPqTopKIndexed(
       indexPath: String,
       queries: DataFrame,
@@ -1403,21 +1470,15 @@ object Similarity {
     ivfPqTopKFederated(Seq(indexPath), queries, qidCol, qvecCol,
       k, nprobe, rerankFactor)
 
-  /** PQ-IVF top-k over N indexes without merging — the
-    * [[ivfQTopKFederated]] serving shape with ADC scoring: per query
-    * and index, ONE lookup table of <q_sub, codeword> partial inner
-    * products is built driver-side (m x ksub doubles; the query table
-    * is small by the probe contract, and the probed-cell derivation
-    * already collects it) and broadcast; a candidate's approximate
-    * cosine is then m table lookups for the inner product and m for the
+  /** PQ-IVF top-k over N indexes without merging — [[twoStageTopK]]
+    * with ADC scoring as stage 1 (the [[IvfCodec.Pq]] scorer under each
+    * index's own codebooks): per query and index ONE lookup table of
+    * <q_sub, codeword> partial inner products, and a candidate scored
+    * by m table lookups for the inner product and m for the
     * reconstructed norm ([[graft.functions.PqExprs.PqAdcScore]] serves
-    * both — the norm table is query-independent, one literal per
-    * index), never any arithmetic on a stored vector. Stage 1 reads
-    * (id, pqcode) of the probed cells only; ONE global ranking keeps
-    * k*rerankFactor per query across all indexes (the merged-index
-    * budget, not per-index), and stage 2 exact-reranks those survivors
-    * on float cosine from their home cells — reported sims are exact,
-    * so the q207 soundness gate re-verifies every hit independently.
+    * both). Stage 1 reads (id, pqcode) of the probed cells only;
+    * reported sims are exact float cosines, so the q207 soundness gate
+    * re-verifies every hit independently.
     */
   def ivfPqTopKFederated(
       paths: Seq[String],
@@ -1426,93 +1487,10 @@ object Similarity {
       qvecCol: String,
       k: Int,
       nprobe: Int = 4,
-      rerankFactor: Int = 4): DataFrame = {
-    require(paths.nonEmpty, "ivfPqTopKFederated: need >= 1 index path")
-    require(k >= 1 && rerankFactor >= 1,
-      s"k and rerankFactor must be >= 1, got k=$k rerankFactor=$rerankFactor")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    // bounded driver read: the raw query vectors (the LUT build needs
-    // them on the driver; the query table is small by the same contract
-    // as every probe's cell derivation)
-    val qRows = queries
-      .select(col(qidCol).cast("long").as("qid"),
-        col(qvecCol).cast("array<double>").as("qv"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val overlay = pooledOverlay(spark, paths)
-    val perIndex = paths.map { indexPath =>
-      val (cellIds, centroids) = loadCentroidTable(spark, indexPath)
-      val (m, ksub, books) = loadPqCodebooks(spark, indexPath)
-      val dsub = books(0)(0).length
-      // reconstructed-norm table: query-INDEPENDENT, one per index
-      val n2lut: Seq[Double] = books.toSeq.flatMap(_.toSeq.map { cw =>
-        var s = 0.0; var i = 0
-        while (i < cw.length) { s += cw(i) * cw(i); i += 1 }
-        s
-      })
-      val luts = qRows.map { case (qid, qv) =>
-        require(qv.length == m * dsub,
-          s"ivfPqTopKFederated: query dim ${qv.length} != index dim " +
-            s"${m * dsub} at $indexPath")
-        val lut = new Array[Double](m * ksub)
-        var s = 0
-        while (s < m) {
-          var c = 0
-          while (c < ksub) {
-            val cw = books(s)(c)
-            var acc = 0.0; var i = 0
-            while (i < dsub) { acc += qv(s * dsub + i) * cw(i); i += 1 }
-            lut(s * ksub + c) = acc
-            c += 1
-          }
-          s += 1
-        }
-        var qn2 = 0.0; var i = 0
-        while (i < qv.length) { qn2 += qv(i) * qv(i); i += 1 }
-        (qid, qv.toSeq, lut.toSeq, qn2)
-      }.toSeq
-      val qdf = luts.toDF("qid", "qv", "lut", "qn2")
-      val probes = qdf
-        .select(col("qid"), col("lut"), col("qn2"), explode(transform(
-          graft.functions.VecExprs.nearestCentroids(
-            col("qv"), centroids, nprobe),
-          p => posToCell(p, cellIds))).as("cell"))
-      val probedCells = probes.select(col("cell")).distinct()
-        .collect().map(_.getInt(0).toLong).sorted
-      val corpus0 = StableRead.readTable(spark, indexPath, "corpus")
-        .filter(col("cell").isin(probedCells: _*))
-      val corpus = overlay
-        .map(d => corpus0.join(broadcast(d), Seq("id"), "left_anti"))
-        .getOrElse(corpus0)
-      // stage 1 never touches `vec`: (id, pqcode, cell) only
-      val stage1 = corpus.select(col("id"), col("pqcode"), col("cell"))
-        .join(broadcast(probes), "cell")
-        .withColumn("rn2", graft.functions.PqExprs.pqAdcScore(
-          col("pqcode"), typedLit(n2lut), ksub))
-        .filter(col("qid") =!= col("id") && col("qn2") > 0 && col("rn2") > 0)
-        .withColumn("ascore",
-          graft.functions.PqExprs.pqAdcScore(col("pqcode"), col("lut"), ksub) /
-            (sqrt(col("qn2")) * sqrt(col("rn2"))))
-        .select(col("qid"), col("id"), col("ascore"))
-      (stage1, corpus.select(col("id"), col("vec")),
-        qdf.select(col("qid"), col("qv")))
-    }
-    val wa = Window.partitionBy(col("qid")).orderBy(col("ascore").desc, col("id"))
-    val cands = perIndex.map(_._1).reduce(_.unionByName(_))
-      .withColumn("arank", row_number().over(wa))
-      .filter(col("arank") <= k * rerankFactor)
-      .select(col("qid"), col("id"))
-    val we = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
-    cands
-      .join(perIndex.map(_._2).reduce(_.unionByName(_)), Seq("id"))
-      .join(broadcast(perIndex.head._3), Seq("qid"))
-      .withColumn("sim", cosine(col("vec"), col("qv")))
-      .filter(col("sim").isNotNull)
-      .withColumn("rank", row_number().over(we))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("id"), col("sim"), col("rank"))
-  }
+      rerankFactor: Int = 4): DataFrame =
+    twoStageTopK(paths, queries, qidCol, qvecCol, k, nprobe, rerankFactor,
+      "ivfPqTopKFederated")(p =>
+      IvfCodec.Pq(loadPqCodebooks(queries.sparkSession, p)._3))
 
   /** Predict a takedown batch's [[ivfDelete]] footprint BEFORE
     * executing it — the dense twin of
@@ -1652,8 +1630,8 @@ object Similarity {
     * index op. Returns (parentCell, childA, childB) per split.
     *
     * Layout-blind like [[ivfDelete]]: rows rewrite with ALL their
-    * columns, so the float ([[buildIvfIndex]]) and quantized
-    * ([[buildIvfQIndex]]) layouts both split unchanged (spec-pinned).
+    * columns, so the float, int8 and PQ layouts all split unchanged
+    * (the quantized split is spec-pinned).
     */
   def ivfSplitCells(
       spark: org.apache.spark.sql.SparkSession,
@@ -1667,9 +1645,8 @@ object Similarity {
     if (!fs.exists(corpusPath)) Seq.empty
     else IvfIngest.maintain(spark, indexPath, "ivfSplitCells") {
     // centroid table: bounded driver collect (nlist rows)
-    val current = spark.read.parquet(s"$indexPath/centroids")
-      .orderBy(col("cell")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
+    val (currentIds, currentCents) = loadCentroidTable(spark, indexPath)
+    val current = currentIds.zip(currentCents)
     val known = current.map(_._1).toSet
     // (1) orphan cleanup — see scaladoc
     fs.listStatus(corpusPath).foreach { st =>
@@ -1713,13 +1690,12 @@ object Similarity {
       (parent, a, b, children(0).toSeq, children(1).toSeq)
     }
     // (3) one centroid swap activates every split at once
-    import spark.implicits._
     val splitSet = splits.map(_._1).toSet
     val updated = current.filterNot(c => splitSet.contains(c._1)) ++
       splits.flatMap(s => Seq((s._2, s._4), (s._3, s._5)))
     val ctmp = new org.apache.hadoop.fs.Path(s"$indexPath/centroids_split_tmp")
-    updated.toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(ctmp.toString)
+    centroidTable(spark, updated)
+      .write.mode("overwrite").parquet(ctmp.toString)
     graft.sinks.Sinks.swapByRename(
       fs, ctmp, new org.apache.hadoop.fs.Path(s"$indexPath/centroids"))
     // (4) retire the parents — to the pinned-reader retention area on

@@ -92,13 +92,8 @@ object TakedownQueue {
       maxPending: Long = Long.MaxValue,
       force: Boolean = false): FlushDecision =
     flushIfDue(spark, indexPath, budgetFraction, maxPending, force,
-      plan = t => {
-        val r = Retrieval.bm25DeleteBatchPlan(spark, indexPath, t, "id")
-          .select(col("n_affected_buckets"), col("n_buckets"),
-            col("affected_fraction"))
-          .collect()(0)
-        (r.getLong(0), r.getLong(1), r.getDouble(2))
-      },
+      Retrieval.bm25DeleteBatchPlan(spark, indexPath, _, "id"),
+      "n_affected_buckets", "n_buckets",
       vacuum = () => Retrieval.bm25Vacuum(spark, indexPath))
 
   /** [[bm25FlushIfDue]] for the IVF family (cells as the rewrite unit;
@@ -112,13 +107,8 @@ object TakedownQueue {
       maxPending: Long = Long.MaxValue,
       force: Boolean = false): FlushDecision =
     flushIfDue(spark, indexPath, budgetFraction, maxPending, force,
-      plan = t => {
-        val r = Similarity.ivfDeleteBatchPlan(spark, indexPath, t, "id")
-          .select(col("n_affected_cells"), col("n_cells"),
-            col("affected_fraction"))
-          .collect()(0)
-        (r.getLong(0), r.getLong(1), r.getDouble(2))
-      },
+      Similarity.ivfDeleteBatchPlan(spark, indexPath, _, "id"),
+      "n_affected_cells", "n_cells",
       vacuum = () => Similarity.ivfVacuum(spark, indexPath))
 
   /** [[bm25FlushIfDue]] for the exact-dedup registry (corpus buckets as
@@ -132,13 +122,8 @@ object TakedownQueue {
       maxPending: Long = Long.MaxValue,
       force: Boolean = false): FlushDecision =
     flushIfDue(spark, indexPath, budgetFraction, maxPending, force,
-      plan = t => {
-        val r = DedupRegistry.deleteBatchPlan(spark, indexPath, t, "id")
-          .select(col("n_affected_buckets"), col("n_buckets"),
-            col("affected_fraction"))
-          .collect()(0)
-        (r.getLong(0), r.getLong(1), r.getDouble(2))
-      },
+      DedupRegistry.deleteBatchPlan(spark, indexPath, _, "id"),
+      "n_affected_buckets", "n_buckets",
       vacuum = () => DedupRegistry.vacuum(spark, indexPath))
 
   /** [[bm25FlushIfDue]] for the near-dup registry. The reported
@@ -154,13 +139,8 @@ object TakedownQueue {
       maxPending: Long = Long.MaxValue,
       force: Boolean = false): FlushDecision =
     flushIfDue(spark, indexPath, budgetFraction, maxPending, force,
-      plan = t => {
-        val r = NearDupRegistry.deleteBatchPlan(spark, indexPath, t, "id")
-          .select(col("n_affected_buckets"), col("n_buckets"),
-            col("affected_fraction"))
-          .collect()(0)
-        (r.getLong(0), r.getLong(1), r.getDouble(2))
-      },
+      NearDupRegistry.deleteBatchPlan(spark, indexPath, _, "id"),
+      "n_affected_buckets", "n_buckets",
       vacuum = () => NearDupRegistry.vacuum(spark, indexPath))
 
   private def flushIfDue(
@@ -169,7 +149,9 @@ object TakedownQueue {
       budgetFraction: Double,
       maxPending: Long,
       force: Boolean,
-      plan: DataFrame => (Long, Long, Double),
+      plan: DataFrame => DataFrame,
+      affectedCol: String,
+      totalCol: String,
       vacuum: () => Long): FlushDecision = {
     require(budgetFraction > 0.0 && budgetFraction <= 1.0,
       s"TakedownQueue: budgetFraction must be in (0, 1], got $budgetFraction")
@@ -181,7 +163,11 @@ object TakedownQueue {
         val t = overlay.localCheckpoint(true) // one read, two consumers
         try {
           val n = t.count()
-          val (affected, total, fraction) = plan(t)
+          val r = plan(t)
+            .select(col(affectedCol), col(totalCol), col("affected_fraction"))
+            .collect()(0)
+          val (affected, total, fraction) =
+            (r.getLong(0), r.getLong(1), r.getDouble(2))
           val due = force || n >= maxPending || fraction >= budgetFraction
           val removed = if (due) vacuum() else 0L
           FlushDecision(n, affected, total, fraction, flushed = due, removed)

@@ -3988,11 +3988,12 @@ object Curation {
     "q159_ivfq_index" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = ivfQDir
-      Similarity.buildIvfQIndex(
+      Similarity.buildIvfIndex(
         emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
-        nlist = 16, path)
-      Similarity.ivfQAppend(
-        path, emb.filter(col("vec_id") % 4 === 0), "vec_id", "embedding")
+        nlist = 16, path, quantized = true)
+      Similarity.ivfAppend(
+        path, emb.filter(col("vec_id") % 4 === 0), "vec_id", "embedding",
+        quantized = true)
       ivfQSoundness(s, emb, path)
     }),
 
@@ -4003,7 +4004,7 @@ object Curation {
     // candidate scored by m lookups, stage 2 exact-reranking from the
     // probed cells (the q101/q159 rerank machinery absorbing the
     // recall loss). Same production shape as q159: build on 3/4 of the
-    // corpus, ivfPqAppend the rest, then the SHARED two-stage
+    // corpus, ivfAppend the rest, then the SHARED two-stage
     // soundness body — every hit's sim re-verified against the exact
     // cosine (ADC may only SELECT, never alter a score), every hit
     // from a probed partition, non-vacuous. In-gate teeth: ivfFsck
@@ -4018,7 +4019,7 @@ object Curation {
       Similarity.buildIvfPqIndex(
         emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
         nlist = 16, m = 8, path, ksub = 64)
-      Similarity.ivfPqAppend(
+      Similarity.ivfAppend(
         path, emb.filter(col("vec_id") % 4 === 0), "vec_id", "embedding")
       require(graft.operators.Fsck.ivfFsck(s, path).count() == 0L,
         "q207: fsck found violations on the fresh PQ estate")
@@ -4040,11 +4041,12 @@ object Curation {
     "q185_ivfq_requantize" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = ivfRqDir
-      Similarity.buildIvfQIndex(
+      Similarity.buildIvfIndex(
         emb.filter(col("vec_id") % 4 === 0), "vec_id", "embedding",
-        nlist = 16, path)
-      (1 to 3).foreach(i => Similarity.ivfQAppend(
-        path, emb.filter(col("vec_id") % 4 === i), "vec_id", "embedding"))
+        nlist = 16, path, quantized = true)
+      (1 to 3).foreach(i => Similarity.ivfAppend(
+        path, emb.filter(col("vec_id") % 4 === i), "vec_id", "embedding",
+        quantized = true))
       Similarity.ivfRequantize(s, path, nlist = 16)
       // non-vacuity payload (the empty==empty hash alone would also
       // pass on an index that was never requantized): three observable
@@ -4366,7 +4368,8 @@ object Curation {
       val emb = t(s, dir, "embeddings")
       val path = s"$ivfSplitParent/qidx"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-      Similarity.buildIvfQIndex(emb, "vec_id", "embedding", nlist = 8, path)
+      Similarity.buildIvfIndex(emb, "vec_id", "embedding", nlist = 8, path,
+        quantized = true)
       val total = emb.count()
       val splits = Similarity.ivfSplitCells(
         s, path, maxCellRows = math.max(total / 16L, 1L))

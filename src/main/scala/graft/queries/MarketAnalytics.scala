@@ -273,7 +273,8 @@ object MarketAnalytics {
     // finalized window, a dropped live row, or a kept late row all
     // break rows or sums.
     "q165_stream_ohlc_finalize" -> ((s, dir) => withRocksDb(s) {
-      replayPhases(s, "q165_ohlc_fin", dir, watermarkPhases(s, dir),
+      replayPhases(s, "watermark", "q165_ohlc_fin", dir,
+          watermarkPhases(s, dir),
           stream => graft.streaming.StreamingEtl.windowedOhlc(
             asTrades(stream), "1 hour", Some("2 hours")))
         .filter(col("symbol") =!= "wm_probe")
@@ -305,7 +306,7 @@ object MarketAnalytics {
     // the ORIGINAL events table — which is exactly what the oracle
     // aggregates.
     "q111_stream_dedup" -> ((s, dir) =>
-      replayRaw(s, dir, "q111_dedup",
+      replayRaw(s, dir, "dedup", "q111_dedup",
           prep = ev => ev.union(ev.filter(col("event_id") % 5 === 0)),
           build = stream => stream.dropDuplicates("event_id")
             .select(col("event_type"), col("event_id")))
@@ -334,7 +335,7 @@ object MarketAnalytics {
         .join(t(s, dir, "nation"),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name"))
-      replaySnapshot(s, dir, "q131_enrich",
+      replaySnapshot(s, dir, "enrich", "q131_enrich",
           stream => stream
             .join(broadcast(dim), col("user_id") === col("c_custkey"))
             .groupBy(col("n_name"))
@@ -511,7 +512,8 @@ object MarketAnalytics {
     // form (event-time vs window-end) and to ms-vs-µs watermark
     // truncation: every boundary has >= 26 min of slack at all SFs.
     "q116_stream_watermark" -> ((s, dir) =>
-      replayPhases(s, "q116_wm", dir, watermarkPhases(s, dir),
+      replayPhases(s, "watermark", "q116_wm", dir,
+          watermarkPhases(s, dir),
           stream => graft.streaming.StreamingEtl.watermarkedWindowCounts(
             stream, "event_type", "ts", "event_id", "user_id"))
         .filter(col("event_type") =!= "wm_probe")
@@ -885,22 +887,23 @@ object MarketAnalytics {
     * genuine cross-batch state, not one big batch), run `build` over the
     * file stream into an update-mode memory sink, and return the final
     * per-key snapshot. One scratch dir per JVM (overwrite mode) so
-    * median-of-3 bench runs don't accumulate.
+    * median-of-3 bench runs don't accumulate. `input` keys the memoized
+    * replay input, `name` the memory sink.
     */
   private def replaySnapshot(
-      s: SparkSession, dir: String, name: String,
+      s: SparkSession, dir: String, input: String, name: String,
       build: DataFrame => DataFrame,
       partCols: Seq[String], counterCol: String): DataFrame =
     finalSnapshot(
-      replayRaw(s, dir, name, identity, build), partCols, counterCol)
+      replayRaw(s, dir, input, name, identity, build), partCols, counterCol)
 
   /** The indicator state machine's replay in q16's output shape — q55 on
-    * the default state store, q154 under RocksDB. `name` keys the
-    * memory sink and the memoized replay input.
+    * the default state store, q154 under RocksDB, over one memoized
+    * replay input; `name` keys the memory sink.
     */
   private def indicatorReplay(
       s: SparkSession, dir: String, name: String): DataFrame =
-    replaySnapshot(s, dir, name,
+    replaySnapshot(s, dir, "indicator", name,
         stream => graft.streaming.StreamingEtl.statefulIndicators(
           asTrades(stream), period = 14).toDF(),
         Seq("symbol"), "n_rows")
@@ -918,7 +921,7 @@ object MarketAnalytics {
     */
   private def sessionReplay(
       s: SparkSession, dir: String, name: String): DataFrame =
-    replaySnapshot(s, dir, name,
+    replaySnapshot(s, dir, "session", name,
         stream => graft.streaming.StreamingEtl.statefulSessions(
           stream.select(col("user_id"), col("ts")),
           gap = 1800000000000L).toDF(),
@@ -932,7 +935,7 @@ object MarketAnalytics {
     */
   private def ohlcReplay(
       s: SparkSession, dir: String, name: String): DataFrame =
-    replaySnapshot(s, dir, name,
+    replaySnapshot(s, dir, "ohlc", name,
         stream => graft.streaming.StreamingEtl.windowedOhlc(
           asTrades(stream), "1 hour"),
         Seq("window", "symbol"), "n_ticks")
@@ -947,15 +950,16 @@ object MarketAnalytics {
     * update-mode memory-sink table. `prep` transforms the events table
     * BEFORE the re-shard + write, so a gate can plant rows (e.g.
     * duplicates for the streaming-dedup gate) that then arrive across
-    * different micro-batches.
+    * different micro-batches. `input` names what `prep` makes: gates
+    * replaying one input share its memoized write.
     */
   private def replayRaw(
-      s: SparkSession, dir: String, name: String,
+      s: SparkSession, dir: String, input: String, name: String,
       prep: DataFrame => DataFrame,
       build: DataFrame => DataFrame): DataFrame = {
     val spark = Tables.configure(s)
     val events = prep(t(s, dir, "events"))
-    val tmp = memoizedWrite(s"raw|$name|$dir|${dirFp(dir)}") { d =>
+    val tmp = memoizedWrite(s"raw|$input|$dir|${dirFp(dir)}") { d =>
       events.repartition(4).write.mode("overwrite").parquet(d)
     }
     val stream = spark.readStream.schema(events.schema)
@@ -1078,7 +1082,7 @@ object MarketAnalytics {
     val freshLate = ev.filter(
         col("event_id") % 7 === 1 && tsUs < maxUs - 3 * hourUs)
       .withColumn("event_id", col("event_id") + 2000000L)
-    replayPhases(s, "ttl_dedup", dir,
+    replayPhases(s, "ttl_dedup", "ttl_dedup", dir,
         Seq(ev, dupRecent.union(dupStale), freshKeep.union(freshLate)),
         stream => dedup(stream)
           .select(col("event_type"), col("event_id"), col("user_id")))
@@ -1098,14 +1102,15 @@ object MarketAnalytics {
     * is what makes watermark advancement — and therefore which late rows
     * are dropped — deterministic, where replayRaw's repartition shards
     * would leave it to scheduling. APPEND output mode: the memory sink
-    * holds each finalized window exactly once.
+    * holds each finalized window exactly once. `input` keys the memoized
+    * phase write (gates replaying one phase set share it), `name` the sink.
     */
   private def replayPhases(
-      s: SparkSession, name: String, dir: String,
+      s: SparkSession, input: String, name: String, dir: String,
       phases: Seq[DataFrame],
       build: DataFrame => DataFrame): DataFrame = {
     val spark = Tables.configure(s)
-    val streamDir = writePhases(s"phases|$name|$dir|${dirFp(dir)}", phases)
+    val streamDir = writePhases(s"phases|$input|$dir|${dirFp(dir)}", phases)
     val stream = spark.readStream.schema(phases.head.schema)
       .option("maxFilesPerTrigger", 1).parquet(streamDir)
     val qname = s"${name}_${replaySeq.incrementAndGet()}"
@@ -1345,9 +1350,17 @@ object MarketAnalytics {
 
   private lazy val replayDir: String = {
     val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite)
-      java.nio.file.Files.createTempDirectory(shm.toPath, "graft-replay").toString
-    else java.nio.file.Files.createTempDirectory("graft-replay").toString
+    val dir =
+      if (shm.isDirectory && shm.canWrite)
+        java.nio.file.Files.createTempDirectory(shm.toPath, "graft-replay")
+      else java.nio.file.Files.createTempDirectory("graft-replay")
+    // replay inputs are setup, so they go when the JVM exits (unlike
+    // csvGateDir, which the DuckDB oracle reads after the JVM is gone).
+    // Hadoop's hook manager runs this below Spark's own priority, after
+    // the context and its streams have stopped writing.
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile), 20)
+    dir.toString
   }
 
   /** Per-replay checkpoint dir under [[replayDir]] (tmpfs when available):

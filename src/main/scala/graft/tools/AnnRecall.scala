@@ -73,8 +73,8 @@ object AnnRecall {
       val dim = emb.selectExpr("size(embedding)").first().getInt(0)
       val idxDir = java.nio.file.Files
         .createTempDirectory("graft-annrecall-ivfq").toString
-      Similarity.buildIvfQIndex(
-        emb, "vec_id", "embedding", nlist = 16, idxDir)
+      Similarity.buildIvfIndex(
+        emb, "vec_id", "embedding", nlist = 16, idxDir, quantized = true)
       val cents = spark.read.parquet(s"$idxDir/centroids")
         .orderBy(col("cell")).collect().map(_.getSeq[Double](1)).toSeq
       val assigned = emb.select(

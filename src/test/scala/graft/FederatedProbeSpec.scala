@@ -134,7 +134,8 @@ class FederatedProbeSpec extends SparkSpec {
     val shards = (0 until 3).map { i =>
       val p = s"$parent/sh$i"
       Similarity.ivfInit(spark, cents, p)
-      Similarity.ivfQAppend(p, all.filter($"id" % 3 === i), "id", "vec")
+      Similarity.ivfAppend(p, all.filter($"id" % 3 === i), "id", "vec",
+        quantized = true)
       p
     }
     val merged = s"$parent/merged"

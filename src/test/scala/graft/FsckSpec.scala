@@ -69,7 +69,7 @@ class FsckSpec extends SparkSpec {
     Similarity.buildIvfIndex(all, "id", "vec", nlist = 4, f)
     Similarity.ivfAppend(f,
       Seq((100L, Seq.fill(8)(0.5))).toDF("id", "vec"), "id", "vec")
-    Similarity.buildIvfQIndex(all, "id", "vec", nlist = 4, q)
+    Similarity.buildIvfIndex(all, "id", "vec", nlist = 4, q, quantized = true)
     assert(Fsck.ivfFsck(spark, f).collect().isEmpty)
     assert(Fsck.ivfFsck(spark, q).collect().isEmpty)
     // post-split: strict assignment is documented NOT to hold, the

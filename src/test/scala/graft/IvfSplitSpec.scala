@@ -99,7 +99,8 @@ class IvfSplitSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivf-split-q").toString
     val corpus = clustered(30).withColumnRenamed("id", "vec_id")
       .withColumnRenamed("vec", "embedding")
-    sim.buildIvfQIndex(corpus, "vec_id", "embedding", nlist = 1, dir)
+    sim.buildIvfIndex(corpus, "vec_id", "embedding", nlist = 1, dir,
+      quantized = true)
     val splits = sim.ivfSplitCells(spark, dir, maxCellRows = 10)
     assert(splits.nonEmpty)
     val cols = spark.read.parquet(s"$dir/corpus").columns.sorted.toSeq

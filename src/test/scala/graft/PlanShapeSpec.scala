@@ -255,13 +255,13 @@ class PlanShapeSpec extends SparkSpec {
             .select(org.apache.spark.sql.functions.col("vec_id")), "vec_id")
         val qPath = java.nio.file.Files
           .createTempDirectory("graft-ivfq-planshape").toString
-        operators.Similarity.buildIvfQIndex(
+        operators.Similarity.buildIvfIndex(
           emb.filter(org.apache.spark.sql.functions.col("vec_id") % 3 =!= 0),
-          "vec_id", "embedding", nlist = 8, qPath)
-        operators.Similarity.ivfQAppend(
+          "vec_id", "embedding", nlist = 8, qPath, quantized = true)
+        operators.Similarity.ivfAppend(
           qPath,
           emb.filter(org.apache.spark.sql.functions.col("vec_id") % 3 === 0),
-          "vec_id", "embedding")
+          "vec_id", "embedding", quantized = true)
         val pathB = java.nio.file.Files
           .createTempDirectory("graft-bm25-planshape-b").toString
         operators.Retrieval.buildBm25Index(

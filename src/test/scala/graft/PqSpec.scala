@@ -81,7 +81,7 @@ class PqSpec extends SparkSpec {
     Similarity.buildIvfPqIndex(
       all.filter(col("id") % 4 =!= 3), "id", "v", nlist = 4, m = m, path,
       ksub = 16, sampleN = 128)
-    Similarity.ivfPqAppend(
+    Similarity.ivfAppend(
       path, all.filter(col("id") % 4 === 3), "id", "v")
     assert(Fsck.ivfFsck(spark, path).count() === 0L)
     // every even id's twin (odd id, identical vector) must surface at
@@ -139,7 +139,7 @@ class PqSpec extends SparkSpec {
       all, "id", "v", m, ksub = 16, sampleN = 128)
     (0 until 2).foreach { i =>
       Similarity.ivfPqInit(spark, cents, books, s"$parent/sh$i")
-      Similarity.ivfPqAppend(
+      Similarity.ivfAppend(
         s"$parent/sh$i", all.filter(col("id") % 2 === i), "id", "v")
     }
     Similarity.ivfMerge(
@@ -148,7 +148,7 @@ class PqSpec extends SparkSpec {
     // init+append over the whole corpus (same quantizers, so cell and
     // code assignments are identical row-for-row)
     Similarity.ivfPqInit(spark, cents, books, s"$parent/full")
-    Similarity.ivfPqAppend(s"$parent/full", all, "id", "v")
+    Similarity.ivfAppend(s"$parent/full", all, "id", "v")
     val queries = all.filter(col("id") % 10 === 0)
       .select((col("id") + 1000000L).as("qid"), col("v"))
       .localCheckpoint(true)

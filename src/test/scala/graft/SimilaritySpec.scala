@@ -421,7 +421,7 @@ class SimilaritySpec extends SparkSpec {
     } yield (ci * 12L + j, b.map(_ + rng.nextGaussian() * 0.02).toSeq))
       .toSeq.toDF("id", "vec")
     val path = java.nio.file.Files.createTempDirectory("graft-ivfq").toString
-    Similarity.buildIvfQIndex(all, "id", "vec", nlist = 8, path)
+    Similarity.buildIvfIndex(all, "id", "vec", nlist = 8, path, quantized = true)
     val queries = all.filter($"id" % 12 === 5)
       .select(($"id" + 5000L).as("id"), $"vec")
     val probe = Similarity.ivfQTopKIndexed(
@@ -474,7 +474,7 @@ class SimilaritySpec extends SparkSpec {
     } yield (ci * 12L + j, b.map(_ + rng.nextGaussian() * 0.02).toSeq))
       .toSeq.toDF("id", "vec")
     val path = java.nio.file.Files.createTempDirectory("graft-ivfq-del").toString
-    Similarity.buildIvfQIndex(all, "id", "vec", nlist = 8, path)
+    Similarity.buildIvfIndex(all, "id", "vec", nlist = 8, path, quantized = true)
     val doomed = all.filter($"id" < 24).select($"id")
     val nDel = Similarity.ivfDelete(spark, path, doomed, "id")
     assert(nDel === 24L)
@@ -522,9 +522,11 @@ class SimilaritySpec extends SparkSpec {
     // the QUANTIZED layout merges blind the same way
     val qa = s"$parent/qa"; val qb = s"$parent/qb"
     Similarity.ivfInit(spark, cents, qa)
-    Similarity.ivfQAppend(qa, all.filter($"id" % 2 === 0), "id", "vec")
+    Similarity.ivfAppend(qa, all.filter($"id" % 2 === 0), "id", "vec",
+      quantized = true)
     Similarity.ivfInit(spark, cents, qb)
-    Similarity.ivfQAppend(qb, all.filter($"id" % 2 === 1), "id", "vec")
+    Similarity.ivfAppend(qb, all.filter($"id" % 2 === 1), "id", "vec",
+      quantized = true)
     Similarity.ivfMerge(spark, qa, qb, s"$parent/qm")
     val qmerged = Similarity.ivfQTopKIndexed(
         s"$parent/qm", queries, "id", "vec", k = 3, nprobe = 2)
@@ -675,6 +677,39 @@ class SimilaritySpec extends SparkSpec {
     val qhits = Similarity.ivfQTopKIndexed(qpath, queries, "id", "vec",
       k = 3, nprobe = 2)
     assert(qhits.count() > 0)
+    // a layout mismatch refuses at both entry points, naming both
+    // layouts, before any row lands: int8 rows into the float corpus,
+    // float rows into the int8 corpus, the int8 flag on a PQ index, and
+    // PQ rows into a float corpus left under a codebooks table
+    val extra = all.filter($"id" < 4).select(($"id" + 7000L).as("id"), $"vec")
+    def refused(layouts: String*)(write: => Unit): Unit = {
+      val e = intercept[IllegalArgumentException](write)
+      layouts.foreach(l => assert(e.getMessage.contains(l), e.getMessage))
+    }
+    refused("float", "int8")(
+      Similarity.ivfAppend(path, extra, "id", "vec", quantized = true))
+    refused("float", "int8")(Similarity.ivfIngestBatch(
+      path, extra, "id", "vec", 2L, quantized = true))
+    refused("int8", "float")(Similarity.ivfAppend(qpath, extra, "id", "vec"))
+    refused("int8", "float")(
+      Similarity.ivfIngestBatch(qpath, extra, "id", "vec", 2L))
+    val pqpath = s"$parent/pqidx"
+    Similarity.buildIvfPqIndex(all, "id", "vec", nlist = 4, m = 2, pqpath,
+      ksub = 8)
+    refused("PQ")(
+      Similarity.ivfAppend(pqpath, extra, "id", "vec", quantized = true))
+    refused("PQ")(Similarity.ivfIngestBatch(
+      pqpath, extra, "id", "vec", 0L, quantized = true))
+    Similarity.buildIvfIndex(all, "id", "vec", nlist = 4, pqpath)
+    refused("float", "pq")(Similarity.ivfAppend(pqpath, extra, "id", "vec"))
+    refused("float", "pq")(
+      Similarity.ivfIngestBatch(pqpath, extra, "id", "vec", 0L))
+    assert(spark.read.parquet(s"$path/corpus").count() === 60L)
+    assert(spark.read.parquet(s"$qpath/corpus").count() === 60L)
+    assert(spark.read.parquet(s"$pqpath/corpus").count() === 60L)
+    // a refused ingest leaves no crash state: the same batch id applies
+    Similarity.ivfIngestBatch(path, extra, "id", "vec", 2L)
+    assert(spark.read.parquet(s"$path/corpus").count() === 64L)
   }
 
   test("ivf centroids are deterministic") {

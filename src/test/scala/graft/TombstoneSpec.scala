@@ -107,7 +107,7 @@ class TombstoneSpec extends SparkSpec {
     val cents = Similarity.trainIvfCentroids(all, "id", "vec", nlist = 4)
     val qa = s"$parent/qa"
     Similarity.ivfInit(spark, cents, qa)
-    Similarity.ivfQAppend(qa, all, "id", "vec")
+    Similarity.ivfAppend(qa, all, "id", "vec", quantized = true)
     Tombstones.add(spark, qa, doomed, "id")
     assert(!Similarity
       .ivfQTopKFederated(Seq(qa), qdf, "id", "vec", k = 48, nprobe = 4)
