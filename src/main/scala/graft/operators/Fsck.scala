@@ -60,11 +60,14 @@ import org.apache.spark.sql.types.StructType
   */
 object Fsck {
 
-  private def cnt(df: DataFrame, kind: String): DataFrame =
+  /** The one violation-row idiom of the audits and the soundness gates:
+    * `cnt` emits `(kind, n)` when `df` is non-empty, `scalarViol` one
+    * `(kind, 1)` row unless `ok`; both emit nothing when sound. */
+  private[graft] def cnt(df: DataFrame, kind: String): DataFrame =
     df.agg(count(lit(1)).as("n")).filter(col("n") > 0)
       .select(lit(kind).as("kind"), col("n"))
 
-  private def scalarViol(ok: Boolean, kind: String, spark: SparkSession): DataFrame =
+  private[graft] def scalarViol(ok: Boolean, kind: String, spark: SparkSession): DataFrame =
     if (ok) spark.range(0).select(lit(kind).as("kind"), col("id").as("n"))
     else spark.range(1).select(lit(kind).as("kind"), lit(1L).as("n"))
 

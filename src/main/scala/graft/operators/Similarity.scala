@@ -955,9 +955,9 @@ object Similarity {
     * job to amortize here at all. Works on all three layouts — float,
     * int8 ([[buildIvfIndex]] with `quantized`) and PQ
     * ([[buildIvfPqIndex]], whose shards must also share one codebooks
-    * table) — the row schema is unioned blind. Caller contract: id sets
-    * pairwise disjoint (the append contract), shards of one layout.
-    * `dest` must not exist.
+    * table); shards whose layouts ([[ivfCodec]]) differ are refused
+    * before anything is written. Caller contract: id sets pairwise
+    * disjoint (the append contract). `dest` must not exist.
     *
     * `move = false` (default) preserves the shards but streams every
     * corpus byte through one driver thread; `move = true` renames part
@@ -978,6 +978,12 @@ object Similarity {
     val destP = new org.apache.hadoop.fs.Path(dest)
     val fs = destP.getFileSystem(hconf)
     require(!fs.exists(destP), s"ivfMerge: $dest already exists")
+    // one corpus holds one row schema: a float shard merged with an int8
+    // one is the mixed corpus ivfCodec refuses every later write and probe
+    val layouts = paths.map(p => p -> ivfCodec(spark, p, None, "ivfMerge").layout)
+    layouts.tail.foreach { case (p, l) => require(l == layouts.head._2,
+      s"ivfMerge: layout mismatch — ${paths.head} stores the " +
+        s"${layouts.head._2} layout, $p the $l layout; merge shards of one layout") }
     // reader-isolation brackets + manifest commits ([[StableRead]]):
     // dest always — and with move=true the source shards too, since the
     // part-file renames CONSUME them under any reader still probing

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{CurationFilters, Dedup, DedupRegistry, LinkGraph, Multimodal, NearDupRegistry, Packing, RangeJoin, Retrieval, Sampling, Similarity, Skew, SnapshotDiff, TextAnalysis}
+import graft.operators.Fsck.{cnt, scalarViol}
 import graft.sources.DocJsonl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -44,75 +45,73 @@ object Curation {
       .orderBy(col("lang"))
   }
 
+  // Every scratch dir of the gates below, per-JVM setup and per-
+  // invocation state alike, lives under this one root, deleted when the
+  // JVM exits (the MarketAnalytics.replayDir hook: Hadoop's hook manager
+  // runs it below Spark's priority, after the streams stop writing). No
+  // oracle reads a Curation scratch.
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-curation-gates")
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => org.apache.commons.io.FileUtils.deleteQuietly(root.toFile), 20)
+    root
+  }
+
+  private def scratch(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
+
   // q59's persisted-index scratch, one per JVM (every write inside it is
   // mode=overwrite, so reuse is safe and bounded)
-  private lazy val ivfIndexDir: String =
-    java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString
+  private lazy val ivfIndexDir: String = scratch("ivf-idx")
 
   // q112's append scratch: per-JVM is safe because each invocation
   // OVERWRITE-builds the base index first (clearing prior appends)
-  private lazy val ivfAppendDir: String =
-    java.nio.file.Files.createTempDirectory("graft-ivf-app").toString
+  private lazy val ivfAppendDir: String = scratch("ivf-app")
 
   // q79's JSONL round-trip scratch, same per-JVM overwrite contract
-  private lazy val jsonlDir: String =
-    java.nio.file.Files.createTempDirectory("graft-jsonl").toString
+  private lazy val jsonlDir: String = scratch("jsonl")
 
   // q134's persisted BM25 index scratch, same per-JVM overwrite contract
   // as the IVF index dirs (every invocation overwrite-builds first)
-  private lazy val bm25IndexDir: String =
-    java.nio.file.Files.createTempDirectory("graft-bm25-idx").toString
+  private lazy val bm25IndexDir: String = scratch("bm25-idx")
 
   // q143's append scratch: per-JVM is safe because each invocation
   // OVERWRITE-builds the base index first (clearing prior appends) —
   // the q112 contract for the lexical index
-  private lazy val bm25AppendDir: String =
-    java.nio.file.Files.createTempDirectory("graft-bm25-app").toString
+  private lazy val bm25AppendDir: String = scratch("bm25-app")
 
   // q145's compaction scratch, same overwrite-first contract
-  private lazy val bm25CompactDir: String =
-    java.nio.file.Files.createTempDirectory("graft-bm25-cmp").toString
+  private lazy val bm25CompactDir: String = scratch("bm25-cmp")
 
   // q149's IVF-compaction scratch, same overwrite-first contract
-  private lazy val ivfCompactDir: String =
-    java.nio.file.Files.createTempDirectory("graft-ivf-cmp").toString
+  private lazy val ivfCompactDir: String = scratch("ivf-cmp")
 
   // q151's persisted language-ID model scratch, same contract
-  private lazy val langIdModelDir: String =
-    java.nio.file.Files.createTempDirectory("graft-langid").toString
+  private lazy val langIdModelDir: String = scratch("langid")
 
   // q152's partitioned-corpus scratch (rebuilt by overwrite per invocation)
-  private lazy val deleteDir: String =
-    java.nio.file.Files.createTempDirectory("graft-del").toString
+  private lazy val deleteDir: String = scratch("del")
 
   // q155's BM25 index-deletion scratch, same overwrite-first contract
-  private lazy val bm25DeleteDir: String =
-    java.nio.file.Files.createTempDirectory("graft-bm25-del").toString
+  private lazy val bm25DeleteDir: String = scratch("bm25-del")
 
   // q189's takedown-queue scratch, same overwrite-first contract
-  private lazy val bm25QueueDir: String =
-    java.nio.file.Files.createTempDirectory("graft-bm25-queue").toString
+  private lazy val bm25QueueDir: String = scratch("bm25-queue")
 
   // q156's IVF index-deletion scratch, same overwrite-first contract
-  private lazy val ivfDeleteDir: String =
-    java.nio.file.Files.createTempDirectory("graft-ivf-del").toString
+  private lazy val ivfDeleteDir: String = scratch("ivf-del")
 
   // q177/q178's soft-delete (tombstone) scratches, same contract
-  private lazy val bm25TombDir: String =
-    java.nio.file.Files.createTempDirectory("graft-bm25-tomb").toString
-  private lazy val ivfTombDir: String =
-    java.nio.file.Files.createTempDirectory("graft-ivf-tomb").toString
+  private lazy val bm25TombDir: String = scratch("bm25-tomb")
+  private lazy val ivfTombDir: String = scratch("ivf-tomb")
 
   // q180/q181's vacuum scratches, same overwrite-first contract
-  private lazy val bm25VacDir: String =
-    java.nio.file.Files.createTempDirectory("graft-bm25-vac").toString
-  private lazy val ivfVacDir: String =
-    java.nio.file.Files.createTempDirectory("graft-ivf-vac").toString
+  private lazy val bm25VacDir: String = scratch("bm25-vac")
+  private lazy val ivfVacDir: String = scratch("ivf-vac")
 
   // q182's serving-stack scratch parent (base reset by copyInto, delta
   // deleted per invocation — bm25Init refuses a pre-existing index)
-  private lazy val servParent: String =
-    java.nio.file.Files.createTempDirectory("graft-serv").toString
+  private lazy val servParent: String = scratch("serv")
 
   /** Per-(sf dir) memoized BASE index builds, file-copied into each
     * gate's private scratch: q143/q145/q155 all open with the SAME
@@ -139,7 +138,7 @@ object Curation {
 
   private def bm25Base(s: SparkSession, dir: String): String =
     baseIndexes.computeIfAbsent(s"bm25|$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-bm25-base").toString
+      val p = scratch("bm25-base")
       Retrieval.buildBm25Index(
         t(s, dir, "documents").filter(col("doc_id") % 3 =!= 0),
         "doc_id", "text", p)
@@ -148,7 +147,7 @@ object Curation {
 
   private def ivfBase(s: SparkSession, dir: String): String =
     baseIndexes.computeIfAbsent(s"ivf|$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-ivf-base").toString
+      val p = scratch("ivf-base")
       Similarity.buildIvfIndex(
         t(s, dir, "embeddings").filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding", nlist = 16, p)
@@ -171,7 +170,7 @@ object Curation {
     // it is table-layout luck (q175-first at sf0.1 found it)
     val base = bm25Base(s, dir)
     baseIndexes.computeIfAbsent(s"bm25app|$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-bm25-bapp").toString
+      val p = scratch("bm25-bapp")
       copyInto(base, p)
       Retrieval.bm25Append(
         p, t(s, dir, "documents").filter(col("doc_id") % 3 === 0),
@@ -183,7 +182,7 @@ object Curation {
   private def ivfBaseAppended(s: SparkSession, dir: String): String = {
     val base = ivfBase(s, dir) // outside: no nested computeIfAbsent
     baseIndexes.computeIfAbsent(s"ivfapp|$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-ivf-bapp").toString
+      val p = scratch("ivf-bapp")
       copyInto(base, p)
       val emb = t(s, dir, "embeddings")
       Similarity.ivfAppend(
@@ -202,8 +201,7 @@ object Curation {
     */
   private def bm25Shard(s: SparkSession, dir: String, shard: Int): String =
     baseIndexes.computeIfAbsent(s"bm25shard4_$shard|$dir", _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory(s"graft-bm25-sh$shard").toString
+      val p = scratch(s"bm25-sh$shard")
       Retrieval.buildBm25Index(
         t(s, dir, "documents").filter(col("doc_id") % 4 === shard),
         "doc_id", "text", p)
@@ -212,40 +210,32 @@ object Curation {
 
   // q158's merge destination parent (the merge target itself must not
   // pre-exist, so each invocation deletes and re-points a child path)
-  private lazy val bm25MergeParent: String =
-    java.nio.file.Files.createTempDirectory("graft-bm25-merge").toString
+  private lazy val bm25MergeParent: String = scratch("bm25-merge")
 
   // q159's quantized-IVF index scratch, same overwrite-first contract
-  private lazy val ivfQDir: String =
-    java.nio.file.Files.createTempDirectory("graft-ivfq").toString
+  private lazy val ivfQDir: String = scratch("ivfq")
 
   // q185's requantize scratch, same overwrite-first contract
-  private lazy val ivfRqDir: String =
-    java.nio.file.Files.createTempDirectory("graft-ivfrq").toString
+  private lazy val ivfRqDir: String = scratch("ivfrq")
 
   // q161's shard/merge scratch parent (children deleted per invocation —
   // ivfInit and ivfMerge both refuse pre-existing targets)
-  private lazy val ivfMergeParent: String =
-    java.nio.file.Files.createTempDirectory("graft-ivf-merge").toString
+  private lazy val ivfMergeParent: String = scratch("ivf-merge")
 
   // q162's streaming-ingest index scratch (reset by copyInto per
   // invocation, which also clears the prior run's ingestlog markers)
-  private lazy val bm25IngestDir: String =
-    java.nio.file.Files.createTempDirectory("graft-bm25-ing").toString
+  private lazy val bm25IngestDir: String = scratch("bm25-ing")
 
   // q163's scratch parent (child index deleted per invocation —
   // ivfInit refuses a pre-existing centroid table)
-  private lazy val ivfIngestParent: String =
-    java.nio.file.Files.createTempDirectory("graft-ivf-ing").toString
+  private lazy val ivfIngestParent: String = scratch("ivf-ing")
 
   // q167's registry scratch parent (child deleted per invocation —
   // DedupRegistry.init refuses a pre-existing registry)
-  private lazy val regIngestParent: String =
-    java.nio.file.Files.createTempDirectory("graft-reg-ing").toString
+  private lazy val regIngestParent: String = scratch("reg-ing")
 
   // q168's split-index scratch parent (child deleted per invocation)
-  private lazy val ivfSplitParent: String =
-    java.nio.file.Files.createTempDirectory("graft-ivf-split").toString
+  private lazy val ivfSplitParent: String = scratch("ivf-split")
 
   /** q171's shard registries: the three [[dedupStreamPhases]] slices
     * each one-batch-ingested into its own registry — the parallel
@@ -254,8 +244,7 @@ object Curation {
     */
   private def regShard(s: SparkSession, dir: String, shard: Int): String =
     baseIndexes.computeIfAbsent(s"regsh3_$shard|$dir", _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory(s"graft-reg-sh$shard").toString + "/reg"
+      val p = scratch(s"reg-sh$shard") + "/reg"
       DedupRegistry.init(s, p, buckets = 16)
       DedupRegistry.ingestBatch(
         p, dedupStreamPhases(s, dir)(shard), "doc_id", "text", 0L)
@@ -263,8 +252,7 @@ object Curation {
     })
 
   // q171's merge destination parent (dest must not pre-exist)
-  private lazy val regMergeParent: String =
-    java.nio.file.Files.createTempDirectory("graft-reg-merge").toString
+  private lazy val regMergeParent: String = scratch("reg-merge")
 
   /** q175's composed curate-then-index pair: the q169 composition
     * driven as three direct sink applies over [[dedupStreamPhases]] —
@@ -276,7 +264,7 @@ object Curation {
   private def composedPair(s: SparkSession, dir: String): (String, String) = {
     val phases = dedupStreamPhases(s, dir) // outside the memoization
     val root = baseIndexes.computeIfAbsent(s"composed|$dir", _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-composed").toString
+      val r = scratch("composed")
       DedupRegistry.init(s, s"$r/reg", buckets = 16)
       Retrieval.bm25Init(s, s"$r/idx", buckets = 32)
       val sink = DedupRegistry.dedupIndexStreamSink(
@@ -359,9 +347,6 @@ object Curation {
       .select(col("id"), col("text"))
       .transform(graft.CacheScope.persisted)
     val accIds = acc.select(col("id"))
-    def cnt(df: DataFrame, kind: String): DataFrame =
-      df.agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit(kind).as("kind"), col("n"))
     val alien = cnt(accIds.join(
       stream.select(col("doc_id").as("id")), Seq("id"), "left_anti"),
       "alien_id")
@@ -407,11 +392,8 @@ object Curation {
     // (b) stats count exactly
     val st = s.read.parquet(s"$path/stats").collect()(0)
     val (accN, streamN) = (acc.count(), stream.count())
-    val statsViol =
-      if (st.getAs[Long]("n_docs") == accN &&
-          st.getAs[Long]("n_dropped") == streamN - accN)
-        s.range(0).select(lit("stats_mismatch").as("kind"), col("id").as("n"))
-      else s.range(1).select(lit("stats_mismatch").as("kind"), lit(1L).as("n"))
+    val statsViol = scalarViol(st.getAs[Long]("n_docs") == accN &&
+      st.getAs[Long]("n_dropped") == streamN - accN, "stats_mismatch", s)
     alien.unionByName(dupReg).unionByName(withinViol)
       .unionByName(crossViol).unionByName(unsound).unionByName(statsViol)
   }
@@ -421,8 +403,7 @@ object Curation {
     */
   private def ndregShard(s: SparkSession, dir: String, shard: Int): String =
     baseIndexes.computeIfAbsent(s"ndregsh3_$shard|$dir", _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory(s"graft-ndreg-sh$shard").toString + "/reg"
+      val p = scratch(s"ndreg-sh$shard") + "/reg"
       NearDupRegistry.init(s, p, buckets = 16)
       NearDupRegistry.ingestBatch(
         p, ndMergeSlices(s, dir)(shard), "doc_id", "text", 0L)
@@ -430,13 +411,11 @@ object Curation {
     })
 
   // q172's merge destination parent (dest must not pre-exist)
-  private lazy val ndregMergeParent: String =
-    java.nio.file.Files.createTempDirectory("graft-ndreg-merge").toString
+  private lazy val ndregMergeParent: String = scratch("ndreg-merge")
 
   // q179's tombstone-arm scratch (reset by copyInto per invocation —
   // the memoized shard must never be mutated)
-  private lazy val ndregProbeTombParent: String =
-    java.nio.file.Files.createTempDirectory("graft-ndreg-ptomb").toString
+  private lazy val ndregProbeTombParent: String = scratch("ndreg-ptomb")
 
   /** q174's shared-quantizer IVF shards — the q161 construction (train
     * ONCE, ivfInit each shard, parallel fills) memoized as SETUP: the
@@ -460,8 +439,7 @@ object Curation {
     val sharedCents = fullCentroids(s, dir) // outside the memoization
     baseIndexes.computeIfAbsent(s"ivffedsh4|$dir", _ => {
       val emb = t(s, dir, "embeddings")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-ivf-fed").toString
+      val root = scratch("ivf-fed")
       val cents = sharedCents
       (0 until 4).foreach { i =>
         val sh = s"$root/sh$i"
@@ -502,6 +480,12 @@ object Curation {
     Seq(p0, p1, p2)
   }
 
+  /** q163/q166/q208's stream: the embeddings in three vec_id mod-3
+    * phases, staged once under one key. */
+  private def embStreamPhases(emb: DataFrame): Seq[DataFrame] =
+    (0 until 3).map(i => emb.filter(col("vec_id") % 3 === i)
+      .select(col("vec_id"), col("embedding")))
+
   /** Stage phase frames as single parquet files `phase_NNN.parquet`
     * with strictly increasing mod times (the MarketAnalytics
     * writePhases discipline: a maxFilesPerTrigger=1 file stream then
@@ -514,7 +498,7 @@ object Curation {
 
   private def stagePhases(key: String, phases: Seq[DataFrame]): String =
     stagedPhaseWrites.computeIfAbsent(key, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-ing-stage")
+      val root = java.nio.file.Paths.get(scratch("ing-stage"))
       phases.zipWithIndex.foreach { case (df, i) =>
         val stage = root.resolve(s"stage_$i").toString
         df.coalesce(1).write.mode("overwrite").parquet(stage)
@@ -529,19 +513,66 @@ object Curation {
       root.toString
     })
 
-  /** Write one frame as a single parquet part renamed to
-    * `<tag>_<part>.parquet` inside `dstDir` — manufactures the tagged
-    * increment files a crashed stream-ingest apply leaves behind (the
-    * q162/q163 crash windows).
+  /** The exactly-once drill of every stream-ingest gate — the
+    * epoch-idempotent foreachBatch sink contract, driven for real. The
+    * phases are staged once per `key` ([[stagePhases]]) and streamed
+    * through `sink` one micro-batch per phase; the stream is STOPPED
+    * after every phase and RESUMED from the same checkpoint, a
+    * kill-restart at every batch boundary, so batch ids must continue
+    * (a sink that restarted numbering would hit its own applied markers
+    * and silently drop the tail). `between(i)` runs while the stream is
+    * down after phase i commits, where production runs a takedown or a
+    * probe: between micro-batches, never inside one. The drill ends
+    * with a post-commit re-delivery of batch 1 through the same sink,
+    * which must skip whole. A gate plants batch-0 crash debris first
+    * with the kit below; batch 0's delivery must erase it before
+    * applying. Stream dir and checkpoint are per invocation: a sink ties
+    * an estate to ONE checkpoint lineage, and each gate rebuilds its
+    * estate per invocation too.
     */
-  private def plantTaggedPart(df: DataFrame, dstDir: String, tag: String): Unit = {
-    val stage = java.nio.file.Files.createTempDirectory("graft-plant").toString
+  private def replayPhases(
+      s: SparkSession,
+      key: String,
+      phases: Seq[DataFrame],
+      sink: (DataFrame, Long) => Unit,
+      between: Int => Unit = _ => ()): Unit = {
+    val spark = Tables.configure(s)
+    val staged = stagePhases(key, phases)
+    val run = java.nio.file.Paths.get(scratch("ing-run"))
+    val streamDir = run.resolve("stream")
+    java.nio.file.Files.createDirectories(streamDir)
+    try phases.indices.foreach { i =>
+      val name = f"phase_$i%03d.parquet"
+      val dst = streamDir.resolve(name)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(staged, name), dst)
+      dst.toFile.setLastModified(1000000000000L + i * 60000L)
+      val q = spark.readStream.schema(phases.head.schema)
+        .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
+        .writeStream
+        .foreachBatch((df: DataFrame, id: Long) => sink(df, id))
+        .option("checkpointLocation", run.resolve("ckpt").toString)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      between(i)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(run.toFile)
+    sink(spark.read.parquet(s"$staged/phase_001.parquet"), 1L)
+  }
+
+  // ---- the crash-plant kit: the batch-0 debris a mid-apply crash
+  // leaves, which batch 0's delivery in [[replayPhases]] must erase ----
+
+  /** Write one frame as a single parquet part renamed to
+    * `b0_<part>.parquet` inside `dstDir`: the tagged increment file a
+    * crashed batch-0 apply leaves behind.
+    */
+  private def plantTaggedPart(df: DataFrame, dstDir: String): Unit = {
+    val stage = scratch("plant")
     df.coalesce(1).write.mode("overwrite").parquet(stage)
     val part = new java.io.File(stage).listFiles()
       .find(_.getName.endsWith(".parquet")).get
     new java.io.File(dstDir).mkdirs()
     java.nio.file.Files.move(part.toPath,
-      new java.io.File(dstDir, s"${tag}_${part.getName}").toPath,
+      new java.io.File(dstDir, s"b0_${part.getName}").toPath,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
     // reachable-state fidelity: a REAL mid-apply crash always leaves
@@ -558,102 +589,83 @@ object Curation {
     }
     require(p != null && new java.io.File(p, "_commit_manifest").exists(),
       s"plantTaggedPart: no estate root above $dstDir")
-    new java.io.File(p, s"_ingest_${tag}_tmp").mkdirs()
+    new java.io.File(p, "_ingest_b0_tmp").mkdirs()
   }
 
-  /** Phase-ordered foreachBatch replay with a KILL-AND-RESTART across
-    * the batch boundary after `firstRun` phases: run 1 streams the
-    * first `firstRun` phase files and stops; the remaining files are
-    * then added and run 2 RESUMES FROM THE SAME CHECKPOINT — batch ids
-    * must continue (a sink that restarted numbering would hit its own
-    * applied markers and silently drop the tail). Stream dir and
-    * checkpoint are per-invocation (fresh lineage each time — the
-    * stream-sink contract ties an index to ONE checkpoint lineage, and
-    * the gate's index is rebuilt per invocation too).
+  private def statsBuckets(s: SparkSession, path: String): Long =
+    s.read.parquet(s"$path/stats").select(col("buckets")).collect()(0).getLong(0)
+
+  /** BM25 junk in the "spark" bucket: a posting (id -999 scoring
+    * "spark" at tf 99), its doclen row, and a terms-delta part that
+    * would inflate "spark"'s merge-on-read df 100x and collapse its idf.
     */
-  private def runPhasedIngest(
-      s: SparkSession,
-      stagedRoot: String,
-      schema: org.apache.spark.sql.types.StructType,
-      nPhases: Int,
-      firstRun: Int,
-      sink: (DataFrame, Long) => Unit): Unit = {
-    val spark = Tables.configure(s)
-    val shm = new java.io.File("/dev/shm")
-    val scratch =
-      if (shm.isDirectory && shm.canWrite)
-        java.nio.file.Files.createTempDirectory(shm.toPath, "graft-ing-run")
-      else java.nio.file.Files.createTempDirectory("graft-ing-run")
-    val streamDir = scratch.resolve("stream")
-    java.nio.file.Files.createDirectories(streamDir)
-    val ckpt = scratch.resolve("ckpt").toString
-    def addPhases(range: Range): Unit = range.foreach { i =>
-      val name = f"phase_$i%03d.parquet"
-      val dst = streamDir.resolve(name)
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(stagedRoot, name), dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dst.toFile.setLastModified(1000000000000L + i * 60000L)
-    }
-    def run(): Unit = {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
-        .writeStream
-        .foreachBatch((df: DataFrame, id: Long) => sink(df, id))
-        .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    try {
-      addPhases(0 until firstRun); run()
-      addPhases(firstRun until nPhases); run()
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(scratch.toFile)
-    }
+  private def plantBm25Junk(s: SparkSession, path: String): Unit = {
+    import s.implicits._
+    val bucket = s.range(1)
+      .select(pmod(xxhash64(lit("spark")), lit(statsBuckets(s, path))))
+      .collect()(0).getLong(0)
+    plantTaggedPart(Seq((-999L, "spark", 99L)).toDF("id", "term", "tf"),
+      s"$path/postings/bucket=$bucket")
+    plantTaggedPart(Seq((-999L, 99L)).toDF("id", "dl"), s"$path/doclen")
+    plantTaggedPart(Seq(("spark", 99999L)).toDF("term", "df"),
+      s"$path/terms/bucket=$bucket")
   }
 
-  /** [[runPhasedIngest]]'s PHASE-STEPPED variant for the q182 serving
-    * drill: the stream is started, drained, and STOPPED around every
-    * single phase file, resuming the SAME checkpoint each time — a real
-    * kill-restart at every batch boundary — and `between(i)` runs with
-    * the stream DOWN after phase i commits (where a production takedown
-    * queue or probe runs: between micro-batches, never inside one).
+  /** A dedup-registry junk row (id -999) in its digest's own bucket. */
+  private def plantRegistryJunk(s: SparkSession, path: String): Unit = {
+    import s.implicits._
+    val junk = Seq((-999L, "__GRAFT_JUNK__")).toDF("id", "text")
+      .withColumn("digest", md5(col("text")))
+    val bucket = junk
+      .select(pmod(xxhash64(col("digest")), lit(statsBuckets(s, path))))
+      .collect()(0).getLong(0)
+    plantTaggedPart(junk, s"$path/corpus/bucket=$bucket")
+  }
+
+  /** Near-dup registry junk: a corpus row and a band row for id -999. */
+  private def plantNearDupJunk(s: SparkSession, path: String): Unit = {
+    import s.implicits._
+    plantTaggedPart(
+      Seq((-999L, "__GRAFT_JUNK__", Seq(1L, 2L))).toDF("id", "text", "hs"),
+      s"$path/corpus/bucket=3")
+    plantTaggedPart(Seq((0, 12345, -999L)).toDF("band", "bkey", "id"),
+      s"$path/bands/pk=1")
+  }
+
+  /** An IVF junk vector: the one-row, one-column frame `vec` under id
+    * -999 in its nearest cell under `cents`, where a probe for that
+    * vector ranks it #1 at sim 1.0 if recovery misses it.
     */
-  private def runPhasedIngestStepped(
-      s: SparkSession,
-      stagedRoot: String,
-      schema: org.apache.spark.sql.types.StructType,
-      nPhases: Int,
-      sink: (DataFrame, Long) => Unit)(between: Int => Unit): Unit = {
-    val spark = Tables.configure(s)
-    val shm = new java.io.File("/dev/shm")
-    val scratch =
-      if (shm.isDirectory && shm.canWrite)
-        java.nio.file.Files.createTempDirectory(shm.toPath, "graft-serv-run")
-      else java.nio.file.Files.createTempDirectory("graft-serv-run")
-    val streamDir = scratch.resolve("stream")
-    java.nio.file.Files.createDirectories(streamDir)
-    val ckpt = scratch.resolve("ckpt").toString
-    try {
-      (0 until nPhases).foreach { i =>
-        val name = f"phase_$i%03d.parquet"
-        val dst = streamDir.resolve(name)
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(stagedRoot, name), dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.toFile.setLastModified(1000000000000L + i * 60000L)
-        val q = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
-          .writeStream
-          .foreachBatch((df: DataFrame, id: Long) => sink(df, id))
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        between(i)
-      }
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(scratch.toFile)
-    }
+  private def plantIvfJunk(
+      path: String, vec: DataFrame, cents: Array[Array[Double]]): Unit = {
+    val junk = vec.select(lit(-999L).as("id"),
+        col(vec.columns.head).cast("array<double>").as("vec"))
+      .withColumn("cell", element_at(
+        graft.functions.VecExprs.nearestCentroids(
+          col("vec"), cents.map(_.toSeq).toSeq, 1), 1))
+    val cell = junk.select(col("cell")).collect()(0).getInt(0)
+    plantTaggedPart(junk.select(col("id"), col("vec")), s"$path/corpus/cell=$cell")
+  }
+
+  /** The stats mid-swap window: the state right after `rename(new, cur)`
+    * and before the marker — the true table in `stats_b0_bak`, a live
+    * `stats` corrupted to n_docs (and n_dropped, where present) 777777.
+    * A real crash also leaves the bak's _retire_to sidecar; the
+    * marker-absent recovery (restore) never reads it, so the plant
+    * omits it.
+    */
+  private def plantStatsMidSwap(s: SparkSession, path: String): Unit = {
+    val st = s.read.parquet(s"$path/stats")
+    st.select(st.columns.toSeq.map {
+        case c @ ("n_docs" | "n_dropped") => lit(777777L).as(c)
+        case c => col(c)
+      }: _*)
+      .coalesce(1).write.parquet(s"$path/stats_b0_corrupt_tmp")
+    org.apache.commons.io.FileUtils.moveDirectory(
+      new java.io.File(s"$path/stats"), new java.io.File(s"$path/stats_b0_bak"))
+    org.apache.commons.io.FileUtils.moveDirectory(
+      new java.io.File(s"$path/stats_b0_corrupt_tmp"),
+      new java.io.File(s"$path/stats"))
   }
 
   /** q145's variant: the same base with its 1/3 remainder appended in
@@ -664,7 +676,7 @@ object Curation {
   private def bm25BaseAppended2(s: SparkSession, dir: String): String = {
     val base = bm25Base(s, dir) // outside: no nested computeIfAbsent
     baseIndexes.computeIfAbsent(s"bm25app2|$dir", _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-bm25-bapp2").toString
+      val p = scratch("bm25-bapp2")
       copyInto(base, p)
       val docs = t(s, dir, "documents")
       Retrieval.bm25Append(
@@ -709,10 +721,9 @@ object Curation {
     val hits = probeFn(queries)
       .withColumn("sim", round(col("sim"), 4))
       .transform(graft.CacheScope.persisted)
-    val unsound = annUnsoundHits(
-        hits.select(col("qid"), col("id"), col("sim")), emb, queries)
-      .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-      .select(lit("unsound_hit").as("kind"), col("n"))
+    val unsound = cnt(annUnsoundHits(
+        hits.select(col("qid"), col("id"), col("sim")), emb, queries),
+      "unsound_hit")
     // position-aligned load + posToCell mapping: after ivfSplitCells the
     // centroid table has gaps, so positions are NOT cell ids (q168)
     val (cellIds, cents) = Similarity.loadCentroidTable(s, path)
@@ -729,12 +740,10 @@ object Curation {
     // "the hit came from a probed partition", which is exactly this
     val cCell = s.read.parquet(s"$path/corpus")
       .select(col("id"), col("cell").cast("int").as("ccell"))
-    val unpruned = hits
+    val unpruned = cnt(hits
       .join(broadcast(qCells), "qid")
       .join(cCell, "id")
-      .filter(!array_contains(col("cells"), col("ccell")))
-      .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-      .select(lit("unpruned_hit").as("kind"), col("n"))
+      .filter(!array_contains(col("cells"), col("ccell"))), "unpruned_hit")
     val vacuous = hits.agg(count(lit(1)).as("n")).filter(col("n") === 0)
       .select(lit("no_hits").as("kind"), col("n"))
     unsound.unionByName(unpruned).unionByName(vacuous)
@@ -2453,8 +2462,7 @@ object Curation {
           call_function("div", col("ts"), lit(86400L * 1000000000L)))
       val perDay = ev.groupBy(col("event_type"), col("day"))
         .agg(hll_sketch_agg(col("user_id")).as("sk"))
-      val skDir = java.nio.file.Files
-        .createTempDirectory("graft-q126-sketches").toString
+      val skDir = scratch("q126-sketches")
       perDay.write.mode("overwrite").parquet(skDir)
       def unionEst(df: DataFrame, as: String) =
         df.groupBy(col("event_type"))
@@ -2839,8 +2847,7 @@ object Curation {
     // lost, reordered, or truncated merge row moves the encoding.
     "q188_bpe_artifact" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tok = s"${java.nio.file.Files
-        .createTempDirectory("graft-q188").toString}/bpe"
+      val tok = s"${scratch("q188")}/bpe"
       TextAnalysis.bpeSave(
         s, TextAnalysis.bpeMerges(docs, "text", rounds = 4), tok)
       val loaded = TextAnalysis.bpeLoad(s, tok)
@@ -3000,8 +3007,7 @@ object Curation {
               (bid % 256).cast("int")),
             lit(4), lit(3)).as("feat"))
         .localCheckpoint(true)
-      val idx = s"${java.nio.file.Files
-        .createTempDirectory("graft-q195").toString}/ivf"
+      val idx = s"${scratch("q195")}/ivf"
       Similarity.buildIvfIndex(feats, "doc_id", "feat", nlist = 4, idx)
       val queries = feats.filter(col("doc_id") < 1000000L)
         .select(col("doc_id").as("img_id"), col("feat").as("qf"))
@@ -3012,10 +3018,8 @@ object Curation {
         .filter(col("id") === col("qid") + 1000000L &&
           round(col("sim"), 6) === 1.0)
         .select(col("qid")).distinct()
-      val missing = queries.select(col("img_id").as("qid"))
-        .join(ok, Seq("qid"), "left_anti")
-        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit("twin_not_in_top2").as("kind"), col("n"))
+      val missing = cnt(queries.select(col("img_id").as("qid"))
+        .join(ok, Seq("qid"), "left_anti"), "twin_not_in_top2")
       val probed = queries
         .agg(count(lit(1)).as("n"))
         .select(lit("queries_probed").as("kind"), col("n"))
@@ -3109,8 +3113,7 @@ object Curation {
           ImageExprs.audioBandFeatures(
             col("wav"), lit(24), lit(256)).as("feat"))
         .localCheckpoint(true)
-      val idx = s"${java.nio.file.Files
-        .createTempDirectory("graft-q197").toString}/ivf"
+      val idx = s"${scratch("q197")}/ivf"
       Similarity.buildIvfIndex(feats, "doc_id", "feat", nlist = 4, idx)
       val queries = feats.filter(col("doc_id") < 1000000L)
         .select(col("doc_id").as("aud_id"), col("feat").as("qf"))
@@ -3121,10 +3124,8 @@ object Curation {
         .filter(col("id") === col("qid") + 1000000L &&
           round(col("sim"), 6) === 1.0)
         .select(col("qid")).distinct()
-      val missing = queries.select(col("aud_id").as("qid"))
-        .join(ok, Seq("qid"), "left_anti")
-        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit("twin_not_in_top2").as("kind"), col("n"))
+      val missing = cnt(queries.select(col("aud_id").as("qid"))
+        .join(ok, Seq("qid"), "left_anti"), "twin_not_in_top2")
       val probed = queries
         .agg(count(lit(1)).as("n"))
         .select(lit("queries_probed").as("kind"), col("n"))
@@ -3139,13 +3140,10 @@ object Curation {
     // ivfIngestBatch protocol. Composition soundness is the q169
     // rationale: featurize is a deterministic per-row map, so every
     // re-delivered batch re-derives the SAME vectors and the apply's
-    // idempotence carries. Drill: manufactured batch-0 crash debris (a
-    // tagged junk part planted in the junk vector's own nearest cell —
-    // recovery must erase it or it becomes a cosine-1.0 top hit),
-    // 3-phase replay with a kill-and-restart across the batch
-    // boundary, and a post-commit re-delivery that must skip whole.
-    // Gate: every image's feature-probe must return ITSELF as top-1 at
-    // cosine 1.0 (the planted junk shares image 0's features with a
+    // idempotence carries. Drill: [[replayPhases]] over 3 phases, after
+    // an IVF junk vector (image 0's features) planted in its nearest
+    // cell. Gate: every image's feature-probe must return ITSELF as
+    // top-1 at cosine 1.0 (the planted junk shares image 0's features with a
     // smaller id, so surviving debris flips image 0's top-1), and
     // corpus_rows pins exactly-once cardinality (a double-applied
     // batch or surviving junk breaks the count).
@@ -3168,34 +3166,20 @@ object Curation {
           ImageExprs.imageGridFeatures(col("img"), lit(4), lit(4))
             .as("feat"))
         .localCheckpoint(true)
-      val path = s"${java.nio.file.Files
-        .createTempDirectory("graft-q198").toString}/ivf"
+      val path = s"${scratch("q198")}/ivf"
       val cents = Similarity.trainIvfCentroids(
         feats, "img_id", "feat", nlist = 4)
       Similarity.ivfInit(spark, cents, path)
-      val junk = feats.filter(col("img_id") === 0L)
-        .select(lit(-999L).as("id"),
-          col("feat").cast("array<double>").as("vec"))
-        .withColumn("cell", element_at(
-          graft.functions.VecExprs.nearestCentroids(
-            col("vec"), cents.map(_.toSeq).toSeq, 1), 1))
-      val junkCell = junk.select(col("cell")).collect()(0).getInt(0)
-      plantTaggedPart(junk.select(col("id"), col("vec")),
-        s"$path/corpus/cell=$junkCell", "b0")
+      plantIvfJunk(path, feats.filter(col("img_id") === 0L).select(col("feat")),
+        cents)
       val phases = (0 until 3).map(i =>
         imgs.filter(col("img_id") % 3 === i)
           .select(col("img_id"), col("img")))
-      val staged = stagePhases(s"multimodal198|$dir", phases)
-      val sink: (DataFrame, Long) => Unit = (batch, bid) => {
-        val f = batch.select(col("img_id"),
-          ImageExprs.imageGridFeatures(col("img"), lit(4), lit(4))
-            .as("feat"))
-        Similarity.ivfIngestBatch(path, f, "img_id", "feat", bid)
-      }
-      runPhasedIngest(spark, staged, phases.head.schema, nPhases = 3,
-        firstRun = 2, sink)
-      // post-commit re-delivery of batch 1: must skip whole
-      sink(spark.read.parquet(s"$staged/phase_001.parquet"), 1L)
+      replayPhases(spark, s"multimodal198|$dir", phases, (batch, bid) =>
+        Similarity.ivfIngestBatch(path, batch.select(col("img_id"),
+            ImageExprs.imageGridFeatures(col("img"), lit(4), lit(4))
+              .as("feat")),
+          "img_id", "feat", bid))
       val queries = feats
         .select((col("img_id") + 1000000L).as("pid"),
           col("feat").as("qf"))
@@ -3206,10 +3190,8 @@ object Curation {
         .filter(col("id") === col("qid") - 1000000L &&
           round(col("sim"), 6) === 1.0)
         .select(col("qid")).distinct()
-      val missing = queries.select(col("pid").as("qid"))
-        .join(ok, Seq("qid"), "left_anti")
-        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit("self_not_top1").as("kind"), col("n"))
+      val missing = cnt(queries.select(col("pid").as("qid"))
+        .join(ok, Seq("qid"), "left_anti"), "self_not_top1")
       val corpusRows = spark.read.parquet(s"$path/corpus")
         .agg(count(lit(1)).as("n"))
         .select(lit("corpus_rows").as("kind"), col("n"))
@@ -3226,8 +3208,7 @@ object Curation {
     // model- and spec-verified per seed), so a re-leveled or upscaled
     // RE-UPLOAD of a registered image streams in and is refused as a
     // duplicate while genuinely new images register, across batches,
-    // under the full exactly-once drill (kill-restart at the batch
-    // boundary + post-commit re-delivery). Arrivals: 50 bases, then 25
+    // under the [[replayPhases]] drill. Arrivals: 50 bases, then 25
     // re-leveled re-uploads + 25 new images, then 50 upscaled
     // re-uploads; accepted must be EXACTLY the 50 bases + 25 new
     // (n_dropped = 75 rides the output as a pinned scalar row).
@@ -3252,20 +3233,13 @@ object Curation {
       val p2 = base.select((col("doc_id") + 3000000L).as("img_id"),
         ImageExprs.imageResizeNn(
           wave(col("doc_id") / 10), lit(96), lit(96)).as("img"))
-      val reg = s"${java.nio.file.Files
-        .createTempDirectory("graft-q201").toString}/reg"
+      val reg = s"${scratch("q201")}/reg"
       DedupRegistry.init(spark, reg, buckets = 16)
-      val phases = Seq(p0, p1, p2)
-      val staged = stagePhases(s"imgdedup201|$dir", phases)
-      val sink: (DataFrame, Long) => Unit = (batch, bid) =>
+      replayPhases(spark, s"imgdedup201|$dir", Seq(p0, p1, p2), (batch, bid) =>
         DedupRegistry.ingestBatch(reg,
           batch.select(col("img_id"),
             ImageExprs.imageDHash(col("img")).cast("string").as("dh")),
-          "img_id", "dh", bid)
-      runPhasedIngest(spark, staged, phases.head.schema, nPhases = 3,
-        firstRun = 2, sink)
-      // post-commit re-delivery of batch 1: must skip whole
-      sink(spark.read.parquet(s"$staged/phase_001.parquet"), 1L)
+          "img_id", "dh", bid))
       val corpus = spark.read
         .schema("id LONG, text STRING, digest STRING")
         .parquet(s"$reg/corpus")
@@ -3289,8 +3263,7 @@ object Curation {
     // restored).
     "q204_estate_fsck" -> ((s, dir) => {
       val spark = Tables.configure(s)
-      val ivf = s"${java.nio.file.Files
-        .createTempDirectory("graft-q204").toString}/ivf"
+      val ivf = s"${scratch("q204")}/ivf"
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("vec"))
@@ -3358,8 +3331,8 @@ object Curation {
     // composite commit (one (root -> generation) pair per child,
     // written after both children commit), and
     // StableRead.pinnedComposite serves that cut under churn. The gate
-    // drives the q169 pipeline phase-stepped, captures the composite
-    // generation recorded after batch 1, lets batch 2 churn BOTH
+    // drives the q169 pipeline through [[replayPhases]], captures the
+    // composite generation recorded after batch 1, lets batch 2 churn BOTH
     // roots, then probes AT the cut: in-gate teeth require the pinned
     // registry corpus / registry stats / index stats / index doc
     // registry to AGREE (the exact anomaly the parent commit closes)
@@ -3375,17 +3348,13 @@ object Curation {
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
       DedupRegistry.init(s, regPath, buckets = 16)
       Retrieval.bm25Init(s, idxPath, buckets = 64)
-      val phases = dedupStreamPhases(s, dir)
-      val staged = stagePhases(s"ingest167|$dir", phases)
-      val sink = DedupRegistry.dedupIndexStreamSink(
-        regPath, idxPath, "doc_id", "text", compositeRoot = Some(parent))
       var cutGen = -1L
-      runPhasedIngestStepped(s, staged, phases.head.schema,
-        nPhases = 3, sink) { i =>
-        if (i == 1)
+      replayPhases(s, s"ingest167|$dir", dedupStreamPhases(s, dir),
+        DedupRegistry.dedupIndexStreamSink(
+          regPath, idxPath, "doc_id", "text", compositeRoot = Some(parent)),
+        between = i => if (i == 1)
           cutGen = graft.operators.StableRead
-            .manifestGeneration(s, parent).getOrElse(-1L)
-      }
+            .manifestGeneration(s, parent).getOrElse(-1L))
       require(cutGen > 0, "q205: no composite cut captured after batch 1")
       val cutAgree = graft.operators.StableRead
         .pinnedComposite(s, parent, Some(cutGen)) {
@@ -3435,8 +3404,7 @@ object Curation {
       val spark = Tables.configure(s)
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text")).localCheckpoint(true)
-      val path = s"${java.nio.file.Files
-        .createTempDirectory("graft-q202").toString}/idx"
+      val path = s"${scratch("q202")}/idx"
       Retrieval.buildBm25Index(
         docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", path,
         buckets = 64)
@@ -3507,8 +3475,7 @@ object Curation {
       val spark = Tables.configure(s)
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text")).localCheckpoint(true)
-      val path = s"${java.nio.file.Files
-        .createTempDirectory("graft-q206").toString}/idx"
+      val path = s"${scratch("q206")}/idx"
       Retrieval.buildBm25Index(
         docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", path,
         buckets = 64)
@@ -3628,8 +3595,7 @@ object Curation {
         .select(col("vec_id"), col("embedding").cast("array<double>")
           .as("vec"))
         .localCheckpoint(true)
-      val path = s"${java.nio.file.Files
-        .createTempDirectory("graft-q203").toString}/ivf"
+      val path = s"${scratch("q203")}/ivf"
       Similarity.buildIvfIndex(
         emb.filter(col("vec_id") % 4 === 0), "vec_id", "vec",
         nlist = 4, path)
@@ -3678,10 +3644,8 @@ object Curation {
         .filter(col("id") === col("qid") - 1000000L &&
           round(col("sim"), 6) === 1.0)
         .select(col("qid")).distinct()
-      val missing = all.select(col("qid"))
-        .join(ok, Seq("qid"), "left_anti")
-        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit("self_not_top1").as("kind"), col("n"))
+      val missing = cnt(all.select(col("qid"))
+        .join(ok, Seq("qid"), "left_anti"), "self_not_top1")
       val corpusRows = spark.read.parquet(s"$path/corpus")
         .agg(count(lit(1)).as("n"))
         .select(lit("corpus_rows").as("kind"), col("n"))
@@ -3756,12 +3720,8 @@ object Curation {
       val after = probe()
       val before = s.createDataFrame(
         s.sparkContext.parallelize(beforeRows.toIndexedSeq), after.schema)
-      val extra = after.exceptAll(before)
-        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit("extra_rows").as("kind"), col("n"))
-      val missing = before.exceptAll(after)
-        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit("missing_rows").as("kind"), col("n"))
+      val extra = cnt(after.exceptAll(before), "extra_rows")
+      val missing = cnt(before.exceptAll(after), "missing_rows")
       val expected = a.count() + b1.count() + b2.count()
       val countViol = s.read.parquet(s"$path/corpus")
         .groupBy().agg(count(lit(1)).as("c"))
@@ -3934,19 +3894,14 @@ object Curation {
           1))
       val actual = s.read.parquet(s"$path/corpus")
         .select(col("id"), col("vec"), col("cell"))
-      val extra = actual.exceptAll(expected)
-        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit("extra_rows").as("kind"), col("n"))
-      val missing = expected.exceptAll(actual)
-        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit("missing_rows").as("kind"), col("n"))
+      val extra = cnt(actual.exceptAll(expected), "extra_rows")
+      val missing = cnt(expected.exceptAll(actual), "missing_rows")
       val queries = emb.filter(col("vec_id") % 10 === 1)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      val doomedInProbe = Similarity.ivfTopKIndexed(
+      val doomedInProbe = cnt(Similarity.ivfTopKIndexed(
           path, queries, "vec_id", "embedding", k = 5, nprobe = 2)
-        .join(broadcast(doomed.select(col("vec_id").as("id"))), "id")
-        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit("doomed_in_probe").as("kind"), col("n"))
+        .join(broadcast(doomed.select(col("vec_id").as("id"))), "id"),
+        "doomed_in_probe")
       extra.unionByName(missing).unionByName(doomedInProbe)
         .orderBy(col("kind"), col("n"))
     }),
@@ -4014,8 +3969,7 @@ object Curation {
     // rebuild parity, fsck teeth, and the stage-1 vec-free read.
     "q207_ivfpq_index" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val path = s"${java.nio.file.Files
-        .createTempDirectory("graft-q207").toString}/ivfpq"
+      val path = s"${scratch("q207")}/ivfpq"
       Similarity.buildIvfPqIndex(
         emb.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
         nlist = 16, m = 8, path, ksub = 64)
@@ -4120,70 +4074,23 @@ object Curation {
     // Exactly-once STREAMING ingest into the persisted BM25 index (the
     // production path for a never-static corpus: q123's batch-id
     // idempotence discipline composed with q143's incremental append),
-    // under q127's VERBATIM full-corpus oracle. The replay drives the
-    // recovery machinery for real: (1) before the stream starts, the
-    // index carries a manufactured mid-apply crash of batch 0 — bogus
-    // b0-tagged posting (id -999 scoring "spark" at tf 99), doclen, and
-    // terms-delta (a df bomb on "spark") parts, plus the stats mid-swap
-    // window (live stats CORRUPTED at n_docs x1000, the true table in
-    // stats_b0_bak) — which batch 0's re-delivery must fully erase
-    // before applying; (2) the phased
-    // stream is KILLED after two batches and RESUMED from the same
-    // checkpoint (batch ids must continue or applied markers eat the
-    // tail); (3) after completion, batch 1 is re-delivered by hand and
-    // must skip whole (post-commit window). Any surviving junk row,
-    // unrestored table, double-applied df/N, or dropped phase breaks
-    // the probe hash.
+    // under q127's VERBATIM full-corpus oracle: the corpus remainder
+    // streams in through the [[replayPhases]] drill, after BM25 junk
+    // (terms is an append-delta table since round 19, so its debris is
+    // a tagged df bomb) and the stats mid-swap window are planted. Any
+    // surviving junk row, unrestored table, double-applied df/N, or
+    // dropped phase breaks the probe hash.
     "q162_bm25_stream_ingest" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val path = bm25IngestDir
       copyInto(bm25Base(s, dir), path) // base: doc_id % 3 =!= 0
+      plantBm25Junk(s, path)
+      plantStatsMidSwap(s, path)
       // phases: the %3==0 remainder as three mod-9 residues
-      val phases = Seq(0L, 3L, 6L).map(r =>
-        docs.filter(col("doc_id") % 9 === r)
-          .select(col("doc_id"), col("text")))
-      val staged = stagePhases(s"ingest162|$dir", phases)
-      // manufactured batch-0 crash state (see gate comment)
-      val buckets = s.read.parquet(s"$path/stats")
-        .select(col("buckets")).collect()(0).getLong(0)
-      val sparkBucket = s.range(1)
-        .select(pmod(xxhash64(lit("spark")), lit(buckets)))
-        .collect()(0).getLong(0)
-      locally {
-        import s.implicits._
-        plantTaggedPart(Seq((-999L, "spark", 99L)).toDF("id", "term", "tf"),
-          s"$path/postings/bucket=$sparkBucket", "b0")
-        plantTaggedPart(Seq((-999L, 99L)).toDF("id", "dl"),
-          s"$path/doclen", "b0")
-        // terms is an append-delta table since round 19 (no swap): the
-        // reachable batch-0 crash debris is a TAGGED df-delta part — a
-        // df bomb on "spark" that, if recovery misses it, inflates the
-        // term's merge-on-read df 100x and collapses its idf
-        plantTaggedPart(Seq(("spark", 99999L)).toDF("term", "df"),
-          s"$path/terms/bucket=$sparkBucket", "b0")
-      }
-      // stats mid-swap window (the one swap table left): the state right
-      // after `rename(new, cur)` and before the marker — live stats is
-      // the crashed batch's 1000x-corrupted version, the true table in
-      // stats_b0_bak. (A real crash here also leaves the bak's
-      // _retire_to sidecar; the marker-absent recovery path — restore —
-      // never reads it, so the manufactured state omits it.)
-      s.read.parquet(s"$path/stats")
-        .withColumn("n_docs", col("n_docs") * 1000)
-        .coalesce(1)
-        .write.parquet(s"$path/stats_b0_corrupt_tmp")
-      org.apache.commons.io.FileUtils.moveDirectory(
-        new java.io.File(s"$path/stats"), new java.io.File(s"$path/stats_b0_bak"))
-      org.apache.commons.io.FileUtils.moveDirectory(
-        new java.io.File(s"$path/stats_b0_corrupt_tmp"),
-        new java.io.File(s"$path/stats"))
-      val sink = Retrieval.bm25StreamSink(path, "doc_id", "text")
-      runPhasedIngest(s, staged, phases.head.schema, nPhases = 3,
-        firstRun = 2, sink)
-      // post-commit re-delivery of batch 1: must skip whole
-      Retrieval.bm25IngestBatch(
-        path, s.read.parquet(s"$staged/phase_001.parquet"),
-        "doc_id", "text", 1L)
+      replayPhases(s, s"ingest162|$dir", Seq(0L, 3L, 6L).map(r =>
+          docs.filter(col("doc_id") % 9 === r)
+            .select(col("doc_id"), col("text"))),
+        Retrieval.bm25StreamSink(path, "doc_id", "text"))
       Retrieval.bm25TopKIndexed(path, bm25Queries(s), k = 10)
         .orderBy(col("query_id"), col("rnk"))
     }),
@@ -4192,41 +4099,20 @@ object Curation {
     // q162 composition for the DENSE artifact, under q35's VERBATIM
     // IVF-in-SQL oracle: centroids train once on the full corpus (the
     // q161 method), the empty index initializes from them, and the
-    // whole corpus then arrives as a 3-phase stream through
-    // ivfStreamSink. Crash windows driven the q162 way: a manufactured
-    // b0-tagged corpus part whose vector IS query 0's embedding under
-    // id -999 (if recovery fails it ranks #1 at sim 1.0), a
-    // kill-restart across the batch-2 boundary, and a post-commit
-    // re-delivery of batch 1 that must skip. The final probe must
-    // reproduce q35's direct-form relation, Lloyd iterations and all.
+    // whole corpus then arrives through ivfStreamSink under the
+    // [[replayPhases]] drill, after an IVF junk vector (query 0's
+    // embedding) is planted. The final probe must reproduce q35's
+    // direct-form relation, Lloyd iterations and all.
     "q163_ivf_stream_ingest" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val path = s"$ivfIngestParent/idx"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
       val cents = fullCentroids(s, dir) // memoized deterministic quantizer
       Similarity.ivfInit(s, cents, path)
-      // manufactured batch-0 crash state: a tagged part in the junk
-      // vector's own nearest cell (where a probe for query 0 would find it)
-      val junk = emb.filter(col("vec_id") === 0)
-        .select(lit(-999L).as("id"),
-          col("embedding").cast("array<double>").as("vec"))
-        .withColumn("cell", element_at(
-          graft.functions.VecExprs.nearestCentroids(
-            col("vec"), cents.map(_.toSeq).toSeq, 1), 1))
-      val junkCell = junk.select(col("cell")).collect()(0).getInt(0)
-      plantTaggedPart(junk.select(col("id"), col("vec")),
-        s"$path/corpus/cell=$junkCell", "b0")
-      val phases = (0 until 3).map(i =>
-        emb.filter(col("vec_id") % 3 === i)
-          .select(col("vec_id"), col("embedding")))
-      val staged = stagePhases(s"ingest163|$dir", phases)
-      val sink = Similarity.ivfStreamSink(path, "vec_id", "embedding")
-      runPhasedIngest(s, staged, phases.head.schema, nPhases = 3,
-        firstRun = 2, sink)
-      // post-commit re-delivery of batch 1: must skip whole
-      Similarity.ivfIngestBatch(
-        path, s.read.parquet(s"$staged/phase_001.parquet"),
-        "vec_id", "embedding", 1L)
+      plantIvfJunk(path, emb.filter(col("vec_id") === 0).select(col("embedding")),
+        cents)
+      replayPhases(s, s"ingest163|$dir", embStreamPhases(emb),
+        Similarity.ivfStreamSink(path, "vec_id", "embedding"))
       Similarity.ivfTopKIndexed(
           path, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 10, nprobe = 4)
@@ -4238,11 +4124,10 @@ object Curation {
 
     // Streaming ingest into the persisted QUANTIZED IVF index — the
     // q163 transport composed with the q159 production layout: ivfInit
-    // from full-corpus centroids, the SAME 3-phase replay (shared
+    // from full-corpus centroids, the SAME [[replayPhases]] drill (shared
     // staged files) through ivfStreamSink(quantized = true) — each
     // batch quantizes map-side into the (id, vec, qvec, qn2, cell)
-    // layout — with the kill-restart and a post-commit re-delivery,
-    // then the q159 soundness body verbatim over the streamed-in
+    // layout — then the q159 soundness body verbatim over the streamed-in
     // index: every hit exact-cosine re-verified, probed-cell
     // membership, non-vacuity. Empty output = sound.
     "q166_ivfq_stream_ingest" -> ((s, dir) => {
@@ -4251,17 +4136,8 @@ object Curation {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
       val cents = fullCentroids(s, dir) // memoized deterministic quantizer
       Similarity.ivfInit(s, cents, path)
-      val phases = (0 until 3).map(i =>
-        emb.filter(col("vec_id") % 3 === i)
-          .select(col("vec_id"), col("embedding")))
-      val staged = stagePhases(s"ingest163|$dir", phases)
-      val sink = Similarity.ivfStreamSink(
-        path, "vec_id", "embedding", quantized = true)
-      runPhasedIngest(s, staged, phases.head.schema, nPhases = 3,
-        firstRun = 2, sink)
-      Similarity.ivfIngestBatch(
-        path, s.read.parquet(s"$staged/phase_001.parquet"),
-        "vec_id", "embedding", 1L, quantized = true)
+      replayPhases(s, s"ingest163|$dir", embStreamPhases(emb),
+        Similarity.ivfStreamSink(path, "vec_id", "embedding", quantized = true))
       ivfQSoundness(s, emb, path)
     }),
 
@@ -4270,9 +4146,8 @@ object Curation {
     // from one trained (centroids, codebooks) pair, the whole corpus
     // arriving as a 3-phase stream through the layout-auto-detecting
     // ivfStreamSink (the codebooks table IS the signal; a mis-flagged
-    // int8 request on a PQ index refuses), a kill-restart across the
-    // batch-2 boundary, a post-commit re-delivery of batch 1 that must
-    // skip, then the SHARED two-stage soundness body + a clean fsck
+    // int8 request on a PQ index refuses) under the [[replayPhases]]
+    // drill, then the SHARED two-stage soundness body + a clean fsck
     // (incl. the pqcode re-derivation — a batch ingested un-encoded or
     // encoded under drifted books would fail it by name).
     "q208_ivfpq_stream_ingest" -> ((s, dir) => {
@@ -4283,16 +4158,8 @@ object Curation {
       val books = Similarity.trainPqCodebooks(
         emb, "vec_id", "embedding", m = 8, ksub = 64)
       Similarity.ivfPqInit(s, cents, books, path)
-      val phases = (0 until 3).map(i =>
-        emb.filter(col("vec_id") % 3 === i)
-          .select(col("vec_id"), col("embedding")))
-      val staged = stagePhases(s"ingest163|$dir", phases)
-      val sink = Similarity.ivfStreamSink(path, "vec_id", "embedding")
-      runPhasedIngest(s, staged, phases.head.schema, nPhases = 3,
-        firstRun = 2, sink)
-      Similarity.ivfIngestBatch(
-        path, s.read.parquet(s"$staged/phase_001.parquet"),
-        "vec_id", "embedding", 1L)
+      replayPhases(s, s"ingest163|$dir", embStreamPhases(emb),
+        Similarity.ivfStreamSink(path, "vec_id", "embedding"))
       require(graft.operators.Fsck.ivfFsck(s, path).count() == 0L,
         "q208: fsck found violations on the streamed PQ estate")
       ivfPqSoundness(s, emb, path)
@@ -4303,48 +4170,21 @@ object Curation {
     // recoverable-apply protocol as q162/q163, gated end-to-end: the
     // phased stream carries planted duplicates WITHIN a batch (min id
     // must win), ACROSS batches (the earlier batch must win), and the
-    // documents table's own pre-existing exact dups; crash windows
-    // driven the q162 way (a tagged junk part + the mid-swap stats
-    // window before batch 0, a kill-restart across the batch-2
-    // boundary, a post-commit re-delivery of batch 1 that must skip —
-    // a re-run would double-count its rows as drops, which the stats
-    // rows in the output would expose). Output = accepted ids + the
-    // registry's own (n_docs, n_dropped) vs a SQL first-arrival
-    // ranking over the identical stream.
+    // documents table's own pre-existing exact dups. It runs the
+    // [[replayPhases]] drill after registry junk and the stats mid-swap
+    // window are planted (a re-run of the re-delivered batch would
+    // double-count its rows as drops, which the stats rows in the
+    // output would expose). Output = accepted ids + the registry's own
+    // (n_docs, n_dropped) vs a SQL first-arrival ranking over the
+    // identical stream.
     "q167_dedup_stream_ingest" -> ((s, dir) => {
       val path = s"$regIngestParent/reg"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
       DedupRegistry.init(s, path, buckets = 16)
-      val phases = dedupStreamPhases(s, dir)
-      val staged = stagePhases(s"ingest167|$dir", phases)
-      // manufactured batch-0 crash state: a tagged junk part in its
-      // digest's own bucket (if recovery fails the row survives into the
-      // output) + the mid-swap stats window (live stats corrupted, the
-      // true zeroed table in stats_b0_bak)
-      locally {
-        import s.implicits._
-        val junk = Seq((-999L, "__GRAFT_JUNK__")).toDF("id", "text")
-          .withColumn("digest", md5(col("text")))
-        val junkBucket = junk
-          .select(pmod(xxhash64(col("digest")), lit(16L)))
-          .collect()(0).getLong(0)
-        plantTaggedPart(junk, s"$path/corpus/bucket=$junkBucket", "b0")
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(path), s.sessionState.newHadoopConf())
-        fs.rename(new org.apache.hadoop.fs.Path(s"$path/stats"),
-          new org.apache.hadoop.fs.Path(s"$path/stats_b0_bak"))
-        s.range(1)
-          .select(lit(777777L).as("n_docs"), lit(777777L).as("n_dropped"),
-            lit(16L).as("buckets"))
-          .coalesce(1).write.parquet(s"$path/stats")
-      }
-      val sink = DedupRegistry.streamSink(path, "doc_id", "text")
-      runPhasedIngest(s, staged, phases.head.schema,
-        nPhases = 3, firstRun = 2, sink)
-      // post-commit re-delivery of batch 1: must skip whole
-      DedupRegistry.ingestBatch(
-        path, s.read.parquet(s"$staged/phase_001.parquet"),
-        "doc_id", "text", 1L)
+      plantRegistryJunk(s, path)
+      plantStatsMidSwap(s, path)
+      replayPhases(s, s"ingest167|$dir", dedupStreamPhases(s, dir),
+        DedupRegistry.streamSink(path, "doc_id", "text"))
       val st = s.read.parquet(s"$path/stats")
       s.read.parquet(s"$path/corpus")
         .select(col("id").as("doc_id"), lit("doc").as("kind"))
@@ -4375,20 +4215,11 @@ object Curation {
         s, path, maxCellRows = math.max(total / 16L, 1L))
       val ids = emb.select(col("vec_id").as("id"))
       val corpusIds = s.read.parquet(s"$path/corpus").select(col("id"))
-      val lost = ids.join(corpusIds, Seq("id"), "left_anti")
-        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit("lost_row").as("kind"), col("n"))
-      val dup = corpusIds.groupBy(col("id")).agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1)
-        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit("dup_row").as("kind"), col("n"))
-      val alien = corpusIds.join(ids, Seq("id"), "left_anti")
-        .agg(count(lit(1)).as("n")).filter(col("n") > 0)
-        .select(lit("alien_row").as("kind"), col("n"))
-      val noSplit =
-        if (splits.nonEmpty) s.range(0)
-          .select(lit("no_split").as("kind"), col("id").as("n"))
-        else s.range(1).select(lit("no_split").as("kind"), lit(0L).as("n"))
+      val lost = cnt(ids.join(corpusIds, Seq("id"), "left_anti"), "lost_row")
+      val dup = cnt(corpusIds.groupBy(col("id")).agg(count(lit(1)).as("c"))
+        .filter(col("c") > 1), "dup_row")
+      val alien = cnt(corpusIds.join(ids, Seq("id"), "left_anti"), "alien_row")
+      val noSplit = scalarViol(splits.nonEmpty, "no_split", s)
       ivfQSoundness(s, emb, path)
         .unionByName(lost).unionByName(dup).unionByName(alien)
         .unionByName(noSplit)
@@ -4400,14 +4231,12 @@ object Curation {
     // dedups against the registry and only the accepted slice (read
     // back from the registry's committed tagged parts) lands in a
     // bm25Init-empty standing index. The same duplicate-bearing phased
-    // stream (shared staged files with q167), with crash states planted
-    // on BOTH artifacts before batch 0 (a tagged junk registry part AND
-    // tagged junk posting/doclen parts — both recoveries must fire), a
-    // kill-restart across the batch-2 boundary, and a post-commit
-    // re-delivery of batch 1 through the composed apply (both markers
-    // must skip). Final probe == the BM25 oracle over the
-    // first-arrival-DEDUPED corpus: any surviving junk, double-applied
-    // df/N, un-dropped duplicate, or dropped original breaks the hash.
+    // stream (shared staged files with q167) under the [[replayPhases]]
+    // drill, with registry junk AND BM25 junk planted (both recoveries
+    // must fire; on re-delivery both markers must skip). Final probe ==
+    // the BM25 oracle over the first-arrival-DEDUPED corpus: any
+    // surviving junk, double-applied df/N, un-dropped duplicate, or
+    // dropped original breaks the hash.
     "q169_dedup_index_stream" -> ((s, dir) => {
       val regPath = s"$regIngestParent/reg169"
       val idxPath = s"$regIngestParent/idx169"
@@ -4415,33 +4244,10 @@ object Curation {
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
       DedupRegistry.init(s, regPath, buckets = 16)
       Retrieval.bm25Init(s, idxPath, buckets = 64)
-      val phases = dedupStreamPhases(s, dir)
-      val staged = stagePhases(s"ingest167|$dir", phases)
-      locally {
-        import s.implicits._
-        val junk = Seq((-999L, "__GRAFT_JUNK__")).toDF("id", "text")
-          .withColumn("digest", md5(col("text")))
-        val junkBucket = junk
-          .select(pmod(xxhash64(col("digest")), lit(16L)))
-          .collect()(0).getLong(0)
-        plantTaggedPart(junk, s"$regPath/corpus/bucket=$junkBucket", "b0")
-        val sparkBucket = s.range(1)
-          .select(pmod(xxhash64(lit("spark")), lit(64L)))
-          .collect()(0).getLong(0)
-        plantTaggedPart(Seq((-999L, "spark", 99L)).toDF("id", "term", "tf"),
-          s"$idxPath/postings/bucket=$sparkBucket", "b0")
-        plantTaggedPart(Seq((-999L, 99L)).toDF("id", "dl"),
-          s"$idxPath/doclen", "b0")
-      }
-      val sink = DedupRegistry.dedupIndexStreamSink(
-        regPath, idxPath, "doc_id", "text")
-      runPhasedIngest(s, staged, phases.head.schema,
-        nPhases = 3, firstRun = 2, sink)
-      // post-commit re-delivery of batch 1 through the composed apply:
-      // the registry must skip whole, and the index apply it hands the
-      // committed slice to must skip on its own marker
-      DedupRegistry.dedupIndexStreamSink(regPath, idxPath, "doc_id", "text")(
-        s.read.parquet(s"$staged/phase_001.parquet"), 1L)
+      plantRegistryJunk(s, regPath)
+      plantBm25Junk(s, idxPath)
+      replayPhases(s, s"ingest167|$dir", dedupStreamPhases(s, dir),
+        DedupRegistry.dedupIndexStreamSink(regPath, idxPath, "doc_id", "text"))
       Retrieval.bm25TopKIndexed(idxPath, bm25Queries(s), k = 10)
         .orderBy(col("query_id"), col("rnk"))
     }),
@@ -4451,9 +4257,9 @@ object Curation {
     // engine-defined, so like q38/q40 the gate output is a VIOLATION
     // relation and the oracle is empty): over a phased stream with
     // planted exact copies (within-batch AND cross-batch) and planted
-    // trailing-junk near-copies, plus the full crash drill (junk tagged
-    // parts in BOTH tables + the stats mid-swap window, kill-restart,
-    // post-commit re-delivery), the final registry must satisfy:
+    // trailing-junk near-copies, under the [[replayPhases]] drill after
+    // near-dup junk and the stats mid-swap window are planted, the
+    // final registry must satisfy:
     // (a) no alien/duplicated registered id; (b) stats count exactly;
     // (c) every planted WITHIN-batch exact copy dropped (its identical
     // smaller-id batch-mate is a certain candidate whatever its own
@@ -4470,31 +4276,10 @@ object Curation {
       NearDupRegistry.init(s, path, buckets = 16)
       val phases = ndStreamPhases(s, dir)
       val Seq(p0, p1, p2) = phases
-      val staged = stagePhases(s"ingest170|$dir", phases)
-      locally { // manufactured batch-0 crash state on BOTH tables + stats
-        import s.implicits._
-        plantTaggedPart(
-          Seq((-999L, "__GRAFT_JUNK__", Seq(1L, 2L))).toDF("id", "text", "hs"),
-          s"$path/corpus/bucket=3", "b0")
-        plantTaggedPart(Seq((0, 12345, -999L)).toDF("band", "bkey", "id"),
-          s"$path/bands/pk=1", "b0")
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(path), s.sessionState.newHadoopConf())
-        fs.rename(new org.apache.hadoop.fs.Path(s"$path/stats"),
-          new org.apache.hadoop.fs.Path(s"$path/stats_b0_bak"))
-        s.range(1)
-          .select(lit(777777L).as("n_docs"), lit(777777L).as("n_dropped"),
-            lit(16L).as("buckets"), lit(3L).as("shingle_size"),
-            lit(64L).as("num_hashes"), lit(16L).as("bands"),
-            lit(0.5).as("threshold"))
-          .coalesce(1).write.parquet(s"$path/stats")
-      }
-      runPhasedIngest(s, staged, p0.schema, nPhases = 3, firstRun = 2,
+      plantNearDupJunk(s, path)
+      plantStatsMidSwap(s, path)
+      replayPhases(s, s"ingest170|$dir", phases,
         NearDupRegistry.streamSink(path, "doc_id", "text"))
-      // post-commit re-delivery of batch 1: must skip whole
-      NearDupRegistry.ingestBatch(
-        path, s.read.parquet(s"$staged/phase_001.parquet"),
-        "doc_id", "text", 1L)
       // ---- the violation relation (ONE body, shared with q176) ----
       ndregSoundness(s,
           p0.withColumn("ph", lit(0))
@@ -4553,9 +4338,6 @@ object Curation {
         .select(col("id"), col("text"))
         .transform(graft.CacheScope.persisted)
       val mergedIds = merged.select(col("id"))
-      def cnt(df: DataFrame, kind: String): DataFrame =
-        df.agg(count(lit(1)).as("n")).filter(col("n") > 0)
-          .select(lit(kind).as("kind"), col("n"))
       val alien = cnt(
         mergedIds.join(pre.select(col("id")), Seq("id"), "left_anti"),
         "alien_id")
@@ -4595,10 +4377,7 @@ object Curation {
       val statsOk =
         st.getAs[Long]("n_docs") == merged.count() &&
           st.getAs[Long]("n_docs") + st.getAs[Long]("n_dropped") == shardRaw
-      val statsViol =
-        if (statsOk)
-          s.range(0).select(lit("stats_mismatch").as("kind"), col("id").as("n"))
-        else s.range(1).select(lit("stats_mismatch").as("kind"), lit(1L).as("n"))
+      val statsViol = scalarViol(statsOk, "stats_mismatch", s)
       alien.unionByName(dup).unionByName(bandOrphan).unionByName(exactViol)
         .unionByName(unsound).unionByName(statsViol)
         .orderBy(col("kind"), col("n"))
@@ -4665,11 +4444,9 @@ object Curation {
     // with the q162 index ingest in one exactly-once foreachBatch sink
     // — the full production pipeline (a crawl's near-copies dropped at
     // ingest, only accepted content pays indexing). The q170 stream
-    // (shared staged files) with crash states planted on BOTH artifacts
-    // before batch 0 (junk tagged parts in the registry's two tables +
-    // its stats mid-swap window, junk tagged posting/doclen parts in
-    // the index), the kill-restart across the batch-2 boundary, and a
-    // post-commit re-delivery through the composed apply. LSH
+    // (shared staged files) under the [[replayPhases]] drill, after
+    // near-dup junk, the registry's stats mid-swap window and BM25 junk
+    // in the index are planted. LSH
     // acceptance is engine-defined, so the gate is a violation relation
     // (empty oracle) with three arms: (1) the q170 registry-soundness
     // body VERBATIM (one shared helper); (2) the index pinned
@@ -4689,39 +4466,11 @@ object Curation {
       Retrieval.bm25Init(s, idxPath, buckets = 64)
       val phases = ndStreamPhases(s, dir)
       val Seq(p0, p1, p2) = phases
-      val staged = stagePhases(s"ingest170|$dir", phases)
-      locally { // manufactured batch-0 crash on BOTH artifacts
-        import s.implicits._
-        plantTaggedPart(
-          Seq((-999L, "__GRAFT_JUNK__", Seq(1L, 2L))).toDF("id", "text", "hs"),
-          s"$regPath/corpus/bucket=3", "b0")
-        plantTaggedPart(Seq((0, 12345, -999L)).toDF("band", "bkey", "id"),
-          s"$regPath/bands/pk=1", "b0")
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(regPath), s.sessionState.newHadoopConf())
-        fs.rename(new org.apache.hadoop.fs.Path(s"$regPath/stats"),
-          new org.apache.hadoop.fs.Path(s"$regPath/stats_b0_bak"))
-        s.range(1)
-          .select(lit(777777L).as("n_docs"), lit(777777L).as("n_dropped"),
-            lit(16L).as("buckets"), lit(3L).as("shingle_size"),
-            lit(64L).as("num_hashes"), lit(16L).as("bands"),
-            lit(0.5).as("threshold"))
-          .coalesce(1).write.parquet(s"$regPath/stats")
-        val sparkBucket = s.range(1)
-          .select(pmod(xxhash64(lit("spark")), lit(64L)))
-          .collect()(0).getLong(0)
-        plantTaggedPart(Seq((-999L, "spark", 99L)).toDF("id", "term", "tf"),
-          s"$idxPath/postings/bucket=$sparkBucket", "b0")
-        plantTaggedPart(Seq((-999L, 99L)).toDF("id", "dl"),
-          s"$idxPath/doclen", "b0")
-      }
-      val sink = NearDupRegistry.dedupIndexStreamSink(
-        regPath, idxPath, "doc_id", "text")
-      runPhasedIngest(s, staged, p0.schema, nPhases = 3, firstRun = 2, sink)
-      // post-commit re-delivery of batch 1 through the composed apply:
-      // both markers must hold
-      NearDupRegistry.dedupIndexStreamSink(regPath, idxPath, "doc_id", "text")(
-        s.read.parquet(s"$staged/phase_001.parquet"), 1L)
+      plantNearDupJunk(s, regPath)
+      plantStatsMidSwap(s, regPath)
+      plantBm25Junk(s, idxPath)
+      replayPhases(s, s"ingest170|$dir", phases,
+        NearDupRegistry.dedupIndexStreamSink(regPath, idxPath, "doc_id", "text"))
       // ---- arm 1: the registry soundness body, verbatim ----
       val reg = ndregSoundness(s,
         p0.withColumn("ph", lit(0))
@@ -4735,11 +4484,8 @@ object Curation {
       val composed = graft.operators.Fsck.composedFsck(s, regPath, idxPath)
       // ---- arm 3: internal invariants + non-vacuity ----
       val fsck = graft.operators.Fsck.bm25Fsck(s, idxPath)
-      val vacuous =
-        if (Retrieval.bm25TopKIndexed(idxPath, bm25Queries(s), k = 10)
-            .limit(1).count() > 0)
-          s.range(0).select(lit("vacuous_probe").as("kind"), col("id").as("n"))
-        else s.range(1).select(lit("vacuous_probe").as("kind"), lit(1L).as("n"))
+      val vacuous = scalarViol(Retrieval.bm25TopKIndexed(
+        idxPath, bm25Queries(s), k = 10).limit(1).count() > 0, "vacuous_probe", s)
       reg.unionByName(composed).unionByName(fsck).unionByName(vacuous)
         .orderBy(col("kind"), col("n"))
     }),
@@ -4796,18 +4542,10 @@ object Curation {
         ivfTombDir, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
         k = 20, nprobe = 4)
       val soft = probe().localCheckpoint(true)
-      def cnt(df: DataFrame, kind: String): DataFrame =
-        df.agg(count(lit(1)).as("n")).filter(col("n") > 0)
-          .select(lit(kind).as("kind"), col("n"))
       val doomedHit = cnt(soft
         .join(keys.withColumnRenamed("vec_id", "id"), Seq("id")),
         "doomed_id_in_soft_probe")
-      val vacuous =
-        if (soft.limit(1).count() > 0)
-          s.range(0).select(lit("vacuous_soft_probe").as("kind"),
-            col("id").as("n"))
-        else s.range(1).select(lit("vacuous_soft_probe").as("kind"),
-          lit(1L).as("n"))
+      val vacuous = scalarViol(soft.limit(1).count() > 0, "vacuous_soft_probe", s)
       val unverified = cnt(soft
         .join(emb.select(col("vec_id").as("qid"),
           col("embedding").cast("array<double>").as("qv")), Seq("qid"))
@@ -4817,12 +4555,9 @@ object Curation {
           lit(1e-12)),
         "soft_hit_cosine_mismatch")
       Similarity.ivfDelete(s, ivfTombDir, keys, "vec_id")
-      val overlayViol =
-        if (graft.operators.Tombstones.read(s, ivfTombDir).isEmpty)
-          s.range(0).select(lit("overlay_not_cleared").as("kind"),
-            col("id").as("n"))
-        else s.range(1).select(lit("overlay_not_cleared").as("kind"),
-          lit(1L).as("n"))
+      val overlayViol = scalarViol(
+        graft.operators.Tombstones.read(s, ivfTombDir).isEmpty,
+        "overlay_not_cleared", s)
       val hard = probe()
       val drift = cnt(
         soft.unionByName(hard).groupBy(col("qid"), col("id"),
@@ -4861,9 +4596,6 @@ object Curation {
       val probed = NearDupRegistry.probe(s, path, batch, "doc_id", "text")
         .select(col("doc_id"), col("text"), col("is_new"))
         .transform(graft.CacheScope.persisted)
-      def cnt(df: DataFrame, kind: String): DataFrame =
-        df.agg(count(lit(1)).as("n")).filter(col("n") > 0)
-          .select(lit(kind).as("kind"), col("n"))
       val sketchable = size(Dedup.shingles(col("text"), 3)) > 0
       val registered = s.read.parquet(s"$path/corpus")
         .select(col("id"), col("text"))
@@ -4885,17 +4617,13 @@ object Curation {
       val unsound = cnt(probed.filter(!col("is_new"))
         .join(witnessed, Seq("doc_id"), "left_anti"),
         "non_new_without_registered_witness")
-      val vacuity =
-        if (probed.filter(col("is_new")).limit(1).count() > 0 &&
-            probed.filter(!col("is_new")).limit(1).count() > 0)
-          s.range(0).select(lit("vacuous_probe").as("kind"), col("id").as("n"))
-        else s.range(1).select(lit("vacuous_probe").as("kind"), lit(1L).as("n"))
-      val mutated =
-        if (s.read.parquet(s"$path/stats").collect()(0).toSeq == statsBefore)
-          s.range(0).select(lit("probe_mutated_registry").as("kind"),
-            col("id").as("n"))
-        else s.range(1).select(lit("probe_mutated_registry").as("kind"),
-          lit(1L).as("n"))
+      val vacuity = scalarViol(
+        probed.filter(col("is_new")).limit(1).count() > 0 &&
+          probed.filter(!col("is_new")).limit(1).count() > 0,
+        "vacuous_probe", s)
+      val mutated = scalarViol(
+        s.read.parquet(s"$path/stats").collect()(0).toSeq == statsBefore,
+        "probe_mutated_registry", s)
       // ---- tombstone arm (round 13): a registry takedown must suspend
       // the witness role INSTANTLY — tombstone every probed copy's
       // original on a scratch COPY of the registry (the memoized shard
@@ -4921,13 +4649,10 @@ object Curation {
         .withColumn("orig", col("doc_id") - 1000000L)
         .join(registered.select(col("id").as("orig")), Seq("orig")),
         "tombstoned_original_still_witnessing")
-      val tombPhysical =
-        if (s.read.parquet(s"$tombPath/corpus").count() ==
-            s.read.parquet(s"$path/corpus").count())
-          s.range(0).select(lit("tombstone_rewrote_corpus").as("kind"),
-            col("id").as("n"))
-        else s.range(1).select(lit("tombstone_rewrote_corpus").as("kind"),
-          lit(1L).as("n"))
+      val tombPhysical = scalarViol(
+        s.read.parquet(s"$tombPath/corpus").count() ==
+          s.read.parquet(s"$path/corpus").count(),
+        "tombstone_rewrote_corpus", s)
       // registry VACUUM (round 13): physically apply the whole overlay —
       // must remove exactly the overlay's registered ids, clear the
       // overlay dir, and leave the registry fsck-clean
@@ -4935,15 +4660,11 @@ object Curation {
         .map(_.join(s.read.parquet(s"$tombPath/corpus")
           .select(col("id")), Seq("id")).count()).getOrElse(0L)
       val removed = NearDupRegistry.vacuum(s, tombPath)
-      val vacViol =
-        if (removed == overlayN && overlayN > 0L &&
-            graft.operators.Tombstones.read(s, tombPath).isEmpty &&
-            graft.operators.Fsck.nearDupRegistryFsck(s, tombPath)
-              .limit(1).count() == 0L)
-          s.range(0).select(lit("registry_vacuum_violation").as("kind"),
-            col("id").as("n"))
-        else s.range(1).select(lit("registry_vacuum_violation").as("kind"),
-          lit(1L).as("n"))
+      val vacViol = scalarViol(removed == overlayN && overlayN > 0L &&
+          graft.operators.Tombstones.read(s, tombPath).isEmpty &&
+          graft.operators.Fsck.nearDupRegistryFsck(s, tombPath)
+            .limit(1).count() == 0L,
+        "registry_vacuum_violation", s)
       copyMissed.unionByName(unsound).unionByName(vacuity)
         .unionByName(mutated).unionByName(tombStillWitnessing)
         .unionByName(tombPhysical).unionByName(vacViol)
@@ -5003,14 +4724,12 @@ object Curation {
         .filter(col("vec_id") % 5 === 0 && col("vec_id") % 10 =!= 0).count()
       val removed = Similarity.ivfVacuum(s, path)
       val cleared = graft.operators.Tombstones.read(s, path).isEmpty
-      def scalarViol(bad: Boolean, kind: String): DataFrame =
-        if (!bad) s.range(0).select(lit(kind).as("kind"), col("id").as("n"))
-        else s.range(1).select(lit(kind).as("kind"), lit(1L).as("n"))
       val overlayViol = scalarViol(
-        pending != expectedPending || expectedPending == 0L,
-        "partial_clear_wrong")
-        .unionByName(scalarViol(removed != expectedPending, "vacuum_count_wrong"))
-        .unionByName(scalarViol(!cleared, "overlay_not_cleared"))
+        pending == expectedPending && expectedPending != 0L,
+        "partial_clear_wrong", s)
+        .unionByName(
+          scalarViol(removed == expectedPending, "vacuum_count_wrong", s))
+        .unionByName(scalarViol(cleared, "overlay_not_cleared", s))
       val centroids = s.read.parquet(s"$path/centroids")
         .orderBy(col("cell")).collect().map(_.getSeq[Double](1)).toSeq
       val expected = emb
@@ -5023,14 +4742,11 @@ object Curation {
           1))
       val actual = s.read.parquet(s"$path/corpus")
         .select(col("id"), col("vec"), col("cell"))
-      def cnt2(df: DataFrame, kind: String): DataFrame =
-        df.agg(count(lit(1)).as("n")).filter(col("n") > 0)
-          .select(lit(kind).as("kind"), col("n"))
-      val extra = cnt2(actual.exceptAll(expected), "extra_rows")
-      val missing = cnt2(expected.exceptAll(actual), "missing_rows")
+      val extra = cnt(actual.exceptAll(expected), "extra_rows")
+      val missing = cnt(expected.exceptAll(actual), "missing_rows")
       val queries = emb.filter(col("vec_id") % 10 === 1)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      val doomedInProbe = cnt2(Similarity.ivfTopKIndexed(
+      val doomedInProbe = cnt(Similarity.ivfTopKIndexed(
           path, queries, "vec_id", "embedding", k = 5, nprobe = 2)
         .join(broadcast(doomed.select(col("vec_id").as("id"))), "id"),
         "doomed_in_probe")
@@ -5039,27 +4755,6 @@ object Curation {
         .orderBy(col("kind"), col("n"))
     }),
 
-    // THE LIVE SERVING-STACK DRILL — ingest, takedown, and serve as ONE
-    // SYSTEM under production concurrency (round-13's composition gate;
-    // every piece is gate-proven in isolation: q162 streaming ingest,
-    // q173 federated serving, q177 tombstones, q180 vacuum — what no
-    // per-family gate can see is a cross-component window between
-    // them): a standing BASE index (2/3 of the corpus) serves while a
-    // streaming DELTA (the remaining third, under a DIFFERENT bucket
-    // modulus — federation must not assume agreement) is fed one
-    // micro-batch per phase with a REAL kill-and-restart of the stream
-    // at every batch boundary, tombstoned takedowns land BETWEEN
-    // micro-batches on whichever index owns the doc, and a federated
-    // main+delta probe fires after every event. EVERY probe —
-    // including the two fired in the window AFTER a takedown but
-    // BEFORE anything physically applies it — must hash-equal the
-    // survivors-only full-corpus BM25 relation at that instant (the
-    // q177 phase method x the q162 replay method). The final phase
-    // vacuums BOTH indexes (physical apply + overlay clear) and probes
-    // again: soft must have equaled hard all along. The reference
-    // analogue is the trades-parallel-indicators write discipline of
-    // /root/reference/src/threading/PipelineExecutor.hpp:80-184,
-    // carried to the index estate.
     // Reader-racing-maintenance under the DRIVER's oracle: two shards
     // (mixed bucket moduli — the federated contract), a pending
     // takedown on shard A, and federated STABLE probes firing while
@@ -5077,8 +4772,7 @@ object Curation {
       val spark = Tables.configure(s)
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text")).localCheckpoint(true)
-      val parent = java.nio.file.Files
-        .createTempDirectory("graft-q186").toString
+      val parent = scratch("q186")
       val a = s"$parent/a"; val b = s"$parent/b"
       // drill-cost memoization (round-17, the bm25Base discipline):
       // only the deterministic PRE-CHURN estate is built once and
@@ -5086,8 +4780,7 @@ object Curation {
       // the takedown lands wholly on shard a and survivors-only ==
       // doc_id % 10 <> 0. Churn, raced probes, and the vacuum stay live.
       val aBase = baseIndexes.computeIfAbsent(s"q186a|$dir", _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-q186-base").toString + "/a"
+        val p = scratch("q186-base") + "/a"
         Retrieval.buildBm25Index(
           docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", p,
           buckets = 64)
@@ -5097,8 +4790,7 @@ object Curation {
         p
       })
       val bBase = baseIndexes.computeIfAbsent(s"q186b|$dir", _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-q186-base").toString + "/b"
+        val p = scratch("q186-base") + "/b"
         Retrieval.buildBm25Index(
           docs.filter(col("doc_id") % 2 =!= 0), "doc_id", "text", p,
           buckets = 31)
@@ -5157,16 +4849,14 @@ object Curation {
       val spark = Tables.configure(s)
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text")).localCheckpoint(true)
-      val reg = s"${java.nio.file.Files
-        .createTempDirectory("graft-q187").toString}/reg"
+      val reg = s"${scratch("q187")}/reg"
       // drill-cost memoization (q186 note): the deterministic pre-churn
       // base — init + committed batch 0 + the takedown landed BEFORE
       // batch 1 (all multiples of 10 are even, so the doomed set lands
       // wholly in batch 0's rows) — builds once and copies per
       // invocation; batch 1, compacts, vacuum, and probes stay live
       val regBase = baseIndexes.computeIfAbsent(s"q187reg|$dir", _ => {
-        val p = s"${java.nio.file.Files
-          .createTempDirectory("graft-q187-base").toString}/reg"
+        val p = s"${scratch("q187-base")}/reg"
         DedupRegistry.init(spark, p, buckets = 64)
         DedupRegistry.ingestBatch(
           p, docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", 0L)
@@ -5213,6 +4903,26 @@ object Curation {
       probe().orderBy(col("doc_id"))
     }),
 
+    // THE LIVE SERVING-STACK DRILL — ingest, takedown, and serve as ONE
+    // SYSTEM under production concurrency (round-13's composition gate;
+    // every piece is gate-proven in isolation: q162 streaming ingest,
+    // q173 federated serving, q177 tombstones, q180 vacuum — what no
+    // per-family gate can see is a cross-component window between
+    // them): a standing BASE index (2/3 of the corpus) serves while a
+    // streaming DELTA (the remaining third, under a DIFFERENT bucket
+    // modulus — federation must not assume agreement) is fed through
+    // the [[replayPhases]] drill, tombstoned takedowns land BETWEEN
+    // micro-batches on whichever index owns the doc, and a federated
+    // main+delta probe fires after every event. EVERY probe —
+    // including the two fired in the window AFTER a takedown but
+    // BEFORE anything physically applies it — must hash-equal the
+    // survivors-only full-corpus BM25 relation at that instant (the
+    // q177 phase method x the q162 replay method). The final phase
+    // vacuums BOTH indexes (physical apply + overlay clear) and probes
+    // again: soft must have equaled hard all along. The reference
+    // analogue is its trades-parallel-indicators write discipline
+    // (src/threading/PipelineExecutor.hpp:80-184), carried to the
+    // index estate.
     "q182_bm25_serving_stack" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val base = s"$servParent/base"; val delta = s"$servParent/delta"
@@ -5222,14 +4932,13 @@ object Curation {
       val phases = Seq(0L, 3L, 6L).map(r =>
         docs.filter(col("doc_id") % 9 === r)
           .select(col("doc_id"), col("text")))
-      val staged = stagePhases(s"serv182|$dir", phases)
       val probes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       def probe(phase: String): Unit = probes +=
         Retrieval.bm25TopKFederated(s, Seq(base, delta), bm25Queries(s), k = 10)
           .withColumn("phase", lit(phase))
           .localCheckpoint(true) // materialize BEFORE the next mutation
-      runPhasedIngestStepped(s, staged, phases.head.schema, nPhases = 3,
-        Retrieval.bm25StreamSink(delta, "doc_id", "text")) {
+      replayPhases(s, s"serv182|$dir", phases,
+        Retrieval.bm25StreamSink(delta, "doc_id", "text"), {
         case 0 =>
           probe("p0")
           // takedown T1, between micro-batches: base-owned + delta-owned
@@ -5255,7 +4964,7 @@ object Curation {
           probe("t2_window")
         case _ =>
           probe("p2")
-      }
+      })
       // physical apply: vacuum both indexes (independent paths —
       // overlap their action floors), overlays must clear
       Retrieval.concurrently(
@@ -5273,8 +4982,8 @@ object Curation {
     // statistics, so a violation relation with an empty oracle): a
     // standing base index and a streamed delta share ONE quantizer (the
     // q161 ivfInit flow — under a shared quantizer the federated probe
-    // is bit-for-bit the merged probe), the delta is fed one micro-batch
-    // per phase with a kill-restart at every boundary, tombstoned
+    // is bit-for-bit the merged probe), the delta is fed through the
+    // [[replayPhases]] drill, tombstoned
     // takedowns land between micro-batches on the owning index, and a
     // federated probe fires after every event — including in the
     // window after a takedown but before its physical apply. Per probe:
@@ -5297,12 +5006,8 @@ object Curation {
       val phases = Seq(0L, 3L, 6L).map(r =>
         emb.filter(col("vec_id") % 9 === r)
           .select(col("vec_id"), col("embedding")))
-      val staged = stagePhases(s"serv183|$dir", phases)
       val queries = emb.filter(col("vec_id") % 10 === 7)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      def cnt(df: DataFrame, kind: String): DataFrame =
-        df.agg(count(lit(1)).as("n")).filter(col("n") > 0)
-          .select(lit(kind).as("kind"), col("n"))
       val viols = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       var lastSoft: DataFrame = null
       def probe(phase: String, corpusPred: org.apache.spark.sql.Column,
@@ -5326,18 +5031,13 @@ object Curation {
           .filter(abs(Similarity.cosine(col("cv"), col("qv")) - col("sim")) >
             lit(1e-12)),
           s"${phase}_cosine_mismatch")
-        viols += (
-          if (hits.limit(1).count() > 0)
-            s.range(0).select(lit(s"${phase}_vacuous").as("kind"),
-              col("id").as("n"))
-          else s.range(1).select(lit(s"${phase}_vacuous").as("kind"),
-            lit(1L).as("n")))
+        viols += scalarViol(hits.limit(1).count() > 0, s"${phase}_vacuous", s)
       }
       val t1 = (col("vec_id") % 3 =!= 0 && col("vec_id") % 5 === 0) ||
         (col("vec_id") % 9 === 0 && col("vec_id") % 4 === 0)
       val t2 = col("vec_id") % 9 === 3 && col("vec_id") % 5 === 0
-      runPhasedIngestStepped(s, staged, phases.head.schema, nPhases = 3,
-        Similarity.ivfStreamSink(delta, "vec_id", "embedding")) {
+      replayPhases(s, s"serv183|$dir", phases,
+        Similarity.ivfStreamSink(delta, "vec_id", "embedding"), {
         case 0 =>
           graft.operators.Tombstones.add(s, base,
             emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") % 5 === 0)
@@ -5361,18 +5061,14 @@ object Curation {
               col("vec_id") % 9 === 3 || col("vec_id") % 9 === 6) &&
               !t1 && !t2,
             t1 || t2)
-      }
+      })
       val soft = lastSoft
       Retrieval.concurrently(
         () => { Similarity.ivfVacuum(s, base); () },
         () => { Similarity.ivfVacuum(s, delta); () })
-      viols += (
-        if (graft.operators.Tombstones.read(s, base).isEmpty &&
-            graft.operators.Tombstones.read(s, delta).isEmpty)
-          s.range(0).select(lit("z_overlay_not_cleared").as("kind"),
-            col("id").as("n"))
-        else s.range(1).select(lit("z_overlay_not_cleared").as("kind"),
-          lit(1L).as("n")))
+      viols += scalarViol(graft.operators.Tombstones.read(s, base).isEmpty &&
+        graft.operators.Tombstones.read(s, delta).isEmpty,
+        "z_overlay_not_cleared", s)
       val hard = Similarity.ivfTopKFederated(
         Seq(base, delta), queries, "vec_id", "embedding", k = 10, nprobe = 4)
       viols += cnt(

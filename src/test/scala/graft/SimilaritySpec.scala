@@ -519,7 +519,7 @@ class SimilaritySpec extends SparkSpec {
     val merged = probe(s"$parent/m")
     assert(merged.nonEmpty && merged === probe(single))
     assert(spark.read.parquet(s"$parent/m/corpus").count() === all.count())
-    // the QUANTIZED layout merges blind the same way
+    // the QUANTIZED layout merges the same way
     val qa = s"$parent/qa"; val qb = s"$parent/qb"
     Similarity.ivfInit(spark, cents, qa)
     Similarity.ivfAppend(qa, all.filter($"id" % 2 === 0), "id", "vec",
@@ -532,6 +532,14 @@ class SimilaritySpec extends SparkSpec {
         s"$parent/qm", queries, "id", "vec", k = 3, nprobe = 2)
       .collect().map(_.toString).sorted.toSeq
     assert(qmerged.nonEmpty)
+    // ... but a float shard and an int8 shard, filled from one centroid
+    // table, are refused before dest is created
+    val mixed = intercept[IllegalArgumentException] {
+      Similarity.ivfMerge(spark, s"$parent/a", qb, s"$parent/mixed")
+    }
+    assert(mixed.getMessage.contains("float") && mixed.getMessage.contains("int8"),
+      mixed.getMessage)
+    assert(!new java.io.File(s"$parent/mixed").exists())
     // variadic: ONE 4-shard merge equals the pairwise-built single
     // index, and a move-merge of the same shards consumes their parts
     val s4 = (0 until 4).map { i =>
